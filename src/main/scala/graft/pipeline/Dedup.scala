@@ -491,7 +491,7 @@ object Dedup {
     * never scans the shingle-bucketed postings, and `stats` rolls
     * `max_gen` so appends stamp fresh versions. A re-crawled document
     * goes through [[updateShingleIndex]] (tombstone old gen + append
-    * new); [[compactShingleIndex]] is the erasure point.
+    * new); [[compactShingleIndex]] folds deletes out ([[LayoutFiles]]).
     */
   def writeShingleIndex(
       df: DataFrame, idCol: String, textCol: String, dir: String,
@@ -500,6 +500,7 @@ object Dedup {
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
     val spark = df.sparkSession
     GraftFunctions.ensureRegistered(spark)
+    LayoutFiles.recover(spark, dir)
     // postings store the 64-bit shingle HASH (shingleHashRows), not the
     // k-gram string: the probe only ever equi-joins and counts distinct
     // shingles, so the 8-byte proxy cuts postings bytes, shuffle bytes
@@ -540,6 +541,7 @@ object Dedup {
   ): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.ensureRegistered(spark)
+    LayoutFiles.recover(spark, dir)
     val st = spark.read.parquet(s"$dir/stats").head()
     val k = st.getAs[Int]("shingle_k")
     val buckets = st.getAs[Int]("buckets")
@@ -557,42 +559,26 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
 
-  /** The pending tombstone set of a [[writeShingleIndex]] layout, if
-    * any — (doc, gen) VERSION rows under `_tombstones` (a name parquet
-    * scans of subdirs ignore). */
-  private def shingleTombstones(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
   /** Tombstone-delete docs from a [[writeShingleIndex]] layout: the
     * ids' live (doc, gen) versions come from the doc-keyed `docs/`
     * table (one map-side scan of a 2-column frame — the
     * shingle-bucketed postings are never touched) and land under
-    * `_tombstones` — O(deletes), visible at the NEXT probe via a
-    * broadcast anti-join. Already-tombstoned (or never-indexed) ids
-    * are skipped, so the operation is idempotent and replay-safe.
-    * [[compactShingleIndex]] later folds the set into the files — the
-    * erasure point, as with [[graft.pipeline.Similarity.compactIndex]].
+    * `_tombstones` (see [[LayoutFiles]]), visible at the NEXT probe.
     */
   def deleteFromShingleIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       ids: DataFrame, idCol: String,
   ): Unit = {
+    LayoutFiles.recover(spark, dir)
     val docs = spark.read.parquet(s"$dir/docs")
     // cast the delete ids to the STORED id type, failing fast on any
     // id the cast nulls out — see [[Keys.castIdsToStored]] for both
     // halves of the silent-no-op hazard this closes (r16 + r17 ADVICE)
     val want = Keys.castIdsToStored(
       ids, idCol, docs.schema("doc").dataType, "deleteFromShingleIndex")
-    val live0 = docs.join(broadcast(want), Seq("doc"), "left_semi")
-    val live = shingleTombstones(spark, dir).fold(live0)(t =>
-      live0.join(broadcast(t.select("doc", "gen")),
-        Seq("doc", "gen"), "left_anti"))
-    live.select("doc", "gen")
-      .write.mode("append").parquet(s"$dir/_tombstones")
+    LayoutFiles.retire(
+      docs.join(broadcast(want), Seq("doc"), "left_semi").select("doc", "gen"),
+      dir, Seq("doc", "gen"))
   }
 
   /** UPDATE re-crawled documents in place: tombstone the ids' current
@@ -614,41 +600,22 @@ object Dedup {
   /** Fold tombstones into the layout AND merge append-accumulated
     * small files: rewrite `postings/` (the `sb` partition scheme
     * preserved, so probes prune identically after the swap) and
-    * `docs/` minus the deleted versions, sized toward
-    * `targetBytesPerFile` (every [[updateShingleIndex]] lands another
-    * handful of batch files per touched bucket — after enough batches
-    * the probe pays more for file opens than data, so compaction
-    * rewrites even with no tombstones pending), then clear the set.
-    * Stats are version bookkeeping only (`max_gen` stays — reusing a
-    * dead generation number could resurrect a same-numbered tombstone),
-    * so nothing rolls. Single-writer discipline, like every layout
-    * rewrite in this family. */
+    * `docs/` minus the deleted versions (every [[updateShingleIndex]]
+    * lands another handful of batch files per touched bucket — after
+    * enough batches the probe pays more for file opens than data, so
+    * compaction rewrites even with no tombstones pending), then clear
+    * the set. Stats are version bookkeeping only (`max_gen` stays —
+    * reusing a dead generation number could resurrect a same-numbered
+    * tombstone), so nothing rolls. */
   def compactShingleIndex(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetBytesPerFile: Long = 128L << 20): Unit = {
-    import org.apache.hadoop.fs.Path
-    val t = shingleTombstones(spark, dir).map(_.select("doc", "gen"))
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def swap(table: String, partBy: Option[String])(df0: DataFrame): Unit = {
-      val df = t.fold(df0)(tt =>
-        df0.join(broadcast(tt), Seq("doc", "gen"), "left_anti"))
-      val bytes = fs.getContentSummary(new Path(s"$dir/$table")).getLength
-      val files = math.max(1L,
-        (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
-      val arranged = partBy match {
-        case Some(c) => df.repartition(files, col(c))
-        case None    => df.coalesce(files)
-      }
-      val staging = new Path(s"$dir/${table}__compact")
-      fs.delete(staging, true)
-      val w = arranged.write.mode("overwrite")
-      partBy.fold(w)(c => w.partitionBy(c)).parquet(staging.toString)
-      fs.delete(new Path(s"$dir/$table"), true)
-      fs.rename(staging, new Path(s"$dir/$table"))
-    }
-    swap("postings", Some("sb"))(spark.read.parquet(s"$dir/postings"))
-    swap("docs", None)(spark.read.parquet(s"$dir/docs"))
-    fs.delete(new Path(s"$dir/_tombstones"), true)
+      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    LayoutFiles.recover(spark, dir)
+    val t = LayoutFiles.tombstones(spark, dir)
+    LayoutFiles.rewrite(dir, "postings", Some("sb"))(LayoutFiles.minus(
+      spark.read.parquet(s"$dir/postings"), t, Seq("doc", "gen")))
+    LayoutFiles.rewrite(dir, "docs", None)(LayoutFiles.minus(
+      spark.read.parquet(s"$dir/docs"), t, Seq("doc", "gen")))
+    LayoutFiles.commit(spark, dir)
   }
 
   /** Probe a [[writeShingleIndex]] layout with a blocklist: corpus docs
@@ -674,11 +641,9 @@ object Dedup {
     val sbs = bsh.select("sb").distinct().collect().map(_.getLong(0))
     val slice0 = spark.read.parquet(s"$dir/postings")
       .where(col("sb").isin(sbs.toIndexedSeq: _*))
-    // deletes are visible immediately: anti-join the (delete-sized,
-    // broadcast) tombstoned versions — the pruned slice stays map-only
-    val slice = shingleTombstones(spark, dir).fold(slice0)(t =>
-      slice0.join(broadcast(t.select("doc", "gen")),
-        Seq("doc", "gen"), "left_anti"))
+    // deletes are visible immediately: the pruned slice stays map-only
+    val slice = LayoutFiles.minus(
+      slice0, LayoutFiles.tombstones(spark, dir), Seq("doc", "gen"))
     slice
       .join(broadcast(bsh), Seq("sb", "sh"))
       .groupBy("doc")

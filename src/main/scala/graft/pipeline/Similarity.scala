@@ -129,6 +129,7 @@ object Similarity {
     */
   def writeIndexed(corpus: DataFrame, vecCol: String, path: String,
       planes: Int = 12, seed: Long = 42L): Unit = {
+    LayoutFiles.recover(corpus.sparkSession, path)
     indexed(corpus, vecCol, planes, seed)
       .withColumn("gen", lit(0L))
       // cluster by the partition value before the partitioned write
@@ -156,6 +157,7 @@ object Similarity {
       planes: Int = 12, seed: Long = 42L): Unit = {
     val spark = batch.sparkSession
     val params = Seq("planes" -> planes.toLong, "seed" -> seed)
+    LayoutFiles.recover(spark, path)
     val gen = readIndexMeta(spark, path, params) + 1
     indexed(batch, vecCol, planes, seed)
       .withColumn("gen", lit(gen))
@@ -832,6 +834,7 @@ object Similarity {
     */
   def writeIvfPqResidual(corpus: DataFrame, vecCol: String, path: String,
       coarse: IvfIndex, books: Seq[IvfIndex]): Unit = {
+    LayoutFiles.recover(corpus.sparkSession, path)
     pqEncode(residualFrame(corpus, vecCol, coarse, widen = true), "__res", books)
       .drop("__res")
       .withColumn("gen", lit(0L))
@@ -851,6 +854,7 @@ object Similarity {
       coarse: IvfIndex, books: Seq[IvfIndex]): Unit = {
     val spark = batch.sparkSession
     val params = Seq("model" -> modelFingerprint(coarse, books), "residual" -> 1L)
+    LayoutFiles.recover(spark, path)
     val gen = readIndexMeta(spark, path, params) + 1
     pqEncode(residualFrame(batch, vecCol, coarse, widen = true), "__res", books)
       .drop("__res")
@@ -886,19 +890,15 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, m: Int, kBook: Int,
       iters: Int = 2,
   ): (IvfIndex, Seq[IvfIndex]) = {
-    import org.apache.hadoop.fs.Path
+    LayoutFiles.recover(spark, path)
     val live = OperatorCache.persist(
       minusTombstones(spark, path, spark.read.parquet(path), idCol)
         .select(col(idCol), col(vecCol)))
     try {
       val coarse = ivfTrain(live, idCol, vecCol, k, iters)
       val books = trainPq(live, idCol, vecCol, m, kBook)
-      val staging = path + "__rebuild"
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(staging), true)
-      writeIvfPq(live, vecCol, staging, coarse, books)
-      fs.delete(new Path(path), true)
-      fs.rename(new Path(staging), new Path(path))
+      writeIvfPq(live, vecCol, LayoutFiles.staging(path), coarse, books)
+      LayoutFiles.swap(spark, path)
       (coarse, books)
     } finally OperatorCache.release(live)
   }
@@ -913,19 +913,13 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       k: Int = 0, iters: Int = 2,
   ): Unit = {
-    import org.apache.hadoop.fs.Path
+    LayoutFiles.recover(spark, dir)
     val (idCol, vecCol, threshold, _) = dedupStateParams(spark, dir)
-    val live0 = spark.read.parquet(s"$dir/assigned")
-    val live = dedupTombstones(spark, dir).fold(live0)(t =>
-      live0.join(broadcast(t.select(idCol, "gen")),
-        Seq(idCol, "gen"), "left_anti"))
+    val live = LayoutFiles.minus(spark.read.parquet(s"$dir/assigned"),
+      LayoutFiles.tombstones(spark, dir), Seq(idCol, "gen"))
       .select(col(idCol), col(vecCol))
-    val staging = dir + "__rebuild"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(staging), true)
-    writeDedupState(live, idCol, vecCol, staging, threshold, k, iters)
-    fs.delete(new Path(dir), true)
-    fs.rename(new Path(staging), new Path(dir))
+    writeDedupState(live, idCol, vecCol, LayoutFiles.staging(dir), threshold, k, iters)
+    LayoutFiles.swap(spark, dir)
   }
 
   /** Probe a [[writeIvfPqResidual]] layout: pruned partitions, ADC over
@@ -958,6 +952,7 @@ object Similarity {
     */
   def writeIvfPq(corpus: DataFrame, vecCol: String, path: String,
       coarse: IvfIndex, books: Seq[IvfIndex]): Unit = {
+    LayoutFiles.recover(corpus.sparkSession, path)
     pqEncode(ivfIndex(corpus, vecCol, coarse), vecCol, books)
       .withColumn("gen", lit(0L))
       .repartition(col("centroid")) // one file set per cell (guide §6; see writeIndexed)
@@ -991,6 +986,7 @@ object Similarity {
       coarse: IvfIndex, books: Seq[IvfIndex]): Unit = {
     val spark = batch.sparkSession
     val params = Seq("model" -> modelFingerprint(coarse, books))
+    LayoutFiles.recover(spark, path)
     val gen = readIndexMeta(spark, path, params) + 1
     pqEncode(ivfIndex(batch, vecCol, coarse), vecCol, books)
       .withColumn("gen", lit(gen))
@@ -1226,10 +1222,6 @@ object Similarity {
     row.getAs[Long]("max_gen")
   }
 
-  private def readIndexMaxGen(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    readIndexMeta(spark, path)
-
   /** Probe-side parameter check: like [[readIndexMeta]] but a no-op on
     * a layout without `_meta` (probes must serve pre-generation
     * layouts; only APPENDS require the bookkeeping). */
@@ -1330,43 +1322,42 @@ object Similarity {
   /** Tombstone-delete ids from ANY written serving layout
     * ([[writeIndexed]], [[writeIvfPq]], [[writeIvfPqResidual]]): one
     * CUTOFF row per id — (id, cutoff = the layout's current max_gen) —
-    * appends under `_tombstones` inside the index root (a name parquet
-    * scans of the root ignore). The rule a probe applies is
+    * appends under `_tombstones` inside the index root (see
+    * [[LayoutFiles]]). The rule a probe applies is
     * "a row dies iff some tombstone names its id with
     * `row.gen <= cutoff`", which costs O(deletes) to record (one _meta
     * read, no index scan, no live-version lookup) and makes
     * delete-then-append a correct UPDATE: the re-appended rows land at
     * `max_gen + 1 > cutoff` and survive the very tombstone that
-    * retired their predecessors. Replay-safe: a replayed delete
-    * re-records the same retirement (dedup'd at probe aggregation).
-    * [[compactIndex]] later folds the set into the files — the erasure
-    * point (until then the vector BYTES are still on disk; the
-    * right-to-forget note).
+    * retired their predecessors. A replayed delete at the same cutoff
+    * adds nothing.
+    *
+    * Ids cast to the layout's stored key type first, failing fast on
+    * any that does not cast ([[Keys.castIdsToStored]]): an uncast
+    * string id against a long-keyed layout would break every later
+    * probe. The stored type is the layout's column under `idCol`, or,
+    * for a caller spelling the layout lacks, the type earlier deletes
+    * recorded.
     */
   def deleteFromIndex(ids: DataFrame, idCol: String, path: String): Unit = {
-    val cutoff = readIndexMaxGen(ids.sparkSession, path)
+    val spark = ids.sparkSession
+    LayoutFiles.recover(spark, path)
+    val cutoff = readIndexMeta(spark, path)
+    val stored = spark.read.parquet(path).schema.find(_.name == idCol)
+      .orElse(LayoutFiles.tombstones(spark, path, mergeSchema = true)
+        .flatMap(_.schema.find(_.name == "doc")))
+      .getOrElse(throw new IllegalArgumentException(
+        s"deleteFromIndex: $path has no id column '$idCol' and no " +
+          "tombstones to take the key type from — pass the layout's id column"))
     // tombstones land under a FIXED column name regardless of the
     // caller's idCol spelling — two deletes with different spellings
     // would otherwise produce mixed-schema files that a later
     // spark.read silently collapses to one of them (r16 ADVICE); the
     // join side renames back to the layout's id column at probe time
-    ids.select(col(idCol).as("doc")).distinct()
-      .withColumn("cutoff", lit(cutoff))
-      .write.mode("append").parquet(s"$path/_tombstones")
-  }
-
-  private def tombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // mergeSchema: a dir can hold files written BEFORE the fixed-name
-    // fix (id under the deleter's own idCol) alongside new ones (id
-    // under "doc"); without it spark picks one file's schema and the
-    // other files' id column reads as null — those tombstones silently
-    // stop filtering and deleted ids resurface (r17 ADVICE)
-    if (fs.exists(p))
-      Some(spark.read.option("mergeSchema", "true").parquet(p.toString))
-    else None
+    LayoutFiles.retire(
+      Keys.castIdsToStored(ids, idCol, stored.dataType, "deleteFromIndex")
+        .withColumn("cutoff", lit(cutoff)),
+      path, Seq("doc", "cutoff"))
   }
 
   /** Drop tombstoned rows from an index scan (broadcast, delete-sized
@@ -1385,7 +1376,12 @@ object Similarity {
   private def minusTombstones(
       spark: org.apache.spark.sql.SparkSession, path: String,
       cells: DataFrame, idCol: String): DataFrame =
-    tombstones(spark, path).fold(cells) { t0 =>
+    // mergeSchema: a dir can hold files written BEFORE the fixed-name
+    // fix (id under the deleter's own idCol) alongside new ones (id
+    // under "doc"); without it spark picks one file's schema and the
+    // other files' id column reads as null — those tombstones silently
+    // stop filtering and deleted ids resurface
+    LayoutFiles.tombstones(spark, path, mergeSchema = true).fold(cells) { t0 =>
       // the mergeSchema'd read surfaces a mixed legacy/new set as
       // parallel mostly-null id columns — the id is the COALESCE over
       // every non-cutoff column, cast to the layout's key type, so
@@ -1412,13 +1408,11 @@ object Similarity {
   /** Fold tombstones into the files and merge append-accumulated small
     * ones: rewrite the layout minus deleted ids — the partition scheme
     * is re-derived from the layout's own `<col>=` directory names, so
-    * probes prune identically after the swap — sized toward
-    * `targetBytesPerFile`, then swap it in and clear `_tombstones`.
-    * Same operational slot as
+    * probes prune identically after the swap — and swap it in whole
+    * ([[LayoutFiles.swap]]), which drops `_tombstones` with the old
+    * root. Same operational slot as
     * [[graft.pipeline.TrainingPipeline.compactState]] and the IVF
-    * drift retrain; a probe running concurrently with the swap should
-    * be drained first (single-writer discipline, like every layout
-    * rewrite here).
+    * drift retrain.
     *
     * @param idCol the LAYOUT's id column (what probes pass) — the
     *              tombstone set is stored under a fixed name, so the
@@ -1426,8 +1420,9 @@ object Similarity {
     */
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, targetBytesPerFile: Long = 128L << 20): Unit = {
+      idCol: String): Unit = {
     import org.apache.hadoop.fs.Path
+    LayoutFiles.recover(spark, path)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val partCol = fs.listStatus(root).map(_.getPath.getName)
@@ -1435,18 +1430,8 @@ object Similarity {
         case n if n.contains("=") && !n.startsWith("_") && !n.startsWith(".") =>
           n.split("=")(0)
       }
-    val kept = minusTombstones(spark, path, spark.read.parquet(path), idCol)
-    val bytes = fs.getContentSummary(root).getLength
-    val files =
-      math.max(1L, (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
-    val arranged = partCol match {
-      case Some(c) => kept.repartition(files, col(c))
-      case None    => kept.coalesce(files)
-    }
-    val staging = new Path(path + "__compact")
-    fs.delete(staging, true)
-    val w = arranged.write.mode("overwrite")
-    partCol.fold(w)(c => w.partitionBy(c)).parquet(staging.toString)
+    LayoutFiles.rewrite(root.getParent.toString, root.getName, partCol)(
+      minusTombstones(spark, path, spark.read.parquet(path), idCol))
     // the meta row survives the swap VERBATIM (tombstones don't — they
     // were just folded in): losing the generation counter would let a
     // pre-compaction cutoff's number be reused by a later append, and
@@ -1454,9 +1439,8 @@ object Similarity {
     // disarm the mixed-artifact append guard
     if (fs.exists(new Path(s"$path/_meta")))
       spark.read.parquet(s"$path/_meta").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/_meta")
-    fs.delete(root, true)
-    fs.rename(staging, root)
+        .write.mode("overwrite").parquet(s"${LayoutFiles.staging(path)}/_meta")
+    LayoutFiles.swap(spark, path)
   }
 
   /** Semantic decontamination: drop corpus rows whose embedding has
@@ -1655,10 +1639,10 @@ object Similarity {
     * id-keyed (id, gen) version table a DELETE reads instead of scanning
     * the centroid-partitioned frame; `centroids/` — the frozen index;
     * `params/` — (id_col, vec_col, threshold, max_gen), so probes can't
-    * run with a drifted drop rule. Generations and `_tombstones` follow
-    * the family convention: appends stamp fresh versions, tombstones
-    * name (id, gen), [[updateDedupState]] = delete + append is a correct
-    * re-embed UPDATE, [[compactDedupState]] is the erasure point.
+    * run with a drifted drop rule. Appends stamp fresh generations,
+    * tombstones name (id, gen) ([[LayoutFiles]]), so
+    * [[updateDedupState]] = delete + append is a correct re-embed
+    * UPDATE.
     */
   def writeDedupState(
       corpus: DataFrame, idCol: String, vecCol: String, dir: String,
@@ -1666,6 +1650,7 @@ object Similarity {
   ): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
+    LayoutFiles.recover(spark, dir)
     val src = if (k > 0) corpus else OperatorCache.persist(corpus)
     val cells = if (k > 0) k else semanticDedupCellCount(src.count())
     val index = ivfTrain(src, idCol, vecCol, cells, iters)
@@ -1700,13 +1685,6 @@ object Similarity {
       p.getAs[Double]("threshold"), p.getAs[Long]("max_gen"))
   }
 
-  private def dedupTombstones(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
   /** Dedup a NEW batch against a [[writeDedupState]] layout — the
     * persisted form of [[semanticDedupIncremental]]: assign the batch
     * ONCE to the stored frozen centroids, prune the prior side to the
@@ -1732,11 +1710,9 @@ object Similarity {
       if (persistAssigned) OperatorCache.materialize(assigned0) else assigned0
     val cells = assigned.select("centroid").distinct()
       .collect().map(r => Integer.valueOf(r.getInt(0)))
-    val prior0 = spark.read.parquet(s"$dir/assigned")
-      .where(col("centroid").isin(cells.toIndexedSeq: _*))
-    val prior = dedupTombstones(spark, dir).fold(prior0)(t =>
-      prior0.join(broadcast(t.select(idCol, "gen")),
-        Seq(idCol, "gen"), "left_anti"))
+    val prior = LayoutFiles.minus(spark.read.parquet(s"$dir/assigned")
+      .where(col("centroid").isin(cells.toIndexedSeq: _*)),
+      LayoutFiles.tombstones(spark, dir), Seq(idCol, "gen"))
     semanticDedupIncrementalAssigned(prior, assigned, idCol, vecCol, threshold)
   }
 
@@ -1753,6 +1729,7 @@ object Similarity {
       batch: DataFrame,
   ): Unit = {
     import spark.implicits._
+    LayoutFiles.recover(spark, dir)
     val (idCol, vecCol, threshold, maxGen) = dedupStateParams(spark, dir)
     val gen = maxGen + 1
     val index = readDedupIndex(spark, dir)
@@ -1772,25 +1749,20 @@ object Similarity {
   /** Tombstone-delete ids from a [[writeDedupState]] layout: live
     * (id, gen) versions come from the id-keyed `ids/` table (one
     * map-side scan — the centroid-partitioned assignment is never
-    * touched), land under `_tombstones`, and stop suppressing batch
-    * arrivals at the NEXT [[semanticDedupFromState]] probe. Idempotent
-    * under replay; [[compactDedupState]] is the erasure point (the
-    * vector BYTES stay on disk until then — the right-to-forget note,
-    * as on [[deleteFromIndex]]).
+    * touched), land under `_tombstones` (see [[LayoutFiles]]), and
+    * stop suppressing batch arrivals at the NEXT
+    * [[semanticDedupFromState]] probe.
     */
   def deleteFromDedupState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       ids: DataFrame, idColArg: String,
   ): Unit = {
+    LayoutFiles.recover(spark, dir)
     val (idCol, _, _, _) = dedupStateParams(spark, dir)
     val want = ids.select(col(idColArg).as(idCol)).distinct()
-    val live0 = spark.read.parquet(s"$dir/ids")
-      .join(broadcast(want), Seq(idCol), "left_semi")
-    val live = dedupTombstones(spark, dir).fold(live0)(t =>
-      live0.join(broadcast(t.select(idCol, "gen")),
-        Seq(idCol, "gen"), "left_anti"))
-    live.select(idCol, "gen")
-      .write.mode("append").parquet(s"$dir/_tombstones")
+    LayoutFiles.retire(spark.read.parquet(s"$dir/ids")
+      .join(broadcast(want), Seq(idCol), "left_semi").select(idCol, "gen"),
+      dir, Seq(idCol, "gen"))
   }
 
   /** UPDATE re-embedded ids in place (the recrawl shape: a document
@@ -1810,39 +1782,22 @@ object Similarity {
   /** Fold tombstones into a [[writeDedupState]] layout AND merge
     * append-accumulated small files: rewrite `assigned/` (centroid
     * partition scheme preserved — probes prune identically after the
-    * swap, files sized toward `targetBytesPerFile`) and `ids/` minus
-    * the deleted versions, clear the set. `max_gen` stays (reusing a
-    * dead generation number could resurrect a same-numbered tombstone).
-    * Centroid drift from accumulated appends is the
-    * [[rebuildDedupState]] story, on the p90/p96-style audit's trigger.
+    * swap) and `ids/` minus the deleted versions, clear the set.
+    * `max_gen` stays (reusing a dead generation number could
+    * resurrect a same-numbered tombstone). Centroid drift from
+    * accumulated appends is the [[rebuildDedupState]] story, on the
+    * p90/p96-style audit's trigger.
     */
   def compactDedupState(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetBytesPerFile: Long = 128L << 20): Unit = {
-    import org.apache.hadoop.fs.Path
+      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    LayoutFiles.recover(spark, dir)
     val (idCol, _, _, _) = dedupStateParams(spark, dir)
-    val t = dedupTombstones(spark, dir).map(_.select(idCol, "gen"))
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def swap(table: String, partBy: Option[String])(df0: DataFrame): Unit = {
-      val df = t.fold(df0)(tt =>
-        df0.join(broadcast(tt), Seq(idCol, "gen"), "left_anti"))
-      val bytes = fs.getContentSummary(new Path(s"$dir/$table")).getLength
-      val files = math.max(1L,
-        (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
-      val arranged = partBy match {
-        case Some(c) => df.repartition(files, col(c))
-        case None    => df.coalesce(files)
-      }
-      val staging = new Path(s"$dir/${table}__compact")
-      fs.delete(staging, true)
-      val w = arranged.write.mode("overwrite")
-      partBy.fold(w)(c => w.partitionBy(c)).parquet(staging.toString)
-      fs.delete(new Path(s"$dir/$table"), true)
-      fs.rename(staging, new Path(s"$dir/$table"))
-    }
-    swap("assigned", Some("centroid"))(spark.read.parquet(s"$dir/assigned"))
-    swap("ids", None)(spark.read.parquet(s"$dir/ids"))
-    fs.delete(new Path(s"$dir/_tombstones"), true)
+    val t = LayoutFiles.tombstones(spark, dir)
+    LayoutFiles.rewrite(dir, "assigned", Some("centroid"))(LayoutFiles.minus(
+      spark.read.parquet(s"$dir/assigned"), t, Seq(idCol, "gen")))
+    LayoutFiles.rewrite(dir, "ids", None)(LayoutFiles.minus(
+      spark.read.parquet(s"$dir/ids"), t, Seq(idCol, "gen")))
+    LayoutFiles.commit(spark, dir)
   }
 
   /** Symmetric scalar quantization (SQ8): each vector compressed to

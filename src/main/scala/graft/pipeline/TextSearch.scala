@@ -42,6 +42,7 @@ object TextSearch {
   ): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     GraftFunctions.ensureRegistered(df.sparkSession)
+    LayoutFiles.recover(df.sparkSession, dir)
     val terms = df.select(col(idCol).as("doc"),
       explode(Dedup.tokensOf(col(textCol))).as("term"))
     // lazy persist, NOT materialize: every consumer below is a
@@ -105,6 +106,7 @@ object TextSearch {
   ): Unit = {
     val spark = df.sparkSession
     GraftFunctions.ensureRegistered(spark)
+    LayoutFiles.recover(spark, dir)
     val st = spark.read.parquet(s"$dir/stats").head()
     val nDocs = st.getAs[Long]("n_docs")
     val sumDl = st.getAs[Long]("sum_dl")
@@ -141,25 +143,25 @@ object TextSearch {
     * tombstoned docs' count and token total from the stored stats
     * (exact long arithmetic — the same closed form [[appendIndex]]
     * adds with), and hand back the tombstone frame so the caller can
-    * anti-join its postings slice. None = no deletes pending.
+    * anti-join its postings slice. Fails with
+    * [[LayoutFiles.UnfinishedCommit]] while a compaction's commit is
+    * open: `stats` and `_tombstones` may then disagree.
+    *
+    * @return (n_docs, sum_dl, buckets, stored max_gen, pending
+    *         tombstones) — sum_dl stays the exact long so
+    *         [[compactIndex]] can persist it closed-form without
+    *         re-scanning doclens; avgdl derives at call sites.
     */
-  /** @return (delete-adjusted n_docs, delete-adjusted sum_dl, buckets,
-    *         stored max_gen, pending tombstones) — sum_dl stays the
-    *         exact long so [[compactIndex]] can persist it closed-form
-    *         without re-scanning doclens; avgdl derives at call sites. */
   private def servingStats(
       spark: SparkSession,
       dir: String): (Long, Long, Int, Long, Option[DataFrame]) = {
+    LayoutFiles.requireCommitted(spark, dir)
     val st = spark.read.parquet(s"$dir/stats").head()
     var nDocs = st.getAs[Long]("n_docs")
     var sumDl = st.getAs[Long]("sum_dl")
     val buckets = st.getAs[Int]("buckets")
     val maxGen = st.getAs[Long]("max_gen")
-    val tomb = {
-      val t = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-      val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(t)) Some(spark.read.parquet(t.toString)) else None
-    }
+    val tomb = LayoutFiles.tombstones(spark, dir)
     tomb.foreach { t =>
       val r = t.agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
       nDocs -= r.getLong(0)
@@ -168,45 +170,30 @@ object TextSearch {
     (nDocs, sumDl, buckets, maxGen, tomb)
   }
 
-  /** Drop tombstoned VERSIONS from a postings slice (broadcast
-    * anti-join on (doc, gen) — the slice stays map-only; the tombstone
-    * set is delete-sized, and rows a later append re-added under a
-    * fresh gen survive, which is what makes delete+append an UPDATE). */
-  private def minusDeleted(
-      tomb: Option[DataFrame])(postings: DataFrame): DataFrame =
-    tomb.fold(postings)(t =>
-      postings.join(broadcast(t.select("doc", "gen")),
-        Seq("doc", "gen"), "left_anti"))
+  /** Tombstones name (doc, gen) VERSIONS, so rows a later append
+    * re-added under a fresh gen survive — delete+append is an UPDATE. */
+  private val DocGen = Seq("doc", "gen")
 
   /** Tombstone-delete docs from a [[writeIndex]] layout: the deleted
     * ids join their stored lengths (`doclens/` — one map-side scan of
     * a 2-column doc-keyed table, never the term-bucketed postings) and
-    * land as (doc, dl) rows under `_tombstones`. Serving subtracts
-    * them from the BM25 corpus constants and anti-joins the postings
-    * slice, so a delete is visible at the NEXT query with no rewrite;
-    * ids already tombstoned (or never indexed) are skipped, so the
-    * operation is idempotent and replay-safe. [[compactIndex]] later
-    * folds the set into the files — the erasure point, as with
-    * [[Similarity.compactIndex]].
+    * every still-live version lands as a (doc, dl, gen) row under
+    * `_tombstones` (see [[LayoutFiles]]). Serving subtracts them from
+    * the BM25 corpus constants and anti-joins the postings slice.
     */
   def deleteFromIndex(
       spark: SparkSession, dir: String, ids: DataFrame, idCol: String,
   ): Unit = {
+    LayoutFiles.recover(spark, dir)
     val dls = spark.read.parquet(s"$dir/doclens")
     // join on the id column AS STORED, failing fast on any id the cast
     // nulls out — see [[Keys.castIdsToStored]] for both halves of the
     // silent-no-op hazard this closes (r16 + r17 ADVICE)
     val want = Keys.castIdsToStored(
       ids, idCol, dls.schema("doc").dataType, "deleteFromIndex")
-    val fresh0 = dls.join(broadcast(want), Seq("doc"), "left_semi")
-    val (_, _, _, _, tomb) = servingStats(spark, dir)
-    // every still-live VERSION of the doc tombstones; already-dead
-    // (doc, gen) rows are skipped, so the operation is idempotent
-    val fresh = tomb.fold(fresh0)(t =>
-      fresh0.join(broadcast(t.select("doc", "gen")),
-        Seq("doc", "gen"), "left_anti"))
-    fresh.select("doc", "dl", "gen")
-      .write.mode("append").parquet(s"$dir/_tombstones")
+    LayoutFiles.retire(
+      dls.join(broadcast(want), Seq("doc"), "left_semi").select("doc", "dl", "gen"),
+      dir, DocGen)
   }
 
   /** UPDATE re-crawled documents in place: tombstone the ids' current
@@ -226,46 +213,29 @@ object TextSearch {
   }
 
   /** Fold tombstones into the layout AND merge append-accumulated
-    * small files: rewrite `postings/` (partition scheme preserved,
-    * sized toward `targetBytesPerFile` — every [[updateIndex]] lands
-    * another handful of batch files per touched bucket, so compaction
-    * rewrites even with no tombstones pending) and `doclens/` minus
-    * the deleted docs, refresh `stats/` with the already-adjusted
-    * constants, clear the set. */
-  def compactIndex(spark: SparkSession, dir: String,
-      targetBytesPerFile: Long = 128L << 20): Unit = {
-    import org.apache.hadoop.fs.Path
-    import spark.implicits._
+    * small files: rewrite `postings/` (partition scheme preserved —
+    * every [[updateIndex]] lands another handful of batch files per
+    * touched bucket, so compaction rewrites even with no tombstones
+    * pending) and `doclens/` minus the deleted docs, and `stats/` with
+    * the already-adjusted constants. The three tables and the cleared
+    * tombstone set land in ONE [[LayoutFiles.commit]], so a crash can
+    * never subtract the deleted docs twice. */
+  def compactIndex(spark: SparkSession, dir: String): Unit = {
+    LayoutFiles.recover(spark, dir)
     // sum_dl comes closed-form from servingStats (stored total minus
     // tombstoned dl) — the post-swap doclens re-scan it replaces was a
     // whole extra job for a value the stats math already had; the
     // delete paths keep it exact by construction (appendIndex adds,
     // deleteFromIndex tombstones live versions once)
     val (nDocs, sumDl, buckets, maxGen, tomb) = servingStats(spark, dir)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def swap(table: String, partBy: Option[String])(df: DataFrame): Unit = {
-      val bytes = fs.getContentSummary(new Path(s"$dir/$table")).getLength
-      val files = math.max(1L,
-        (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
-      val arranged = partBy match {
-        case Some(c) => df.repartition(files, col(c))
-        case None    => df.coalesce(files)
-      }
-      val staging = new Path(s"$dir/${table}__compact")
-      fs.delete(staging, true)
-      val w = arranged.write.mode("overwrite")
-      partBy.fold(w)(c => w.partitionBy(c)).parquet(staging.toString)
-      fs.delete(new Path(s"$dir/$table"), true)
-      fs.rename(staging, new Path(s"$dir/$table"))
-    }
-    swap("postings", Some("tb"))(
-      minusDeleted(tomb)(spark.read.parquet(s"$dir/postings")))
-    swap("doclens", None)(
-      minusDeleted(tomb)(spark.read.parquet(s"$dir/doclens")))
-    spark.createDataFrame(Seq((nDocs, sumDl, buckets, maxGen)))
-      .toDF("n_docs", "sum_dl", "buckets", "max_gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    fs.delete(new Path(s"$dir/_tombstones"), true)
+    LayoutFiles.rewrite(dir, "postings", Some("tb"))(
+      LayoutFiles.minus(spark.read.parquet(s"$dir/postings"), tomb, DocGen))
+    LayoutFiles.rewrite(dir, "doclens", None)(
+      LayoutFiles.minus(spark.read.parquet(s"$dir/doclens"), tomb, DocGen))
+    LayoutFiles.rewrite(dir, "stats", None)(
+      spark.createDataFrame(Seq((nDocs, sumDl, buckets, maxGen)))
+        .toDF("n_docs", "sum_dl", "buckets", "max_gen"))
+    LayoutFiles.commit(spark, dir)
   }
 
   /** Top-k BM25 over the [[writeIndex]] layout. The postings scan is
@@ -298,8 +268,8 @@ object TextSearch {
     val tbs = normTerms
       .map(t => math.floorMod(Fnv1a64.hash(t.getBytes("UTF-8")), buckets.toLong))
       .distinct
-    val tf = minusDeleted(tomb)(spark.read.parquet(s"$dir/postings")
-      .where(col("tb").isin(tbs: _*) && col("term").isin(normTerms: _*)))
+    val tf = LayoutFiles.minus(spark.read.parquet(s"$dir/postings")
+      .where(col("tb").isin(tbs: _*) && col("term").isin(normTerms: _*)), tomb, DocGen)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(broadcast(dfreq), "term")
       .withColumn("idf",
@@ -356,7 +326,7 @@ object TextSearch {
       .where(col("tb").isin(tbs.toIndexedSeq: _*))
     // per-term df is a property of the INDEX, independent of the
     // workload — aggregate it once over the distinct matched terms
-    val matched = minusDeleted(tomb)(postings).join(
+    val matched = LayoutFiles.minus(postings, tomb, DocGen).join(
       broadcast(qterms.select("term").distinct()), "term")
     val dfreq = matched.groupBy("term")
       .agg(count(lit(1)).as("df"))

@@ -509,6 +509,7 @@ object TrainingPipeline {
     import state._
     val spark = state.cleaned.sparkSession
     import spark.implicits._
+    LayoutFiles.recover(spark, dir)
     // a freshly written state SUPERSEDES any layout previously at this
     // dir — including its batch-application HISTORY: stale
     // `_applied_<id>` markers would make a later appendState of a
@@ -550,42 +551,20 @@ object TrainingPipeline {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
   }
 
-  /** Load a [[writeState]] layout. The frames come back LAZY (plain
-    * parquet scans — only the bucket-matched slices are ever read by a
-    * batch); the bitmap is driver-collected like [[BloomGate.build]]
-    * produces it. */
-  /** The pending doc-tombstone set of a state layout, if any — single
-    * `doc` column under `_tombstones` (ignored by the table scans). */
-  private def stateTombstones(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** Pending seen-key tombstones (`_tombstone_keys`, single `key`
-    * column) — the raw-text keys of retracted docs, so the exact-seen
-    * gate stops killing future copies of retracted content. */
-  private def stateKeyTombstones(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_tombstone_keys")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** A state table scan minus its pending tombstones (broadcast,
-    * delete-sized anti-join — the scan stays map-only). */
+  /** A state table scan minus its pending tombstones: retracted docs
+    * (`_tombstones`, `doc`) in `cleaned`/`band_index`, and their
+    * raw-text keys (`_tombstone_keys`, `key`) in `seen_keys`, so the
+    * exact-seen gate stops killing future copies of retracted content. */
   private def liveStateTable(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       table: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$table")
     table match {
       case "cleaned" | "band_index" =>
-        stateTombstones(spark, dir).fold(df)(t =>
-          df.join(broadcast(t.select("doc")), Seq("doc"), "left_anti"))
+        LayoutFiles.minus(df, LayoutFiles.tombstones(spark, dir), Seq("doc"))
       case "seen_keys" =>
-        stateKeyTombstones(spark, dir).fold(df)(t =>
-          df.join(broadcast(t.select("key")), Seq("key"), "left_anti"))
+        LayoutFiles.minus(df,
+          LayoutFiles.tombstones(spark, dir, "_tombstone_keys"), Seq("key"))
       case _ => df
     }
   }
@@ -600,7 +579,7 @@ object TrainingPipeline {
     * [[compactState]]. The Bloom bitmap cannot un-set bits, which is
     * harmless: the gate drops a doc only on the exact key CONFIRM, and
     * the key is gone (the bitmap just over-approximates until the next
-    * full state rebuild).
+    * full state rebuild). The tombstone sets follow [[LayoutFiles]].
     *
     * Identity note: this state's ids are immutable by the
     * [[curateIncremental]] monotone-id contract (a re-crawled page
@@ -608,34 +587,33 @@ object TrainingPipeline {
     * is no delete-then-reappend of the same id here, which is why doc
     * tombstones need no generation stamps (contrast
     * [[Dedup.updateShingleIndex]], where ids are stable and versions
-    * roll). Idempotent under replay: already-tombstoned docs/keys are
-    * skipped.
+    * roll).
     */
   def deleteFromState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       deleted: DataFrame, idCol: String, textCol: Option[String] = None,
   ): Unit = {
+    LayoutFiles.recover(spark, dir)
     val want = deleted.select(col(idCol).as("doc")).distinct()
-    val live0 = spark.read.parquet(s"$dir/cleaned").select("doc")
-      .join(broadcast(want), Seq("doc"), "left_semi")
-    val live = stateTombstones(spark, dir).fold(live0)(t =>
-      live0.join(broadcast(t.select("doc")), Seq("doc"), "left_anti"))
-    live.write.mode("append").parquet(s"$dir/_tombstones")
+    LayoutFiles.retire(spark.read.parquet(s"$dir/cleaned").select("doc")
+      .join(broadcast(want), Seq("doc"), "left_semi"), dir, Seq("doc"))
     textCol.foreach { tc =>
       val fs = new org.apache.hadoop.fs.Path(s"$dir/seen_keys")
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/seen_keys"))) {
         val wantKeys = deleted
           .select(BloomGate.docKeyHash(col(tc)).as("key")).distinct()
-        val inTable = spark.read.parquet(s"$dir/seen_keys")
-          .join(broadcast(wantKeys), Seq("key"), "left_semi").distinct()
-        val fresh = stateKeyTombstones(spark, dir).fold(inTable)(t =>
-          inTable.join(broadcast(t.select("key")), Seq("key"), "left_anti"))
-        fresh.write.mode("append").parquet(s"$dir/_tombstone_keys")
+        LayoutFiles.retire(spark.read.parquet(s"$dir/seen_keys")
+          .join(broadcast(wantKeys), Seq("key"), "left_semi").distinct(),
+          dir, Seq("key"), "_tombstone_keys")
       }
     }
   }
 
+  /** Load a [[writeState]] layout. The frames come back LAZY (plain
+    * parquet scans — only the bucket-matched slices are ever read by a
+    * batch); the bitmap is driver-collected like [[BloomGate.build]]
+    * produces it. */
   def readState(spark: org.apache.spark.sql.SparkSession, dir: String): CurateState = {
     import spark.implicits._
     val params = spark.read.parquet(s"$dir/params")
@@ -792,6 +770,7 @@ object TrainingPipeline {
     import org.apache.hadoop.fs.Path
     val spark = delta.sparkSession
     import spark.implicits._
+    LayoutFiles.recover(spark, dir)
     val tables = Seq("cleaned", "band_index", "seen_keys")
     def repointed(st: CurateState, bloom: Option[(Array[Long], Int, Int)]) =
       st.copy(
@@ -901,44 +880,31 @@ object TrainingPipeline {
     * leaves another handful of batch-sized files per table, and
     * re-crawled exact copies leave duplicate seen keys — after enough
     * batches the probe scans pay more for file-open overhead than for
-    * data. Compaction rewrites each table coalesced toward
-    * `targetBytesPerFile` (size-aware: file count from the table's
-    * actual bytes) and deduplicates `seen_keys`; semantics are
-    * untouched — the spec asserts byte-identical curation before and
-    * after. Run on the cadence file-count growth dictates; at cluster
-    * scale this is also the natural point to re-bucket `band_index` by
-    * (band, band_hash) and to re-run the corpus-global span surgery
-    * that the incremental path deliberately skips.
+    * data. Compaction rewrites each table sized from its actual bytes
+    * ([[LayoutFiles.rewrite]]), folds the pending retractions in and
+    * deduplicates `seen_keys`; semantics are untouched — the spec
+    * asserts byte-identical curation before and after. Run on the
+    * cadence file-count growth dictates; at cluster scale this is also
+    * the natural point to re-bucket `band_index` by (band, band_hash)
+    * and to re-run the corpus-global span surgery that the incremental
+    * path deliberately skips.
     */
   def compactState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetBytesPerFile: Long = 128L << 20,
   ): CurateState = {
     import org.apache.hadoop.fs.Path
+    LayoutFiles.recover(spark, dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def rewrite(name: String, transform: DataFrame => DataFrame): Unit = {
-      val path = new Path(s"$dir/$name")
-      if (fs.exists(path)) {
-        val bytes = fs.getContentSummary(path).getLength
-        val files = math.max(1L, (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
-        transform(spark.read.parquet(path.toString)).coalesce(files)
-          .write.mode("overwrite").parquet(s"$dir/${name}__compact")
-        fs.delete(path, true)
-        fs.rename(new Path(s"$dir/${name}__compact"), path)
-      }
-    }
-    // fold pending retraction tombstones into the rewrite (the erasure
-    // point, as in every layout of this family) and clear the sets
-    val docTomb = stateTombstones(spark, dir).map(_.select("doc"))
-    val keyTomb = stateKeyTombstones(spark, dir).map(_.select("key"))
-    def minusDocs(df: DataFrame): DataFrame =
-      docTomb.fold(df)(t => df.join(broadcast(t), Seq("doc"), "left_anti"))
-    rewrite("cleaned", minusDocs)
-    rewrite("band_index", minusDocs)
-    rewrite("seen_keys", df => keyTomb.fold(df.distinct())(t =>
-      df.join(broadcast(t), Seq("key"), "left_anti").distinct()))
-    fs.delete(new Path(s"$dir/_tombstones"), true)
-    fs.delete(new Path(s"$dir/_tombstone_keys"), true)
+    def rewrite(name: String, transform: DataFrame => DataFrame): Unit =
+      if (fs.exists(new Path(s"$dir/$name")))
+        LayoutFiles.rewrite(dir, name, None)(
+          transform(spark.read.parquet(s"$dir/$name")))
+    val docTomb = LayoutFiles.tombstones(spark, dir)
+    val keyTomb = LayoutFiles.tombstones(spark, dir, "_tombstone_keys")
+    rewrite("cleaned", LayoutFiles.minus(_, docTomb, Seq("doc")))
+    rewrite("band_index", LayoutFiles.minus(_, docTomb, Seq("doc")))
+    rewrite("seen_keys", LayoutFiles.minus(_, keyTomb, Seq("key")).distinct())
+    LayoutFiles.commit(spark, dir)
     readState(spark, dir)
   }
 

@@ -1067,6 +1067,31 @@ class PipelineSpec extends SparkSpec {
     OperatorCache.releaseAll(spark)
   }
 
+  test("ANN delete ids that don't cast to the stored key type fail fast, not poison") {
+    // an uncast string id in a long-keyed layout's _tombstones fails
+    // every later probe's cast, and a valid delete after it leaves two
+    // `doc` types no mergeSchema read can join
+    val path = "target/graft-tmp/ann-tomb-badkey"
+    Similarity.writeIndexed(emb, "embedding", path, planes = 4)
+    val q = emb.where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
+    def probe() = Similarity.probeIndexed(spark, path, "vec_id", "embedding",
+      q, k = 5, planes = 4).collect().map(_.getLong(0)).toSeq
+    val before = probe()
+    val e = intercept[IllegalArgumentException](
+      Similarity.deleteFromIndex(Seq(Tuple1("not-an-id")).toDF("vec_id"), "vec_id", path))
+    assert(e.getMessage.contains("not-an-id") && e.getMessage.contains("stored key type"),
+      e.getMessage)
+    assert(probe() == before, "a refused delete must leave serving untouched")
+    // a numeric id given as a string casts and deletes; the set stays one schema
+    Similarity.deleteFromIndex(
+      Seq(Tuple1(before.head.toString)).toDF("vec_id"), "vec_id", path)
+    assert(!probe().contains(before.head))
+    assert(spark.read.parquet(s"$path/_tombstones").schema("doc").dataType ==
+      spark.read.parquet(path).schema("vec_id").dataType)
+    Similarity.compactIndex(spark, path, "vec_id")
+    assert(!probe().contains(before.head))
+  }
+
   test("index lifecycle: tombstones hide ids immediately, compact folds and clears") {
     val path = "/root/repo/target/graft-tmp/ann-index-lifecycle"
     Similarity.writeIndexed(emb, "embedding", path, planes = 4)
