@@ -1,17 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is FULLY materialized through the
   * noop sink (a bare count() would let Catalyst prune every projection
   * and under-measure expression-heavy queries); failures carry an "err"
   * marker instead of silently folding into the total.
   *
-  * SELF-ATTRIBUTION: a listener counts jobs/stages AND sums task-level
+  * SELF-ATTRIBUTION: [[JobMetrics]] counts jobs/stages AND sums task-level
   * executor GC / CPU time per timed run. A slow run whose job/stage
   * counts match the fast run's did the SAME work slower — and the GC/CPU
   * numbers now say WHY: a GC delta that covers the wall-clock delta is a
@@ -92,118 +87,12 @@ object Bench {
     "s14_warc_roundtrip", "s15_webdataset_roundtrip", "s16_warc_fetch",
     "s17_wet_roundtrip")
 
-  /** Jobs started/ended + stages completed + task GC/CPU sums, maintained
-    * by [[counting]]. Listener delivery is asynchronous; [[settle]] waits
-    * for the bus to drain (started == ended, all counters stable for
-    * 200 ms) so per-run deltas are exact rather than off by whatever the
-    * bus still holds.
-    */
-  private final class Counts {
-    val jobsStarted = new AtomicInteger(0)
-    val jobsEnded = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val gcMs = new AtomicLong(0L)
-    val cpuNs = new AtomicLong(0L)
-    def settle(): (Int, Int, Long, Long) = {
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      var last = (-1, -1, -1, -1L, -1L)
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline) {
-        val now = (jobsStarted.get(), jobsEnded.get(), stages.get(),
-          gcMs.get(), cpuNs.get())
-        if (now != last) { last = now; stableSince = System.nanoTime() }
-        else if (now._1 == now._2 &&
-            System.nanoTime() - stableSince > 200L * 1000 * 1000)
-          return (now._2, now._3, now._4, now._5)
-        Thread.sleep(20)
-      }
-      (jobsEnded.get(), stages.get(), gcMs.get(), cpuNs.get())
-    }
-  }
-
-  private def counting(spark: SparkSession): Counts = {
-    val c = new Counts
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        c.jobsStarted.incrementAndGet()
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        c.jobsEnded.incrementAndGet()
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        c.stages.incrementAndGet()
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        // metrics are null for tasks that died before launching
-        val m = te.taskMetrics
-        if (m != null) {
-          c.gcMs.addAndGet(m.jvmGCTime)
-          c.cpuNs.addAndGet(m.executorCpuTime)
-        }
-      }
-    })
-    c
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Tungsten execution memory (sort/agg/join buffers) off-heap: the
-      // bench box has ~128 GiB but the launching JVM's -Xmx is outside
-      // this main's control, and at sf0.1 the 32-thread run measurably
-      // GC-thrashes a small heap (r11: p02 23.0s GC on a 24.0s wall;
-      // even an unloaded 8g-heap run pays ~40s cumulative GC across the
-      // suite). Off-heap execution pages are invisible to the collector,
-      // so shuffle/agg pressure stops taxing every other thread's
-      // allocations. Native memory, bounded explicitly below.
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "24g")
-      // AQE coalescing knobs, env-overridable so the r22 A/B stays
-      // re-runnable. MEASURED (r22, 9-query heavy subset @32c,
-      // min-of-two): parallelismFirst=false (size-driven coalescing,
-      // guide §2.2) moved lifecycle queries +2–9% but cost the
-      // compute-heavy ones 10–12% (mid-size shuffles coalesce to one
-      // task and lose reduce width); minPartitionSize=8m was a wash
-      // (94.1 vs 95.1s totals, mixed signs inside noise). So the
-      // DEFAULTS stay Spark's own — the r21 anti-scaling (394.8s @32c
-      // vs 280.1s @8c) is per-JOB/driver overhead, not reduce-task
-      // counts, and the fix is fewer actions per query (r22 job-count
-      // work), not partition config.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench")
+    Harness.warmUp(spark, sfDir)
 
-    // untimed warmup: session/codegen/noop-sink init and parquet footer
-    // reads land here, not in the first timed query
-    try spark.read.parquet(s"$sfDir/region.parquet")
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // untimed CODEGEN warmup: run the heaviest generated-code family once
-    // on a 3-row corpus so Janino compilation of the shared plan shapes
-    // (shingle window, banded aggregate, verify join, scoring project)
-    // lands here. Identical plans hit the compile cache, so without this
-    // the FIRST query of a family pays compilation its successors skip —
-    // p02 measured 0.2–0.5s above its own superset p13 on identical work.
-    try {
-      import spark.implicits._
-      val tiny = Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "x y z w"))
-        .toDF("doc_id", "text")
-      graft.pipeline.TextAnalysis.cleanCorpus(tiny, "doc_id", "text")
-        .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () } finally {
-      graft.pipeline.OperatorCache.releaseAll(spark)
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-    }
-
-    val counts = counting(spark)
+    val metrics = JobMetrics.install(spark)
     val qs = SparkEntry.queries
     // each query runs twice and reports the MIN — one-shot timings on a
     // shared box swing ±30% (JIT, page cache, neighbors); the min of two
@@ -225,25 +114,16 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
       .map { name =>
         def once(): Either[String, Run] = {
-          val (j0, s0, g0, c0) = counts.settle()
+          val m0 = metrics.settle()
           val t0 = System.nanoTime()
           try {
             qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
             val sec = (System.nanoTime() - t0) / 1e9
-            val (j1, s1, g1, c1) = counts.settle()
-            Right(Run(sec, j1 - j0, s1 - s0, g1 - g0, (c1 - c0) / 1000000L))
+            val m = metrics.settle() - m0
+            Right(Run(sec, m.jobs, m.stages, m.gcMs, m.cpuMs))
           } catch {
             case e: Throwable => Left(e.getClass.getSimpleName)
-          } finally {
-            graft.pipeline.OperatorCache.releaseAll(spark)
-            spark.sharedState.cacheManager.clearCache()
-            // settle the heap OUTSIDE the timed section: without it one
-            // query's garbage is collected during the NEXT query's run,
-            // taxing whichever one happens to allocate first — the same
-            // cross-query interference the cache lifecycle fix removed,
-            // one level down
-            System.gc()
-          }
+          } finally Harness.release(spark)
         }
         val r = (once(), once()) match {
           case (Right(a), Right(b)) => Right(Seq(a, b))

@@ -1,27 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * before/after plan evidence the optimization rounds commit under
   * plans/r<N>/. For lifecycle queries (which write layouts and return a
   * final probe frame) the dump is the RETURNED frame's plan; the
   * side-effecting build/advance plans are profiled via ProfileJobs.
-  * Usage: tools/run.sh graft.PlanDump <outDir> <suffix> [queryName ...]
+  * `--final` executes each query first and dumps the AQE-final plan —
+  * the one that shows runtime exchange/stage reuse.
+  * Usage: tools/run.sh graft.PlanDump [--final] <outDir> <suffix> [queryName ...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val outDir = args.headOption.getOrElse("plans/r21")
-    val suffix = args.drop(1).headOption.getOrElse("before")
-    val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (flags, rest) = args.partition(_.startsWith("--"))
+    val runFinal = flags.contains("--final")
+    val outDir = rest.headOption.getOrElse("plans/r21")
+    val suffix = rest.drop(1).headOption.getOrElse("before")
+    val names = rest.drop(2).toSeq
+    val spark = Harness.session("graft-plan-dump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
@@ -33,6 +29,9 @@ object PlanDump {
           // swallowed into silently-wrong plan evidence
           try {
             val q = fn(spark, dir)
+            // collect() drives THIS QueryExecution (a write would re-plan
+            // a separate one), leaving the AQE-final plan behind to dump
+            if (runFinal) q.collect()
             val formatted = q.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
             java.nio.file.Files.writeString(
@@ -41,10 +40,7 @@ object PlanDump {
           } catch {
             case scala.util.control.NonFatal(e) =>
               println(s"== $n ERROR ${e.getMessage.take(120)}")
-          } finally {
-            graft.pipeline.OperatorCache.releaseAll(spark)
-            spark.sharedState.cacheManager.clearCache()
-          }
+          } finally Harness.release(spark)
       }
     }
     spark.stop()

@@ -1,33 +1,22 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
 
 /** Cold-cost job/stage profiler for a single SparkEntry query: runs the
-  * query exactly as Bench does (noop sink, cache released after), with a
-  * listener printing per-job and per-stage wall time so a slow query can
-  * be attributed to a concrete exchange/aggregate instead of guessed at.
+  * query exactly as Bench does (same session, same warm-up, noop sink,
+  * everything released after each run), with a listener printing
+  * per-job and per-stage wall time so a slow query can be attributed to
+  * a concrete exchange/aggregate instead of guessed at.
   * Usage: tools/run.sh graft.ProfileJobs <queryName> [sfDir]
   */
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("p02_dedup_minhash")
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench's memory config exactly — without the off-heap
-      // execution pages the profile GC-thrashes and attributes heap
-      // pressure to whatever stage allocates first (measured r21: p49's
-      // doc-window stages read 8–11s on-heap vs 0.45s with this match)
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-profile-jobs")
+    Harness.warmUp(spark, dir)
 
     val jobStart = TrieMap.empty[Int, (Long, String)]
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -55,18 +44,14 @@ object ProfileJobs {
       }
     })
 
-    // warmup like Bench: session/codegen/noop init out of the timed runs
-    spark.read.parquet(s"$dir/region.parquet")
-      .write.format("noop").mode("overwrite").save()
-
     val q = SparkEntry.queries(name)
     for (run <- 1 to 2) {
       println(s"=== $name run $run")
       val t0 = System.nanoTime()
-      q(spark, dir).write.format("noop").mode("overwrite").save()
-      println(f"  TOTAL ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      graft.pipeline.OperatorCache.releaseAll(spark)
-      spark.sharedState.cacheManager.clearCache()
+      try {
+        q(spark, dir).write.format("noop").mode("overwrite").save()
+        println(f"  TOTAL ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+      } finally Harness.release(spark)
     }
     spark.stop()
   }

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke main mirroring the driver's t1 check: run the flagship
   * `SparkEntry.entry` on sf0.001, print the rows and the physical plan
   * (to eyeball broadcast joins / pushed filters). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-smoke")
     val df = SparkEntry.entry(spark)
     df.explain("formatted")
     val rows = df.collect()

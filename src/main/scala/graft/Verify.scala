@@ -3,7 +3,6 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -20,20 +19,12 @@ object Verify {
       case _ => sys.error(
         "usage: graft.Verify <sfDir> <outDir> [namePrefix,namePrefix,...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_ANSI=true runs the whole suite under ANSI SQL mode —
-      // the round-close sweep that turns silent-null arithmetic
-      // (div-by-zero, overflow) into loud errors (r14's cohenKappa
-      // div-by-zero was this class of bug)
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify")
+    // SPARK_GRAFT_ANSI=true runs the whole suite under ANSI SQL mode —
+    // the round-close sweep that turns silent-null arithmetic
+    // (div-by-zero, overflow) into loud errors (r14's cohenKappa
+    // div-by-zero was this class of bug)
+    spark.conf.set("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -74,7 +74,7 @@ object BloomGate {
     * independent hashes). Every intermediate stays below 2^36:
     * overflow-free under ANSI, bit-identical to (h1 + i·h2) mod m.
     *
-    * TWO hard-won details (r14, caught live by RecrawlScaleBench — an
+    * TWO hard-won details (r14, caught live by ScaleBench recrawl — an
     * sf0.1 corpus of 4k docs produced a false drop the theory said
     * needed 2^43 docs):
     *  - the hash FOLDS its high word into the low word before the
@@ -110,7 +110,7 @@ object BloomGate {
     * receives exactly the finished numBits/8-byte artifact — truly
     * parameter-bounded, like the classifier weights or the DSIR bucket
     * model. (The first cut exploded positions through distinct+collect;
-    * at ×50 corpus scale the SketchScaleBench showed that collect
+    * at ×50 corpus scale ScaleBench sketch showed that collect
     * growing with the position count — millions of Row objects — which
     * this aggregate eliminates.)
     */

@@ -204,9 +204,10 @@ object Bpe {
     * (vocabulary-grained — the only place the UDF runs), one term-keyed
     * equi-join back, and the per-doc ordered reassembly aggregate.
     *
-    * @param persistToks cache the token frame — it feeds the dictionary
-    *   distinct AND the encode join (same contract and construction-time
-    *   eagerness as [[Dedup.removeSharedSpans]]'s persistToks).
+    * The token frame is cached — it feeds the dictionary distinct AND
+    * the encode join (same construction-time eagerness as
+    * [[Dedup.removeSharedSpans]]).
+    *
     * @param wordEnd optional end-of-word marker appended to each word's
     *   LAST piece (the classic </w> convention). With a marker the
     *   pieces stream is invertible — [[decodePieces]] reconstructs the
@@ -216,10 +217,10 @@ object Bpe {
     */
   def encode(
       df: DataFrame, idCol: String, textCol: String, model: BpeModel,
-      persistToks: Boolean = true, wordEnd: String = "",
+      wordEnd: String = "",
   ): DataFrame = {
-    val toks0 = Dedup.densePositionedTokens(df, idCol, textCol, seg = true)
-    val toks = if (persistToks) OperatorCache.materialize(toks0) else toks0
+    val toks = OperatorCache.materialize(
+      Dedup.densePositionedTokens(df, idCol, textCol, seg = true))
     // the UDF runs per DISTINCT word; corpus rows only pay the join.
     // (A fold-expression chain would need numMerges nested interpreted
     // lambdas per row — strictly worse even on the dictionary frame.)

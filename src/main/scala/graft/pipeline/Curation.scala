@@ -767,7 +767,7 @@ object Curation {
     * exchange — so a 90%-mass mega-host never materializes as one sort
     * task and the shuffle carries ~cap rows per stratum, with strata
     * counts unbounded (hosts number millions at crawl scale). Measured
-    * (CapScaleBench, 50M rows, 90% mega-host + 1M tail hosts, cap=100):
+    * (ScaleBench cap, 50M rows, 90% mega-host + 1M tail hosts, cap=100):
     * this shape 4.7–5.1s vs 6.3–7.4s for a bucket-offset-join variant —
     * the de-skew buckets only earn their exchanges when the per-stratum
     * limit is a VARIABLE column ([[selectTopPerDomain]]'s targets),

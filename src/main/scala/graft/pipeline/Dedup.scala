@@ -324,24 +324,20 @@ object Dedup {
   /** Candidate pairs from a pre-computed (doc, shingle) frame — lets
     * callers that also need the shingle sets (e.g. [[minhashNearDups]])
     * persist that frame once instead of recomputing the scan + window.
+    *
+    * The (doc, band, band_hash) frame is cached before the bucket
+    * self-join. Without it BOTH join sides recompute the full wide
+    * min-aggregate (numHashes seeded hashes over every shingle row) —
+    * the two subtrees differ only by output alias, which defeats
+    * exchange reuse (one side plans as a broadcast). The frame is
+    * n·bands narrow rows — the LSH index itself, the cheapest thing in
+    * the pipeline to hold — so caching it halves the signature work.
     */
-  /** @param persistBanded cache the (doc, band, band_hash) frame before
-    *   the bucket self-join. Without it BOTH join sides recompute the
-    *   full wide min-aggregate (numHashes seeded hashes over every
-    *   shingle row) — the two subtrees differ only by output alias, which
-    *   defeats exchange reuse (one side plans as a broadcast). The frame
-    *   is n·bands narrow rows — the LSH index itself, the cheapest thing
-    *   in the pipeline to hold — so caching it halves the signature work.
-    */
-  def minhashCandidatesFrom(
-      sh: DataFrame, numHashes: Int, bands: Int,
-      persistBanded: Boolean = true,
-  ): DataFrame = {
-    val banded0 = bandedSignatures(sh, numHashes, bands)
+  def minhashCandidatesFrom(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     // materialize, not just persist: one join side may plan as a
     // broadcast, whose exchange job races the other side on populating
     // the cache (see OperatorCache.materialize)
-    val banded = if (persistBanded) OperatorCache.materialize(banded0) else banded0
+    val banded = OperatorCache.materialize(bandedSignatures(sh, numHashes, bands))
     val a = banded.select(col("band"), col("band_hash"), col("doc").as("doc_a"))
     val b = banded.select(col("band"), col("band_hash"), col("doc").as("doc_b"))
     a.join(b, Seq("band", "band_hash"))
@@ -501,6 +497,7 @@ object Dedup {
     val spark = df.sparkSession
     GraftFunctions.ensureRegistered(spark)
     LayoutFiles.recover(spark, dir)
+    LayoutFiles.clearTombstones(spark, dir)
     // postings store the 64-bit shingle HASH (shingleHashRows), not the
     // k-gram string: the probe only ever equi-joins and counts distinct
     // shingles, so the 8-byte proxy cuts postings bytes, shuffle bytes
@@ -835,38 +832,27 @@ object Dedup {
     * reassembly aggregate. Everything is a hash equi-operation — no
     * pairwise comparison, no driver state.
     *
-    * @param persistToks cache the dense-positioned token frame — it
-    *   feeds the window derivation, the anti-join probe, and the per-doc
-    *   totals (consumers that include broadcast-planned branches); same
-    *   contract and eagerness as [[minhashNearDups.persistShingles]].
-    * @param persistWin cache the k-token span-window frame. Default
-    *   FALSE by measurement at both bench and replicated scale: the
-    *   recompute its two consumers pay is one lead-window over the
-    *   already-cached toks, while the cache holds corpus-scale k-token
-    *   STRINGS. A/B at sf0.1: 3.7–3.9s (barrier) vs 3.6–4.2s (lazy);
-    *   re-run at ×20 replication (100k docs, worst-case all-shared
-    *   regime), 3 interleaved samples each: lazy 22.8–38.2s, barrier
-    *   25.8–40.2s — a wash inside box noise at BOTH scales, so the
-    *   default stays the side with zero cache footprint. The knob
-    *   exists so the A/B is re-runnable as data shapes change
-    *   (SpanScaleBench --persist-win).
+    * Caching: the dense-positioned token frame is materialized — it
+    * feeds the window derivation, the anti-join probe, and the per-doc
+    * totals (consumers that include broadcast-planned branches); same
+    * eagerness as [[minhashNearDups]]. The k-token span-window frame is
+    * NOT cached, by measurement at both bench and replicated scale: the
+    * recompute its two consumers pay is one lead-window over the
+    * already-cached toks, while the cache would hold corpus-scale
+    * k-token STRINGS. A/B at sf0.1: 3.7–3.9s (barrier) vs 3.6–4.2s
+    * (lazy); at ×20 replication (100k docs, worst-case all-shared
+    * regime), 3 interleaved samples each: lazy 22.8–38.2s, barrier
+    * 25.8–40.2s — a wash at BOTH scales, so the side with zero cache
+    * footprint stays.
     * @return (doc, text_clean, n_tokens_kept, n_tokens_dropped)
     */
   def removeSharedSpans(
       df: DataFrame, idCol: String, textCol: String, k: Int = 8,
-      persistToks: Boolean = true,
-      persistWin: Boolean = false,
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"k must be >= 1: $k")
-    val toks = if (persistToks)
-      OperatorCache.materialize(densePositionedTokens(df, idCol, textCol))
-    else densePositionedTokens(df, idCol, textCol)
-    // win defaults to NOT persisted even though its two consumers
-    // shuffle on different keys — see the persistWin param doc for the
-    // measured A/B (wash at sf0.1, barrier loses at ×20 replication)
-    val win = if (persistWin) OperatorCache.materialize(spanWindows(toks, k))
-    else spanWindows(toks, k)
+    val toks = OperatorCache.materialize(densePositionedTokens(df, idCol, textCol))
+    val win = spanWindows(toks, k)
     val sharedSpans = win.select("doc", "span").distinct()
       .groupBy("span").agg(count(lit(1)).as("__docs"))
       .where(col("__docs") > 1).select("span")
@@ -969,19 +955,15 @@ object Dedup {
     * barrier there would be strictly slower), then the bounded ×k
     * explode and the doc-keyed reassembly. Everything doc-local except
     * nothing: no cross-doc state at all, so this scales embarrassingly.
+    * The token frame is materialized as in [[removeSharedSpans]].
     *
-    * @param persistToks same contract and eagerness as
-    *   [[removeSharedSpans]]'s persistToks.
     * @return (doc, text_clean, n_tokens_kept, n_tokens_dropped)
     */
   def removeRepeatedSpans(
       df: DataFrame, idCol: String, textCol: String, k: Int = 8,
-      persistToks: Boolean = true,
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val toks = if (persistToks)
-      OperatorCache.materialize(densePositionedTokens(df, idCol, textCol))
-    else densePositionedTokens(df, idCol, textCol)
+    val toks = OperatorCache.materialize(densePositionedTokens(df, idCol, textCol))
     val win = spanWindows(toks, k)
     val firstPos = win.groupBy("doc", "span").agg(min("pos").as("__first"))
     val covered = win.join(firstPos, Seq("doc", "span"))
@@ -1023,7 +1005,7 @@ object Dedup {
     * bounded ×minLen explode) plus one doc-keyed lag window over the
     * covered set. The covered set gains a second consumer (the run
     * counter next to the reassembly anti-join, shuffling on different
-    * keys), so it is materialized under `persistToks` — narrow
+    * keys), so it is materialized like the token frame — narrow
     * (doc, pos) pairs, bounded by the corpus token count.
     *
     * @return (doc, text_clean, n_tokens_kept, n_tokens_dropped,
@@ -1031,22 +1013,18 @@ object Dedup {
     */
   def removeSharedSubstrings(
       df: DataFrame, idCol: String, textCol: String, minLen: Int = 8,
-      persistToks: Boolean = true,
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(minLen >= 1, s"minLen must be >= 1: $minLen")
-    val toks = if (persistToks)
-      OperatorCache.materialize(densePositionedTokens(df, idCol, textCol))
-    else densePositionedTokens(df, idCol, textCol)
+    val toks = OperatorCache.materialize(densePositionedTokens(df, idCol, textCol))
     val win = spanWindows(toks, minLen)
     val sharedSpans = win.select("doc", "span").distinct()
       .groupBy("span").agg(count(lit(1)).as("__docs"))
       .where(col("__docs") > 1).select("span")
-    val covered0 = win.join(sharedSpans, "span")
+    val covered = OperatorCache.materialize(win.join(sharedSpans, "span")
       .select(col("doc"),
         explode(sequence(col("pos"), col("pos") + (minLen - 1))).as("pos"))
-      .distinct()
-    val covered = if (persistToks) OperatorCache.materialize(covered0) else covered0
+      .distinct())
     val byPos = Window.partitionBy("doc").orderBy("pos")
     val runs = covered
       .withColumn("__prev", lag(col("pos"), 1).over(byPos))
@@ -1147,32 +1125,29 @@ object Dedup {
   /** Full MinHash-LSH near-dup pipeline: candidates from banded LSH,
     * verified with exact n-gram Jaccard ≥ threshold. Joins back to the
     * docs only for candidate ids (two equi-joins on the id).
-    */
-  /** @param persistShingles cache the pipeline's shared intermediates
-    *   (MEMORY_AND_DISK, tracked by [[OperatorCache]] — call
-    *   `OperatorCache.releaseAll(spark)` once results are materialized;
-    *   Spark offers no reliable post-action unpersist hook inside a
-    *   lazily-evaluated plan). Three frames, each feeding two consumers
-    *   that would otherwise recompute it (differently-aliased self-join /
-    *   verify-join sides defeat exchange reuse): the (doc, shingle) frame
-    *   (scan + explode + window ×2), the banded signature frame (the
-    *   numHashes-column min-aggregate ×2), and the verification sets (the
-    *   collect_set aggregate ×2 — the steady-state bottleneck, as
-    *   ObjectHashAggregate runs outside codegen). Long-lived sessions can
-    *   pass false to trade recompute for zero cache footprint.
-    *   EAGERNESS: with the flag on, the broadcast-consumed frames are
-    *   materialized at operator-CONSTRUCTION time (one count() job each —
-    *   see [[OperatorCache.materialize]]): building the returned frame
-    *   runs Spark jobs even if the result is never consumed, and input
-    *   failures surface at construction rather than first action. Pass
-    *   false for a fully lazy plan. The same applies to every operator
-    *   here whose persist* doc references this contract.
+    *
+    * Caching: the pipeline's shared intermediates are persisted
+    * (MEMORY_AND_DISK, tracked by [[OperatorCache]] — call
+    * `OperatorCache.releaseAll(spark)` once results are materialized;
+    * Spark offers no reliable post-action unpersist hook inside a
+    * lazily-evaluated plan). Three frames, each feeding two consumers
+    * that would otherwise recompute it (differently-aliased self-join /
+    * verify-join sides defeat exchange reuse): the (doc, shingle) frame
+    * (scan + explode + window ×2), the banded signature frame (the
+    * numHashes-column min-aggregate ×2), and the verification sets (the
+    * collect_set aggregate ×2 — the steady-state bottleneck, as
+    * ObjectHashAggregate runs outside codegen).
+    * EAGERNESS: the broadcast-consumed frames are materialized at
+    * operator-CONSTRUCTION time (one count() job each — see
+    * [[OperatorCache.materialize]]): building the returned frame runs
+    * Spark jobs even if the result is never consumed, and input failures
+    * surface at construction rather than first action. The same applies
+    * to every operator here whose doc references this contract.
     */
   def minhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.7, shingleK: Int = 3,
       numHashes: Int = 32, bands: Int = 8,
-      persistShingles: Boolean = true,
   ): DataFrame = {
     // SELECTIVE materialization (r8, attributed with ProfileJobs): only
     // the frames whose consumers include broadcast-exchange branches get
@@ -1188,11 +1163,9 @@ object Dedup {
     // the persisted occurrence frame carries the 8-byte hash state
     // (shingleXxRows), not the k-gram string — half the cache bytes,
     // and neither consumer re-hashes a string from it
-    val sh0 = shingleXxRows(df, idCol, textCol, shingleK)
-    val sh = if (persistShingles) OperatorCache.persist(sh0) else sh0
-    val cands = minhashCandidatesFrom(sh, numHashes, bands, persistShingles)
-    val sets0 = shingleSetsFrom(sh)
-    val sets = if (persistShingles) OperatorCache.materialize(sets0) else sets0
+    val sh = OperatorCache.persist(shingleXxRows(df, idCol, textCol, shingleK))
+    val cands = minhashCandidatesFrom(sh, numHashes, bands)
+    val sets = OperatorCache.materialize(shingleSetsFrom(sh))
     cands
       .join(sets.withColumnRenamed("sid", "doc_a").withColumnRenamed("sset", "set_a"), "doc_a")
       .join(sets.withColumnRenamed("sid", "doc_b").withColumnRenamed("sset", "set_b"), "doc_b")
@@ -1332,21 +1305,19 @@ object Dedup {
     * Returns exactly the pairs with Hamming(fp_a, fp_b) ≤ maxHamming
     * (for maxHamming ≤ 63 — see the band-layout guarantee).
     *
-    * @param persistFp cache the (doc, fp) fingerprint frame — 16 bytes a
-    *   row at ANY corpus size, but built by the 64-column vote aggregate
-    *   over every token, which the banded self-join would otherwise run
-    *   once per side. Tracked by [[OperatorCache]]; same release contract
-    *   as [[minhashNearDups]].
+    * The (doc, fp) fingerprint frame is cached — 16 bytes a row at ANY
+    * corpus size, but built by the 64-column vote aggregate over every
+    * token, which the banded self-join would otherwise run once per
+    * side. Tracked by [[OperatorCache]]; same release contract as
+    * [[minhashNearDups]].
     */
   def simhashNearDups(
       df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3,
       hashFn: Column => Column = xxhash64(_),
-      persistFp: Boolean = true,
   ): DataFrame = {
-    val fp0 = simhashPerDoc(df, idCol, textCol, hashFn)
     // materialize: the banded self-join's sides may broadcast, and their
     // exchange jobs would race the 64-column vote aggregate otherwise
-    val fp = if (persistFp) OperatorCache.materialize(fp0) else fp0
+    val fp = OperatorCache.materialize(simhashPerDoc(df, idCol, textCol, hashFn))
     simhashCandidatesFromFp(fp, maxHamming)
   }
 
@@ -1891,14 +1862,13 @@ object Dedup {
     */
   def sourceOverlapMatrix(
       df: DataFrame, idCol: String, textCol: String, srcCol: String,
-      k: Int = 8, persistTypes: Boolean = true): DataFrame = {
+      k: Int = 8): DataFrame = {
     val docSrc = df.select(col(idCol).as("doc"), col(srcCol).as("src"))
-    val types0 = shingleRows(df, idCol, textCol, k)
-      .join(docSrc, "doc")
-      .select("src", "shingle").distinct()
     // three consumers (per-source counts + both pair-join sides) — the
     // usual barrier so concurrent jobs don't recompute the aggregate
-    val types = if (persistTypes) OperatorCache.materialize(types0) else types0
+    val types = OperatorCache.materialize(shingleRows(df, idCol, textCol, k)
+      .join(docSrc, "doc")
+      .select("src", "shingle").distinct())
     val per = types.groupBy("src").agg(count(lit(1)).as("n"))
     val pairs = types.select(col("shingle"), col("src").as("src_a"))
       .join(types.select(col("shingle"), col("src").as("src_b")), "shingle")

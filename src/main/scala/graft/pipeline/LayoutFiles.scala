@@ -133,6 +133,15 @@ object LayoutFiles {
     }
   }
 
+  /** Drop every pending tombstone set of the layout at `dir` — the step
+    * before a writer rebuilds the layout in place: the rebuild stamps
+    * gen 0 again, and a tombstone left from the old contents would hide
+    * the fresh rows. */
+  def clearTombstones(spark: SparkSession, dir: String): Unit = {
+    val fs = fsOf(spark, dir)
+    TombstoneSets.foreach(n => fs.delete(new Path(dir, n), true))
+  }
+
   /** Fail with [[UnfinishedCommit]] if a commit of `dir` is not done. */
   def requireCommitted(spark: SparkSession, dir: String): Unit =
     if (fsOf(spark, dir).exists(new Path(dir, Marker))) throw new UnfinishedCommit(dir)

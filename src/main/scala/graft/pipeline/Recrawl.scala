@@ -167,7 +167,7 @@ object Recrawl {
       // layouts touch disjoint directories — so they advance on
       // concurrent threads over the shared session. Every op here is a
       // chain of small batch-sized jobs (latency-bound, the
-      // LifecycleScaleBench finding), so running layouts side by side
+      // ScaleBench lifecycle finding), so running layouts side by side
       // cuts the advance wall from the sum of the chains toward their
       // max. Per layout, the batch's RETIRE set (departed ids ∪ the
       // upserted ids' old versions) tombstones in ONE delete pass

@@ -1516,40 +1516,35 @@ object Similarity {
     * fixed small k becomes at real corpus sizes. Pass `k` explicitly to
     * override (the derivation costs one count() job).
     *
+    * The input corpus (Lloyd training scans it iters+1 times) and the
+    * per-cell assignment frame are cached — same construction-time
+    * eagerness contract as [[Dedup.minhashNearDups]]: building the
+    * operator runs the training scans and barrier count() jobs before
+    * any action on the returned frame; released via
+    * [[OperatorCache.releaseAll]].
+    *
     * @param k number of IVF cells; ≤ 0 means derive as
     *   [[semanticDedupCellCount]](corpus count)
-    * @param persistAssigned cache the input corpus (Lloyd training scans
-    *   it iters+1 times) and the per-cell assignment frame — same
-    *   opt-out and construction-time eagerness contract as
-    *   minhashNearDups.persistShingles: with the flag on, building the
-    *   operator runs the training scans and barrier count() jobs before
-    *   any action on the returned frame; released via
-    *   [[OperatorCache.releaseAll]].
     * @return the surviving rows (original columns + `centroid`)
     */
   def semanticDedup(
       corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double, k: Int = 0, iters: Int = 2,
-      persistAssigned: Boolean = true,
   ): DataFrame = {
     // Deriving k needs a count; ivfTrain then scans the corpus iters+1
     // more times. Persist the input ONCE so the upstream plan (often a
     // parquet scan + projection, but sometimes an expensive pipeline)
     // executes once instead of iters+2 times — released with the rest of
     // the operator's frames by the caller's OperatorCache.releaseAll.
-    val src =
-      if (k > 0 || !persistAssigned) corpus else OperatorCache.persist(corpus)
+    val src = if (k > 0) corpus else OperatorCache.persist(corpus)
     val cells = if (k > 0) k else semanticDedupCellCount(src.count())
     val index = ivfTrain(src, idCol, vecCol, cells, iters)
     // the assignment feeds both sides of the pair join AND the surviving
     // output — caching it computes the k dot products once per row
-    // (same tradeoff note as minhashNearDups.persistShingles)
-    val assigned0 = ivfIndex(src, vecCol, index)
     // materialize, not just persist: a broadcast-planned side of the pair
     // join below would race the other consumers on computing the k dot
     // products per row (see OperatorCache.materialize)
-    val assigned =
-      if (persistAssigned) OperatorCache.materialize(assigned0) else assigned0
+    val assigned = OperatorCache.materialize(ivfIndex(src, vecCol, index))
     val a = assigned.select(col("centroid"),
       col(idCol).as("__id_a"), col(vecCol).as("__vec_a"))
     val b = assigned.select(col("centroid"),
@@ -1586,13 +1581,10 @@ object Similarity {
   def semanticDedupIncremental(
       priorAssigned: DataFrame, batch: DataFrame,
       idCol: String, vecCol: String, index: IvfIndex, threshold: Double,
-      persistAssigned: Boolean = true,
   ): DataFrame = {
-    val assigned0 = ivfIndex(batch, vecCol, index)
     // the assignment feeds three consumers (both drop joins + the
     // output anti-join) — same materialize contract as semanticDedup
-    val assigned =
-      if (persistAssigned) OperatorCache.materialize(assigned0) else assigned0
+    val assigned = OperatorCache.materialize(ivfIndex(batch, vecCol, index))
     semanticDedupIncrementalAssigned(
       priorAssigned, assigned, idCol, vecCol, threshold)
   }
@@ -1651,6 +1643,7 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     LayoutFiles.recover(spark, dir)
+    LayoutFiles.clearTombstones(spark, dir)
     val src = if (k > 0) corpus else OperatorCache.persist(corpus)
     val cells = if (k > 0) k else semanticDedupCellCount(src.count())
     val index = ivfTrain(src, idCol, vecCol, cells, iters)
@@ -1701,13 +1694,11 @@ object Similarity {
     */
   def semanticDedupFromState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      batch: DataFrame, persistAssigned: Boolean = true,
+      batch: DataFrame,
   ): DataFrame = {
     val (idCol, vecCol, threshold, _) = dedupStateParams(spark, dir)
     val index = readDedupIndex(spark, dir)
-    val assigned0 = ivfIndex(batch, vecCol, index)
-    val assigned =
-      if (persistAssigned) OperatorCache.materialize(assigned0) else assigned0
+    val assigned = OperatorCache.materialize(ivfIndex(batch, vecCol, index))
     val cells = assigned.select("centroid").distinct()
       .collect().map(r => Integer.valueOf(r.getInt(0)))
     val prior = LayoutFiles.minus(spark.read.parquet(s"$dir/assigned")

@@ -769,26 +769,23 @@ object TextAnalysis {
     * representative per cluster). Each stage is the operator defined
     * elsewhere in this package; composing them keeps one scan + the
     * dedup's bucketed joins as the only shuffles.
+    *
+    * The scored+filtered frame is cached — the dedup stage consumes it
+    * twice (shingle candidates + the representative anti-join) and the
+    * quality/langid columns are the most expensive expressions in the
+    * pipeline; caching caps them at one evaluation per row. Same
+    * construction-time eagerness contract as [[Dedup.minhashNearDups]].
     */
-  /** @param persistFiltered cache the scored+filtered frame — the dedup
-    *   stage consumes it twice (shingle candidates + the representative
-    *   anti-join) and the quality/langid columns are the most expensive
-    *   expressions in the pipeline; caching caps them at one evaluation
-    *   per row. Same opt-out and construction-time eagerness contract
-    *   as minhashNearDups.persistShingles. */
   def cleanCorpus(
       df: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       minQuality: Double = 0.3, languages: Set[String] = Set.empty,
       dedupThreshold: Double = 0.8,
-      persistFiltered: Boolean = true,
   ): org.apache.spark.sql.DataFrame = {
-    val filtered0 = floorCorpus(df, textCol, minQuality, languages)
     // materialize, not just persist: the dedup stage's broadcast-join
     // branches run as concurrent jobs and would otherwise race to
     // recompute the scoring expressions — the most expensive per-row
     // work in the pipeline (see OperatorCache.materialize)
-    val filtered =
-      if (persistFiltered) OperatorCache.materialize(filtered0) else filtered0
+    val filtered = OperatorCache.materialize(floorCorpus(df, textCol, minQuality, languages))
     Dedup.dedupNearDuplicates(filtered, idCol, textCol, dedupThreshold)
   }
 
@@ -839,21 +836,17 @@ object TextAnalysis {
     * join is term-keyed (never a crossJoin), the scalar N joins as a
     * 1-row broadcast. Ranking is a per-doc window over topN rows kept
     * by WindowGroupLimit.
+    *
+    * The (doc, term, tf) aggregate is cached — it feeds two branches
+    * (AQE does not reliably reuse the identical stage) and is
+    * vocabulary-sized, far smaller than the exploded corpus. EAGERNESS:
+    * the aggregate is materialized at operator-CONSTRUCTION time (one
+    * count() job) — building the returned frame runs Spark jobs even if
+    * the result is never consumed, and input failures surface at
+    * construction, not first action.
     */
-  /** @param persistAgg cache the (doc, term, tf) aggregate — it feeds two
-    *   branches (AQE does not reliably reuse the identical stage) and is
-    *   vocabulary-sized, far smaller than the exploded corpus. Long-lived
-    *   sessions composing many calls can pass false to trade recompute
-    *   for zero cache footprint (same contract as
-    *   minhashNearDups.persistShingles). EAGERNESS: with the flag on,
-    *   the aggregate is materialized at operator-CONSTRUCTION time (one
-    *   count() job) — building the returned frame runs Spark jobs even
-    *   if the result is never consumed, and input failures surface at
-    *   construction, not first action; pass false for a fully lazy
-    *   plan. */
   def tfidfTopTerms(
       df: DataFrame, idCol: String, textCol: String, topN: Int = 5,
-      persistAgg: Boolean = true,
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val terms = df.select(col(idCol).as("doc"),
@@ -861,10 +854,10 @@ object TextAnalysis {
     // ONE corpus explode: df (per-term doc frequency) derives from the
     // (doc, term) aggregate — tf rows are distinct per (doc, term), so
     // counting rows per term IS count-distinct-doc.
-    val tf0 = terms.groupBy("doc", "term").agg(count(lit(1)).as("tf"))
     // materialize: the 1-row scalar broadcast below is its own job and
     // would race the main job on computing this aggregate
-    val tf = if (persistAgg) OperatorCache.materialize(tf0) else tf0
+    val tf = OperatorCache.materialize(
+      terms.groupBy("doc", "term").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).as("n_docs"))
     // idf per TERM over the vocabulary-sized frame (1-row scalar joins
@@ -898,15 +891,14 @@ object TextAnalysis {
     * the exploded stream, so tf/df aggregates touch only matching terms;
     * doc lengths are one map-side-combined aggregate; N and avgdl ride a
     * 1-row broadcast.
+    *
+    * The (doc, term, tf) aggregate feeding four branches is cached — see
+    * tfidfTopTerms (same construction-time eagerness contract: two
+    * count() jobs run when the operator is built).
     */
-  /** @param persistAgg cache the (doc, term, tf) aggregate feeding four
-    *   branches — see tfidfTopTerms (same opt-out AND construction-time
-    *   eagerness contract: two count() jobs run when the operator is
-    *   built). */
   def bm25(
       df: DataFrame, idCol: String, textCol: String, queryTerms: Seq[String],
       k1: Double = 1.2, b: Double = 0.75,
-      persistAgg: Boolean = true,
   ): DataFrame = {
     require(queryTerms.nonEmpty, "bm25 needs at least one query term")
     val terms = df.select(col(idCol).as("doc"),
@@ -914,15 +906,14 @@ object TextAnalysis {
     // ONE corpus pass: the (doc, term, tf) aggregate; doc length, corpus
     // stats, and query-term df all derive from it (exact — dl is an
     // integer sum).
-    val tfAll0 = terms.groupBy("doc", "term").agg(count(lit(1)).as("tf"))
     // materialize: the stats broadcast job races this aggregate otherwise
-    val tfAll = if (persistAgg) OperatorCache.materialize(tfAll0) else tfAll0
+    val tfAll = OperatorCache.materialize(
+      terms.groupBy("doc", "term").agg(count(lit(1)).as("tf")))
     // docLen feeds the scalar stats (a broadcast job) AND the score join
     // — barrier it like the LM scorers' totals frames, or each consumer
     // re-aggregates it from the tfAll cache. No extra data pass: the
     // aggregate runs from cache either way, and it is one row per doc.
-    val docLen0 = tfAll.groupBy("doc").agg(sum("tf").as("dl"))
-    val docLen = if (persistAgg) OperatorCache.materialize(docLen0) else docLen0
+    val docLen = OperatorCache.materialize(tfAll.groupBy("doc").agg(sum("tf").as("dl")))
     val stats = docLen.agg(count(lit(1)).as("n_docs"),
       avg(col("dl").cast("double")).as("avgdl"))
     val tf = tfAll.where(col("term").isin(queryTerms: _*))
@@ -954,25 +945,23 @@ object TextAnalysis {
     * Scale shape: one token explode feeding both the (doc, term) counts
     * and the global term counts; the per-term probabilities join back
     * term-keyed; scalars (total, vocab) ride a 1-row broadcast.
+    *
+    * The (doc, term, tf) aggregate feeding both the global distribution
+    * and the per-doc scores is cached — see tfidfTopTerms (same
+    * construction-time eagerness contract: two count() jobs run when
+    * the operator is built; the cache is released via
+    * [[OperatorCache.releaseAll]]).
     */
-  /** @param persistAgg cache the (doc, term, tf) aggregate feeding both
-    *   the global distribution and the per-doc scores — see tfidfTopTerms
-    *   (same opt-out and construction-time eagerness contract: two
-    *   count() jobs run when the operator is built; the cache is
-    *   released via [[OperatorCache.releaseAll]]). */
-  def unigramNll(df: DataFrame, idCol: String, textCol: String,
-      persistAgg: Boolean = true): DataFrame = {
+  def unigramNll(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = df.select(col(idCol).as("doc"),
       explode(Dedup.tokensOf(col(textCol))).as("term"))
-    val tf0 = toks.groupBy("doc", "term").agg(count(lit(1)).as("tf"))
     // materialize: the stats broadcast job races this aggregate otherwise
-    val tf = if (persistAgg) OperatorCache.materialize(tf0) else tf0
+    val tf = OperatorCache.materialize(
+      toks.groupBy("doc", "term").agg(count(lit(1)).as("tf")))
     // termTotals feeds both the scalar stats and the score join, which
     // run as concurrent broadcast jobs — barrier it too (vocabulary-sized)
     // or each re-aggregates it from the tf cache
-    val termTotals0 = tf.groupBy("term").agg(sum("tf").as("ct"))
-    val termTotals =
-      if (persistAgg) OperatorCache.materialize(termTotals0) else termTotals0
+    val termTotals = OperatorCache.materialize(tf.groupBy("term").agg(sum("tf").as("ct")))
     val stats = termTotals.agg(sum("ct").as("total"), count(lit(1)).as("vocab"))
     // model first (term → smoothed log-prob) over the vocabulary-sized
     // frame — the log runs per TERM, not per (doc, term) row, and the
@@ -1046,26 +1035,24 @@ object TextAnalysis {
     * downstream count re-aggregates from cache, two equi-joins back on
     * (w1, w2) and (w1), and 1-row scalar broadcast — no crossJoin beyond
     * the 1-row stats, no driver state.
+    *
+    * The (doc, w1, w2, tf) aggregate feeding the model counts and the
+    * per-doc scores is cached — same construction-time eagerness
+    * contract as [[unigramNll]] (two count() jobs at build: the bigram
+    * aggregate and pairTotals barriers).
     */
-  /** @param persistAgg cache the (doc, w1, w2, tf) aggregate feeding the
-    *   model counts and the per-doc scores — same opt-out and
-    *   construction-time eagerness contract as [[unigramNll]]'s
-    *   persistAgg (two count() jobs at build: the bigram aggregate and
-    *   pairTotals barriers). */
-  def bigramNll(df: DataFrame, idCol: String, textCol: String,
-      persistAgg: Boolean = true): DataFrame = {
+  def bigramNll(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("doc"),
       posexplode(Dedup.tokensOf(col(textCol))))
       .toDF("doc", "pos", "tok")
     val w = Window.partitionBy("doc").orderBy("pos")
-    val bg0 = toks
-      .select(col("doc"), col("tok").as("w1"), lead(col("tok"), 1).over(w).as("w2"))
-      .where(col("w2").isNotNull)
-      .groupBy("doc", "w1", "w2").agg(count(lit(1)).as("tf"))
     // materialize: the scalar-stats broadcast job races this aggregate
     // otherwise (same race unigramNll's tf barrier closes)
-    val bg = if (persistAgg) OperatorCache.materialize(bg0) else bg0
+    val bg = OperatorCache.materialize(toks
+      .select(col("doc"), col("tok").as("w1"), lead(col("tok"), 1).over(w).as("w2"))
+      .where(col("w2").isNotNull)
+      .groupBy("doc", "w1", "w2").agg(count(lit(1)).as("tf")))
     // pairTotals has THREE consumers (leftTotals, the vocab stats, and
     // the score join), at least two of which run as concurrent broadcast
     // jobs — without its own barrier each re-aggregated pairTotals from
@@ -1075,9 +1062,7 @@ object TextAnalysis {
     // result is negligible) — at bench scale the duplicates overlapped
     // on idle cores so wall-clock is unchanged, but on a busy cluster
     // the duplicate CPU is real cost.
-    val pairTotals0 = bg.groupBy("w1", "w2").agg(sum("tf").as("cb"))
-    val pairTotals =
-      if (persistAgg) OperatorCache.materialize(pairTotals0) else pairTotals0
+    val pairTotals = OperatorCache.materialize(bg.groupBy("w1", "w2").agg(sum("tf").as("cb")))
     val leftTotals = pairTotals.groupBy("w1").agg(sum("cb").as("cl"))
     val stats = pairTotals
       .select(explode(array(col("w1"), col("w2"))).as("t"))
@@ -1126,28 +1111,26 @@ object TextAnalysis {
     * broadcast. Nothing reaches the driver.
     */
   def kneserNeyTrigramNll(df: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75, persistAgg: Boolean = true): DataFrame = {
+      discount: Double = 0.75): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(discount > 0 && discount < 1, s"discount must be in (0,1): $discount")
     val toks = df.select(col(idCol).as("doc"),
       posexplode(Dedup.tokensOf(col(textCol))))
       .toDF("doc", "pos", "tok")
     val w = Window.partitionBy("doc").orderBy("pos")
-    val tg0 = toks
+    val tg = OperatorCache.materialize(toks
       .select(col("doc"), col("tok").as("w1"),
         lead(col("tok"), 1).over(w).as("w2"),
         lead(col("tok"), 2).over(w).as("w3"))
       .where(col("w3").isNotNull)
-      .groupBy("doc", "w1", "w2", "w3").agg(count(lit(1)).as("tf"))
-    val tg = if (persistAgg) OperatorCache.materialize(tg0) else tg0
+      .groupBy("doc", "w1", "w2", "w3").agg(count(lit(1)).as("tf")))
     // trigram-type counts feed four consumers (hist, cont2, the model
     // join) — barrier them like bigramNll's pairTotals
-    val tri0 = tg.groupBy("w1", "w2", "w3").agg(sum("tf").as("c3"))
-    val tri = if (persistAgg) OperatorCache.materialize(tri0) else tri0
+    val tri = OperatorCache.materialize(tg.groupBy("w1", "w2", "w3").agg(sum("tf").as("c3")))
     val hist = tri.groupBy("w1", "w2")
       .agg(sum("c3").as("h"), count(lit(1)).as("n1f")) // mass + N1+(w1w2•)
-    val cont20 = tri.groupBy("w2", "w3").agg(count(lit(1)).as("n1l")) // N1+(•w2w3)
-    val cont2 = if (persistAgg) OperatorCache.materialize(cont20) else cont20
+    val cont2 = OperatorCache.materialize(
+      tri.groupBy("w2", "w3").agg(count(lit(1)).as("n1l"))) // N1+(•w2w3)
     val mid = cont2.groupBy("w2")
       .agg(sum("n1l").as("midTot"), count(lit(1)).as("nfol2")) // N1+(•w2•), N1+(w2•)
     val unic = cont2.groupBy("w3").agg(count(lit(1)).as("n1c")) // N1+(•w3)
@@ -1430,7 +1413,7 @@ object TextAnalysis {
   def gopherRepetitionStats(
       df: DataFrame, idCol: String, textCol: String,
       topNs: Seq[Int] = Seq(2, 3, 4), dupNs: Seq[Int] = Seq(5, 6, 7, 8, 9, 10),
-      persist: Boolean = true, segmented: Boolean = false,
+      segmented: Boolean = false,
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topNs.nonEmpty && dupNs.nonEmpty, "need at least one n per family")
@@ -1455,12 +1438,10 @@ object TextAnalysis {
     // n needs; the per-n branches below select from it without
     // re-sorting — all-long rows, so the persisted frame is small and
     // the window copies 8-byte values, not string bytes
-    val leaded0 = (1 until maxN).foldLeft(toks0) { case (d, j) =>
+    val leaded = OperatorCache.materialize((1 until maxN).foldLeft(toks0) { case (d, j) =>
       d.withColumn(s"th_$j", lead(col("th"), j).over(wDoc))
         .withColumn(s"tlen_$j", lead(col("tlen"), j).over(wDoc))
-    }
-    val leaded =
-      if (persist) OperatorCache.materialize(leaded0) else leaded0
+    })
 
     val totals = leaded.groupBy("doc")
       .agg((sum(col("tlen")) + count(lit(1)) - 1L).as("total"))

@@ -114,10 +114,8 @@ object TextClassifier {
   def train(
       df: DataFrame, idCol: String, textCol: String, labelCol: String,
       numBuckets: Int = 256, epochs: Int = 3, lrNum: Long = 1, lrDen: Long = 2,
-      persistFeatures: Boolean = true,
   ): Model = {
-    val feats0 = features(df, idCol, textCol, labelCol, numBuckets)
-    val feats = if (persistFeatures) OperatorCache.materialize(feats0) else feats0
+    val feats = OperatorCache.materialize(features(df, idCol, textCol, labelCol, numBuckets))
     trainOnFeatures(feats, numBuckets, epochs, lrNum, lrDen)
   }
 

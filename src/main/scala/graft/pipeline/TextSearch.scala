@@ -43,6 +43,7 @@ object TextSearch {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     GraftFunctions.ensureRegistered(df.sparkSession)
     LayoutFiles.recover(df.sparkSession, dir)
+    LayoutFiles.clearTombstones(df.sparkSession, dir)
     val terms = df.select(col(idCol).as("doc"),
       explode(Dedup.tokensOf(col(textCol))).as("term"))
     // lazy persist, NOT materialize: every consumer below is a

@@ -286,7 +286,7 @@ object TrainingPipeline {
     *    8-byte-per-doc [[BloomGate.docKeyHash]] table, before the doc
     *    is dropped. The confirm is what keeps the gate sound at scale:
     *    a 2²²-bit bitmap over a 485k-doc corpus false-positives ~2% of
-    *    a fresh batch (measured live, RecrawlScaleBench at 500k docs —
+    *    a fresh batch (measured live, ScaleBench recrawl at 500k docs —
     *    72 good docs silently gone), and no fixed bitmap sizing makes
     *    that 0. With the confirm, gate drops are EXACTLY the docs whose
     *    normalized text appeared before, at any corpus size. Both
@@ -515,18 +515,18 @@ object TrainingPipeline {
     // `_applied_<id>` markers would make a later appendState of a
     // same-named batch against the NEW state a silent no-op (the batch
     // never lands, dedup links through it are lost — found as a
-    // 3-survivor drift in RecrawlScaleBench after a testdata
+    // 3-survivor drift in ScaleBench recrawl after a testdata
     // regeneration reused the dir), and stale tombstones would retract
     // docs the new state never contained. The table writes below
     // already overwrite; the top-level marker/tombstone files must go
     // explicitly.
+    LayoutFiles.clearTombstones(spark, dir)
     val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(d)) {
       fs.listStatus(d).foreach { st =>
         val n = st.getPath.getName
-        if (n.startsWith("_applied_") || n.startsWith("._applied_") ||
-          n == "_tombstones" || n == "_tombstone_keys")
+        if (n.startsWith("_applied_") || n.startsWith("._applied_"))
           fs.delete(st.getPath, true)
       }
     }

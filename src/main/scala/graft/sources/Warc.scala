@@ -454,7 +454,7 @@ object Warc {
   /** Reused-Inflater gzip-member decompressor — [[MemberGzip]]'s read
     * twin: a fresh GZIPInputStream per fetched record spends its time
     * allocating and freeing native zlib state, not inflating (measured
-    * 3.9s → sub-second for a 10k-record fetch, FormatScaleBench). Parses
+    * 3.9s → sub-second for a 10k-record fetch, ScaleBench format). Parses
     * the full gzip header grammar (FEXTRA/FNAME/FCOMMENT/FHCRC), so it
     * reads members any writer produced; returns null on damage (the
     * caller falls back or skips — fetch never throws).
@@ -523,7 +523,7 @@ object Warc {
     * zlib state) + CRC32 across all of a shard's records: a fresh
     * `GZIPOutputStream` per ~KB record spends its time constructing and
     * ending Deflaters, not compressing — measured 5–8 MB/s vs ~50 for
-    * the reuse shape on 500k small records (FormatScaleBench). Emits
+    * the reuse shape on 500k small records (ScaleBench format). Emits
     * the standard 10-byte header (zeroed MTIME for reproducibility),
     * raw-deflate body, CRC32+ISIZE trailer — byte-compatible with any
     * gzip reader.

@@ -456,7 +456,7 @@ class AnnotateSpec extends SparkSpec {
       // real-embedding semantic dedup: one representative per ε-ball,
       // greedy by min id → docs 0, 1, 2 survive
       val survivors = Similarity.semanticDedup(embedded, "doc_id", "embedding",
-        threshold = 0.9, k = 1, persistAssigned = false)
+        threshold = 0.9, k = 1)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(survivors == Seq(0L, 1L, 2L), s"got $survivors")
 
