@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -450,20 +450,6 @@ object Dedup {
       .select("doc_a", "doc_b").distinct()
   }
 
-  /** Decontamination: drop corpus docs that share at least `minOverlap`
-    * distinct word k-shingles with a held-out blocklist (benchmark /
-    * eval sets) — the n-gram-overlap screen the large-LM training
-    * pipelines run before training (public method; e.g. the 13-gram
-    * overlap filters described in the GPT-3 and PaLM reports).
-    *
-    * Scale shape: the blocklist is benchmark-sized by definition, so its
-    * distinct shingle set is broadcast — the corpus side is one scan +
-    * the shingle window, the overlap count reuses the window's doc
-    * partitioning (no extra exchange), and contaminated ids come back as
-    * a broadcast anti-join. Nothing shuffles the corpus by shingle.
-    *
-    * @return the surviving corpus rows (original columns, unchanged)
-    */
   /** Persist a (doc, shingle) postings index partitioned by
     * fnv(shingle) mod `buckets` — the layout that makes decontamination
     * an INDEX PROBE instead of a corpus scan. What the probe saves,
@@ -482,10 +468,11 @@ object Dedup {
     *
     * Lifecycle (the [[graft.pipeline.TextSearch]] pattern, uniform
     * across every persisted serving layout here): postings carry an
-    * LSM-style generation stamp (`gen`, 0 at build), a doc-keyed
-    * `docs/` side table maps ids to their live versions so a DELETE
-    * never scans the shingle-bucketed postings, and `stats` rolls
-    * `max_gen` so appends stamp fresh versions. A re-crawled document
+    * LSM-style generation stamp (`gen`, 0 at build — a build is the
+    * generation-0 append), a doc-keyed `docs/` side table maps ids to
+    * their live versions so a DELETE never scans the shingle-bucketed
+    * postings, and `stats` rolls `max_gen` so appends stamp fresh
+    * versions. A re-crawled document
     * goes through [[updateShingleIndex]] (tombstone old gen + append
     * new); [[compactShingleIndex]] folds deletes out ([[LayoutFiles]]).
     */
@@ -494,34 +481,10 @@ object Dedup {
       shingleK: Int = 8, buckets: Int = 64,
   ): Unit = {
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val spark = df.sparkSession
-    GraftFunctions.ensureRegistered(spark)
-    LayoutFiles.recover(spark, dir)
-    LayoutFiles.clearTombstones(spark, dir)
-    // postings store the 64-bit shingle HASH (shingleHashRows), not the
-    // k-gram string: the probe only ever equi-joins and counts distinct
-    // shingles, so the 8-byte proxy cuts postings bytes, shuffle bytes
-    // and the distinct's allocation by the k-gram's width (~6–8× at
-    // k=8), and collisions only ever ADD overlap — the safe direction
-    // for a decontamination screen (see shingleHashRows)
-    shingleHashRows(df, idCol, textCol, shingleK)
-      .distinct()
-      .withColumn("sb", pmod(col("sh"), lit(buckets.toLong)))
-      .withColumn("gen", lit(0L))
-      // cluster by the partition value first (guide §6) — without it
-      // every input partition opens a writer per bucket it touches
-      // (the 32-task × 64-bucket ~2k-file fan-out measured on p128's
-      // BM25 sibling); one exchange buys one file set per bucket
-      .repartition(col("sb"))
-      .write.mode("overwrite").partitionBy("sb").parquet(s"$dir/postings")
-    // (doc, gen) keyed by doc — what a DELETE reads to find a doc's
-    // live versions (docs with no shingles still get a row, so their
-    // delete is a no-op instead of a silent miss)
-    df.select(col(idCol).as("doc")).distinct().withColumn("gen", lit(0L))
-      .write.mode("overwrite").parquet(s"$dir/docs")
-    import spark.implicits._
-    Seq((shingleK, buckets, 0L)).toDF("shingle_k", "buckets", "max_gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    LayoutFiles.recover(df.sparkSession, dir)
+    LayoutFiles.clearTombstones(df.sparkSession, dir)
+    writeShingleGeneration(df, idCol, textCol, dir, shingleK, buckets, 0L,
+      SaveMode.Overwrite)
   }
 
   /** Advance a [[writeShingleIndex]] layout past a NEW batch of docs —
@@ -537,22 +500,45 @@ object Dedup {
       batch: DataFrame, idCol: String, textCol: String, dir: String,
   ): Unit = {
     val spark = batch.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     LayoutFiles.recover(spark, dir)
     val st = spark.read.parquet(s"$dir/stats").head()
-    val k = st.getAs[Int]("shingle_k")
-    val buckets = st.getAs[Int]("buckets")
-    val gen = st.getAs[Long]("max_gen") + 1
-    shingleHashRows(batch, idCol, textCol, k)
+    writeShingleGeneration(batch, idCol, textCol, dir,
+      st.getAs[Int]("shingle_k"), st.getAs[Int]("buckets"),
+      st.getAs[Long]("max_gen") + 1, SaveMode.Append)
+  }
+
+  /** The one write body of the shingle layout: `df`'s postings and doc
+    * versions stamped `gen` and written in `mode`, then `stats` rolled
+    * to `gen`. */
+  private def writeShingleGeneration(
+      df: DataFrame, idCol: String, textCol: String, dir: String,
+      shingleK: Int, buckets: Int, gen: Long, mode: SaveMode,
+  ): Unit = {
+    val spark = df.sparkSession
+    GraftFunctions.ensureRegistered(spark)
+    // postings store the 64-bit shingle HASH (shingleHashRows), not the
+    // k-gram string: the probe only ever equi-joins and counts distinct
+    // shingles, so the 8-byte proxy cuts postings bytes, shuffle bytes
+    // and the distinct's allocation by the k-gram's width (~6–8× at
+    // k=8), and collisions only ever ADD overlap — the safe direction
+    // for a decontamination screen (see shingleHashRows)
+    shingleHashRows(df, idCol, textCol, shingleK)
       .distinct()
       .withColumn("sb", pmod(col("sh"), lit(buckets.toLong)))
       .withColumn("gen", lit(gen))
-      .repartition(col("sb")) // one file set per touched bucket (see writeShingleIndex)
-      .write.mode("append").partitionBy("sb").parquet(s"$dir/postings")
-    batch.select(col(idCol).as("doc")).distinct().withColumn("gen", lit(gen))
-      .write.mode("append").parquet(s"$dir/docs")
+      // cluster by the partition value first (guide §6) — without it
+      // every input partition opens a writer per bucket it touches
+      // (the 32-task × 64-bucket ~2k-file fan-out measured on p128's
+      // BM25 sibling); one exchange buys one file set per bucket
+      .repartition(col("sb"))
+      .write.mode(mode).partitionBy("sb").parquet(s"$dir/postings")
+    // (doc, gen) keyed by doc — what a DELETE reads to find a doc's
+    // live versions (docs with no shingles still get a row, so their
+    // delete is a no-op instead of a silent miss)
+    df.select(col(idCol).as("doc")).distinct().withColumn("gen", lit(gen))
+      .write.mode(mode).parquet(s"$dir/docs")
     import spark.implicits._
-    Seq((k, buckets, gen)).toDF("shingle_k", "buckets", "max_gen")
+    Seq((shingleK, buckets, gen)).toDF("shingle_k", "buckets", "max_gen")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
 
@@ -648,6 +634,20 @@ object Dedup {
       .where(col("n_overlap") >= minOverlap)
   }
 
+  /** Decontamination: drop corpus docs that share at least `minOverlap`
+    * distinct word k-shingles with a held-out blocklist (benchmark /
+    * eval sets) — the n-gram-overlap screen the large-LM training
+    * pipelines run before training (public method; e.g. the 13-gram
+    * overlap filters described in the GPT-3 and PaLM reports).
+    *
+    * Scale shape: the blocklist is benchmark-sized by definition, so its
+    * distinct shingle set is broadcast — the corpus side is one scan +
+    * the shingle window, the overlap count reuses the window's doc
+    * partitioning (no extra exchange), and contaminated ids come back as
+    * a broadcast anti-join. Nothing shuffles the corpus by shingle.
+    *
+    * @return the surviving corpus rows (original columns, unchanged)
+    */
   def decontaminate(
       corpus: DataFrame, idCol: String, textCol: String,
       blocklist: DataFrame, blockIdCol: String, blockTextCol: String,

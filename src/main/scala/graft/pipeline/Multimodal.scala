@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column support: image/audio/video as opaque `binary` columns
@@ -865,20 +865,11 @@ object Multimodal {
       spark: SparkSession, inDir: String, outDir: String,
       maxHamming: Int = 4, minFrames: Long = 5, shards: Int = 4,
   ): DataFrame = {
-    import spark.implicits._
-    val members = graft.sources.WebDataset.read(spark, s"$inDir/*.tar")
-      .where(col("ext").isin("png", "wav"))
-      .select(col("key").cast("long").as("id"), col("ext"), col("payload"))
-    implicit val encA: Encoder[Asset] = Encoders.product[Asset]
-    def assetsOf(ext: String, modality: String): Dataset[Asset] =
-      members.where(col("ext") === ext)
-        .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.BINARY))
-        .map { case (id, e, data) => Asset(id, modality, data, e, 0, 0, 0L) }
-
+    val members = tarMembers(spark, inDir)
     // both modalities must agree: inner join of the pair sets
-    val imgPairs = imageNearDups(spark, assetsOf("png", "image"), maxHamming)
+    val imgPairs = imageNearDups(spark, assetsOf(members, "png", "image"), maxHamming)
       .select("doc_a", "doc_b")
-    val audPairs = audioMatches(spark, assetsOf("wav", "audio"), minFrames)
+    val audPairs = audioMatches(spark, assetsOf(members, "wav", "audio"), minFrames)
       .select("doc_a", "doc_b")
     val pairs = imgPairs.join(audPairs, Seq("doc_a", "doc_b"))
 
@@ -909,11 +900,44 @@ object Multimodal {
 
     // the RETURNED frame reads only the published artifacts — the check
     // sees what a downstream consumer of the curated layout sees
+    readPublished(spark, outDir)
+  }
+
+  /** The png/wav members of the tar shards under `inDir`, as
+    * (id long, ext, payload). */
+  private def tarMembers(spark: SparkSession, inDir: String): DataFrame =
+    membersOf(graft.sources.WebDataset.read(spark, s"$inDir/*.tar"))
+
+  /** The png/wav rows of a WebDataset member frame (key, ext, payload),
+    * as (id long, ext, payload). */
+  private[graft] def membersOf(files: DataFrame): DataFrame =
+    files.where(col("ext").isin("png", "wav"))
+      .select(col("key").cast("long").as("id"), col("ext"), col("payload"))
+
+  /** One modality's [[tarMembers]] rows as [[Asset]]s. */
+  private def assetsOf(
+      members: DataFrame, ext: String, modality: String): Dataset[Asset] =
+    members.where(col("ext") === ext)
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.BINARY))
+      .map { case (id, e, data) => Asset(id, modality, data, e, 0, 0, 0L) }(
+        Encoders.product[Asset])
+
+  /** The curated manifest read back from a published output: one row
+    * per sample in its tar shards, (doc, cluster, n_members, n_parts). */
+  private def readPublished(spark: SparkSession, outDir: String): DataFrame =
     graft.sources.WebDataset.read(spark, s"$outDir/shard-*.tar")
       .groupBy(col("key").cast("long").as("doc"))
       .agg(countDistinct(col("ext")).as("n_parts"))
       .join(spark.read.parquet(s"$outDir/_manifest"), "doc")
       .select("doc", "cluster", "n_members", "n_parts")
+
+  /** Write one batch's state partitions — `fp/batch=<id>` and
+    * `peaks/batch=<id>` — as overwrites, so a replayed batch replaces
+    * its rows instead of appending duplicates. */
+  private def writeStateBatch(
+      stateDir: String, batch: String, fp: DataFrame, peaks: DataFrame): Unit = {
+    fp.write.mode("overwrite").parquet(s"$stateDir/fp/batch=$batch")
+    peaks.write.mode("overwrite").parquet(s"$stateDir/peaks/batch=$batch")
   }
 
   /** The curated-shard publish frame: samples assembled SHARD-LOCALLY
@@ -929,13 +953,17 @@ object Multimodal {
     * Because a sample is one assembled row, any join output is
     * key-complete per partition, so `writeShards(preShuffled = true)`
     * emits it directly — one tar per join partition, no re-shard on
-    * top (pinned by MultimodalPublishPlanSpec).
+    * top (pinned by MultimodalPublishPlanSpec). `broadcastKeys` hints
+    * a manifest known to be batch-sized.
     */
   private[graft] def publishKept(
-      spark: SparkSession, inDir: String, manifest: DataFrame): DataFrame =
+      spark: SparkSession, inDir: String, manifest: DataFrame,
+      broadcastKeys: Boolean = false): DataFrame = {
+    val keys = manifest.select(col("doc").cast("string").as("key"))
     graft.sources.WebDataset
       .readSamplesLocal(spark, s"$inDir/*.tar", Seq("png", "wav"))
-      .join(manifest.select(col("doc").cast("string").as("key")), "key")
+      .join(if (broadcastKeys) broadcast(keys) else keys, "key")
+  }
 
   /** Persist the multimodal dedup state of a shard corpus — what a
     * recrawl needs to dedup a NEW batch against everything already
@@ -966,18 +994,10 @@ object Multimodal {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir, "fp"), true)
     fs.delete(new org.apache.hadoop.fs.Path(dir, "peaks"), true)
-    val members = graft.sources.WebDataset.read(spark, s"$inDir/*.tar")
-      .where(col("ext").isin("png", "wav"))
-      .select(col("key").cast("long").as("id"), col("ext"), col("payload"))
-    implicit val encA: Encoder[Asset] = Encoders.product[Asset]
-    def assetsOf(ext: String, modality: String): Dataset[Asset] =
-      members.where(col("ext") === ext)
-        .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.BINARY))
-        .map { case (id, e, data) => Asset(id, modality, data, e, 0, 0, 0L) }
-    imagePhashes(spark, assetsOf("png", "image"), batchSize)
-      .write.mode("overwrite").parquet(s"$dir/fp/batch=initial")
-    audioPeaks(spark, assetsOf("wav", "audio"), batchSize)
-      .write.mode("overwrite").parquet(s"$dir/peaks/batch=initial")
+    val members = tarMembers(spark, inDir)
+    writeStateBatch(dir, "initial",
+      imagePhashes(spark, assetsOf(members, "png", "image"), batchSize),
+      audioPeaks(spark, assetsOf(members, "wav", "audio"), batchSize))
   }
 
   /** Stable per-batch state-partition id: the batch dir's basename
@@ -1022,9 +1042,7 @@ object Multimodal {
       spark: SparkSession, stateDir: String, inDir: String, outDir: String,
       maxHamming: Int = 4, minFrames: Long = 5, shards: Int = 4,
   ): DataFrame = {
-    val members = graft.sources.WebDataset.read(spark, s"$inDir/*.tar")
-      .where(col("ext").isin("png", "wav"))
-      .select(col("key").cast("long").as("id"), col("ext"), col("payload"))
+    val members = tarMembers(spark, inDir)
     // "prior" = every state partition EXCEPT this batch's own. On a
     // replay (partial-failure rerun, double-submitted dir) the earlier
     // run's batch=<bid> partition is already on disk; reading it back
@@ -1043,13 +1061,10 @@ object Multimodal {
     val (manifest, fpB, pkB) =
       curateBatchCore(spark, members, fpP, pkP, maxHamming, minFrames)
 
-    // samples assemble shard-locally (zero-shuffle) and the manifest IS
-    // batch-sized here, so the broadcast hint is right — the writer's
-    // own repartition is then the single payload-bytes exchange
-    val kept = graft.sources.WebDataset
-      .readSamplesLocal(spark, s"$inDir/*.tar", Seq("png", "wav"))
-      .join(broadcast(manifest.select(col("doc").cast("string").as("key"))),
-        "key")
+    // the manifest IS batch-sized here, so the broadcast hint is right —
+    // the writer's own repartition is then the single payload-bytes
+    // exchange
+    val kept = publishKept(spark, inDir, manifest, broadcastKeys = true)
     graft.sources.WebDataset.writeShards(kept, "key",
       Seq("png" -> col("png"), "wav" -> col("wav")), outDir, shards)
     manifest.write.mode("overwrite").parquet(s"$outDir/_manifest")
@@ -1059,14 +1074,8 @@ object Multimodal {
     // batch's OWN batch=<id> partition as an overwrite, so replaying a
     // batch (partial-failure rerun, double-submitted dir) replaces its
     // rows instead of appending duplicates (r15 ADVICE)
-    fpB.write.mode("overwrite").parquet(s"$stateDir/fp/batch=$bid")
-    pkB.write.mode("overwrite").parquet(s"$stateDir/peaks/batch=$bid")
-
-    graft.sources.WebDataset.read(spark, s"$outDir/shard-*.tar")
-      .groupBy(col("key").cast("long").as("doc"))
-      .agg(countDistinct(col("ext")).as("n_parts"))
-      .join(spark.read.parquet(s"$outDir/_manifest"), "doc")
-      .select("doc", "cluster", "n_members", "n_parts")
+    writeStateBatch(stateDir, bid, fpB, pkB)
+    readPublished(spark, outDir)
   }
 
   /** The batch-against-prior curation core shared by
@@ -1087,17 +1096,11 @@ object Multimodal {
       fpPrior: DataFrame, pkPrior: DataFrame,
       maxHamming: Int, minFrames: Long,
   ): (DataFrame, DataFrame, DataFrame) = {
-    implicit val encA: Encoder[Asset] = Encoders.product[Asset]
-    def assetsOf(ext: String, modality: String): Dataset[Asset] =
-      members.where(col("ext") === ext)
-        .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.BINARY))
-        .map { case (id, e, data) => Asset(id, modality, data, e, 0, 0, 0L) }
-
     // decode once per modality; both pair joins reuse the cached frames
     val fpB = OperatorCache.materialize(
-      imagePhashes(spark, assetsOf("png", "image")))
+      imagePhashes(spark, assetsOf(members, "png", "image")))
     val pkB = OperatorCache.materialize(
-      audioPeaks(spark, assetsOf("wav", "audio")))
+      audioPeaks(spark, assetsOf(members, "wav", "audio")))
 
     def audioPairs(a: DataFrame, b: DataFrame): DataFrame =
       a.toDF("doc_a", "frame", "peak_bin")

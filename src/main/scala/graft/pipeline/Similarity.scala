@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 
@@ -57,7 +57,8 @@ object Similarity {
   /** Baseline: exact top-k by cosine against one query vector. Catalyst
     * plans orderBy+limit as TakeOrderedAndProject — each partition keeps
     * only k rows, the driver merges k·p rows; nothing resembling a full
-    * sort at 100 TB.
+    * sort at 100 TB. Every single-query ANN path ends with it over its
+    * candidates (probed buckets or cells, or the ADC/SQ8 cut).
     */
   def bruteForceTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -130,18 +131,8 @@ object Similarity {
   def writeIndexed(corpus: DataFrame, vecCol: String, path: String,
       planes: Int = 12, seed: Long = 42L): Unit = {
     LayoutFiles.recover(corpus.sparkSession, path)
-    indexed(corpus, vecCol, planes, seed)
-      .withColumn("gen", lit(0L))
-      // cluster by the partition value before the partitioned write
-      // (guide §6): an LSH layout has up to 2^planes bucket values, so
-      // an unclustered write opens a parquet writer per (input
-      // partition × touched bucket) — the p128-measured tiny-file
-      // fan-out, worst of the whole family here. One exchange buys one
-      // file set per bucket at any core count.
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    writeIndexMeta(corpus.sparkSession, path, 0L,
-      Seq("planes" -> planes.toLong, "seed" -> seed))
+    writeAnnGeneration(indexed(corpus, vecCol, planes, seed), "bucket", path,
+      0L, SaveMode.Overwrite, Seq("planes" -> planes.toLong, "seed" -> seed))
   }
 
   /** Append a new vector batch to a [[writeIndexed]] LSH layout: the
@@ -155,15 +146,11 @@ object Similarity {
     */
   def appendIndexed(batch: DataFrame, vecCol: String, path: String,
       planes: Int = 12, seed: Long = 42L): Unit = {
-    val spark = batch.sparkSession
     val params = Seq("planes" -> planes.toLong, "seed" -> seed)
-    LayoutFiles.recover(spark, path)
-    val gen = readIndexMeta(spark, path, params) + 1
-    indexed(batch, vecCol, planes, seed)
-      .withColumn("gen", lit(gen))
-      .repartition(col("bucket")) // one file set per touched bucket (see writeIndexed)
-      .write.mode("append").partitionBy("bucket").parquet(path)
-    writeIndexMeta(spark, path, gen, params)
+    LayoutFiles.recover(batch.sparkSession, path)
+    val gen = readIndexMeta(batch.sparkSession, path, params) + 1
+    writeAnnGeneration(indexed(batch, vecCol, planes, seed), "bucket", path,
+      gen, SaveMode.Append, params)
   }
 
   /** UPDATE re-embedded ids in a [[writeIndexed]] layout: tombstone
@@ -189,20 +176,24 @@ object Similarity {
       multiProbe: Boolean = true,
   ): DataFrame = {
     checkIndexMeta(spark, path, Seq("planes" -> planes.toLong, "seed" -> seed))
+    val probes = probeBuckets(query, planes, seed, multiProbe)
+    bruteForceTopK(minusTombstones(spark, path, spark.read.parquet(path)
+      .where(col("bucket").isin(probes: _*)), // → PartitionFilters, pruned scan
+      idCol), idCol, vecCol, query, k)
+  }
+
+  /** The LSH buckets a query probes: its own signature (computed
+    * driver-side — tiny, no Spark job) and, with `multiProbe`, every
+    * Hamming-1 neighbour. */
+  private def probeBuckets(query: Seq[Float], planes: Int, seed: Long,
+      multiProbe: Boolean): Seq[Long] = {
     val hp = hyperplanes(query.length, planes, seed)
     val qSig = hp.zipWithIndex.map { case (plane, p) =>
       val d = plane.zip(query).map { case (w, x) => w * x.toDouble }.sum
       if (d >= 0) 1L << p else 0L
     }.reduce(_ | _)
-    val probes: Seq[Long] =
-      if (multiProbe) qSig +: (0 until planes).map(p => qSig ^ (1L << p))
-      else Seq(qSig)
-    minusTombstones(spark, path, spark.read.parquet(path)
-      .where(col("bucket").isin(probes: _*)), // → PartitionFilters, pruned scan
-      idCol)
-      .select(col(idCol), round(cosine(col(vecCol), vecLit(query)), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
+    if (multiProbe) qSig +: (0 until planes).map(p => qSig ^ (1L << p))
+    else Seq(qSig)
   }
 
   /** Workload-batched probe of a [[writeIndexed]] LSH layout — the
@@ -355,23 +346,11 @@ object Similarity {
       query: Seq[Float], k: Int, planes: Int = 12, seed: Long = 42L,
       multiProbe: Boolean = true,
   ): DataFrame = {
-    val dim = query.length
-    val hp = hyperplanes(dim, planes, seed)
-    // query signature computed driver-side (tiny, no Spark job)
-    val qSig = hp.zipWithIndex.map { case (plane, p) =>
-      val d = plane.zip(query).map { case (w, x) => w * x.toDouble }.sum
-      if (d >= 0) 1L << p else 0L
-    }.reduce(_ | _)
-    val probes: Seq[Long] =
-      if (multiProbe) qSig +: (0 until planes).map(p => qSig ^ (1L << p))
-      else Seq(qSig)
+    val probes = probeBuckets(query, planes, seed, multiProbe)
     val withBucket = corpus.withColumn("bucket",
-      lshSignature(col(vecCol), dim, planes, seed))
-    withBucket
-      .where(col("bucket").isin(probes: _*))
-      .select(col(idCol), round(cosine(col(vecCol), vecLit(query)), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
+      lshSignature(col(vecCol), query.length, planes, seed))
+    bruteForceTopK(withBucket.where(col("bucket").isin(probes: _*)),
+      idCol, vecCol, query, k)
   }
 
   /** IVF (inverted-file) index: k coarse centroids learned with a few
@@ -461,20 +440,9 @@ object Similarity {
   def ivfTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
       index: IvfIndex, query: Seq[Float], k: Int, nprobe: Int = 3,
-  ): DataFrame = {
-    val q = query.map(_.toDouble).toArray
-    val probes = index.centroids
-      .map { case (id, c) =>
-        val d = c.zip(q).map { case (a, b) => a * b }.sum
-        (id, d)
-      }
-      .sortBy(-_._2).take(nprobe).map(_._1)
-    ivfIndex(corpus, vecCol, index)
-      .where(col("centroid").isin(probes.map(Integer.valueOf): _*))
-      .select(col(idCol), round(cosine(col(vecCol), vecLit(query)), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
-  }
+  ): DataFrame =
+    bruteForceTopK(ivfIndex(corpus, vecCol, index)
+      .where(inCells(rankCells(index, query, nprobe))), idCol, vecCol, query, k)
 
   /** Batched IVF recall audit — the ANN sibling of the LSH audit: for
     * a WORKLOAD of query vectors, exact top-k (brute force) and IVF
@@ -586,13 +554,8 @@ object Similarity {
     val dim = dimOf(corpus, vecCol)
     val sub = dim / m
     val encoded = pqEncode(corpus, vecCol, books)
-    // dense per-subspace codebook tables indexed by code id; absent ids
-    // (empty Lloyd cells) hold zero vectors no code references
     val adc = books.zipWithIndex.map { case (b, s) =>
-      val size = b.centroids.map(_._1).max + 1
-      val dense = Array.fill(size)(Seq.fill(sub)(0.0))
-      b.centroids.foreach { case (id, c) => dense(id) = c.toSeq }
-      val bookLit: Column = typedlit(dense.toSeq)
+      val bookLit: Column = typedlit(denseTable(b))
       dot(slice(col("qv"), s * sub + 1, sub),
         element_at(bookLit, element_at(col("codes"), s + 1) + 1))
     }.reduce(_ + _)
@@ -721,10 +684,7 @@ object Similarity {
         round(adcConst + adcScore(books, query, sub), 6).as("adc"))
       .orderBy(col("adc").desc, col(idCol).asc)
       .limit(k * rescoreFactor)
-    candidates
-      .select(col(idCol), round(cosine(col(vecCol), vecLit(query)), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
+    bruteForceTopK(candidates, idCol, vecCol, query, k)
   }
 
   /** IVF-PQ composition — the standard two-level ANN layout (public
@@ -741,15 +701,66 @@ object Similarity {
   def ivfPqTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
       coarse: IvfIndex, books: Seq[IvfIndex], query: Seq[Float], k: Int,
-      nprobe: Int = 3, rescoreFactor: Int = 5): DataFrame = {
+      nprobe: Int = 3, rescoreFactor: Int = 5): DataFrame =
+    ivfPqTopKImpl(corpus, idCol, vecCol, coarse, books, query, k, nprobe,
+      rescoreFactor, residual = false)
+
+  /** [[ivfPqTopK]] and [[ivfPqResidualTopK]]: encode only the ranked
+    * cells' rows, then the ADC cut + exact rescore, with the residual
+    * decomposition's per-cell constant when `residual`. */
+  private def ivfPqTopKImpl(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      coarse: IvfIndex, books: Seq[IvfIndex], query: Seq[Float], k: Int,
+      nprobe: Int, rescoreFactor: Int, residual: Boolean): DataFrame = {
+    val ranked = rankCells(coarse, query, nprobe)
+    pqAdcRescore(
+      pqEncodeCells(corpus, vecCol, coarse, books, residual, Some(inCells(ranked))),
+      idCol, vecCol, books, query, k, rescoreFactor, cellConst(ranked, residual))
+  }
+
+  /** The `nprobe` coarse cells whose centroids score the largest dot
+    * with `query`, best first, as (cell, dot) — computed driver-side
+    * (k values, bounded by the model); the sort is stable, so equal
+    * dots keep centroid order. */
+  private def rankCells(
+      coarse: IvfIndex, query: Seq[Float], nprobe: Int): Array[(Int, Double)] = {
     val q = query.map(_.toDouble).toArray
-    val probes = coarse.centroids
+    coarse.centroids
       .map { case (id, c) => (id, c.zip(q).map { case (a, b) => a * b }.sum) }
-      .sortBy(-_._2).take(nprobe).map(_._1)
-    val cells = ivfIndex(corpus, vecCol, coarse)
-      .where(col("centroid").isin(probes.map(Integer.valueOf): _*))
-    pqAdcRescore(pqEncode(cells, vecCol, books), idCol, vecCol,
-      books, query, k, rescoreFactor)
+      .sortBy(-_._2).take(nprobe)
+  }
+
+  /** Row filter to the [[rankCells]] cells. */
+  private def inCells(ranked: Array[(Int, Double)]): Column =
+    col("centroid").isin(ranked.map(c => Integer.valueOf(c._1)).toIndexedSeq: _*)
+
+  /** The ADC score's per-row constant: dot(q, c_cell) for residual
+    * codes, zero for raw-vector codes. */
+  private def cellConst(ranked: Array[(Int, Double)], residual: Boolean): Column =
+    if (residual) element_at(typedlit(ranked.toMap), col("centroid")) else lit(0.0)
+
+  /** Coarse-assign and PQ-encode `df` (rows kept by `cells`, if given):
+    * raw codes over [[ivfIndex]]'s assignment, or residual codes over
+    * [[residualFrame]] (widened — encoding is map-only), whose
+    * transient residual column is dropped. */
+  private def pqEncodeCells(
+      df: DataFrame, vecCol: String, coarse: IvfIndex, books: Seq[IvfIndex],
+      residual: Boolean, cells: Option[Column] = None): DataFrame = {
+    def kept(f: DataFrame) = cells.fold(f)(f.where)
+    if (residual)
+      pqEncode(kept(residualFrame(df, vecCol, coarse, widen = true)), "__res", books)
+        .drop("__res")
+    else pqEncode(kept(ivfIndex(df, vecCol, coarse)), vecCol, books)
+  }
+
+  /** `index`'s centroids as one dense table indexed by id, the shape a
+    * typedlit lookup needs (absent ids — empty Lloyd cells — hold zero
+    * vectors; no row, code or probe references them). */
+  private def denseTable(index: IvfIndex): IndexedSeq[Seq[Double]] = {
+    val dense = Array.fill(index.centroids.map(_._1).max + 1)(
+      Seq.fill(index.centroids.head._2.length)(0.0))
+    index.centroids.foreach { case (id, c) => dense(id) = c.toSeq }
+    dense.toIndexedSeq
   }
 
   /** Corpus with coarse assignment and the per-row RESIDUAL
@@ -769,11 +780,7 @@ object Similarity {
     val base = if (widen) Parallelize.ensureWide(corpus) else corpus
     val assigned = assignToNearest(
       base.withColumn("__vec", col(vecCol)), coarse.centroids).drop("__vec")
-    val size = coarse.centroids.map(_._1).max + 1
-    val dim = coarse.centroids.head._2.length
-    val dense = Array.fill(size)(Seq.fill(dim)(0.0))
-    coarse.centroids.foreach { case (id, c) => dense(id) = c.toSeq }
-    val centsLit: Column = typedlit(dense.toSeq)
+    val centsLit: Column = typedlit(denseTable(coarse))
     assigned.withColumn("__res",
       zip_with(col(vecCol), element_at(centsLit, col("centroid") + 1),
         (a, b) => a.cast("double") - b))
@@ -814,17 +821,9 @@ object Similarity {
   def ivfPqResidualTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
       coarse: IvfIndex, books: Seq[IvfIndex], query: Seq[Float], k: Int,
-      nprobe: Int = 3, rescoreFactor: Int = 5): DataFrame = {
-    val q = query.map(_.toDouble).toArray
-    val ranked = coarse.centroids
-      .map { case (id, c) => (id, c.zip(q).map { case (a, b) => a * b }.sum) }
-      .sortBy(-_._2).take(nprobe)
-    val cells = residualFrame(corpus, vecCol, coarse, widen = true)
-      .where(col("centroid").isin(ranked.map(_._1).map(Integer.valueOf): _*))
-    pqAdcRescore(pqEncode(cells, "__res", books), idCol, vecCol,
-      books, query, k, rescoreFactor,
-      adcConst = element_at(typedlit(ranked.toMap), col("centroid")))
-  }
+      nprobe: Int = 3, rescoreFactor: Int = 5): DataFrame =
+    ivfPqTopKImpl(corpus, idCol, vecCol, coarse, books, query, k, nprobe,
+      rescoreFactor, residual = true)
 
   /** [[writeIvfPq]] with residual codes — the serving layout residual
     * IVF-PQ deserves (it is the accuracy winner: recall@10 0.92 vs 0.72
@@ -833,36 +832,15 @@ object Similarity {
     * the m-int residual codes; the transient residual column is dropped.
     */
   def writeIvfPqResidual(corpus: DataFrame, vecCol: String, path: String,
-      coarse: IvfIndex, books: Seq[IvfIndex]): Unit = {
-    LayoutFiles.recover(corpus.sparkSession, path)
-    pqEncode(residualFrame(corpus, vecCol, coarse, widen = true), "__res", books)
-      .drop("__res")
-      .withColumn("gen", lit(0L))
-      .repartition(col("centroid")) // one file set per cell (guide §6; see writeIndexed)
-      .write.mode("overwrite").partitionBy("centroid").parquet(path)
-    // the `residual` marker lets layout consumers ([[layoutKind]])
-    // dispatch raw vs residual serving without a side channel — the
-    // model fingerprint alone cannot tell the two encodings apart
-    writeIndexMeta(corpus.sparkSession, path, 0L,
-      Seq("model" -> modelFingerprint(coarse, books), "residual" -> 1L))
-  }
+      coarse: IvfIndex, books: Seq[IvfIndex]): Unit =
+    writePq(corpus, vecCol, path, coarse, books, residual = true)
 
   /** Append a batch into a [[writeIvfPqResidual]] layout — same
     * frozen-model contract and drift story as [[appendIvfPq]], with
     * the residual encode. */
   def appendIvfPqResidual(batch: DataFrame, vecCol: String, path: String,
-      coarse: IvfIndex, books: Seq[IvfIndex]): Unit = {
-    val spark = batch.sparkSession
-    val params = Seq("model" -> modelFingerprint(coarse, books), "residual" -> 1L)
-    LayoutFiles.recover(spark, path)
-    val gen = readIndexMeta(spark, path, params) + 1
-    pqEncode(residualFrame(batch, vecCol, coarse, widen = true), "__res", books)
-      .drop("__res")
-      .withColumn("gen", lit(gen))
-      .repartition(col("centroid")) // one file set per touched cell
-      .write.mode("append").partitionBy("centroid").parquet(path)
-    writeIndexMeta(spark, path, gen, params)
-  }
+      coarse: IvfIndex, books: Seq[IvfIndex]): Unit =
+    appendPq(batch, vecCol, path, coarse, books, residual = true)
 
   /** [[updateIvfPq]] for the residual layout. */
   def updateIvfPqResidual(batch: DataFrame, idCol: String, vecCol: String,
@@ -929,18 +907,9 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String,
       coarse: IvfIndex, books: Seq[IvfIndex], query: Seq[Float], k: Int,
-      nprobe: Int = 3, rescoreFactor: Int = 5): DataFrame = {
-    checkIndexMeta(spark, path, Seq("model" -> modelFingerprint(coarse, books)))
-    val q = query.map(_.toDouble).toArray
-    val ranked = coarse.centroids
-      .map { case (id, c) => (id, c.zip(q).map { case (a, b) => a * b }.sum) }
-      .sortBy(-_._2).take(nprobe)
-    val cells = minusTombstones(spark, path, spark.read.parquet(path)
-      .where(col("centroid").isin(ranked.map(_._1).map(Integer.valueOf): _*)),
-      idCol)
-    pqAdcRescore(cells, idCol, vecCol, books, query, k, rescoreFactor,
-      adcConst = element_at(typedlit(ranked.toMap), col("centroid")))
-  }
+      nprobe: Int = 3, rescoreFactor: Int = 5): DataFrame =
+    probePqImpl(spark, path, idCol, vecCol, coarse, books, query, k, nprobe,
+      rescoreFactor, residual = true)
 
   /** Serving layout for [[ivfPqTopK]]: the corpus is coarse-assigned,
     * PQ-encoded ONCE at build time, and written `partitionBy(centroid)`
@@ -951,21 +920,9 @@ object Similarity {
     * only for the k·rescoreFactor rescore rows.
     */
   def writeIvfPq(corpus: DataFrame, vecCol: String, path: String,
-      coarse: IvfIndex, books: Seq[IvfIndex]): Unit = {
-    LayoutFiles.recover(corpus.sparkSession, path)
-    pqEncode(ivfIndex(corpus, vecCol, coarse), vecCol, books)
-      .withColumn("gen", lit(0L))
-      .repartition(col("centroid")) // one file set per cell (guide §6; see writeIndexed)
-      .write.mode("overwrite").partitionBy("centroid").parquet(path)
-    writeIndexMeta(corpus.sparkSession, path, 0L,
-      Seq("model" -> modelFingerprint(coarse, books)))
-  }
+      coarse: IvfIndex, books: Seq[IvfIndex]): Unit =
+    writePq(corpus, vecCol, path, coarse, books, residual = false)
 
-  /** Probe a [[writeIvfPq]] layout: rank coarse centroids driver-side,
-    * scan only the `nprobe` pruned partitions, ADC over the STORED
-    * codes, exact rescore. `coarse`/`books` must be the artifacts the
-    * index was written with (the model travels with the index at scale).
-    */
   /** Incremental serving-index maintenance — the ANN sibling of
     * [[graft.pipeline.TrainingPipeline.curateIncremental]]'s recrawl
     * shape: assign a NEW vector batch to the EXISTING coarse centroids,
@@ -983,16 +940,35 @@ object Similarity {
     * map-only encode job, no shuffle).
     */
   def appendIvfPq(batch: DataFrame, vecCol: String, path: String,
-      coarse: IvfIndex, books: Seq[IvfIndex]): Unit = {
-    val spark = batch.sparkSession
-    val params = Seq("model" -> modelFingerprint(coarse, books))
-    LayoutFiles.recover(spark, path)
-    val gen = readIndexMeta(spark, path, params) + 1
-    pqEncode(ivfIndex(batch, vecCol, coarse), vecCol, books)
-      .withColumn("gen", lit(gen))
-      .repartition(col("centroid")) // one file set per touched cell
-      .write.mode("append").partitionBy("centroid").parquet(path)
-    writeIndexMeta(spark, path, gen, params)
+      coarse: IvfIndex, books: Seq[IvfIndex]): Unit =
+    appendPq(batch, vecCol, path, coarse, books, residual = false)
+
+  /** The `_meta` parameters of a PQ layout: the model fingerprint, and
+    * for residual codes the `residual` marker that lets layout
+    * consumers ([[layoutKind]]) dispatch raw vs residual serving
+    * without a side channel — the fingerprint alone cannot tell the
+    * two encodings apart. */
+  private def pqParams(
+      coarse: IvfIndex, books: Seq[IvfIndex], residual: Boolean): Seq[(String, Long)] =
+    ("model" -> modelFingerprint(coarse, books)) +:
+      (if (residual) Seq("residual" -> 1L) else Nil)
+
+  /** [[writeIvfPq]] and [[writeIvfPqResidual]]: generation 0 of the layout. */
+  private def writePq(corpus: DataFrame, vecCol: String, path: String,
+      coarse: IvfIndex, books: Seq[IvfIndex], residual: Boolean): Unit = {
+    LayoutFiles.recover(corpus.sparkSession, path)
+    writeAnnGeneration(pqEncodeCells(corpus, vecCol, coarse, books, residual),
+      "centroid", path, 0L, SaveMode.Overwrite, pqParams(coarse, books, residual))
+  }
+
+  /** [[appendIvfPq]] and [[appendIvfPqResidual]]: the next generation. */
+  private def appendPq(batch: DataFrame, vecCol: String, path: String,
+      coarse: IvfIndex, books: Seq[IvfIndex], residual: Boolean): Unit = {
+    val params = pqParams(coarse, books, residual)
+    LayoutFiles.recover(batch.sparkSession, path)
+    val gen = readIndexMeta(batch.sparkSession, path, params) + 1
+    writeAnnGeneration(pqEncodeCells(batch, vecCol, coarse, books, residual),
+      "centroid", path, gen, SaveMode.Append, params)
   }
 
   /** UPDATE re-embedded ids in a [[writeIvfPq]] layout — the recrawl
@@ -1008,19 +984,33 @@ object Similarity {
     appendIvfPq(batch, vecCol, path, coarse, books)
   }
 
+  /** Probe a [[writeIvfPq]] layout: rank coarse centroids driver-side,
+    * scan only the `nprobe` pruned partitions, ADC over the STORED
+    * codes, exact rescore. `coarse`/`books` must be the artifacts the
+    * index was written with (the model travels with the index at scale).
+    */
   def probeIvfPq(
       spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String,
       coarse: IvfIndex, books: Seq[IvfIndex], query: Seq[Float], k: Int,
-      nprobe: Int = 3, rescoreFactor: Int = 5): DataFrame = {
+      nprobe: Int = 3, rescoreFactor: Int = 5): DataFrame =
+    probePqImpl(spark, path, idCol, vecCol, coarse, books, query, k, nprobe,
+      rescoreFactor, residual = false)
+
+  /** [[probeIvfPq]] and [[probeIvfPqResidual]]: the ranked cells'
+    * pruned partitions minus tombstones, ADC over the stored codes
+    * (plus the per-cell constant for residual codes), exact rescore. */
+  private def probePqImpl(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      idCol: String, vecCol: String,
+      coarse: IvfIndex, books: Seq[IvfIndex], query: Seq[Float], k: Int,
+      nprobe: Int, rescoreFactor: Int, residual: Boolean): DataFrame = {
     checkIndexMeta(spark, path, Seq("model" -> modelFingerprint(coarse, books)))
-    val q = query.map(_.toDouble).toArray
-    val probes = coarse.centroids
-      .map { case (id, c) => (id, c.zip(q).map { case (a, b) => a * b }.sum) }
-      .sortBy(-_._2).take(nprobe).map(_._1)
-    val cells = minusTombstones(spark, path, spark.read.parquet(path)
-      .where(col("centroid").isin(probes.map(Integer.valueOf): _*)), idCol)
-    pqAdcRescore(cells, idCol, vecCol, books, query, k, rescoreFactor)
+    val ranked = rankCells(coarse, query, nprobe)
+    val cells = minusTombstones(spark, path,
+      spark.read.parquet(path).where(inCells(ranked)), idCol)
+    pqAdcRescore(cells, idCol, vecCol, books, query, k, rescoreFactor,
+      cellConst(ranked, residual))
   }
 
   /** Workload-batched probe of a [[writeIvfPq]] layout — the ANN
@@ -1109,30 +1099,17 @@ object Similarity {
         struct((-dot(col("__qv"), c.getField("_2"))).as("negsim"),
           c.getField("_1").as("cell")))), 1, nprobe),
       p => p.getField("cell"))
-    // dense [subspace][code] codebook literal (absent code ids — empty
-    // Lloyd cells — hold zero vectors; no stored code references them),
-    // dotted with the query's subspace slice once per query
-    val booksDense: Seq[Seq[Seq[Double]]] = books.map { b =>
-      val size = b.centroids.map(_._1).max + 1
-      val dense = Array.fill(size)(Seq.fill(sub)(0.0))
-      b.centroids.foreach { case (id, c) => dense(id) = c.toSeq }
-      dense.toIndexedSeq
-    }
-    val booksLit: Column = typedlit(booksDense)
+    // dense [subspace][code] codebook literal, dotted with the query's
+    // subspace slice once per query
+    val booksLit: Column = typedlit(books.map(denseTable))
     val tables = transform(sequence(lit(0), lit(m - 1)), s =>
       transform(element_at(booksLit, s + 1), entry =>
         dot(slice(col("__qv"), s * lit(sub) + 1, lit(sub)), entry)))
     // residual layouts add the decomposition's per-(query, cell)
     // constant dot(q, c_cell) — map-only on the probe pairs, dense
-    // centroid literal indexed by cell id (missing ids hold zero
-    // vectors; no probe ever selects them)
-    val aconst: Column = if (!residual) lit(0.0) else {
-      val size = coarse.centroids.map(_._1).max + 1
-      val dimC = coarse.centroids.head._2.length
-      val dense = Array.fill(size)(Seq.fill(dimC)(0.0))
-      coarse.centroids.foreach { case (id, c) => dense(id) = c.toSeq }
-      dot(col("__qv"), element_at(typedlit(dense.toIndexedSeq), col("centroid") + 1))
-    }
+    // centroid literal indexed by cell id
+    val aconst: Column = if (!residual) lit(0.0) else
+      dot(col("__qv"), element_at(typedlit(denseTable(coarse)), col("centroid") + 1))
     // the broadcast side carries ONLY (qid, centroid, aconst) — ~24 B a
     // probe row. The wide per-query payload (the m×k_code ADC lookup
     // table plus the query vector itself) must NOT ride the centroid
@@ -1196,6 +1173,25 @@ object Similarity {
     extras.foldLeft(Seq(Tuple1(maxGen)).toDF("max_gen")) {
       case (d, (k, v)) => d.withColumn(k, lit(v))
     }.coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
+  }
+
+  /** The one write body of the three ANN layouts (LSH, IVF-PQ,
+    * residual IVF-PQ): `rows` — bucketed or encoded, carrying the
+    * partition column `part` — stamped `gen` and written in `mode`,
+    * then `_meta` rolled to `gen` with the layout's `params`. A build
+    * is the generation-0 overwrite, an append writes max_gen + 1. */
+  private def writeAnnGeneration(rows: DataFrame, part: String, path: String,
+      gen: Long, mode: SaveMode, params: Seq[(String, Long)]): Unit = {
+    rows.withColumn("gen", lit(gen))
+      // cluster by the partition value before the partitioned write
+      // (guide §6): an LSH layout has up to 2^planes bucket values, so
+      // an unclustered write opens a parquet writer per (input
+      // partition × touched bucket) — the p128-measured tiny-file
+      // fan-out, worst of the whole family here. One exchange buys one
+      // file set per bucket or cell at any core count.
+      .repartition(col(part))
+      .write.mode(mode).partitionBy(part).parquet(path)
+    writeIndexMeta(rows.sparkSession, path, gen, params)
   }
 
   /** Read `_meta`, checking any expected parameter that the layout
@@ -1647,18 +1643,31 @@ object Similarity {
     val src = if (k > 0) corpus else OperatorCache.persist(corpus)
     val cells = if (k > 0) k else semanticDedupCellCount(src.count())
     val index = ivfTrain(src, idCol, vecCol, cells, iters)
-    ivfIndex(src, vecCol, index)
-      .withColumn("gen", lit(0L))
-      .select(col("centroid"), col(idCol), col(vecCol), col("gen"))
-      .repartition(col("centroid")) // one file set per cell (guide §6; see writeIndexed)
-      .write.mode("overwrite").partitionBy("centroid")
-      .parquet(s"$dir/assigned")
-    src.select(col(idCol)).distinct().withColumn("gen", lit(0L))
-      .write.mode("overwrite").parquet(s"$dir/ids")
     index.centroids.toSeq.map { case (cid, c) => (cid, c.toSeq) }
       .toDF("cid", "c").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/centroids")
-    Seq((idCol, vecCol, threshold, 0L))
+    writeDedupGeneration(src, index, idCol, vecCol, dir, threshold, 0L,
+      SaveMode.Overwrite)
+  }
+
+  /** The one write body of the semantic-dedup state: `rows` assigned to
+    * the frozen `index` and stamped `gen` into `assigned/` and `ids/`
+    * in `mode`, then `params` rolled to `gen`. A build writes
+    * `centroids/` first and passes gen 0 with Overwrite. */
+  private def writeDedupGeneration(
+      rows: DataFrame, index: IvfIndex, idCol: String, vecCol: String,
+      dir: String, threshold: Double, gen: Long, mode: SaveMode): Unit = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    ivfIndex(rows, vecCol, index)
+      .withColumn("gen", lit(gen))
+      .select(col("centroid"), col(idCol), col(vecCol), col("gen"))
+      .repartition(col("centroid")) // one file set per cell (guide §6; see writeAnnGeneration)
+      .write.mode(mode).partitionBy("centroid")
+      .parquet(s"$dir/assigned")
+    rows.select(col(idCol)).distinct().withColumn("gen", lit(gen))
+      .write.mode(mode).parquet(s"$dir/ids")
+    Seq((idCol, vecCol, threshold, gen))
       .toDF("id_col", "vec_col", "threshold", "max_gen")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
   }
@@ -1719,22 +1728,10 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       batch: DataFrame,
   ): Unit = {
-    import spark.implicits._
     LayoutFiles.recover(spark, dir)
     val (idCol, vecCol, threshold, maxGen) = dedupStateParams(spark, dir)
-    val gen = maxGen + 1
-    val index = readDedupIndex(spark, dir)
-    ivfIndex(batch, vecCol, index)
-      .withColumn("gen", lit(gen))
-      .select(col("centroid"), col(idCol), col(vecCol), col("gen"))
-      .repartition(col("centroid")) // one file set per touched cell
-      .write.mode("append").partitionBy("centroid")
-      .parquet(s"$dir/assigned")
-    batch.select(col(idCol)).distinct().withColumn("gen", lit(gen))
-      .write.mode("append").parquet(s"$dir/ids")
-    Seq((idCol, vecCol, threshold, gen))
-      .toDF("id_col", "vec_col", "threshold", "max_gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+    writeDedupGeneration(batch, readDedupIndex(spark, dir), idCol, vecCol,
+      dir, threshold, maxGen + 1, SaveMode.Append)
   }
 
   /** Tombstone-delete ids from a [[writeDedupState]] layout: live
@@ -1791,13 +1788,6 @@ object Similarity {
     LayoutFiles.commit(spark, dir)
   }
 
-  /** Symmetric scalar quantization (SQ8): each vector compressed to
-    * int8 steps of `scale = max(|x|)/127` — a 4× smaller serving index
-    * (the difference between an in-memory and a spilling ANN index at
-    * 10B vectors). Cosine is SCALE-INVARIANT, so ranking on the
-    * quantized vectors needs no dequantization; exact rescoring happens
-    * only on the short candidate list.
-    */
   /** Derived IVF cell count for [[semanticDedup]]: ~10k vectors per cell
     * (ceil(n/10k)), floor 8 — keeps expected within-cell pair work at
     * ~n·10k, linear in corpus size.
@@ -1805,6 +1795,13 @@ object Similarity {
   def semanticDedupCellCount(n: Long): Int =
     math.max(8L, (n + 9999L) / 10000L).min(Int.MaxValue.toLong).toInt
 
+  /** Symmetric scalar quantization (SQ8): each vector compressed to
+    * int8 steps of `scale = max(|x|)/127` — a 4× smaller serving index
+    * (the difference between an in-memory and a spilling ANN index at
+    * 10B vectors). Cosine is SCALE-INVARIANT, so ranking on the
+    * quantized vectors needs no dequantization; exact rescoring happens
+    * only on the short candidate list.
+    */
   def quantizeSq8(corpus: DataFrame, vecCol: String): DataFrame = {
     val scale = greatest(
       array_max(transform(col(vecCol), x => abs(x.cast("double")))), lit(1e-30)) / 127.0
@@ -1839,10 +1836,7 @@ object Similarity {
         round(cosine(col("qvec"), qCol), 6).as("qcos"))
       .orderBy(col("qcos").desc, col(idCol).asc)
       .limit(k * rescoreFactor)
-    candidates
-      .select(col(idCol), round(cosine(col(vecCol), vecLit(query)), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
+    bruteForceTopK(candidates, idCol, vecCol, query, k)
   }
 
   /** Batch k-NN join: for EVERY query row, its top-k corpus neighbors via

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Fnv1a64, GraftFunctions}
@@ -34,60 +34,18 @@ object TextSearch {
     * the tf aggregate and the doc-length join — both doc/term-keyed,
     * no driver state. Size `buckets` so one bucket's postings make a
     * healthy scan (vocabulary and corpus dependent; the default 64
-    * suits test-scale corpora, go higher at cluster scale).
+    * suits test-scale corpora, go higher at cluster scale). A build is
+    * the generation-0 append: [[appendIndex]]'s write over an empty
+    * layout.
     */
   def writeIndex(
       df: DataFrame, idCol: String, textCol: String, dir: String,
       buckets: Int = 64,
   ): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    GraftFunctions.ensureRegistered(df.sparkSession)
     LayoutFiles.recover(df.sparkSession, dir)
     LayoutFiles.clearTombstones(df.sparkSession, dir)
-    val terms = df.select(col(idCol).as("doc"),
-      explode(Dedup.tokensOf(col(textCol))).as("term"))
-    // lazy persist, NOT materialize: every consumer below is a
-    // sequential action on this thread, so the first one (the stats
-    // aggregate, run FIRST for exactly this reason) populates both
-    // caches in its own job — the two former materialize-count
-    // barriers were pure extra jobs here (the barrier form exists for
-    // CONCURRENT consumers; see OperatorCache.materialize)
-    val tfAll = OperatorCache.persist(
-      terms.groupBy("doc", "term").agg(count(lit(1)).as("tf")))
-    val docLen = OperatorCache.persist(
-      tfAll.groupBy("doc").agg(sum("tf").as("dl")))
-    // sum_dl is the EXACT integer token total — avgdl derives at serve
-    // time as sum_dl/n_docs (identical to avg() while the total stays
-    // under 2^53), and incremental appends stay exact long additions
-    val totals = docLen.agg(count(lit(1)).as("n_docs"),
-      coalesce(sum("dl"), lit(0L)).as("sum_dl")).head()
-    tfAll.join(docLen, "doc")
-      .withColumn("tb",
-        pmod(GraftFunctions.fnv1a64(col("term")), lit(buckets.toLong)))
-      .withColumn("gen", lit(0L))
-      .select("tb", "term", "doc", "tf", "dl", "gen")
-      // cluster by the partition value before the partitioned write
-      // (guide §6): without this EVERY input partition opens a parquet
-      // writer per bucket it touches — measured on p128 as a 32-task ×
-      // 64-bucket fan-out (~2k files, stage cpu 13.3s / run 130s for a
-      // 4.4s wall), and the per-file open cost then taxes every probe's
-      // listing. One batch-sized exchange buys one file set per bucket
-      // at ANY core count — the same clustering a hash
-      // write.distribution-mode buys at cluster scale.
-      .repartition(col("tb"))
-      .write.partitionBy("tb").mode("overwrite").parquet(s"$dir/postings")
-    // (doc, dl, gen) keyed by doc: what a DELETE needs to adjust the
-    // corpus stats closed-form without scanning term-bucketed postings.
-    // gen is the LSM-style version stamp: every append advances it, a
-    // tombstone names (doc, gen) VERSIONS, so an UPDATE (delete old +
-    // append new) never shadows its own fresh rows
-    docLen.withColumn("gen", lit(0L))
-      .write.mode("overwrite").parquet(s"$dir/doclens")
-    val spark = df.sparkSession
-    spark.createDataFrame(Seq((totals.getAs[Long]("n_docs"),
-      totals.getAs[Long]("sum_dl"), buckets, 0L)))
-      .toDF("n_docs", "sum_dl", "buckets", "max_gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    writeGeneration(df, idCol, textCol, dir, buckets, 0L, 0L, 0L, SaveMode.Overwrite)
   }
 
   /** Incremental maintenance: append a NEW batch of docs into the
@@ -106,23 +64,39 @@ object TextSearch {
       df: DataFrame, idCol: String, textCol: String, dir: String,
   ): Unit = {
     val spark = df.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     LayoutFiles.recover(spark, dir)
     val st = spark.read.parquet(s"$dir/stats").head()
-    val nDocs = st.getAs[Long]("n_docs")
-    val sumDl = st.getAs[Long]("sum_dl")
-    val buckets = st.getAs[Int]("buckets")
-    val gen = st.getAs[Long]("max_gen") + 1
+    writeGeneration(df, idCol, textCol, dir, st.getAs[Int]("buckets"),
+      st.getAs[Long]("max_gen") + 1, st.getAs[Long]("n_docs"),
+      st.getAs[Long]("sum_dl"), SaveMode.Append)
+  }
+
+  /** The one write body of the layout: `df`'s postings and doc lengths
+    * stamped `gen` and written in `mode`, then `stats` rolled to the
+    * base counts plus the batch's (a build passes gen 0, zero base and
+    * Overwrite). */
+  private def writeGeneration(
+      df: DataFrame, idCol: String, textCol: String, dir: String,
+      buckets: Int, gen: Long, baseDocs: Long, baseSumDl: Long,
+      mode: SaveMode,
+  ): Unit = {
+    val spark = df.sparkSession
+    GraftFunctions.ensureRegistered(spark)
     val terms = df.select(col(idCol).as("doc"),
       explode(Dedup.tokensOf(col(textCol))).as("term"))
-    // lazy persist + delta aggregate FIRST: one job populates both
-    // caches and returns the stats delta; the former two
-    // materialize-count barriers were extra jobs (sequential
-    // consumers — the barrier form is for concurrent ones)
+    // lazy persist, NOT materialize: every consumer below is a
+    // sequential action on this thread, so the first one (the stats
+    // aggregate, run FIRST for exactly this reason) populates both
+    // caches in its own job — the two former materialize-count
+    // barriers were pure extra jobs here (the barrier form exists for
+    // CONCURRENT consumers; see OperatorCache.materialize)
     val tfAll = OperatorCache.persist(
       terms.groupBy("doc", "term").agg(count(lit(1)).as("tf")))
     val docLen = OperatorCache.persist(
       tfAll.groupBy("doc").agg(sum("tf").as("dl")))
+    // sum_dl is the EXACT integer token total — avgdl derives at serve
+    // time as sum_dl/n_docs (identical to avg() while the total stays
+    // under 2^53), and incremental appends stay exact long additions
     val d = docLen.agg(count(lit(1)).as("dn"),
       coalesce(sum("dl"), lit(0L)).as("dsum")).head()
     tfAll.join(docLen, "doc")
@@ -130,12 +104,25 @@ object TextSearch {
         pmod(GraftFunctions.fnv1a64(col("term")), lit(buckets.toLong)))
       .withColumn("gen", lit(gen))
       .select("tb", "term", "doc", "tf", "dl", "gen")
-      .repartition(col("tb")) // one file set per touched bucket (see writeIndex)
-      .write.partitionBy("tb").mode("append").parquet(s"$dir/postings")
+      // cluster by the partition value before the partitioned write
+      // (guide §6): without this EVERY input partition opens a parquet
+      // writer per bucket it touches — measured on p128 as a 32-task ×
+      // 64-bucket fan-out (~2k files, stage cpu 13.3s / run 130s for a
+      // 4.4s wall), and the per-file open cost then taxes every probe's
+      // listing. One batch-sized exchange buys one file set per bucket
+      // at ANY core count — the same clustering a hash
+      // write.distribution-mode buys at cluster scale.
+      .repartition(col("tb"))
+      .write.partitionBy("tb").mode(mode).parquet(s"$dir/postings")
+    // (doc, dl, gen) keyed by doc: what a DELETE needs to adjust the
+    // corpus stats closed-form without scanning term-bucketed postings.
+    // gen is the LSM-style version stamp: every append advances it, a
+    // tombstone names (doc, gen) VERSIONS, so an UPDATE (delete old +
+    // append new) never shadows its own fresh rows
     docLen.withColumn("gen", lit(gen))
-      .write.mode("append").parquet(s"$dir/doclens")
-    spark.createDataFrame(Seq(
-      (nDocs + d.getAs[Long]("dn"), sumDl + d.getAs[Long]("dsum"), buckets, gen)))
+      .write.mode(mode).parquet(s"$dir/doclens")
+    spark.createDataFrame(Seq((baseDocs + d.getAs[Long]("dn"),
+      baseSumDl + d.getAs[Long]("dsum"), buckets, gen)))
       .toDF("n_docs", "sum_dl", "buckets", "max_gen")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
@@ -151,7 +138,7 @@ object TextSearch {
     * @return (n_docs, sum_dl, buckets, stored max_gen, pending
     *         tombstones) — sum_dl stays the exact long so
     *         [[compactIndex]] can persist it closed-form without
-    *         re-scanning doclens; avgdl derives at call sites.
+    *         re-scanning doclens; avgdl derives in [[withContrib]].
     */
   private def servingStats(
       spark: SparkSession,
@@ -265,7 +252,6 @@ object TextSearch {
     require(normTerms.nonEmpty,
       s"searchTopK: no query terms survive normalization: $queryTerms")
     val (nDocs, sumDl, buckets, _, tomb) = servingStats(spark, dir)
-    val avgdl = sumDl.toDouble / math.max(nDocs, 1L)
     val tbs = normTerms
       .map(t => math.floorMod(Fnv1a64.hash(t.getBytes("UTF-8")), buckets.toLong))
       .distinct
@@ -273,17 +259,26 @@ object TextSearch {
       .where(col("tb").isin(tbs: _*) && col("term").isin(normTerms: _*)), tomb, DocGen)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(broadcast(dfreq), "term")
-      .withColumn("idf",
-        log(lit(1.0) + (lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("contrib",
-        col("idf") * col("tf").cast("double") /
-          (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))
+      .transform(withContrib(nDocs, sumDl, k1, b))
       .groupBy("doc")
       .agg(round(sum(col("contrib")), 6).as("score"),
         count(lit(1)).as("n_matched"))
       .orderBy(col("score").desc, col("doc").asc)
       .limit(k)
+  }
+
+  /** Each matched posting's BM25 contribution over rows carrying
+    * (tf, dl, df) — [[TextAnalysis.bm25]]'s expression tree, with
+    * avgdl derived from the exact token total. */
+  private def withContrib(nDocs: Long, sumDl: Long, k1: Double, b: Double)(
+      df: DataFrame): DataFrame = {
+    val avgdl = sumDl.toDouble / math.max(nDocs, 1L)
+    df.withColumn("idf",
+        log(lit(1.0) + (lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5)))
+      .withColumn("contrib",
+        col("idf") * col("tf").cast("double") /
+          (col("tf").cast("double") +
+            lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))
   }
 
   /** Batched serving: top-k per query over a whole query WORKLOAD in
@@ -311,7 +306,6 @@ object TextSearch {
     val spark = queries.sparkSession
     GraftFunctions.ensureRegistered(spark)
     val (nDocs, sumDl, buckets, _, tomb) = servingStats(spark, dir)
-    val avgdl = sumDl.toDouble / math.max(nDocs, 1L)
     // DISTINCT (qid, term): BM25 is a termSET score — a term repeated
     // in a query must not double its contribution
     val qterms = queries.select(col(qidCol).as("qid"),
@@ -336,12 +330,7 @@ object TextSearch {
     matched
       .join(broadcast(qterms), "term")
       .join(broadcast(dfreq), "term")
-      .withColumn("idf",
-        log(lit(1.0) + (lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("contrib",
-        col("idf") * col("tf").cast("double") /
-          (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))
+      .transform(withContrib(nDocs, sumDl, k1, b))
       .groupBy("qid", "doc")
       .agg(round(sum(col("contrib")), 6).as("score"),
         count(lit(1)).as("n_matched"))

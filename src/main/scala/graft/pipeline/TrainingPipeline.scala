@@ -532,11 +532,7 @@ object TrainingPipeline {
     }
     cleaned.write.mode("overwrite").parquet(s"$dir/cleaned")
     bandIndex.write.mode("overwrite").parquet(s"$dir/band_index")
-    bloom.foreach { case (bitmap, _, _) =>
-      bitmap.toSeq.zipWithIndex.map { case (w, i) => (i, w) }
-        .toDF("pos", "word").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/bloom")
-    }
+    writeBloomTable(spark, dir, bloom)
     seenKeys.foreach(
       _.write.mode("overwrite").parquet(s"$dir/seen_keys"))
     Seq((minQuality, languages.toSeq.sorted, minWords, minStopwordHits,
@@ -743,8 +739,8 @@ object TrainingPipeline {
     * the advanced state with the frames re-pointed at the parquet layout
     * (lazy scans — a following [[curateIncremental]] reads only the
     * bucket-matched slices).
-    */
-  /** @param batchId stable identity of this batch (e.g. its input dir
+    *
+    * @param batchId stable identity of this batch (e.g. its input dir
     *                 name). With an id, the advance is IDEMPOTENT under
     *                 replay (a rerun after a partial failure, a
     *                 double-submitted dir): an `_applied_<id>` marker

@@ -100,11 +100,6 @@ object PipelineQueries {
       s"(CASE WHEN list_dot_product($col, ${p.mkString("[", ",", "]")}) >= 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
-  /** DuckDB replay of Similarity.ivfTrain(k, iters=2)'s full training
-    * trajectory — Knuth-hash init, two Lloyd rounds, final assignment
-    * (`a3` = vec_id, e, cid). Shared prefix of the p14 (ANN serving, k=8)
-    * and p20 (semantic dedup, k=16 — larger k = smaller cells = fewer
-    * within-cell pairs, the SemDeDup scale knob) oracles. */
   /** idGate WHERE clause for an absolute-target sample of the
     * embeddings table — min(1, target/count) replayed with the same
     * rounding as Curation.deterministicSample. */
@@ -198,6 +193,11 @@ object PipelineQueries {
     |  ) WHERE rn = 1
     |)""".stripMargin
 
+  /** DuckDB replay of Similarity.ivfTrain(k, iters=2)'s full training
+    * trajectory — Knuth-hash init, two Lloyd rounds, final assignment
+    * (`a3` = vec_id, e, cid). Shared prefix of the p14 (ANN serving, k=8)
+    * and p20 (semantic dedup, k=16 — larger k = smaller cells = fewer
+    * within-cell pairs, the SemDeDup scale knob) oracles. */
   private def ivfAssignSql(k: Int, docWhere: String = ""): String =
     s"""WITH v AS (
     |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,

@@ -54,10 +54,7 @@ object StreamingMultimodal {
     members.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val b = batch
-          .where(col("ext").isin("png", "wav"))
-          .select(col("key").cast("long").as("id"), col("ext"), col("payload"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val b = Multimodal.membersOf(batch).persist(StorageLevel.MEMORY_AND_DISK)
         var batchFp: DataFrame = null
         var batchPk: DataFrame = null
         try {

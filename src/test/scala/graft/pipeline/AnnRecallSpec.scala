@@ -77,24 +77,40 @@ class AnnRecallSpec extends SparkSpec {
     val base = corpus.where(col("vec_id") % 5 =!= 0)
     val batch = corpus.where(col("vec_id") % 5 === 0)
     val coarse = Similarity.ivfTrain(base, "vec_id", "embedding", k = 8)
-    val books = Similarity.trainPq(base, "vec_id", "embedding", m = 8, k = 16)
+    // the same contract for both encodings: raw-vector codebooks and
+    // residual codebooks (trained on the coarse-assignment residuals)
+    val layouts = Seq(
+      ("ivfpq", Similarity.trainPq(base, "vec_id", "embedding", m = 8, k = 16),
+        false),
+      ("ivfpq-residual", Similarity.trainPqResidual(base, "vec_id", "embedding",
+        coarse, m = 8, k = 16), true))
+    for ((name, books, residual) <- layouts) withClue(s"$name: ") {
+      def write(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+        if (residual) Similarity.writeIvfPqResidual(df, "embedding", path, coarse, books)
+        else Similarity.writeIvfPq(df, "embedding", path, coarse, books)
+      val appended = s"target/graft-tmp/$name-appended"
+      write(base, appended)
+      if (residual) Similarity.appendIvfPqResidual(batch, "embedding", appended, coarse, books)
+      else Similarity.appendIvfPq(batch, "embedding", appended, coarse, books)
+      val rebuilt = s"target/graft-tmp/$name-rebuilt"
+      write(corpus, rebuilt)
 
-    val appended = "target/graft-tmp/ivfpq-appended"
-    Similarity.writeIvfPq(base, "embedding", appended, coarse, books)
-    Similarity.appendIvfPq(batch, "embedding", appended, coarse, books)
-    val rebuilt = "target/graft-tmp/ivfpq-rebuilt"
-    Similarity.writeIvfPq(corpus, "embedding", rebuilt, coarse, books)
-
-    for (q <- queries.take(2)) {
-      def served(path: String) = Similarity.probeIvfPq(spark, path,
-        "vec_id", "embedding", coarse, books, q, K, nprobe = 6, rescoreFactor = 10)
-        .collect().map(_.getLong(0)).toSeq
-      assert(served(appended) == served(rebuilt),
-        "append must be indistinguishable from a rebuild at serve time")
+      for (q <- queries.take(2)) {
+        def served(path: String) = (if (residual)
+          Similarity.probeIvfPqResidual(spark, path, "vec_id", "embedding",
+            coarse, books, q, K, nprobe = 6, rescoreFactor = 10)
+        else Similarity.probeIvfPq(spark, path, "vec_id", "embedding",
+          coarse, books, q, K, nprobe = 6, rescoreFactor = 10))
+          .collect().map(_.getLong(0)).toSeq
+        assert(served(appended) == served(rebuilt),
+          "append must be indistinguishable from a rebuild at serve time")
+      }
+      // sanity: appended rows are actually reachable (a batch id can win)
+      val all = spark.read.parquet(appended)
+      assert(all.count() == corpus.count(), "no rows lost or duplicated")
+      if (residual) assert(Similarity.layoutKind(spark, appended) ==
+        Similarity.LayoutKind.IvfPqResidual, "an append keeps the residual marker")
     }
-    // sanity: appended rows are actually reachable (a batch id can win)
-    val all = spark.read.parquet(appended)
-    assert(all.count() == corpus.count(), "no rows lost or duplicated")
   }
 
   test("appendIndexed: LSH layout append serves old and new rows through one pruned scan") {

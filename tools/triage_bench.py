@@ -14,28 +14,61 @@ Classification per mover:
 Usage:
   triage_bench.py bench/attribution_r18.json bench/attribution_r19.json \
       [wall_flag=1.2] [cpu_band=1.25]
+  triage_bench.py parent_recrawl.out change_recrawl.out [wall_flag] [cpu_band]
 
-Each input is a Bench attribution snapshot:
+Each input is either a Bench attribution snapshot:
   {"metric":"attribution","runs":{"q":[{"sec":..,"jobs":..,"cpuMs":..},..]}}
 Per query we take the min-sec run's jobs and the min cpuMs across runs
 (cpuMs is stabler than wall but still dips on a warm second run).
+
+Or the output of a traced perfbench run (`python3 perfbench/run.py
+--workload recrawl --seed 1 --trace 1 > x.out`): its LAST JSON line,
+{"correct":..,"metrics":{..}}, is read, and every per-layer
+`pipeline.<layer>` with `.jobs` and `.task_cpu_ms` becomes one row
+(`.ms` as its wall) under the same classes.
 """
 import json
 import sys
 
 
 def load(path):
-    d = json.load(open(path))
+    """(rows, per_layer) of one input: per_layer is True for perfbench."""
+    text = open(path).read()
+    try:
+        d = json.loads(text)
+    except ValueError:  # perfbench output: the result is its last JSON line
+        d = json.loads([ln for ln in text.splitlines() if ln.startswith("{")][-1])
+    if "metrics" in d:
+        return load_layers(d["metrics"]), True
     out = {}
     for q, rs in d["runs"].items():
         best = min(rs, key=lambda r: r["sec"])
         out[q] = dict(sec=best["sec"], jobs=best["jobs"],
                       cpu=min(r["cpuMs"] for r in rs))
+    return out, False
+
+
+def load_layers(metrics):
+    """Per-layer rows of a perfbench result's metrics map, whose entries
+    are {"value": v, "unit": u}."""
+    def value(name):
+        m = metrics.get(name)
+        return m["value"] if isinstance(m, dict) else m
+    out = {}
+    for k in metrics:
+        if not (k.startswith("pipeline.") and k.endswith(".jobs")):
+            continue
+        layer = k[:-len(".jobs")]
+        cpu = value(layer + ".task_cpu_ms")
+        if cpu is None:
+            continue
+        out[layer] = dict(sec=(value(layer + ".ms") or 0) / 1000,
+                          jobs=int(value(k)), cpu=int(round(cpu)))
     return out
 
 
 def main():
-    a, b = load(sys.argv[1]), load(sys.argv[2])
+    (a, layers), (b, _) = load(sys.argv[1]), load(sys.argv[2])
     wall_flag = float(sys.argv[3]) if len(sys.argv) > 3 else 1.2
     cpu_band = float(sys.argv[4]) if len(sys.argv) > 4 else 1.25
     common = sorted(set(a) & set(b),
@@ -58,7 +91,8 @@ def main():
             klass = "box-noise"
         counts[klass] = counts.get(klass, 0) + 1
         mover = x > wall_flag or x < 1 / wall_flag
-        if mover or klass in ("plan-change", "cpu-regression"):
+        # a traced run has a handful of layers: list every one
+        if layers or mover or klass in ("plan-change", "cpu-regression"):
             rows.append((q, a[q], b[q], x, cx, klass))
     print(f"{'query':34s} {'sec0':>7s} {'sec1':>7s} {'x':>6s} "
           f"{'jobs0':>6s} {'jobs1':>6s} {'cpu0ms':>8s} {'cpu1ms':>8s} "
