@@ -148,10 +148,14 @@ $rows
   * state.py:90-96), the requested output type, and the intermediate-
   * values scratch map (add/add_many/get/reset, state.py:98-112). The
   * engine's tables/memory/vectorstore live on the [[Agent]] itself —
-  * this class carries only the per-run observables.
+  * this class carries only the per-run observables, including where the
+  * last turn's time went, attempt by attempt ([[lastTurn]]).
   */
 final class AgentState(logger: Option[AgentLogger] = None) {
   private val intermediate = mutable.LinkedHashMap.empty[String, Any]
+  /** The attempts of the current chat turn (the last one once it
+    * returned), oldest first. */
+  @volatile var lastTurn: Vector[AgentState.Attempt] = Vector.empty
   @volatile var lastSqlGenerated: Option[String] = None
   @volatile var lastSqlExecuted: Option[String] = None
   @volatile var lastPromptId: Option[java.util.UUID] = None
@@ -171,6 +175,18 @@ final class AgentState(logger: Option[AgentLogger] = None) {
   def get(key: String, default: Any = ""): Any =
     intermediate.getOrElse(key, default)
   def resetIntermediateValues(): Unit = intermediate.clear()
+}
+
+object AgentState {
+  /** One LLM round of a chat turn. `kind` names the prompt it answered:
+    * `first`, `correction` (the previous attempt's SQL failed) or `type`
+    * (the previous attempt's result had the wrong shape). The three
+    * phases are wall ms from `System.nanoTime`: building the prompt,
+    * the LLM call, and gating + executing + typing the result.
+    * `errorClass` is the failure's exception class, `TypeMismatch` for
+    * a wrong-shaped result, or None for the attempt that answered. */
+  final case class Attempt(kind: String, promptMs: Double, llmMs: Double,
+      executeMs: Double, errorClass: Option[String])
 }
 
 final class Agent(
@@ -236,11 +252,11 @@ final class Agent(
 
   /** The `<tables>` block: every registered frame serialized
     * (templates/generate_python_code_with_sql.tmpl lines 1-5 +
-    * shared/dataframe.tmpl). */
+    * shared/dataframe.tmpl), each through the engine's per-registration
+    * memo ([[Engine.tableBlock]]). */
   private def tablesBlock: String =
-    engine.knownTables.toSeq.sorted.map { t =>
-      Serializer.serialize(t, engine.table(t))
-    }.mkString("<tables>\n", "\n\n", "\n</tables>")
+    engine.knownTables.toSeq.sorted.map(engine.tableBlock)
+      .mkString("<tables>\n", "\n\n", "\n</tables>")
 
   /** Provided-functions block (shared/sql_functions.tmpl): the SQL
     * entry point plus any registered skills, advertised so generated
@@ -331,17 +347,25 @@ $fixLine"""
     memory.add(question, isUser = true)
     state.assignPromptId()
     state.outputType = outputType
+    state.lastTurn = Vector.empty
     log(s"Question: $question")
     // (sql, error, expectedType) — expectedType marks a type-mismatch retry
     var failed: Option[(String, String, Option[String])] = None
+    var kind = "first"
     var attempt = 0
     while (attempt <= maxRetries) {
+      val t0 = System.nanoTime()
       val prompt = failed match {
         case None                      => buildPrompt(question, outputType)
         case Some((sql, error, want))  => buildCorrectionPrompt(sql, error, want)
       }
       state.lastPromptUsed = Some(prompt)
+      val t1 = System.nanoTime()
       val sql = extractSql(llm.generate(prompt))
+      val t2 = System.nanoTime()
+      def record(errorClass: Option[String]): Unit =
+        state.lastTurn :+= AgentState.Attempt(kind, (t1 - t0) / 1e6, (t2 - t1) / 1e6,
+          (System.nanoTime() - t2) / 1e6, errorClass)
       state.lastSqlGenerated = Some(sql)
       log(s"Generated SQL (attempt ${attempt + 1}): $sql")
       try {
@@ -367,16 +391,21 @@ $fixLine"""
         outputType match {
           case Some(want) if !Response.matchesType(resp, want) =>
             log(s"Type mismatch: got ${resp.kind}, expected $want")
+            record(Some("TypeMismatch"))
+            kind = "type"
             failed = Some((sql,
               s"Result type ${resp.kind} does not match the expected type", Some(want)))
             attempt += 1
           case _ =>
             memory.add(sql, isUser = false)
             log(s"Response: ${resp.kind}")
+            record(None)
             return resp
         }
       } catch {
         case e: Exception =>
+          record(Some(e.getClass.getSimpleName))
+          kind = "correction"
           log(s"Execution failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
           // keep the output-type constraint in the correction prompt so a
           // fixed query doesn't burn another retry on the wrong shape

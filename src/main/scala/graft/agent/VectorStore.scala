@@ -3,8 +3,6 @@ package graft.agent
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
 
 import graft.pipeline.Similarity
 
@@ -23,8 +21,8 @@ final class MissingVectorStoreError(message: String)
   * the `*Documents` forms return only the text for prompt injection.
   */
 object VectorStore {
-  /** Hard ceiling on retrieval k — the collect in the search path is
-    * exactly k rows (README "Driver-side bounds"). */
+  /** Hard ceiling on retrieval k — a retrieval returns at most k
+    * records (README "Driver-side bounds"). */
   val MaxK = 1000
 }
 
@@ -80,10 +78,12 @@ trait VectorStore {
 
 /** In-memory cosine vector store: documents are embedded with a
   * deterministic hashing-trick unigram TF vector (no model in the
-  * container), and relevance search runs through the SAME distributed
-  * path as corpus ANN — [[Similarity.bruteForceTopK]] over a DataFrame
-  * of the stored embeddings — so swapping this for a billion-row
-  * parquet-backed store changes the storage, not the search.
+  * container), and relevance search ranks the stored embeddings on the
+  * driver with [[Similarity.bruteForceTopKLocal]] — the same scores and
+  * order as the corpus ANN baseline [[Similarity.bruteForceTopK]], with
+  * no Spark job per retrieval. A text with no ASCII word token embeds
+  * to the zero vector: as an entry it scores null and ranks after every
+  * scored entry, as a question it retrieves nothing.
   *
   * Ids are deterministic (collection, insertion-order) unless provided;
   * adds/updates/deletes mirror the reference semantics, including the
@@ -201,26 +201,16 @@ class InMemoryVectorStore(
 
   private def search(coll: mutable.LinkedHashMap[String, Entry],
       question: String, k: Int): Seq[Record] = {
-    // driver-side bound (README "Driver-side bounds"): the collect at
-    // the end is exactly k rows; cap k so a miscomputed caller value
+    // driver-side bound (README "Driver-side bounds"): a retrieval
+    // returns at most k records; cap k so a miscomputed caller value
     // cannot turn retrieval into a bulk export
     require(k <= VectorStore.MaxK,
       s"retrieval k ($k) exceeds the vector-store cap ${VectorStore.MaxK}")
     if (coll.isEmpty || k <= 0) return Seq.empty
     val qv = embed(question)
     if (qv.forall(_ == 0f)) return Seq.empty
-    val schema = StructType(Seq(
-      StructField("id", StringType),
-      StructField("embedding", ArrayType(FloatType))))
-    val rows = coll.valuesIterator
-      .map(e => Row(e.id, e.vec.toSeq)).toSeq
-    val corpus = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 10000)),
-      schema)
-    Similarity.bruteForceTopK(corpus, "id", "embedding", qv.toSeq, k)
-      .collect().toSeq
-      .flatMap(r => coll.get(r.getString(0)))
-      .map(e => Record(e.id, e.document, e.metadata))
+    Similarity.bruteForceTopKLocal(coll.values.map(e => (e.id, e.vec)), qv, k)
+      .map { case (id, _) => val e = coll(id); Record(e.id, e.document, e.metadata) }
   }
 
   override def getRelevantQuestionAnswers(question: String, k: Int): Seq[Record] =

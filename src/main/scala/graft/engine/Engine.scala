@@ -3,6 +3,7 @@ package graft.engine
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.agent.Serializer
 import graft.plan.DatasetPlanBuilder
 import graft.schema._
 import graft.types.TypeMapping
@@ -17,25 +18,41 @@ import graft.types.TypeMapping
   * loaded dataset is a composed logical plan, materialized only by an
   * action — the Spark-idiomatic improvement over the reference's eager
   * `LocalDatasetLoader.load` (local_loader.py:35-41).
+  *
+  * Each registration also carries the table's prompt block, serialized
+  * by the first prompt that needs it ([[tableBlock]]) and shared by
+  * every Agent over this engine; binding a different frame to the name
+  * drops it.
   */
 final class Engine(val spark: SparkSession, val datasetsRoot: String) {
 
-  private val registry = mutable.LinkedHashMap.empty[String, DataFrame]
+  private val registry = mutable.LinkedHashMap.empty[String, Engine.Registration]
   private val schemas = mutable.LinkedHashMap.empty[String, SemanticSchema]
 
-  def knownTables: Set[String] = registry.keySet.toSet
+  def knownTables: Set[String] = synchronized(registry.keySet.toSet)
 
   /** Register an in-memory frame as a queryable table
-    * (reference: data_loader/duck_db_connection_manager.py:18-27). */
-  def register(name: String, df: DataFrame): Unit = {
+    * (reference: data_loader/duck_db_connection_manager.py:18-27).
+    * Re-registering the SAME frame object keeps its serialized prompt
+    * block; any other frame starts a new registration. */
+  def register(name: String, df: DataFrame): Unit = synchronized {
     val clean = SqlGate.sanitizeTableNameLowercase(name)
-    registry(clean) = df
+    if (!registry.get(clean).exists(_.df eq df))
+      registry(clean) = new Engine.Registration(clean, df)
     df.createOrReplaceTempView(clean)
   }
 
-  def table(name: String): DataFrame =
+  private def registration(name: String): Engine.Registration = synchronized {
     registry.getOrElse(SqlGate.sanitizeTableNameLowercase(name),
       throw new IllegalArgumentException(s"unknown table: $name"))
+  }
+
+  def table(name: String): DataFrame = registration(name).df
+
+  /** The table's prompt `<table>` block — [[Serializer.serialize]] with
+    * its defaults, byte for byte — computed once per registration: the
+    * head collect runs on the first call only. */
+  def tableBlock(name: String): String = registration(name).block
 
   /** `pai.create` for a materialized frame: write data.parquet +
     * schema.yaml, then reload through the loader
@@ -94,7 +111,7 @@ final class Engine(val spark: SparkSession, val datasetsRoot: String) {
     * (reference: data_loader/view_loader.py:43-71). */
   private def resolveDependency(org: String)(dep: String): DataFrame = {
     val clean = SqlGate.sanitizeTableNameLowercase(dep)
-    registry.getOrElse(clean, {
+    synchronized(registry.get(clean)).map(_.df).getOrElse {
       val depDir = Paths.get(datasetsRoot, org, dep, "schema.yaml")
       if (Files.exists(depDir)) {
         if (loading.contains(clean))
@@ -104,7 +121,7 @@ final class Engine(val spark: SparkSession, val datasetsRoot: String) {
         try load(s"$org/$dep") finally loading -= clean
       }
       else throw new IllegalArgumentException(s"unknown view dependency: $dep")
-    })
+    }
   }
 
   /** Declared sink (reference: semantic_layer_schema.py:257-267). */
@@ -139,5 +156,14 @@ final class Engine(val spark: SparkSession, val datasetsRoot: String) {
       (org, name)
     case _ => throw new IllegalArgumentException(
       s"dataset path must be 'org/dataset' in lowercase kebab-case, got: $path")
+  }
+}
+
+object Engine {
+  /** One registered frame and its prompt block. The lazy val serializes
+    * at most once: concurrent first callers wait for the one collect,
+    * and a failed serialization is retried by the next call. */
+  private final class Registration(name: String, val df: DataFrame) {
+    lazy val block: String = Serializer.serialize(name, df)
   }
 }

@@ -59,15 +59,38 @@ object LayoutFiles {
 
   private def suffixed(p: Path, suffix: String): Path = new Path(p.toString + suffix)
 
-  /** The pending tombstone set `dir/name`, if any. `mergeSchema` reads a
-    * set whose files were written under different schemas (the ANN
+  /** Read the parquet table at `path` through its listed data files —
+    * the entries whose names start with neither `_` nor `.`. A side
+    * table of a layout (`_meta`, `_tombstones`, `_manifest`, `_index`)
+    * is named so that scans of the layout root skip it; handing Spark
+    * that underscore path directly reads the same rows but logs "All
+    * paths were ignored". `path` itself is read when it is no directory,
+    * lists no data file, or lists more than Spark's
+    * `parallelPartitionDiscovery.threshold` (past that many paths Spark
+    * lists them with a job; one directory it lists on the driver).
+    * `mergeSchema` reads files written under different schemas (the ANN
     * legacy eras, see `Similarity.minusTombstones`). */
+  def read(spark: SparkSession, path: String, mergeSchema: Boolean = false): DataFrame = {
+    val p = new Path(path)
+    val fs = fsOf(spark, path)
+    val data =
+      if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) Nil
+      else fs.listStatus(p).toSeq.map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .map(_.toString)
+    val maxPaths = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val reader = spark.read.option("mergeSchema", mergeSchema)
+    // basePath keeps partition columns of a partitioned table's subdirs
+    if (data.isEmpty || data.size > maxPaths) reader.parquet(path)
+    else reader.option("basePath", path).parquet(data: _*)
+  }
+
+  /** The pending tombstone set `dir/name`, if any, read with [[read]]. */
   def tombstones(
       spark: SparkSession, dir: String, name: String = "_tombstones",
       mergeSchema: Boolean = false): Option[DataFrame] = {
     val p = new Path(dir, name)
-    if (fsOf(spark, dir).exists(p))
-      Some(spark.read.option("mergeSchema", mergeSchema).parquet(p.toString))
+    if (fsOf(spark, dir).exists(p)) Some(read(spark, p.toString, mergeSchema))
     else None
   }
 

@@ -928,7 +928,7 @@ object Multimodal {
     graft.sources.WebDataset.read(spark, s"$outDir/shard-*.tar")
       .groupBy(col("key").cast("long").as("doc"))
       .agg(countDistinct(col("ext")).as("n_parts"))
-      .join(spark.read.parquet(s"$outDir/_manifest"), "doc")
+      .join(LayoutFiles.read(spark, s"$outDir/_manifest"), "doc")
       .select("doc", "cluster", "n_members", "n_parts")
 
   /** Write one batch's state partitions — `fp/batch=<id>` and

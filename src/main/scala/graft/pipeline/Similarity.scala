@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
@@ -68,6 +70,48 @@ object Similarity {
       .select(col(idCol), round(cosine(col(vecCol), vecLit(query)), 6).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
+
+  /** [[bruteForceTopK]] over driver-resident (id, vector) pairs, for a
+    * corpus too small to be worth a Spark job (the agent's trained
+    * context). Same result, row for row: the [[dot]] left-to-right
+    * double sums, `sqrt` norms, the cosine rounded HALF_UP to 6 places
+    * as Spark's `round` treats a double (`BigDecimal.valueOf`), then
+    * score descending with nulls last and id ascending in Spark's
+    * binary UTF-8 order. A zero norm or a dimension mismatch scores
+    * null — what the Spark path yields with ANSI off; with ANSI on it
+    * raises DIVIDE_BY_ZERO instead.
+    */
+  def bruteForceTopKLocal(
+      corpus: Iterable[(String, Array[Float])], query: Array[Float], k: Int,
+  ): Seq[(String, Option[Double])] = {
+    def dot(a: Array[Float], b: Array[Float]): Option[Double] =
+      if (a.length != b.length) None
+      else {
+        var acc = 0.0
+        var i = 0
+        while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+        Some(acc)
+      }
+    val qNorm = math.sqrt(dot(query, query).get)
+    def score(v: Array[Float]): Option[Double] =
+      for {
+        d <- dot(v, query)
+        denom = math.sqrt(dot(v, v).get) * qNorm
+        if denom != 0.0
+        c = d / denom
+      } yield
+        if (c.isNaN || c.isInfinite) c
+        else java.math.BigDecimal.valueOf(c)
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    val order: Ordering[(String, Option[Double])] = (x, y) => (x._2, y._2) match {
+      case (Some(a), Some(b)) if SQLOrderingUtil.compareDoubles(a, b) != 0 =>
+        SQLOrderingUtil.compareDoubles(b, a)
+      case (None, Some(_)) => 1
+      case (Some(_), None) => -1
+      case _ => UTF8String.fromString(x._1).compareTo(UTF8String.fromString(y._1))
+    }
+    corpus.iterator.map { case (id, v) => (id, score(v)) }.toSeq.sorted(order).take(k)
+  }
 
   /** Recall@k of an approximate top-k result against the exact one —
     * the standard ANN quality metric: |approx ∩ exact| / |exact| over
@@ -1206,7 +1250,7 @@ object Similarity {
       s"$path has no _meta — built by a pre-generation writer; rebuild " +
         "the layout (writeIndexed/writeIvfPq/writeIvfPqResidual) before " +
         "appending to it")
-    val row = spark.read.parquet(p.toString).head()
+    val row = LayoutFiles.read(spark, p.toString).head()
     val fields = row.schema.fieldNames.toSet
     expect.foreach { case (k, v) =>
       if (fields.contains(k))
@@ -1252,7 +1296,7 @@ object Similarity {
     * [[LayoutKind.IvfPq]] — rewrite or re-append once to stamp them. */
   def layoutKind(
       spark: org.apache.spark.sql.SparkSession, path: String): LayoutKind = {
-    val df = spark.read.parquet(s"$path/_meta")
+    val df = LayoutFiles.read(spark, s"$path/_meta")
     val fields = df.schema.fieldNames.toSet
     val row = df.head()
     if (fields.contains("planes"))
@@ -1434,7 +1478,7 @@ object Similarity {
     // losing the recorded write parameters / model fingerprint would
     // disarm the mixed-artifact append guard
     if (fs.exists(new Path(s"$path/_meta")))
-      spark.read.parquet(s"$path/_meta").coalesce(1)
+      LayoutFiles.read(spark, s"$path/_meta").coalesce(1)
         .write.mode("overwrite").parquet(s"${LayoutFiles.staging(path)}/_meta")
     LayoutFiles.swap(spark, path)
   }

@@ -1114,7 +1114,7 @@ object TrainingPipeline {
         regexp_extract(col("target_uri"), idPattern, 1)
           .cast("long").as("doc_id"),
         decode(col("payload"), "UTF-8").as("text"))
-      .join(spark.read.parquet(s"$outDir/_manifest"), "doc_id")
+      .join(LayoutFiles.read(spark, s"$outDir/_manifest"), "doc_id")
       .select("doc_id", "text", "split")
   }
 

@@ -415,7 +415,7 @@ object Warc {
   def fetch(spark: SparkSession, dir: String, wanted: DataFrame): DataFrame = {
     val hconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val index = spark.read.parquet(s"$dir/_index")
+    val index = graft.pipeline.LayoutFiles.read(spark, s"$dir/_index")
     implicit val enc: Encoder[WarcRecord] = Encoders.product[WarcRecord]
     // distinct: a duplicated wanted id must not fetch its record twice
     index.join(wanted.select(col("id")).distinct(), "id")

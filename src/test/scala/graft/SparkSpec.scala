@@ -8,6 +8,17 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s value and the Spark jobs it ran, counted by a listener on
+    * the shared session. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val m = JobMetrics.install(spark)
+    try {
+      val before = m.settle()
+      val out = body
+      (out, (m.settle() - before).jobs)
+    } finally spark.sparkContext.removeSparkListener(m)
+  }
 }
 
 object SparkSpec {

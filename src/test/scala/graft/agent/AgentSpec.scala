@@ -1,5 +1,9 @@
 package graft.agent
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import graft.{SparkSpec, Tables}
 import graft.engine.Engine
 import graft.response._
@@ -61,6 +65,12 @@ class AgentSpec extends SparkSpec {
     assert(agent.state.lastSqlGenerated.contains("SELECT count(*) AS n FROM nation"))
     assert(agent.state.lastSqlExecuted.contains("SELECT count(*) AS n FROM nation"))
     assert(agent.state.lastPromptUsed.exists(_.contains("does_not_exist")))
+    // the per-turn record: a failed first attempt, then the correction
+    val attempts = agent.state.lastTurn
+    assert(attempts.map(_.kind) == Seq("first", "correction"))
+    assert(attempts.head.errorClass.contains("MaliciousQueryError"))
+    assert(attempts(1).errorClass.isEmpty)
+    assert(attempts.forall(a => a.promptMs >= 0 && a.llmMs >= 0 && a.executeMs >= 0))
     agent.state.add("route", "sql")
     agent.state.addMany(Map("rows" -> 25, "cached" -> false))
     assert(agent.state.get("route") == "sql" && agent.state.get("rows") == 25)
@@ -271,5 +281,74 @@ class AgentSpec extends SparkSpec {
     val prompt = llm.lastPrompt.get
     assert(!prompt.contains("utilize these examples"))
     assert(!prompt.contains("additional documents"))
+  }
+
+  private def freshTablesBlock(e: Engine): String =
+    e.knownTables.toSeq.sorted.map(t => Serializer.serialize(t, e.table(t)))
+      .mkString("<tables>\n", "\n\n", "\n</tables>")
+
+  test("table blocks are serialized once per registration and shared by every Agent") {
+    val e = engineWithTables()
+    val store = new InMemoryVectorStore(spark)
+    store.addQuestionAnswer(Seq("how many regions are there?"),
+      Seq("SELECT count(*) AS n FROM region"))
+    store.addDocs(Seq("The region table is the TPC-H region dimension."))
+    val first = new Agent(e, new FakeLlm(Seq("SELECT 1")), vectorstore = Some(store))
+    val (p1, fillJobs) = jobsOf(first.buildPrompt("how many regions?"))
+    assert(fillJobs > 0) // the first prompt collects each head
+    // a NEW conversation over the same engine: no head collect, no
+    // retrieval job, for either prompt shape
+    val second = new Agent(e, new FakeLlm(Seq("SELECT 1")), vectorstore = Some(store))
+    val ((p2, c2), jobs) = jobsOf((second.buildPrompt("how many regions?"),
+      second.buildCorrectionPrompt("SELECT * FROM nope", "boom", Some("number"))))
+    assert(jobs == 0)
+    assert(p2 == p1)
+    // byte-identical to serializing every table afresh
+    val fresh = freshTablesBlock(e)
+    assert(p1.contains(fresh) && c2.startsWith(fresh + "\n"))
+    assert(p1.contains("Q: how many regions are there?"))
+  }
+
+  test("re-registering the same frame keeps the memo; a different frame replaces the head") {
+    val e = engineWithTables()
+    val agent = new Agent(e, new FakeLlm(Seq("SELECT 1")))
+    agent.buildPrompt("?")
+    val region = e.table("region")
+    val (_, jobs) = jobsOf {
+      e.register("region", region)
+      agent.buildPrompt("?")
+    }
+    assert(jobs == 0)
+    val before = e.tableBlock("region")
+    val later = region.where("r_regionkey >= 3")
+    e.register("REGION", later)
+    val after = e.tableBlock("region")
+    assert(after != before)
+    assert(after == Serializer.serialize("region", later))
+    assert(!after.contains("\n0,AFRICA\n") && before.contains("\n0,AFRICA\n"))
+    assert(agent.buildPrompt("?").contains(freshTablesBlock(e)))
+  }
+
+  test("Engine.create over an existing path, then load, serves the new rows in the prompt") {
+    val root = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    val e = new Engine(spark, root)
+    e.create("org/nums", spark.range(0, 3, 1, 1).toDF("x"))
+    assert(e.tableBlock("nums").contains("\nx\n0\n1\n2\n"))
+    e.create("org/nums", spark.range(40, 42, 1, 1).toDF("x"))
+    e.load("org/nums")
+    val block = e.tableBlock("nums")
+    assert(block.contains("\nx\n40\n41\n") && !block.contains("\n0\n"))
+    assert(new Agent(e, new FakeLlm(Seq("SELECT 1"))).buildPrompt("?")
+      .contains(freshTablesBlock(e)))
+  }
+
+  test("concurrent conversations over one engine build the same prompt") {
+    val e = engineWithTables()
+    val prompts = Await.result(Future.sequence((1 to 4).map(_ => Future(
+      new Agent(e, new FakeLlm(Seq("SELECT 1"))).buildPrompt("how many?")))), 2.minutes)
+    assert(prompts.distinct.size == 1)
+    assert(prompts.head.contains(freshTablesBlock(e)))
+    val (_, jobs) = jobsOf(new Agent(e, new FakeLlm(Seq("SELECT 1"))).buildPrompt("how many?"))
+    assert(jobs == 0)
   }
 }

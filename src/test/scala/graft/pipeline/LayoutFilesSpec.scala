@@ -257,4 +257,20 @@ class LayoutFilesSpec extends SparkSpec {
     assert(TextSearch.searchTopK(spark, d, Seq("join"), k = 3).count() > 0)
     assert(!fs.exists(new Path(d, "_commit")))
   }
+
+  test("read: a side table's data files, or its directory past Spark's listing threshold") {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    for (threshold <- Seq(32, 2)) withClue(s"threshold $threshold: ") {
+      // a dir per case: Spark caches the file listing of a path it read
+      val d = s"$base/read-$threshold/_side"
+      spark.range(0, 30, 1, 3).toDF("doc").write.mode("overwrite").parquet(d)
+      spark.conf.set(key, threshold.toString)
+      try {
+        // three data files past a threshold of 2 would be listed by a job
+        val (df, jobs) = jobsOf(LayoutFiles.read(spark, d))
+        assert(jobs == jobsOf(spark.read.parquet(d))._2)
+        assert(df.as[Long].collect().sorted.toSeq == (0L until 30L))
+      } finally spark.conf.unset(key)
+    }
+  }
 }

@@ -1,5 +1,11 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -419,5 +425,47 @@ class TextSearchSpec extends SparkSpec {
     // n_rel counts JUDGED DOCS, not judgment rows
     assert(got.head(1) == 2L, s"n_rel must be 2 judged docs: ${got.head}")
     assert(clean.head(1) == 2L)
+  }
+
+  /** The WARN-or-worse log4j events `body` logs, as "logger: message". */
+  private def warningsDuring(body: => Unit): Seq[String] = {
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("warn-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val level = root.getLevel
+    root.addAppender(capture)
+    Configurator.setRootLevel(Level.WARN)
+    try body
+    finally {
+      Configurator.setRootLevel(level)
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("a build -> delete -> probe -> compact round logs no warning") {
+    // the `_tombstones` side table is read through its data files: handed
+    // to Spark as a path, its underscore name logged "All paths were
+    // ignored" on every probe
+    val d = "target/graft-tmp/textsearch-quiet"
+    val warnings = warningsDuring {
+      TextSearch.writeIndex(corpus, "doc_id", "text", d, buckets = 8)
+      TextSearch.deleteFromIndex(spark, d, Seq(Tuple1(5L)).toDF("doc_id"), "doc_id")
+      val served = TextSearch.searchTopK(spark, d, Seq("join", "vector"), k = 5)
+        .select("doc").as[Long].collect().toSeq
+      assert(served.nonEmpty && !served.contains(5L), s"served $served")
+      TextSearch.compactIndex(spark, d)
+      assert(TextSearch.searchTopK(spark, d, Seq("join", "vector"), k = 5)
+        .select("doc").as[Long].collect().toSeq == served)
+    }
+    OperatorCache.releaseAll(spark)
+    assert(warnings.isEmpty, warnings.mkString("\n"))
   }
 }

@@ -22,13 +22,17 @@ Per query we take the min-sec run's jobs and the min cpuMs across runs
 (cpuMs is stabler than wall but still dips on a warm second run).
 
 Or the output of a traced perfbench run (`python3 perfbench/run.py
---workload recrawl --seed 1 --trace 1 > x.out`): its LAST JSON line,
-{"correct":..,"metrics":{..}}, is read, and every per-layer
-`pipeline.<layer>` with `.jobs` and `.task_cpu_ms` becomes one row
-(`.ms` as its wall) under the same classes.
+--workload recrawl --seed 1 --trace 1 > x.out`, or `--workload chat`):
+its LAST JSON line, {"correct":..,"metrics":{..}}, is read, and every
+traced layer -- `pipeline.*`, `agent.*`, `engine.*`, `response.*`,
+`schema.*` -- with `.jobs` and `.task_cpu_ms` becomes one row (`.ms` as
+its wall) under the same classes. A chat layer's jobs are a mean per
+span, so they print with two decimals.
 """
 import json
 import sys
+
+LAYERS = ("pipeline.", "agent.", "engine.", "response.", "schema.")
 
 
 def load(path):
@@ -56,14 +60,14 @@ def load_layers(metrics):
         return m["value"] if isinstance(m, dict) else m
     out = {}
     for k in metrics:
-        if not (k.startswith("pipeline.") and k.endswith(".jobs")):
+        if not (k.startswith(LAYERS) and k.endswith(".jobs")):
             continue
         layer = k[:-len(".jobs")]
         cpu = value(layer + ".task_cpu_ms")
         if cpu is None:
             continue
         out[layer] = dict(sec=(value(layer + ".ms") or 0) / 1000,
-                          jobs=int(value(k)), cpu=int(round(cpu)))
+                          jobs=value(k), cpu=int(round(cpu)))
     return out
 
 
@@ -97,9 +101,11 @@ def main():
     print(f"{'query':34s} {'sec0':>7s} {'sec1':>7s} {'x':>6s} "
           f"{'jobs0':>6s} {'jobs1':>6s} {'cpu0ms':>8s} {'cpu1ms':>8s} "
           f"{'cpux':>6s}  class")
+    def jobs(j):
+        return f"{int(j):6d}" if j == int(j) else f"{j:6.2f}"
     for q, ra, rb, x, cx, klass in rows:
         print(f"{q:34s} {ra['sec']:7.2f} {rb['sec']:7.2f} {x:6.2f} "
-              f"{ra['jobs']:6d} {rb['jobs']:6d} {ra['cpu']:8d} "
+              f"{jobs(ra['jobs'])} {jobs(rb['jobs'])} {ra['cpu']:8d} "
               f"{rb['cpu']:8d} {cx:6.2f}  {klass}")
     t0 = sum(a[q]["sec"] for q in common)
     t1 = sum(b[q]["sec"] for q in common)
@@ -109,7 +115,7 @@ def main():
     only_b = sorted(set(b) - set(a))
     if only_b:
         print("new queries:", ", ".join(
-            f"{q}={b[q]['sec']:.2f}s/{b[q]['jobs']}j" for q in only_b))
+            f"{q}={b[q]['sec']:.2f}s/{b[q]['jobs']:g}j" for q in only_b))
 
 
 if __name__ == "__main__":
