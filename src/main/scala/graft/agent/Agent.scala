@@ -406,10 +406,17 @@ $fixLine"""
         case e: Exception =>
           record(Some(e.getClass.getSimpleName))
           kind = "correction"
-          log(s"Execution failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          // the error message only, as the reference feeds it: an
+          // AnalysisException's getMessage ends with the analyzed plan,
+          // whose expression ids (b#2L) vary with what the JVM ran before
+          val msg = e match {
+            case a: org.apache.spark.sql.AnalysisException => a.getSimpleMessage
+            case _ => e.getMessage
+          }
+          log(s"Execution failed: ${e.getClass.getSimpleName}: $msg")
           // keep the output-type constraint in the correction prompt so a
           // fixed query doesn't burn another retry on the wrong shape
-          failed = Some((sql, s"${e.getClass.getSimpleName}: ${e.getMessage}", outputType))
+          failed = Some((sql, s"${e.getClass.getSimpleName}: $msg", outputType))
           attempt += 1
       }
     }

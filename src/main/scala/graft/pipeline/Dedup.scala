@@ -501,10 +501,12 @@ object Dedup {
   ): Unit = {
     val spark = batch.sparkSession
     LayoutFiles.recover(spark, dir)
-    val st = spark.read.parquet(s"$dir/stats").head()
-    writeShingleGeneration(batch, idCol, textCol, dir,
-      st.getAs[Int]("shingle_k"), st.getAs[Int]("buckets"),
-      st.getAs[Long]("max_gen") + 1, SaveMode.Append)
+    LayoutFiles.appending(spark, dir)(compactShingleIndex(spark, dir)) {
+      val st = LayoutFiles.stats(spark, dir).row
+      writeShingleGeneration(batch, idCol, textCol, dir,
+        st.getAs[Int]("shingle_k"), st.getAs[Int]("buckets"),
+        st.getAs[Long]("max_gen") + 1, SaveMode.Append)
+    }
   }
 
   /** The one write body of the shingle layout: `df`'s postings and doc
@@ -593,11 +595,15 @@ object Dedup {
   def compactShingleIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     LayoutFiles.recover(spark, dir)
-    val t = LayoutFiles.tombstones(spark, dir)
+    val st = LayoutFiles.stats(spark, dir)
+    // an uncommitted generation (gen > max_gen) folds out with the deletes
+    val committed = col("gen") <= st.row.getAs[Long]("max_gen")
+    val t = LayoutFiles.pending(spark, dir).map(_.frame(spark))
     LayoutFiles.rewrite(dir, "postings", Some("sb"))(LayoutFiles.minus(
-      spark.read.parquet(s"$dir/postings"), t, Seq("doc", "gen")))
+      spark.read.schema(st.postings(spark)).parquet(s"$dir/postings").where(committed),
+      t, Seq("doc", "gen")))
     LayoutFiles.rewrite(dir, "docs", None)(LayoutFiles.minus(
-      spark.read.parquet(s"$dir/docs"), t, Seq("doc", "gen")))
+      spark.read.parquet(s"$dir/docs").where(committed), t, Seq("doc", "gen")))
     LayoutFiles.commit(spark, dir)
   }
 
@@ -607,7 +613,11 @@ object Dedup {
     * touching the corpus (same semantics, index-probe cost). The probe
     * prunes partitions with a ≤`buckets` literal list (the TextSearch
     * pattern: static PartitionFilters, not DPP luck) and joins the
-    * benchmark-sized shingle frame broadcast.
+    * benchmark-sized shingle set, collected once, as a broadcast local
+    * relation. Parameters, the postings schema and the pending
+    * tombstones come from the driver's [[LayoutFiles]] memo, and only
+    * committed generations (`gen <= max_gen`) are probed — see
+    * `TextSearch.serving`.
     */
   def probeContamination(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -615,20 +625,22 @@ object Dedup {
       minOverlap: Int = 1,
   ): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
-    val st = spark.read.parquet(s"$dir/stats").head()
-    val k = st.getAs[Int]("shingle_k")
-    val buckets = st.getAs[Int]("buckets")
-    val bsh = shingleHashRows(blocklist, blockIdCol, blockTextCol, k)
-      .select("sh").distinct()
-      .withColumn("sb", pmod(col("sh"), lit(buckets.toLong)))
-    val sbs = bsh.select("sb").distinct().collect().map(_.getLong(0))
-    val slice0 = spark.read.parquet(s"$dir/postings")
-      .where(col("sb").isin(sbs.toIndexedSeq: _*))
+    val st = LayoutFiles.stats(spark, dir)
+    val buckets = st.row.getAs[Int]("buckets")
+    val tomb = LayoutFiles.pending(spark, dir).map(_.frame(spark))
+    // the blocklist's shingle set, collected once and deduplicated on
+    // the driver; floorMod is Spark's pmod for a positive divisor
+    val shingles = shingleHashRows(blocklist, blockIdCol, blockTextCol,
+        st.row.getAs[Int]("shingle_k"))
+      .select("sh").collect().map(_.getLong(0)).distinct
+      .map(sh => (sh, math.floorMod(sh, buckets.toLong)))
+    val sbs = shingles.map(_._2).distinct
+    val slice0 = spark.read.schema(st.postings(spark)).parquet(s"$dir/postings")
+      .where(col("sb").isin(sbs.toIndexedSeq: _*) &&
+        col("gen") <= st.row.getAs[Long]("max_gen"))
     // deletes are visible immediately: the pruned slice stays map-only
-    val slice = LayoutFiles.minus(
-      slice0, LayoutFiles.tombstones(spark, dir), Seq("doc", "gen"))
-    slice
-      .join(broadcast(bsh), Seq("sb", "sh"))
+    LayoutFiles.minus(slice0, tomb, Seq("doc", "gen"))
+      .join(broadcast(spark.createDataFrame(shingles.toSeq).toDF("sh", "sb")), Seq("sb", "sh"))
       .groupBy("doc")
       .agg(countDistinct("sh").as("n_overlap"))
       .where(col("n_overlap") >= minOverlap)

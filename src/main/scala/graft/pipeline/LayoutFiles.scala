@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.StructType
 
 /** The file lifecycle every persisted serving layout shares — the BM25
   * index ([[TextSearch]]), the shingle index ([[Dedup]]), the ANN
@@ -31,10 +34,33 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * which the next lifecycle write on the layout discards, or a marked
   * commit, which it finishes ([[recover]]); either way the layout then
   * equals an uninterrupted run's. Probes never repair — they may run
-  * beside a writer — and a BM25 probe that finds a marker fails with
-  * [[UnfinishedCommit]] instead of mixing old and new tables. Each
-  * layout has a single writer: the marker makes a crash safe, it is
-  * not a lock.
+  * beside a writer — and a BM25 or shingle probe that finds a marker
+  * fails with [[UnfinishedCommit]] instead of mixing old and new
+  * tables. Each layout has a single writer: the marker makes a crash
+  * safe, it is not a lock.
+  *
+  * Bookkeeping memo. A layout's `stats` row, its postings schema
+  * ([[stats]]) and its pending tombstone rows ([[pending]]) change only
+  * when a lifecycle write lands, so the driver holds them and every
+  * call revalidates with Hadoop listings alone — no Spark job: the
+  * names, lengths and modification times of the side table's files
+  * (Spark names every file it writes with a per-write uuid, so any
+  * rewrite changes the listing) and whether the layout's `_commit`
+  * marker exists. Each side table revalidates on its own, so a
+  * [[retire]], which changes only `_tombstones`, costs the next append
+  * no `stats` read. A load is kept only when the listings taken before
+  * and after it agree (a write that lands during the load is never
+  * cached), each side table keeps only its latest load, and the memo
+  * holds at most [[MemoEntries]] side tables. A call that finds the
+  * marker fails with [[UnfinishedCommit]]; writers call [[recover]]
+  * first, so only a probe beside an open commit meets it.
+  *
+  * Committed generations. The BM25 and shingle layouts stamp each
+  * append's rows with generation `max_gen + 1` and roll `stats` last,
+  * so their probes read `gen <= max_gen` and an append cut before its
+  * `stats` write serves nothing; the append runs under a marker
+  * ([[appending]]) so that the next append compacts those rows away
+  * before it reuses their generation number.
   */
 object LayoutFiles {
 
@@ -45,6 +71,7 @@ object LayoutFiles {
   private val Old = "__old"
   private val Marker = "_commit"
   private val RootMarker = "__commit"
+  private val AppendMarker = "_append"
   // every compaction folds ALL of a layout's pending tombstone sets
   private val TombstoneSets = Seq("_tombstones", "_tombstone_keys")
 
@@ -53,6 +80,76 @@ object LayoutFiles {
     s"$dir has an unfinished layout commit ($Marker present): its tables " +
       "may mix old and new versions. The next lifecycle write on the " +
       "layout (append, delete, compact) finishes it.")
+
+  /** How many side tables the bookkeeping memo holds, least recently
+    * used dropped first. */
+  val MemoEntries = 64
+
+  /** A layout's `stats` row, and the schema of its `postings` table,
+    * loaded by the first caller that asks — handing that schema to
+    * `spark.read.schema` skips the parquet schema-inference job of
+    * every postings scan. The memo holds no session: each caller
+    * passes its own. */
+  final class Stats private[LayoutFiles] (val row: Row, dir: String) {
+    @volatile private var schema: StructType = _
+
+    def postings(spark: SparkSession): StructType = {
+      if (schema == null) schema = spark.read.parquet(new Path(dir, "postings").toString).schema
+      schema
+    }
+  }
+
+  /** A pending tombstone set's rows, held on the driver. */
+  final case class Tombstones(schema: StructType, rows: Seq[Row]) {
+    /** The set as a local relation: a join against it reads no file. */
+    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The `stats` row of the layout at `dir` and its postings schema,
+    * through the memo. */
+  def stats(spark: SparkSession, dir: String): Stats =
+    memoized(spark, dir, "stats") {
+      new Stats(read(spark, new Path(dir, "stats").toString).head(), dir)
+    }
+
+  /** The rows of the pending tombstone set `dir/name`, if any, through
+    * the memo. */
+  def pending(spark: SparkSession, dir: String, name: String = "_tombstones"): Option[Tombstones] =
+    memoized(spark, dir, name) {
+      tombstones(spark, dir, name).map(t => Tombstones(t.schema, t.collect().toSeq))
+    }
+
+  /** (commit marker present, (name, length, mtime) of every entry) */
+  private type Listing = (Boolean, Seq[(String, Long, Long)])
+
+  private val memo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, (Listing, Any)](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, (Listing, Any)]): Boolean =
+        size() > MemoEntries
+    })
+
+  /** `load` of the side table `dir/table`, or the memo's copy if the
+    * table's listing has not changed since that load. */
+  private def memoized[A](spark: SparkSession, dir: String, table: String)(load: => A): A = {
+    val fs = fsOf(spark, dir)
+    val p = fs.makeQualified(new Path(dir, table))
+    def listing(): Listing = {
+      val files =
+        try fs.listStatus(p).toSeq.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+        catch { case _: java.io.FileNotFoundException => Nil }
+      (fs.exists(new Path(dir, Marker)), files.sorted)
+    }
+    val key = p.toString
+    val before = listing()
+    if (before._1) throw new UnfinishedCommit(dir)
+    memo.get(key) match {
+      case (`before`, v) => v.asInstanceOf[A]
+      case _ =>
+        val v = load
+        if (listing() == before) memo.put(key, (before, v))
+        v
+    }
+  }
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -106,8 +203,9 @@ object LayoutFiles {
       name: String = "_tombstones"): Unit = {
     // a set written before these key columns existed (the pre-cutoff
     // ANN eras) names none of these versions
-    val tomb = tombstones(live.sparkSession, dir, name)
-      .filter(t => keys.forall(t.columns.contains))
+    val spark = live.sparkSession
+    val tomb = pending(spark, dir, name)
+      .filter(t => keys.forall(t.schema.fieldNames.contains)).map(_.frame(spark))
     minus(live, tomb, keys).write.mode("append").parquet(new Path(dir, name).toString)
   }
 
@@ -151,9 +249,27 @@ object LayoutFiles {
     if (fs.exists(root)) {
       val marker = new Path(root, Marker)
       if (fs.exists(marker))
-        finish(fs, marker, pending(fs, root), TombstoneSets.map(new Path(root, _)))
-      else pending(fs, root).foreach(t => fs.delete(suffixed(t, Staged), true))
+        finish(fs, marker, inFlight(fs, root), TombstoneSets.map(new Path(root, _)))
+      else inFlight(fs, root).foreach(t => fs.delete(suffixed(t, Staged), true))
     }
+  }
+
+  /** Run `write`, the append of generation `max_gen + 1` to the layout
+    * at `dir`, under an `_append` marker. An append cut before its
+    * `stats` write leaves rows of that generation which `stats` does not
+    * count, and the marker beside them; probes skip the rows (they read
+    * `gen <= max_gen`). The next append that finds the marker runs
+    * `fold` first — the layout's compaction, which drops every row
+    * above `max_gen` and clears the tombstone sets — so it never stamps
+    * its batch with the cut one's number, and no tombstone a delete
+    * wrote for a cut version can hide the fresh rows. */
+  def appending(spark: SparkSession, dir: String)(fold: => Unit)(write: => Unit): Unit = {
+    val fs = fsOf(spark, dir)
+    val marker = new Path(dir, AppendMarker)
+    if (fs.exists(marker)) fold
+    fs.create(marker, true).close()
+    write
+    fs.delete(marker, false)
   }
 
   /** Drop every pending tombstone set of the layout at `dir` — the step
@@ -165,12 +281,8 @@ object LayoutFiles {
     TombstoneSets.foreach(n => fs.delete(new Path(dir, n), true))
   }
 
-  /** Fail with [[UnfinishedCommit]] if a commit of `dir` is not done. */
-  def requireCommitted(spark: SparkSession, dir: String): Unit =
-    if (fsOf(spark, dir).exists(new Path(dir, Marker))) throw new UnfinishedCommit(dir)
-
   /** The tables under `dir` with a staged or an old copy. */
-  private def pending(fs: FileSystem, dir: Path): Seq[Path] =
+  private def inFlight(fs: FileSystem, dir: Path): Seq[Path] =
     fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
       case n if n.endsWith(Staged) => n.stripSuffix(Staged)
       case n if n.endsWith(Old) => n.stripSuffix(Old)

@@ -19,9 +19,10 @@ import graft.functions.{Fnv1a64, GraftFunctions}
   *   - `postings/` partitioned by `tb` = fnv1a64(term) mod `buckets`:
   *     (term, doc, tf, dl) — doc length rides each posting row so
   *     serving needs no doc-side join at all;
-  *   - `stats/`: one row (n_docs, sum_dl, buckets) — the BM25 corpus
-  *     constants plus the layout parameter, so a serving session needs
-  *     no out-of-band configuration.
+  *   - `stats/`: one row (n_docs, sum_dl, buckets, max_gen) — the BM25
+  *     corpus constants plus the layout parameter, so a serving session
+  *     needs no out-of-band configuration, and the last committed
+  *     generation.
   *
   * Scoring is EXACTLY [[TextAnalysis.bm25]] (same expression tree, same
   * 6-decimal rounding); the spec pins served-vs-batch score equality
@@ -65,10 +66,12 @@ object TextSearch {
   ): Unit = {
     val spark = df.sparkSession
     LayoutFiles.recover(spark, dir)
-    val st = spark.read.parquet(s"$dir/stats").head()
-    writeGeneration(df, idCol, textCol, dir, st.getAs[Int]("buckets"),
-      st.getAs[Long]("max_gen") + 1, st.getAs[Long]("n_docs"),
-      st.getAs[Long]("sum_dl"), SaveMode.Append)
+    LayoutFiles.appending(spark, dir)(compactIndex(spark, dir)) {
+      val st = LayoutFiles.stats(spark, dir).row
+      writeGeneration(df, idCol, textCol, dir, st.getAs[Int]("buckets"),
+        st.getAs[Long]("max_gen") + 1, st.getAs[Long]("n_docs"),
+        st.getAs[Long]("sum_dl"), SaveMode.Append)
+    }
   }
 
   /** The one write body of the layout: `df`'s postings and doc lengths
@@ -127,35 +130,39 @@ object TextSearch {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
 
-  /** Serving-time corpus constants, DELETE-adjusted: subtract the
-    * tombstoned docs' count and token total from the stored stats
-    * (exact long arithmetic — the same closed form [[appendIndex]]
-    * adds with), and hand back the tombstone frame so the caller can
-    * anti-join its postings slice. Fails with
-    * [[LayoutFiles.UnfinishedCommit]] while a compaction's commit is
-    * open: `stats` and `_tombstones` may then disagree.
+  /** What a probe or a compaction needs of the layout, all from the
+    * driver's [[LayoutFiles]] memo: the corpus constants DELETE-adjusted
+    * — the stored stats minus the tombstoned versions' count and token
+    * total (exact long arithmetic, the closed form [[appendIndex]] adds
+    * with) — the stored `max_gen`, a postings scan with the known schema
+    * (no inference job) and the pending tombstones as a local relation.
+    * Fails with [[LayoutFiles.UnfinishedCommit]] while a compaction's
+    * commit is open: `stats` and `_tombstones` may then disagree.
     *
-    * @return (n_docs, sum_dl, buckets, stored max_gen, pending
-    *         tombstones) — sum_dl stays the exact long so
-    *         [[compactIndex]] can persist it closed-form without
-    *         re-scanning doclens; avgdl derives in [[withContrib]].
+    * Only committed generations serve: a crash between a postings
+    * append and its `stats` write leaves generation `max_gen + 1` on
+    * disk, which `stats` does not count, so `postings` keeps
+    * `gen <= max_gen` and only tombstones of those versions adjust the
+    * constants; the next append folds that generation out before it
+    * writes ([[LayoutFiles.appending]]). sum_dl stays the exact long so
+    * [[compactIndex]] can persist it closed-form without re-scanning
+    * doclens; avgdl derives in [[withContrib]].
     */
-  private def servingStats(
-      spark: SparkSession,
-      dir: String): (Long, Long, Int, Long, Option[DataFrame]) = {
-    LayoutFiles.requireCommitted(spark, dir)
-    val st = spark.read.parquet(s"$dir/stats").head()
-    var nDocs = st.getAs[Long]("n_docs")
-    var sumDl = st.getAs[Long]("sum_dl")
-    val buckets = st.getAs[Int]("buckets")
-    val maxGen = st.getAs[Long]("max_gen")
-    val tomb = LayoutFiles.tombstones(spark, dir)
-    tomb.foreach { t =>
-      val r = t.agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
-      nDocs -= r.getLong(0)
-      sumDl -= r.getLong(1)
-    }
-    (nDocs, sumDl, buckets, maxGen, tomb)
+  private final case class Serving(
+      nDocs: Long, sumDl: Long, buckets: Int, maxGen: Long,
+      postings: DataFrame, tomb: Option[DataFrame])
+
+  private def serving(spark: SparkSession, dir: String): Serving = {
+    val st = LayoutFiles.stats(spark, dir)
+    val maxGen = st.row.getAs[Long]("max_gen")
+    val tomb = LayoutFiles.pending(spark, dir)
+    val gone = tomb.toSeq.flatMap(_.rows).filter(_.getAs[Long]("gen") <= maxGen)
+    Serving(
+      st.row.getAs[Long]("n_docs") - gone.size,
+      st.row.getAs[Long]("sum_dl") - gone.map(_.getAs[Long]("dl")).sum,
+      st.row.getAs[Int]("buckets"), maxGen,
+      spark.read.schema(st.postings(spark)).parquet(s"$dir/postings").where(col("gen") <= maxGen),
+      tomb.map(_.frame(spark)))
   }
 
   /** Tombstones name (doc, gen) VERSIONS, so rows a later append
@@ -210,18 +217,19 @@ object TextSearch {
     * never subtract the deleted docs twice. */
   def compactIndex(spark: SparkSession, dir: String): Unit = {
     LayoutFiles.recover(spark, dir)
-    // sum_dl comes closed-form from servingStats (stored total minus
+    // sum_dl comes closed-form from serving (stored total minus
     // tombstoned dl) — the post-swap doclens re-scan it replaces was a
     // whole extra job for a value the stats math already had; the
     // delete paths keep it exact by construction (appendIndex adds,
-    // deleteFromIndex tombstones live versions once)
-    val (nDocs, sumDl, buckets, maxGen, tomb) = servingStats(spark, dir)
+    // deleteFromIndex tombstones live versions once). An uncommitted
+    // generation's rows are folded out with the deleted ones.
+    val s = serving(spark, dir)
     LayoutFiles.rewrite(dir, "postings", Some("tb"))(
-      LayoutFiles.minus(spark.read.parquet(s"$dir/postings"), tomb, DocGen))
-    LayoutFiles.rewrite(dir, "doclens", None)(
-      LayoutFiles.minus(spark.read.parquet(s"$dir/doclens"), tomb, DocGen))
+      LayoutFiles.minus(s.postings, s.tomb, DocGen))
+    LayoutFiles.rewrite(dir, "doclens", None)(LayoutFiles.minus(
+      spark.read.parquet(s"$dir/doclens").where(col("gen") <= s.maxGen), s.tomb, DocGen))
     LayoutFiles.rewrite(dir, "stats", None)(
-      spark.createDataFrame(Seq((nDocs, sumDl, buckets, maxGen)))
+      spark.createDataFrame(Seq((s.nDocs, s.sumDl, s.buckets, s.maxGen)))
         .toDF("n_docs", "sum_dl", "buckets", "max_gen"))
     LayoutFiles.commit(spark, dir)
   }
@@ -251,15 +259,15 @@ object TextSearch {
       .flatMap(_.split("\\s+")).filter(_.nonEmpty).distinct
     require(normTerms.nonEmpty,
       s"searchTopK: no query terms survive normalization: $queryTerms")
-    val (nDocs, sumDl, buckets, _, tomb) = servingStats(spark, dir)
+    val s = serving(spark, dir)
     val tbs = normTerms
-      .map(t => math.floorMod(Fnv1a64.hash(t.getBytes("UTF-8")), buckets.toLong))
+      .map(t => math.floorMod(Fnv1a64.hash(t.getBytes("UTF-8")), s.buckets.toLong))
       .distinct
-    val tf = LayoutFiles.minus(spark.read.parquet(s"$dir/postings")
-      .where(col("tb").isin(tbs: _*) && col("term").isin(normTerms: _*)), tomb, DocGen)
+    val tf = LayoutFiles.minus(s.postings
+      .where(col("tb").isin(tbs: _*) && col("term").isin(normTerms: _*)), s.tomb, DocGen)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(broadcast(dfreq), "term")
-      .transform(withContrib(nDocs, sumDl, k1, b))
+      .transform(withContrib(s.nDocs, s.sumDl, k1, b))
       .groupBy("doc")
       .agg(round(sum(col("contrib")), 6).as("score"),
         count(lit(1)).as("n_matched"))
@@ -305,23 +313,22 @@ object TextSearch {
   ): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.ensureRegistered(spark)
-    val (nDocs, sumDl, buckets, _, tomb) = servingStats(spark, dir)
+    val s = serving(spark, dir)
     // DISTINCT (qid, term): BM25 is a termSET score — a term repeated
     // in a query must not double its contribution
     val qterms = queries.select(col(qidCol).as("qid"),
       explode(Dedup.tokensOf(col(queryCol))).as("term")).distinct()
     val tbs = qterms
-      .select(pmod(GraftFunctions.fnv1a64(col("term")), lit(buckets.toLong))
+      .select(pmod(GraftFunctions.fnv1a64(col("term")), lit(s.buckets.toLong))
         .as("tb")).distinct()
       .collect().map(_.getLong(0))
     // an all-stopword workload leaves tbs empty — isin(empty) is
     // statically false, so everything downstream is a well-typed
     // empty frame, no special case needed
-    val postings = spark.read.parquet(s"$dir/postings")
-      .where(col("tb").isin(tbs.toIndexedSeq: _*))
+    val postings = s.postings.where(col("tb").isin(tbs.toIndexedSeq: _*))
     // per-term df is a property of the INDEX, independent of the
     // workload — aggregate it once over the distinct matched terms
-    val matched = LayoutFiles.minus(postings, tomb, DocGen).join(
+    val matched = LayoutFiles.minus(postings, s.tomb, DocGen).join(
       broadcast(qterms.select("term").distinct()), "term")
     val dfreq = matched.groupBy("term")
       .agg(count(lit(1)).as("df"))
@@ -330,7 +337,7 @@ object TextSearch {
     matched
       .join(broadcast(qterms), "term")
       .join(broadcast(dfreq), "term")
-      .transform(withContrib(nDocs, sumDl, k1, b))
+      .transform(withContrib(s.nDocs, s.sumDl, k1, b))
       .groupBy("qid", "doc")
       .agg(round(sum(col("contrib")), 6).as("score"),
         count(lit(1)).as("n_matched"))

@@ -351,4 +351,22 @@ class AgentSpec extends SparkSpec {
     val (_, jobs) = jobsOf(new Agent(e, new FakeLlm(Seq("SELECT 1"))).buildPrompt("how many?"))
     assert(jobs == 0)
   }
+
+  test("a correction prompt carries the error message, not Spark's analyzed plan") {
+    def correction(): String = {
+      val llm = new FakeLlm(Seq(
+        "SELECT r_name, sum(r_typo) AS t FROM region GROUP BY r_name",
+        "SELECT count(*) AS n FROM region"))
+      new Agent(engineWithTables(), llm).chat("total per region")
+      llm.prompts(1)
+    }
+    val first = correction()
+    assert(first.contains("UNRESOLVED_COLUMN") && first.contains("r_typo"), first)
+    // expression ids (r_name#12) and plan operators are the plan's
+    assert("#\\d+".r.findFirstIn(first).isEmpty, first)
+    assert(!first.contains("+- ") && !first.contains("Aggregate ["), first)
+    // other queries move the JVM's expression-id counter
+    spark.range(3).selectExpr("id + 1 AS a", "id * 2 AS b").groupBy("a").count().collect()
+    assert(correction() == first)
+  }
 }

@@ -258,6 +258,87 @@ class LayoutFilesSpec extends SparkSpec {
     assert(!fs.exists(new Path(d, "_commit")))
   }
 
+  /** An appending family: `build` writes the base layout, `append` and
+    * `update` (delete + append) take a batch of (doc_id, text), `serve`
+    * is a probe that every batch below moves. */
+  private case class Appending(
+      name: String,
+      build: String => Unit,
+      append: (org.apache.spark.sql.DataFrame, String) => Unit,
+      update: (org.apache.spark.sql.DataFrame, String) => Unit,
+      serve: String => Seq[String],
+      cut: Seq[(Long, String)],
+      next: Seq[(Long, String)])
+
+  private val appendings = Seq(
+    Appending("text",
+      d => TextSearch.writeIndex(textCorpus.toDF("doc_id", "text"), "doc_id", "text", d,
+        buckets = 4),
+      (b, d) => TextSearch.appendIndex(b, "doc_id", "text", d),
+      (b, d) => TextSearch.updateIndex(b, "doc_id", "text", d),
+      d => rows(TextSearch.searchTopK(spark, d, Seq("join", "vector", "filter"), k = 10)),
+      cut = Seq((6L, "join vector filter join spark"), (7L, "vectors filter here")),
+      next = Seq((6L, "filter again in other words"), (8L, "join join vector"))),
+    Appending("shingle",
+      d => Dedup.writeShingleIndex(Seq((1L, phrase("one")), (2L, phrase("two")),
+        (3L, phrase("three"))).toDF("doc_id", "text"), "doc_id", "text", d,
+        shingleK = 5, buckets = 4),
+      (b, d) => Dedup.appendShingleIndex(b, "doc_id", "text", d),
+      (b, d) => Dedup.updateShingleIndex(b, "doc_id", "text", d),
+      d => rows(Dedup.probeContamination(spark, d,
+        Seq((100L, phrase("one")), (101L, phrase("six"))).toDF("doc_id", "text"),
+        "doc_id", "text", minOverlap = 3)),
+      cut = Seq((6L, phrase("one")), (7L, phrase("six"))),
+      next = Seq((6L, phrase("seven")), (8L, phrase("one")))),
+  )
+
+  appendings.foreach { f =>
+    test(s"${f.name}: an append cut at any step serves only committed rows, then or after the next update") {
+      val pristine = s"$base/append-${f.name}/pristine/layout"
+      f.build(pristine)
+      def fresh(tag: String): String = {
+        val d = s"$base/append-${f.name}/$tag/layout"
+        FileUtil.copy(fs, new Path(pristine), fs, new Path(d), false,
+          spark.sparkContext.hadoopConfiguration)
+        d
+      }
+      // the uninterrupted runs: the update after the cut batch, or
+      // after none — what a cut append serves decides which one counts
+      val ref = fresh("ref")
+      val skipped = fresh("skipped")
+      val pre = f.serve(skipped)
+      f.append(f.cut.toDF("doc_id", "text"), ref)
+      val post = f.serve(ref)
+      assert(post != pre, "the cut batch moves the probe")
+      f.update(f.next.toDF("doc_id", "text"), ref)
+      f.update(f.next.toDF("doc_id", "text"), skipped)
+      val outcome = Map(pre -> f.serve(skipped), post -> f.serve(ref))
+      assert(outcome(pre) != outcome(post))
+
+      var n = 1
+      var crashed = true
+      while (crashed) {
+        val d = fresh(s"crash-$n")
+        CrashFs.arm(n)
+        crashed =
+          try { f.append(f.cut.toDF("doc_id", "text"), d); false }
+          catch { case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+              .takeWhile(_ != null)
+              .exists(c => Option(c.getMessage).exists(_.contains("injected crash"))) => true }
+          finally CrashFs.disarm()
+        val served = f.serve(d)
+        assert(outcome.contains(served), s"step $n: probe served $served")
+        // the update deletes doc 6, which only the cut batch may hold,
+        // and writes the next generation
+        f.update(f.next.toDF("doc_id", "text"), d)
+        assert(f.serve(d) == outcome(served), s"step $n")
+        n += 1
+      }
+      // the marker, the stats write, the marker's removal
+      assert(n > 4, s"the append ran only ${n - 2} counted steps")
+    }
+  }
+
   test("read: a side table's data files, or its directory past Spark's listing threshold") {
     val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     for (threshold <- Seq(32, 2)) withClue(s"threshold $threshold: ") {

@@ -1,5 +1,10 @@
 package graft.pipeline
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -153,5 +158,93 @@ class ShingleIndexSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(s"$dir/_tombstones")))
     assert(spark.read.parquet(s"$dir/docs").count() == 2L)
+  }
+
+  private def probeRows(dir: String) =
+    Dedup.probeContamination(spark, dir, block, "doc_id", "text", minOverlap = 3)
+      .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+
+  test("a probe serves only committed generations") {
+    // an append that landed its postings for max_gen + 1, then died
+    // before writing stats
+    val dir = s"target/graft-test/shidx_orphan_${System.nanoTime()}"
+    Dedup.writeShingleIndex(corpus, "doc_id", "text", dir, shingleK = 5, buckets = 8)
+    val before = probeRows(dir)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    FileUtil.copy(fs, new Path(dir, "stats"), fs, new Path(s"$dir-stats"), false, conf)
+    Dedup.appendShingleIndex(Seq((10L, phrase("one"))).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    assert(probeRows(dir) != before, "the appended doc shares the blocklist's shingles")
+    fs.delete(new Path(dir, "stats"), true)
+    FileUtil.copy(fs, new Path(s"$dir-stats"), fs, new Path(dir, "stats"), false, conf)
+    assert(probeRows(dir) == before)
+    // compaction folds the uncommitted generation out
+    Dedup.compactShingleIndex(spark, dir)
+    assert(probeRows(dir) == before)
+    for (t <- Seq("postings", "docs"))
+      assert(spark.read.parquet(s"$dir/$t").where(col("gen") > 0).count() == 0, t)
+  }
+
+  test("a warm bookkeeping memo: a probe runs no bookkeeping job") {
+    val dir = s"target/graft-test/shidx_warm_${System.nanoTime()}"
+    Dedup.writeShingleIndex(corpus, "doc_id", "text", dir, shingleK = 5, buckets = 8)
+    probeRows(dir) // fills the memo
+    val (clean, cleanJobs) = jobsOf(probeRows(dir))
+    assert(cleanJobs <= 6, s"clean probe ran $cleanJobs jobs")
+    assert(clean.map(_.head) == Seq(1L, 2L))
+    Dedup.deleteFromShingleIndex(spark, dir, Seq(2L).toDF("doc_id"), "doc_id")
+    probeRows(dir)
+    val (tombstoned, tombJobs) = jobsOf(probeRows(dir))
+    assert(tombJobs <= 7, s"tombstoned probe ran $tombJobs jobs")
+    assert(tombstoned.map(_.head) == Seq(1L))
+  }
+
+  test("after every writer the next probe equals a from-scratch build") {
+    val base = s"target/graft-test/shidx_memo_${System.nanoTime()}"
+    val dir = s"$base/live"
+    var fresh = 0
+    def rebuilt(df: org.apache.spark.sql.DataFrame, idCol: String = "doc_id") = {
+      fresh += 1
+      val r = s"$base/fresh-$fresh"
+      Dedup.writeShingleIndex(df, idCol, "text", r, shingleK = 5, buckets = 8)
+      probeRows(r)
+    }
+    def check(what: String, want: Seq[Seq[Any]]) = {
+      assert(probeRows(dir) == want, what)
+      assert(want.nonEmpty, what)
+    }
+    val added = Seq((10L, phrase("one") + " appended variant")).toDF("doc_id", "text")
+    Dedup.writeShingleIndex(corpus, "doc_id", "text", dir, shingleK = 5, buckets = 8)
+    check("build", rebuilt(corpus))
+    Dedup.appendShingleIndex(added, "doc_id", "text", dir)
+    val all = corpus.unionByName(added)
+    check("append", rebuilt(all))
+    Dedup.deleteFromShingleIndex(spark, dir, Seq(1L).toDF("doc_id"), "doc_id")
+    val without1 = rebuilt(all.where(col("doc_id") =!= 1))
+    check("delete", without1)
+    Dedup.compactShingleIndex(spark, dir)
+    check("compact", without1)
+    Dedup.writeShingleIndex(corpus.where(col("doc_id") =!= 2), "doc_id", "text", dir,
+      shingleK = 5, buckets = 8)
+    check("rebuild", rebuilt(corpus.where(col("doc_id") =!= 2)))
+    // a rebuild that changes the id type changes the postings schema
+    val urls = corpus.select(concat(lit("u"), col("doc_id")).as("url"), col("text"))
+    Dedup.writeShingleIndex(urls, "url", "text", dir, shingleK = 5, buckets = 8)
+    check("rebuild with string ids", rebuilt(urls, "url"))
+    Dedup.deleteFromShingleIndex(spark, dir, Seq("u2").toDF("url"), "url")
+    check("string-id delete", rebuilt(urls.where(col("url") =!= "u2"), "url"))
+  }
+
+  test("four threads probing a cold layout get the same, correct results") {
+    val dir = s"target/graft-test/shidx_cold_${System.nanoTime()}"
+    val r = s"$dir-rebuilt"
+    Dedup.writeShingleIndex(corpus.where(col("doc_id") =!= 2), "doc_id", "text", r,
+      shingleK = 5, buckets = 8)
+    Dedup.writeShingleIndex(corpus, "doc_id", "text", dir, shingleK = 5, buckets = 8)
+    Dedup.deleteFromShingleIndex(spark, dir, Seq(2L).toDF("doc_id"), "doc_id")
+    val want = probeRows(r)
+    val got = Await.result(Future.sequence((1 to 4).map(_ => Future(probeRows(dir)))), 5.minutes)
+    assert(want.map(_.head) == Seq(1L) && got.forall(_ == want), s"$got vs $want")
   }
 }

@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -467,5 +471,96 @@ class TextSearchSpec extends SparkSpec {
     }
     OperatorCache.releaseAll(spark)
     assert(warnings.isEmpty, warnings.mkString("\n"))
+  }
+
+  private def top5(d: String) = TextSearch.searchTopK(spark, d,
+    Seq("join", "vector", "filter"), k = 5).collect().toSeq
+
+  test("a probe serves only committed generations") {
+    // the crash this models: an append landed its postings (and doclens)
+    // for generation max_gen + 1, then died before writing stats
+    val d = s"target/graft-tmp/textsearch-orphan-${System.nanoTime()}"
+    TextSearch.writeIndex(corpus.where(col("doc_id") <= 3), "doc_id", "text", d, buckets = 8)
+    val before = top5(d)
+    val fs = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    FileUtil.copy(fs, new Path(d, "stats"), fs, new Path(s"$d-stats"), false, conf)
+    TextSearch.appendIndex(corpus.where(col("doc_id") > 3), "doc_id", "text", d)
+    OperatorCache.releaseAll(spark)
+    assert(top5(d) != before, "the appended docs match the query")
+    fs.delete(new Path(d, "stats"), true)
+    FileUtil.copy(fs, new Path(s"$d-stats"), fs, new Path(d, "stats"), false, conf)
+    assert(top5(d) == before)
+    val batch = TextSearch.searchTopKBatch(Seq((1L, "join vector filter")).toDF("qid", "query"),
+      "qid", "query", d, k = 5).select("doc", "score", "n_matched").collect().toSeq
+    assert(batch == before)
+    // compaction folds the uncommitted generation out
+    TextSearch.compactIndex(spark, d)
+    assert(top5(d) == before)
+    for (t <- Seq("postings", "doclens"))
+      assert(spark.read.parquet(s"$d/$t").where(col("gen") > 0).count() == 0, t)
+  }
+
+  test("a warm bookkeeping memo: a probe runs no bookkeeping job") {
+    val d = s"target/graft-tmp/textsearch-warm-${System.nanoTime()}"
+    TextSearch.writeIndex(corpus, "doc_id", "text", d, buckets = 8)
+    OperatorCache.releaseAll(spark)
+    top5(d) // fills the memo
+    val (clean, cleanJobs) = jobsOf(top5(d))
+    assert(cleanJobs <= 4, s"clean probe ran $cleanJobs jobs")
+    assert(clean.head.getLong(0) == 5L)
+    TextSearch.deleteFromIndex(spark, d, Seq(Tuple1(5L)).toDF("doc_id"), "doc_id")
+    top5(d)
+    val (tombstoned, tombJobs) = jobsOf(top5(d))
+    assert(tombJobs <= 5, s"tombstoned probe ran $tombJobs jobs")
+    assert(tombstoned.nonEmpty && !tombstoned.exists(_.getLong(0) == 5L))
+  }
+
+  test("after every writer the next probe equals a from-scratch build") {
+    val base = s"target/graft-tmp/textsearch-memo-${System.nanoTime()}"
+    val d = s"$base/live"
+    var fresh = 0
+    def rebuilt(df: org.apache.spark.sql.DataFrame, idCol: String = "doc_id") = {
+      fresh += 1
+      val r = s"$base/fresh-$fresh"
+      TextSearch.writeIndex(df, idCol, "text", r, buckets = 8)
+      OperatorCache.releaseAll(spark)
+      top5(r)
+    }
+    def check(what: String, want: Seq[org.apache.spark.sql.Row]) = {
+      OperatorCache.releaseAll(spark)
+      assert(top5(d) == want, what)
+      assert(want.nonEmpty, what)
+    }
+    TextSearch.writeIndex(corpus.where(col("doc_id") <= 3), "doc_id", "text", d, buckets = 8)
+    check("build", rebuilt(corpus.where(col("doc_id") <= 3)))
+    TextSearch.appendIndex(corpus.where(col("doc_id") > 3), "doc_id", "text", d)
+    check("append", rebuilt(corpus))
+    TextSearch.deleteFromIndex(spark, d, Seq(Tuple1(5L)).toDF("doc_id"), "doc_id")
+    val without5 = rebuilt(corpus.where(col("doc_id") =!= 5))
+    check("delete", without5)
+    TextSearch.compactIndex(spark, d)
+    check("compact", without5)
+    val other = corpus.where(col("doc_id") =!= 2)
+    TextSearch.writeIndex(other, "doc_id", "text", d, buckets = 8)
+    check("rebuild", rebuilt(other))
+    // a rebuild that changes the id type changes the postings schema
+    val urls = corpus.select(concat(lit("u"), col("doc_id")).as("url"), col("text"))
+    TextSearch.writeIndex(urls, "url", "text", d, buckets = 8)
+    check("rebuild with string ids", rebuilt(urls, "url"))
+    TextSearch.deleteFromIndex(spark, d, Seq(Tuple1("u5")).toDF("url"), "url")
+    check("string-id delete", rebuilt(urls.where(col("url") =!= "u5"), "url"))
+  }
+
+  test("four threads probing a cold layout get the same, correct results") {
+    val d = s"target/graft-tmp/textsearch-cold-${System.nanoTime()}"
+    val r = s"$d-rebuilt"
+    TextSearch.writeIndex(corpus.where(col("doc_id") =!= 5), "doc_id", "text", r, buckets = 8)
+    TextSearch.writeIndex(corpus, "doc_id", "text", d, buckets = 8)
+    TextSearch.deleteFromIndex(spark, d, Seq(Tuple1(5L)).toDF("doc_id"), "doc_id")
+    OperatorCache.releaseAll(spark)
+    val want = top5(r)
+    val got = Await.result(Future.sequence((1 to 4).map(_ => Future(top5(d)))), 5.minutes)
+    assert(got.forall(_ == want), s"$got vs $want")
   }
 }
