@@ -540,8 +540,9 @@ object Dedup {
     df.select(col(idCol).as("doc")).distinct().withColumn("gen", lit(gen))
       .write.mode(mode).parquet(s"$dir/docs")
     import spark.implicits._
-    Seq((shingleK, buckets, gen)).toDF("shingle_k", "buckets", "max_gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    LayoutFiles.writeStats(dir,
+      Seq((shingleK, buckets, gen)).toDF("shingle_k", "buckets", "max_gen"),
+      append = mode == SaveMode.Append)
   }
 
   /** Tombstone-delete docs from a [[writeShingleIndex]] layout: the
@@ -614,7 +615,9 @@ object Dedup {
     * prunes partitions with a ≤`buckets` literal list (the TextSearch
     * pattern: static PartitionFilters, not DPP luck) and joins the
     * benchmark-sized shingle set, collected once, as a broadcast local
-    * relation. Parameters, the postings schema and the pending
+    * relation. The scan reads only those buckets' directories
+    * ([[LayoutFiles.slice]]: the table root past Spark's listing
+    * threshold). Parameters, the postings schema and the pending
     * tombstones come from the driver's [[LayoutFiles]] memo, and only
     * committed generations (`gen <= max_gen`) are probed — see
     * `TextSearch.serving`.
@@ -635,9 +638,8 @@ object Dedup {
       .select("sh").collect().map(_.getLong(0)).distinct
       .map(sh => (sh, math.floorMod(sh, buckets.toLong)))
     val sbs = shingles.map(_._2).distinct
-    val slice0 = spark.read.schema(st.postings(spark)).parquet(s"$dir/postings")
-      .where(col("sb").isin(sbs.toIndexedSeq: _*) &&
-        col("gen") <= st.row.getAs[Long]("max_gen"))
+    val slice0 = LayoutFiles.slice(spark, s"$dir/postings", "sb", sbs.toIndexedSeq,
+      st.postings(spark)).frame.where(col("gen") <= st.row.getAs[Long]("max_gen"))
     // deletes are visible immediately: the pruned slice stays map-only
     LayoutFiles.minus(slice0, tomb, Seq("doc", "gen"))
       .join(broadcast(spark.createDataFrame(shingles.toSeq).toDF("sh", "sb")), Seq("sb", "sh"))

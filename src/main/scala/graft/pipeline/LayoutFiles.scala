@@ -36,8 +36,11 @@ import org.apache.spark.sql.types.StructType
   * equals an uninterrupted run's. Probes never repair — they may run
   * beside a writer — and a BM25 or shingle probe that finds a marker
   * fails with [[UnfinishedCommit]] instead of mixing old and new
-  * tables. Each layout has a single writer: the marker makes a crash
-  * safe, it is not a lock.
+  * tables; one that passed that check and then lists postings in the
+  * gap between a swap's two renames fails with a missing file
+  * ([[slice]]), never serves the gap as an empty table. Each layout
+  * has a single writer: the marker makes a crash safe, it is not a
+  * lock.
   *
   * Bookkeeping memo. A layout's `stats` row, its postings schema
   * ([[stats]]) and its pending tombstone rows ([[pending]]) change only
@@ -53,7 +56,11 @@ import org.apache.spark.sql.types.StructType
   * cached), each side table keeps only its latest load, and the memo
   * holds at most [[MemoEntries]] side tables. A call that finds the
   * marker fails with [[UnfinishedCommit]]; writers call [[recover]]
-  * first, so only a probe beside an open commit meets it.
+  * first, so only a probe beside an open commit meets it. A writer
+  * hands the memo what it wrote — the `stats` row ([[writeStats]],
+  * [[remember]]), the tombstone rows ([[retire]]) — under the listing
+  * taken after its write, so neither the next probe nor the next
+  * append reads them cold.
   *
   * Committed generations. The BM25 and shingle layouts stamp each
   * append's rows with generation `max_gen + 1` and roll `stats` last,
@@ -90,9 +97,8 @@ object LayoutFiles {
     * `spark.read.schema` skips the parquet schema-inference job of
     * every postings scan. The memo holds no session: each caller
     * passes its own. */
-  final class Stats private[LayoutFiles] (val row: Row, dir: String) {
-    @volatile private var schema: StructType = _
-
+  final class Stats private[LayoutFiles] (
+      val row: Row, dir: String, @volatile private[LayoutFiles] var schema: StructType) {
     def postings(spark: SparkSession): StructType = {
       if (schema == null) schema = spark.read.parquet(new Path(dir, "postings").toString).schema
       schema
@@ -106,11 +112,41 @@ object LayoutFiles {
   }
 
   /** The `stats` row of the layout at `dir` and its postings schema,
-    * through the memo. */
+    * through the memo: the row of the largest `max_gen` ([[writeStats]]
+    * rolls an append's row in beside the old one). */
   def stats(spark: SparkSession, dir: String): Stats =
     memoized(spark, dir, "stats") {
-      new Stats(read(spark, new Path(dir, "stats").toString).head(), dir)
+      new Stats(read(spark, new Path(dir, "stats").toString).collect()
+        .maxBy(_.getAs[Long]("max_gen")), dir, null)
     }
+
+  /** Write `stats`, the one-row `stats` table of the layout at `dir`,
+    * and [[remember]] its row. A build overwrites the table. An append
+    * rolls it: its row lands beside the old one and the old files go
+    * after, so a probe beside the append never finds the table empty or
+    * gone, and an append cut between the two leaves its own row, the
+    * larger `max_gen`, to serve. */
+  def writeStats(dir: String, stats: DataFrame, append: Boolean): Unit = {
+    val spark = stats.sparkSession
+    val fs = fsOf(spark, dir)
+    val p = new Path(dir, "stats")
+    val old = if (append) fs.listStatus(p).toSeq.map(_.getPath).filter(isData) else Nil
+    stats.coalesce(1).write.mode(if (append) "append" else "overwrite").parquet(p.toString)
+    old.foreach(fs.delete(_, false))
+    remember(spark, dir, stats.head(), keepSchema = append)
+  }
+
+  /** Hand the memo the `stats` row a writer just wrote to the layout at
+    * `dir`, under the listing taken now. `keepSchema`: the write kept
+    * the postings schema (an append, a compaction), so a schema the memo
+    * already holds stays; a rebuild may change the id type. */
+  def remember(spark: SparkSession, dir: String, row: Row, keepSchema: Boolean): Unit = {
+    val schema = memo.get(listing(spark, dir, "stats")._1) match {
+      case (_, held: Stats) if keepSchema => held.schema
+      case _ => null
+    }
+    seed(spark, dir, "stats", new Stats(row, dir, schema))
+  }
 
   /** The rows of the pending tombstone set `dir/name`, if any, through
     * the memo. */
@@ -128,26 +164,44 @@ object LayoutFiles {
         size() > MemoEntries
     })
 
-  /** `load` of the side table `dir/table`, or the memo's copy if the
-    * table's listing has not changed since that load. */
-  private def memoized[A](spark: SparkSession, dir: String, table: String)(load: => A): A = {
+  /** The memo key of the side table `dir/table` and its listing now. */
+  private def listing(spark: SparkSession, dir: String, table: String): (String, Listing) = {
     val fs = fsOf(spark, dir)
     val p = fs.makeQualified(new Path(dir, table))
-    def listing(): Listing = {
-      val files =
-        try fs.listStatus(p).toSeq.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
-        catch { case _: java.io.FileNotFoundException => Nil }
-      (fs.exists(new Path(dir, Marker)), files.sorted)
-    }
-    val key = p.toString
-    val before = listing()
+    val files =
+      try fs.listStatus(p).toSeq.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    (p.toString, (fs.exists(new Path(dir, Marker)), files.sorted))
+  }
+
+  /** Hold `value` as the load of the side table `dir/table` that a
+    * writer just wrote, under the listing taken now. */
+  private def seed(spark: SparkSession, dir: String, table: String, value: Any): Unit = {
+    val (key, now) = listing(spark, dir, table)
+    if (!now._1) memo.put(key, (now, value))
+  }
+
+  /** `load` of the side table `dir/table`, or the memo's copy if the
+    * table's listing has not changed since that load. A load that fails
+    * while a writer changes the layout under it (an append deleting the
+    * `stats` file it listed, a commit opening) runs again on the new
+    * listing — and fails with [[UnfinishedCommit]] if that shows the
+    * marker. */
+  private def memoized[A](spark: SparkSession, dir: String, table: String)(load: => A): A = {
+    val (key, before) = listing(spark, dir, table)
     if (before._1) throw new UnfinishedCommit(dir)
+    // the marker flag and the files alike
+    def unchanged: Boolean = listing(spark, dir, table)._2 == before
     memo.get(key) match {
       case (`before`, v) => v.asInstanceOf[A]
       case _ =>
-        val v = load
-        if (listing() == before) memo.put(key, (before, v))
-        v
+        scala.util.Try(load) match {
+          case scala.util.Success(v) =>
+            if (unchanged) memo.put(key, (before, v))
+            v
+          case scala.util.Failure(_) if !unchanged => memoized(spark, dir, table)(load)
+          case scala.util.Failure(e) => throw e
+        }
     }
   }
 
@@ -172,22 +226,75 @@ object LayoutFiles {
     val fs = fsOf(spark, path)
     val data =
       if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) Nil
-      else fs.listStatus(p).toSeq.map(_.getPath)
-        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-        .map(_.toString)
-    val maxPaths = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+      else fs.listStatus(p).toSeq.map(_.getPath).filter(isData).map(_.toString)
     val reader = spark.read.option("mergeSchema", mergeSchema)
     // basePath keeps partition columns of a partitioned table's subdirs
-    if (data.isEmpty || data.size > maxPaths) reader.parquet(path)
+    if (data.isEmpty || data.size > maxListedPaths(spark)) reader.parquet(path)
     else reader.option("basePath", path).parquet(data: _*)
   }
 
-  /** The pending tombstone set `dir/name`, if any, read with [[read]]. */
+  /** How many paths Spark lists on the driver; past that it lists them
+    * with a job. */
+  private def maxListedPaths(spark: SparkSession): Int =
+    spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+
+  /** Rows of a partitioned table, and the bytes of the data files that
+    * hold them when those were listed. */
+  final case class Slice(frame: DataFrame, bytes: Option[Long])
+
+  /** The rows of the parquet table at `path`, read with `schema`, whose
+    * partition column `part` is one of `values`. Up to [[read]]'s
+    * listing threshold it scans those `part=<v>` directories alone (with
+    * `basePath`, so `part` stays a column) — one listing of the root
+    * names the ones that exist, and a value without one holds no row —
+    * and the bytes are the scan's, as Spark sizes it for a broadcast.
+    * Past the threshold it scans the table root, pruned by the same
+    * filter on `part`, and the bytes are unknown.
+    *
+    * A compaction's commit renames the live table away, then its staged
+    * copy in. A listing that meets the gap between the two fails with a
+    * missing file, never reads it as an empty table: Spark lists a
+    * vanished root path as empty, so the root's modification time is
+    * taken before and after the listing, and a slice whose root changed
+    * meanwhile (a swap, an append landing) is listed again. */
+  @annotation.tailrec
+  def slice(
+      spark: SparkSession, path: String, part: String, values: Seq[Any],
+      schema: StructType): Slice = {
+    val fs = fsOf(spark, path)
+    val root = new Path(path)
+    // a FileNotFoundException in the gap
+    def stamp(): Long = fs.getFileStatus(root).getModificationTime
+    val before = stamp()
+    val wanted = col(part).isin(values: _*)
+    val reader = spark.read.schema(schema)
+    val listed =
+      if (values.size > maxListedPaths(spark)) Slice(reader.parquet(path).where(wanted), None)
+      else {
+        val present = fs.listStatus(root).map(_.getPath.getName).toSet
+        val dirs = values.map(v => s"$part=$v").filter(present).map(new Path(root, _).toString)
+        val frame =
+          if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+          else reader.option("basePath", path).parquet(dirs: _*)
+        Slice(frame.where(wanted), Some(frame.queryExecution.analyzed.stats.sizeInBytes.toLong))
+      }
+    if (stamp() == before) listed else slice(spark, path, part, values, schema)
+  }
+
+  private def isData(p: Path): Boolean =
+    !p.getName.startsWith("_") && !p.getName.startsWith(".")
+
+  /** The pending tombstone set `dir/name`, if any, read with [[read]].
+    * A set that lists no data file yet — the first delete's write still
+    * under way — names nothing. */
   def tombstones(
       spark: SparkSession, dir: String, name: String = "_tombstones",
       mergeSchema: Boolean = false): Option[DataFrame] = {
     val p = new Path(dir, name)
-    if (fsOf(spark, dir).exists(p)) Some(read(spark, p.toString, mergeSchema))
+    val listed =
+      try fsOf(spark, dir).listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (listed.exists(f => isData(f.getPath))) Some(read(spark, p.toString, mergeSchema))
     else None
   }
 
@@ -197,16 +304,28 @@ object LayoutFiles {
       df.join(broadcast(t.select(keys.map(col): _*)), keys, "left_anti"))
 
   /** Tombstone the versions in `live` (rows shaped like the set) that
-    * the set `dir/name` does not already name. */
+    * the set `dir/name` does not already name, and hand the memo the
+    * set's rows. */
   def retire(
       live: DataFrame, dir: String, keys: Seq[String],
       name: String = "_tombstones"): Unit = {
+    val spark = live.sparkSession
+    val held = pending(spark, dir, name)
     // a set written before these key columns existed (the pre-cutoff
     // ANN eras) names none of these versions
-    val spark = live.sparkSession
-    val tomb = pending(spark, dir, name)
-      .filter(t => keys.forall(t.schema.fieldNames.contains)).map(_.frame(spark))
-    minus(live, tomb, keys).write.mode("append").parquet(new Path(dir, name).toString)
+    val fresh = minus(live,
+      held.filter(t => keys.forall(t.schema.fieldNames.contains)).map(_.frame(spark)), keys)
+    // parquet stores every column nullable: the schema a reload infers
+    val schema = StructType(fresh.schema.map(_.copy(nullable = true)))
+    val rows = fresh.collect().toSeq
+    // one file, which lands in one rename: a probe beside the delete
+    // sees all of it or none
+    Tombstones(schema, rows).frame(spark).coalesce(1)
+      .write.mode("append").parquet(new Path(dir, name).toString)
+    held match {
+      case Some(t) if t.schema != schema => // an older era's set: the next call reloads
+      case _ => seed(spark, dir, name, Some(Tombstones(schema, held.fold(rows)(_.rows ++ rows))))
+    }
   }
 
   /** Stage `df` as the next contents of table `dir/table`, in as many

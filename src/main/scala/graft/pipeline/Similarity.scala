@@ -99,19 +99,26 @@ object Similarity {
         denom = math.sqrt(dot(v, v).get) * qNorm
         if denom != 0.0
         c = d / denom
-      } yield
-        if (c.isNaN || c.isInfinite) c
-        else java.math.BigDecimal.valueOf(c)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+      } yield round6(c)
     val order: Ordering[(String, Option[Double])] = (x, y) => (x._2, y._2) match {
       case (Some(a), Some(b)) if SQLOrderingUtil.compareDoubles(a, b) != 0 =>
         SQLOrderingUtil.compareDoubles(b, a)
       case (None, Some(_)) => 1
       case (Some(_), None) => -1
-      case _ => UTF8String.fromString(x._1).compareTo(UTF8String.fromString(y._1))
+      case _ => Utf8Order.compare(x._1, y._1)
     }
     corpus.iterator.map { case (id, v) => (id, score(v)) }.toSeq.sorted(order).take(k)
   }
+
+  /** `round(x, 6)` as Spark evaluates it on a double: HALF_UP through
+    * `BigDecimal.valueOf`, NaN and infinities unchanged. */
+  private[pipeline] def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** Spark's order of a string column: binary, by UTF-8 bytes. */
+  private[pipeline] val Utf8Order: Ordering[String] =
+    (x, y) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
 
   /** Recall@k of an approximate top-k result against the exact one —
     * the standard ANN quality metric: |approx ∩ exact| / |exact| over

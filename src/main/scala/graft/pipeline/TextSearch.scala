@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.{Fnv1a64, GraftFunctions}
 
@@ -124,18 +128,21 @@ object TextSearch {
     // append new) never shadows its own fresh rows
     docLen.withColumn("gen", lit(gen))
       .write.mode(mode).parquet(s"$dir/doclens")
-    spark.createDataFrame(Seq((baseDocs + d.getAs[Long]("dn"),
-      baseSumDl + d.getAs[Long]("dsum"), buckets, gen)))
-      .toDF("n_docs", "sum_dl", "buckets", "max_gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    LayoutFiles.writeStats(dir, statsFrame(spark, baseDocs + d.getAs[Long]("dn"),
+      baseSumDl + d.getAs[Long]("dsum"), buckets, gen), append = mode == SaveMode.Append)
   }
+
+  private def statsFrame(
+      spark: SparkSession, nDocs: Long, sumDl: Long, buckets: Int, maxGen: Long): DataFrame =
+    spark.createDataFrame(Seq((nDocs, sumDl, buckets, maxGen)))
+      .toDF("n_docs", "sum_dl", "buckets", "max_gen")
 
   /** What a probe or a compaction needs of the layout, all from the
     * driver's [[LayoutFiles]] memo: the corpus constants DELETE-adjusted
     * — the stored stats minus the tombstoned versions' count and token
     * total (exact long arithmetic, the closed form [[appendIndex]] adds
-    * with) — the stored `max_gen`, a postings scan with the known schema
-    * (no inference job) and the pending tombstones as a local relation.
+    * with) — the stored `max_gen`, the postings schema (a scan with it
+    * runs no inference job) and the pending tombstone rows.
     * Fails with [[LayoutFiles.UnfinishedCommit]] while a compaction's
     * commit is open: `stats` and `_tombstones` may then disagree.
     *
@@ -150,7 +157,12 @@ object TextSearch {
     */
   private final case class Serving(
       nDocs: Long, sumDl: Long, buckets: Int, maxGen: Long,
-      postings: DataFrame, tomb: Option[DataFrame])
+      schema: StructType, tomb: Option[LayoutFiles.Tombstones]) {
+    /** The committed rows of `scan` (postings or doclens) that no
+      * pending tombstone names. */
+    def live(scan: DataFrame): DataFrame = LayoutFiles.minus(
+      scan.where(col("gen") <= maxGen), tomb.map(_.frame(scan.sparkSession)), DocGen)
+  }
 
   private def serving(spark: SparkSession, dir: String): Serving = {
     val st = LayoutFiles.stats(spark, dir)
@@ -160,9 +172,7 @@ object TextSearch {
     Serving(
       st.row.getAs[Long]("n_docs") - gone.size,
       st.row.getAs[Long]("sum_dl") - gone.map(_.getAs[Long]("dl")).sum,
-      st.row.getAs[Int]("buckets"), maxGen,
-      spark.read.schema(st.postings(spark)).parquet(s"$dir/postings").where(col("gen") <= maxGen),
-      tomb.map(_.frame(spark)))
+      st.row.getAs[Int]("buckets"), maxGen, st.postings(spark), tomb)
   }
 
   /** Tombstones name (doc, gen) VERSIONS, so rows a later append
@@ -225,21 +235,39 @@ object TextSearch {
     // generation's rows are folded out with the deleted ones.
     val s = serving(spark, dir)
     LayoutFiles.rewrite(dir, "postings", Some("tb"))(
-      LayoutFiles.minus(s.postings, s.tomb, DocGen))
-    LayoutFiles.rewrite(dir, "doclens", None)(LayoutFiles.minus(
-      spark.read.parquet(s"$dir/doclens").where(col("gen") <= s.maxGen), s.tomb, DocGen))
-    LayoutFiles.rewrite(dir, "stats", None)(
-      spark.createDataFrame(Seq((s.nDocs, s.sumDl, s.buckets, s.maxGen)))
-        .toDF("n_docs", "sum_dl", "buckets", "max_gen"))
+      s.live(spark.read.schema(s.schema).parquet(s"$dir/postings")))
+    LayoutFiles.rewrite(dir, "doclens", None)(s.live(spark.read.parquet(s"$dir/doclens")))
+    val stats = statsFrame(spark, s.nDocs, s.sumDl, s.buckets, s.maxGen)
+    LayoutFiles.rewrite(dir, "stats", None)(stats)
     LayoutFiles.commit(spark, dir)
+    LayoutFiles.remember(spark, dir, stats.head(), keepSchema = true)
   }
 
-  /** Top-k BM25 over the [[writeIndex]] layout. The postings scan is
-    * partition-pruned to the query terms' buckets (asserted on the plan
-    * in TextSearchSpec) and filtered to the terms themselves; the
-    * per-term document frequency aggregates over just those rows; the
-    * ranking is a TakeOrderedAndProject on (score desc, doc asc) — no
-    * global sort, no corpus-wide work anywhere in the serve path.
+  /** Top-k BM25 over the [[writeIndex]] layout. The postings scan reads
+    * only the query terms' bucket directories (`postings/tb=<n>`,
+    * [[LayoutFiles.slice]]) and keeps the terms' committed rows.
+    *
+    * When those bucket files total at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes — the size Spark
+    * itself ships whole to every executor — the probe runs ONE scan job:
+    * it collects (term, doc, tf, dl, gen), drops the tombstoned
+    * (doc, gen) versions against the memo's pending rows, and ranks on
+    * the driver. The arithmetic is Spark's, so the result equals the
+    * Spark plan's row for row: `StrictMath.log` (what Spark's `log`
+    * calls), [[TextAnalysis.bm25]]'s expression tree evaluated in the
+    * same order, the per-doc sum rounded HALF_UP to 6 places through
+    * `BigDecimal.valueOf` (Spark's `round` on a double), and ties broken
+    * by doc in Spark's ascending order for the stored id type (nulls
+    * first, strings by UTF-8 bytes). The result is a local relation
+    * with the Spark plan's schema.
+    *
+    * A larger slice, one listed past Spark's listing threshold, or an id
+    * type other than an integral or string one, runs the Spark plan:
+    * the per-term document frequency aggregates over the pruned rows and
+    * broadcasts into the term join, the ranking is a
+    * TakeOrderedAndProject on (score desc, doc asc) — no global sort, no
+    * corpus-wide work anywhere in the serve path (the `tb` partition
+    * pruning of both paths is asserted in TextSearchSpec).
     *
     * @return up to `k` rows (doc, score, n_matched), best first — score
     *         and n_matched identical to [[TextAnalysis.bm25]]'s
@@ -263,16 +291,76 @@ object TextSearch {
     val tbs = normTerms
       .map(t => math.floorMod(Fnv1a64.hash(t.getBytes("UTF-8")), s.buckets.toLong))
       .distinct
-    val tf = LayoutFiles.minus(s.postings
-      .where(col("tb").isin(tbs: _*) && col("term").isin(normTerms: _*)), s.tomb, DocGen)
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfreq), "term")
-      .transform(withContrib(s.nDocs, s.sumDl, k1, b))
-      .groupBy("doc")
-      .agg(round(sum(col("contrib")), 6).as("score"),
-        count(lit(1)).as("n_matched"))
-      .orderBy(col("score").desc, col("doc").asc)
-      .limit(k)
+    val slice = LayoutFiles.slice(spark, s"$dir/postings", "tb", tbs, s.schema)
+    val matched = slice.frame.where(col("term").isin(normTerms: _*))
+    val docField = s.schema("doc")
+    val small = slice.bytes.exists(_ <= spark.sessionState.conf.autoBroadcastJoinThreshold)
+    docOrder(docField.dataType) match {
+      case Some(order) if small =>
+        val rows = matched.where(col("gen") <= s.maxGen)
+          .select("term", "doc", "tf", "dl", "gen").collect()
+        spark.createDataFrame(topKLocal(rows, s, order, k, k1, b).asJava, StructType(Seq(
+          docField, StructField("score", DoubleType),
+          StructField("n_matched", LongType, nullable = false))))
+      case _ =>
+        val tf = s.live(matched)
+        val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
+        tf.join(broadcast(dfreq), "term")
+          .transform(withContrib(s.nDocs, s.sumDl, k1, b))
+          .groupBy("doc")
+          .agg(round(sum(col("contrib")), 6).as("score"),
+            count(lit(1)).as("n_matched"))
+          .orderBy(col("score").desc, col("doc").asc)
+          .limit(k)
+    }
+  }
+
+  /** Spark's ascending order of a doc id column of type `t`, nulls
+    * first — for the integral and string id types. */
+  private def docOrder(t: DataType): Option[Ordering[Any]] = {
+    val cmp: Option[(Any, Any) => Int] = t match {
+      case StringType =>
+        Some((x, y) => Similarity.Utf8Order.compare(x.asInstanceOf[String], y.asInstanceOf[String]))
+      case LongType | IntegerType | ShortType | ByteType =>
+        Some((x, y) => java.lang.Long.compare(
+          x.asInstanceOf[Number].longValue, y.asInstanceOf[Number].longValue))
+      case _ => None
+    }
+    cmp.map(c => (x: Any, y: Any) =>
+      if (x == null) { if (y == null) 0 else -1 }
+      else if (y == null) 1
+      else c(x, y))
+  }
+
+  /** [[searchTopK]]'s ranking of the collected committed postings
+    * `rows` (term, doc, tf, dl, gen) of the query terms, on the driver:
+    * the rows [[Serving.live]] keeps, then [[withContrib]]'s arithmetic,
+    * the per-doc sum and count, the 6-place rounding and the
+    * (score desc, doc asc) cut. */
+  private def topKLocal(
+      rows: Array[Row], s: Serving, docOrder: Ordering[Any],
+      k: Int, k1: Double, b: Double): Seq[Row] = {
+    val gone = s.tomb.toSeq.flatMap(_.rows).collect {
+      case t if !t.isNullAt(t.fieldIndex("doc")) => (t.getAs[Any]("doc"), t.getAs[Long]("gen"))
+    }.toSet
+    val live = rows.filterNot(r => gone((r.get(1), r.getLong(4))))
+    val df = live.groupBy(_.getString(0)).map { case (t, rs) => t -> rs.length.toLong }
+    val avgdl = s.sumDl.toDouble / math.max(s.nDocs, 1L)
+    val perDoc = scala.collection.mutable.LinkedHashMap.empty[Any, (Double, Long)]
+    live.foreach { r =>
+      val n = df(r.getString(0))
+      val idf = StrictMath.log(1.0 + ((s.nDocs - n).toDouble + 0.5) / (n.toDouble + 0.5))
+      val tf = r.getLong(2).toDouble
+      val contrib = idf * tf / (tf + k1 * ((1.0 - b) + b * r.getLong(3).toDouble / avgdl))
+      val (acc, m) = perDoc.getOrElse(r.get(1), (0.0, 0L))
+      perDoc(r.get(1)) = (acc + contrib, m + 1)
+    }
+    val order: Ordering[(Any, Double, Long)] = (x, y) => {
+      val c = SQLOrderingUtil.compareDoubles(y._2, x._2)
+      if (c != 0) c else docOrder.compare(x._1, y._1)
+    }
+    perDoc.iterator.map { case (doc, (acc, m)) => (doc, Similarity.round6(acc), m) }
+      .toSeq.sorted(order).take(k).map { case (doc, score, m) => Row(doc, score, m) }
   }
 
   /** Each matched posting's BM25 contribution over rows carrying
@@ -325,10 +413,11 @@ object TextSearch {
     // an all-stopword workload leaves tbs empty — isin(empty) is
     // statically false, so everything downstream is a well-typed
     // empty frame, no special case needed
-    val postings = s.postings.where(col("tb").isin(tbs.toIndexedSeq: _*))
+    val postings = spark.read.schema(s.schema).parquet(s"$dir/postings")
+      .where(col("tb").isin(tbs.toIndexedSeq: _*))
     // per-term df is a property of the INDEX, independent of the
     // workload — aggregate it once over the distinct matched terms
-    val matched = LayoutFiles.minus(postings, s.tomb, DocGen).join(
+    val matched = s.live(postings).join(
       broadcast(qterms.select("term").distinct()), "term")
     val dfreq = matched.groupBy("term")
       .agg(count(lit(1)).as("df"))

@@ -19,6 +19,15 @@ trait SparkSpec extends AnyFunSuite {
       (out, (m.settle() - before).jobs)
     } finally spark.sparkContext.removeSparkListener(m)
   }
+
+  /** `body` with the SQL settings `pairs` on the shared session, each
+    * put back afterwards. */
+  def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
+    val before = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }
 
 object SparkSpec {

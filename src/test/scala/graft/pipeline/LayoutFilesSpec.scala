@@ -2,7 +2,8 @@ package graft.pipeline
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileUtil, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FileUtil, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -10,7 +11,9 @@ import graft.SparkSpec
 
 /** A local file system under the `crashfs` scheme that can fail its
   * N-th mutating call (create, rename, a delete of something) and every
-  * one after it, the way a dead writer makes no further changes.
+  * one after it, the way a dead writer makes no further changes, and
+  * can run a hook after a directory listing (a writer acting while a
+  * reader lists).
   * Spark's own task-commit bookkeeping (`_temporary`, `_SUCCESS`) is
   * not counted, so N walks the layout lifecycle's own steps; a crash
   * inside a Spark write shows up as the staging it leaves, which the
@@ -24,6 +27,9 @@ object CrashFs {
   def arm(n: Int): Unit = countdown = n
 
   def disarm(): Unit = countdown = -1
+
+  /** Runs after every `listStatus`, with the listed path. */
+  @volatile var afterList: Path => Unit = _ => ()
 
   private[pipeline] def step(p: Path): Unit = synchronized {
     val s = p.toString
@@ -43,6 +49,11 @@ class CrashLocalFs extends LocalFileSystem(new CrashRawFs) {
   override def getScheme: String = CrashFs.Scheme
   override def rename(src: Path, dst: Path): Boolean = {
     CrashFs.step(src); super.rename(src, dst)
+  }
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val listed = super.listStatus(p)
+    CrashFs.afterList(p)
+    listed
   }
   override def delete(p: Path, recursive: Boolean): Boolean = {
     if (exists(p)) CrashFs.step(p)
@@ -334,9 +345,74 @@ class LayoutFilesSpec extends SparkSpec {
         assert(f.serve(d) == outcome(served), s"step $n")
         n += 1
       }
-      // the marker, the stats write, the marker's removal
+      // the marker, the old stats file's removal, the marker's removal;
+      // the cut between the rows and the stats row that Spark's write
+      // commit leaves uncounted is TextSearchSpec's and
+      // ShingleIndexSpec's "a probe serves only committed generations"
       assert(n > 4, s"the append ran only ${n - 2} counted steps")
     }
+  }
+
+  test("a probe whose slice meets a commit's gap fails, never serves it as an empty table") {
+    // a commit renames the live postings away, then the staged copy in
+    val text = s"$base/gap/text"
+    TextSearch.writeIndex(textCorpus.toDF("doc_id", "text"), "doc_id", "text", text,
+      buckets = 4)
+    val shingles = s"$base/gap/shingles"
+    Dedup.writeShingleIndex(Seq((1L, phrase("one")), (2L, phrase("two"))).toDF("doc_id", "text"),
+      "doc_id", "text", shingles, shingleK = 5, buckets = 4)
+    val probes = Seq(
+      text -> (() => rows(TextSearch.searchTopK(spark, text, Seq("join", "vector"), k = 3))),
+      shingles -> (() => rows(Dedup.probeContamination(spark, shingles,
+        Seq((100L, phrase("one"))).toDF("doc_id", "text"), "doc_id", "text", minOverlap = 3))))
+    def missingFile(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists { c =>
+        c.isInstanceOf[java.io.FileNotFoundException] ||
+        Option(c.getMessage).exists(m => m.contains("PATH_NOT_FOUND") || m.contains("does not exist"))
+      }
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    // the bucket-directory scan, then the root scan past the threshold
+    for (threshold <- Seq(32, 1); (layout, probe) <- probes)
+      withClue(s"$layout, threshold $threshold: ") {
+        withSQLConf(key -> threshold.toString) {
+          val served = probe() // the bookkeeping memo is warm: no Spark job sees the gap
+          assert(served.nonEmpty)
+          val live = new Path(layout, "postings")
+          val gap = new Path(layout, "postings__old")
+          // the gap opened before the slice lists
+          fs.rename(live, gap)
+          try assert(missingFile(intercept[Exception](probe())))
+          finally fs.rename(gap, live)
+          // the gap opens right after the slice's first listing of postings
+          CrashFs.afterList = p => if (p.toString.contains("/postings")) {
+            CrashFs.afterList = _ => ()
+            fs.rename(live, gap)
+          }
+          try assert(missingFile(intercept[Exception](probe())))
+          finally { CrashFs.afterList = _ => (); fs.rename(gap, live) }
+          assert(probe() == served)
+        }
+      }
+  }
+
+  test("a bookkeeping load that fails while a commit opens fails with UnfinishedCommit") {
+    val d = s"$base/memo-failure/layout"
+    TextSearch.writeIndex(textCorpus.toDF("doc_id", "text"), "doc_id", "text", d, buckets = 4)
+    // a stats file no reader decodes: the load fails on its own
+    val bad = fs.create(new Path(d, "stats/part-bad.parquet"), true)
+    bad.write("not parquet".getBytes("UTF-8"))
+    bad.close()
+    val own = intercept[Exception](LayoutFiles.stats(spark, d))
+    assert(!own.isInstanceOf[LayoutFiles.UnfinishedCommit], own)
+    // the same failure, with a commit opening during the load
+    var listings = 0
+    CrashFs.afterList = p => if (p.getName == "stats") {
+      listings += 1
+      if (listings == 2) fs.create(new Path(d, "_commit"), true).close()
+    }
+    try intercept[LayoutFiles.UnfinishedCommit](LayoutFiles.stats(spark, d))
+    finally CrashFs.afterList = _ => ()
+    assert(listings >= 2, "the load listed stats")
   }
 
   test("read: a side table's data files, or its directory past Spark's listing threshold") {

@@ -51,6 +51,10 @@ class ShingleIndexSpec extends SparkSpec {
     val pf = plan.linesIterator.find(_.contains("PartitionFilters"))
     assert(pf.exists(l => l.contains("sb#") && l.contains("IN") || pf.exists(_.contains("sb#"))),
       s"expected sb partition pruning, got:\n${plan.take(600)}")
+    // and it lists only the blocklist's bucket directories, not the root
+    val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
+    assert(scans.nonEmpty && scans.forall(l => l.contains("postings/sb=") && !l.contains("postings]")),
+      s"expected a scan of the bucket directories, got:\n${plan.take(1200)}")
     // probe parameters come from stats: a second index with different k
     // still probes correctly without the caller restating k
     val dir2 = s"target/graft-test/shidx2_${System.nanoTime()}"
@@ -172,6 +176,9 @@ class ShingleIndexSpec extends SparkSpec {
     val before = probeRows(dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val conf = spark.sparkContext.hadoopConfiguration
+    // the uninterrupted run: the layout without the cut batch
+    val skipped = s"$dir-skipped"
+    FileUtil.copy(fs, new Path(dir), fs, new Path(skipped), false, conf)
     FileUtil.copy(fs, new Path(dir, "stats"), fs, new Path(s"$dir-stats"), false, conf)
     Dedup.appendShingleIndex(Seq((10L, phrase("one"))).toDF("doc_id", "text"),
       "doc_id", "text", dir)
@@ -179,6 +186,18 @@ class ShingleIndexSpec extends SparkSpec {
     fs.delete(new Path(dir, "stats"), true)
     FileUtil.copy(fs, new Path(s"$dir-stats"), fs, new Path(dir, "stats"), false, conf)
     assert(probeRows(dir) == before)
+    // with the cut append's `_append` marker beside its rows, the next
+    // update folds them out before it writes generation 1 again: it
+    // equals the same update of the uninterrupted run, and serves the
+    // fresh version of doc 10, which the cut batch also holds
+    val cut = s"$dir-cut"
+    FileUtil.copy(fs, new Path(dir), fs, new Path(cut), false, conf)
+    fs.create(new Path(cut, "_append"), true).close()
+    val update = Seq((10L, phrase("ten")), (11L, phrase("one"))).toDF("doc_id", "text")
+    Dedup.updateShingleIndex(update, "doc_id", "text", cut)
+    Dedup.updateShingleIndex(update, "doc_id", "text", skipped)
+    assert(probeRows(cut) == probeRows(skipped))
+    assert(probeRows(cut).map(_.head).contains(10L))
     // compaction folds the uncommitted generation out
     Dedup.compactShingleIndex(spark, dir)
     assert(probeRows(dir) == before)

@@ -10,7 +10,10 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.{Configurator, Property}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -45,16 +48,138 @@ class TextSearchSpec extends SparkSpec {
       "the all-terms doc must rank first")
   }
 
+  /** `body`'s value and the executed plans of the queries it ran. */
+  private def plansOf[A](body: => A): (A, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      // the listener hears queries in order: once this one's plan
+      // arrives, every plan of `body` has
+      spark.range(0, 7919).collect()
+      val deadline = System.nanoTime() + 30.seconds.toNanos
+      while (!plans.asScala.exists(_.contains("Range (0, 7919")) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      (out, plans.asScala.toSeq.filterNot(_.contains("Range (0, 7919")))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Forces searchTopK's Spark plan: no slice is small enough to score
+    * on the driver. */
+  private def sparkPlan[A](body: => A): A =
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
   test("the serve scan is partition-pruned to the query terms' buckets") {
     TextSearch.writeIndex(corpus, "doc_id", "text", dir, buckets = 16)
     OperatorCache.releaseAll(spark)
-    val served = TextSearch.searchTopK(spark, dir, Seq("join"), k = 5)
-    val plan = served.queryExecution.executedPlan.toString
-    val pf = plan.linesIterator.find(_.contains("PartitionFilters"))
-    assert(pf.exists(l => l.contains("tb#") && l.contains(" = ")),
-      s"expected tb-equality partition pruning, got:\n${plan.take(600)}")
+    def probe() = TextSearch.searchTopK(spark, dir, Seq("join"), k = 5)
+      .as[(Long, Double, Long)].collect().toSeq
+    val (onDriver, driverPlans) = plansOf(probe())
+    val (inSpark, sparkPlans) = plansOf(sparkPlan(probe()))
+    assert(onDriver == inSpark)
     // a doc without the term never surfaces
-    assert(!served.as[(Long, Double, Long)].collect().map(_._1).contains(4L))
+    assert(onDriver.nonEmpty && !onDriver.map(_._1).contains(4L))
+    for ((path, plans) <- Seq("driver" -> driverPlans, "spark" -> sparkPlans)) {
+      val scans = plans.flatMap(_.linesIterator.filter(_.contains("FileScan")))
+      assert(scans.nonEmpty, s"$path: no postings scan in:\n${plans.mkString("\n")}")
+      scans.foreach { scan =>
+        assert(scan.contains("PartitionFilters") && scan.contains("tb#") && scan.contains(" = "),
+          s"$path: expected tb-equality partition pruning, got:\n$scan")
+        assert(scan.contains("InMemoryFileIndex(1 paths)") && scan.contains("postings/tb="),
+          s"$path: expected the one bucket directory, got:\n$scan")
+      }
+    }
+    assert(driverPlans.count(_.contains("FileScan")) == 1, "the driver path runs one scan")
+    // the driver path scored a collected scan; the Spark path ranked in Spark
+    assert(driverPlans.exists(_.contains("LocalTableScan")) &&
+      !driverPlans.exists(_.contains("TakeOrderedAndProject")))
+    assert(sparkPlans.exists(_.contains("TakeOrderedAndProject")))
+  }
+
+  test("driver scoring equals the Spark plan: rows, order and schema, on every layout state") {
+    val base = s"target/graft-tmp/textsearch-paths-${System.nanoTime()}"
+    // doc 6 ties doc 3 on every query; the string ids tie where UTF-16
+    // and UTF-8 order disagree (U+FB01 vs a supplementary code point)
+    val tied = corpus.unionByName(Seq((6L, "vectors vectors appear twice here with a join nearby"))
+      .toDF("doc_id", "text"))
+    val strings = tied.select(
+      when(col("doc_id") === 3, lit("\uFB01x")).when(col("doc_id") === 6, lit("\uD83D\uDE00"))
+        .otherwise(concat(lit("u"), col("doc_id"))).as("url"), col("text"))
+    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def layout(name: String)(build: String => Unit): (String, String) = {
+      val d = s"$base/$name"
+      build(d)
+      OperatorCache.releaseAll(spark)
+      top5(d) // the first probe after a build loads the postings schema
+      name -> d
+    }
+    val layouts = Seq(
+      layout("built")(d => TextSearch.writeIndex(tied, "doc_id", "text", d, buckets = 8)),
+      layout("tombstoned") { d =>
+        TextSearch.writeIndex(tied, "doc_id", "text", d, buckets = 8)
+        TextSearch.deleteFromIndex(spark, d, Seq(5L, 1L).toDF("doc_id"), "doc_id")
+      },
+      layout("compacted") { d =>
+        TextSearch.writeIndex(tied, "doc_id", "text", d, buckets = 8)
+        TextSearch.updateIndex(Seq((2L, "a join of filters")).toDF("doc_id", "text"),
+          "doc_id", "text", d)
+        TextSearch.deleteFromIndex(spark, d, Seq(5L).toDF("doc_id"), "doc_id")
+        TextSearch.compactIndex(spark, d)
+      },
+      layout("cut-append") { d =>
+        // an append whose stats write never landed: generation 1 is on
+        // disk and uncommitted
+        TextSearch.writeIndex(tied.where(col("doc_id") <= 3), "doc_id", "text", d, buckets = 8)
+        FileUtil.copy(fs, new Path(d, "stats"), fs, new Path(s"$d-stats"), false, conf)
+        TextSearch.appendIndex(tied.where(col("doc_id") > 3), "doc_id", "text", d)
+        fs.delete(new Path(d, "stats"), true)
+        FileUtil.copy(fs, new Path(s"$d-stats"), fs, new Path(d, "stats"), false, conf)
+      },
+      layout("string-keyed") { d =>
+        TextSearch.writeIndex(strings, "url", "text", d, buckets = 8)
+        TextSearch.deleteFromIndex(spark, d, Seq("u1").toDF("url"), "url")
+      })
+    val vocab = Seq("join", "vector", "vectors", "filter", "appear", "twice", "the",
+      "spark", "zzzmissing")
+    val rnd = new scala.util.Random(17)
+    var compared = 0
+    for ((name, d) <- layouts; k <- Seq(1, 3, 10); _ <- 1 to 3) {
+      val terms = rnd.shuffle(vocab).take(1 + rnd.nextInt(3))
+      def probe(): (Seq[Row], org.apache.spark.sql.types.StructType) = {
+        val df = TextSearch.searchTopK(spark, d, terms, k = k)
+        (df.collect().toSeq, df.schema)
+      }
+      val (onDriver, driverJobs) = jobsOf(probe())
+      val inSpark = sparkPlan(probe())
+      assert(onDriver == inSpark, s"$name $terms k=$k")
+      assert(driverJobs <= 1, s"$name $terms k=$k: the driver path ran $driverJobs jobs")
+      if (onDriver._1.nonEmpty) compared += 1
+    }
+    assert(compared >= 30, s"only $compared probes matched a row")
+    // the tie orders: ids ascending within an equal score
+    val ties = TextSearch.searchTopK(spark, layouts(4)._2, Seq("twice"), k = 10)
+      .select("doc").as[String].collect().toSeq
+    assert(ties == Seq("\uFB01x", "\uD83D\uDE00"), s"UTF-8 order: $ties")
+    val longTies = TextSearch.searchTopK(spark, layouts.head._2, Seq("twice"), k = 10)
+      .select("doc").as[Long].collect().toSeq
+    assert(longTies == Seq(3L, 6L), s"$longTies")
+  }
+
+  test("the probe's schema, including nullability, is the Spark plan's") {
+    TextSearch.writeIndex(corpus, "doc_id", "text", dir, buckets = 16)
+    OperatorCache.releaseAll(spark)
+    import org.apache.spark.sql.types._
+    val want = StructType(Seq(StructField("doc", LongType), StructField("score", DoubleType),
+      StructField("n_matched", LongType, nullable = false)))
+    assert(TextSearch.searchTopK(spark, dir, Seq("join")).schema == want)
+    assert(sparkPlan(TextSearch.searchTopK(spark, dir, Seq("join")).schema) == want)
+    assert(TextSearch.searchTopK(spark, dir, Seq("zzzmissing")).schema == want)
   }
 
   test("batched serving: per-query top-k ≡ one searchTopK per query") {
@@ -484,6 +609,9 @@ class TextSearchSpec extends SparkSpec {
     val before = top5(d)
     val fs = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val conf = spark.sparkContext.hadoopConfiguration
+    // the uninterrupted run: the layout without the cut batch
+    val skipped = s"$d-skipped"
+    FileUtil.copy(fs, new Path(d), fs, new Path(skipped), false, conf)
     FileUtil.copy(fs, new Path(d, "stats"), fs, new Path(s"$d-stats"), false, conf)
     TextSearch.appendIndex(corpus.where(col("doc_id") > 3), "doc_id", "text", d)
     OperatorCache.releaseAll(spark)
@@ -494,6 +622,20 @@ class TextSearchSpec extends SparkSpec {
     val batch = TextSearch.searchTopKBatch(Seq((1L, "join vector filter")).toDF("qid", "query"),
       "qid", "query", d, k = 5).select("doc", "score", "n_matched").collect().toSeq
     assert(batch == before)
+    // with the cut append's `_append` marker beside its rows, the next
+    // update folds them out before it writes generation 1 again: it
+    // equals the same update of the uninterrupted run, and serves the
+    // fresh version of doc 5, which the cut batch also holds
+    val cut = s"$d-cut"
+    FileUtil.copy(fs, new Path(d), fs, new Path(cut), false, conf)
+    fs.create(new Path(cut, "_append"), true).close()
+    val update = Seq((5L, "join vector again and a filter"), (6L, "vector filter join"))
+      .toDF("doc_id", "text")
+    TextSearch.updateIndex(update, "doc_id", "text", cut)
+    TextSearch.updateIndex(update, "doc_id", "text", skipped)
+    OperatorCache.releaseAll(spark)
+    assert(top5(cut) == top5(skipped))
+    assert(top5(cut).map(_.getLong(0)).toSet.contains(5L))
     // compaction folds the uncommitted generation out
     TextSearch.compactIndex(spark, d)
     assert(top5(d) == before)
@@ -507,12 +649,12 @@ class TextSearchSpec extends SparkSpec {
     OperatorCache.releaseAll(spark)
     top5(d) // fills the memo
     val (clean, cleanJobs) = jobsOf(top5(d))
-    assert(cleanJobs <= 4, s"clean probe ran $cleanJobs jobs")
+    assert(cleanJobs <= 1, s"clean probe ran $cleanJobs jobs")
     assert(clean.head.getLong(0) == 5L)
     TextSearch.deleteFromIndex(spark, d, Seq(Tuple1(5L)).toDF("doc_id"), "doc_id")
     top5(d)
     val (tombstoned, tombJobs) = jobsOf(top5(d))
-    assert(tombJobs <= 5, s"tombstoned probe ran $tombJobs jobs")
+    assert(tombJobs <= 1, s"tombstoned probe ran $tombJobs jobs")
     assert(tombstoned.nonEmpty && !tombstoned.exists(_.getLong(0) == 5L))
   }
 
