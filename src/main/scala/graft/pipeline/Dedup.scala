@@ -463,16 +463,16 @@ object Dedup {
     * column-pruned scan of (shingle, doc), not text. Index once per
     * corpus snapshot, screen every new benchmark against it (and
     * [[graft.sources.Warc.fetch]] the flagged docs from the archive).
-    * A `stats` row records (shingle_k, buckets) so probes can't run
-    * with mismatched parameters.
+    * Its [[LayoutFiles.Descriptor]] records (shingle_k, buckets) so
+    * probes can't run with mismatched parameters.
     *
     * Lifecycle (the [[graft.pipeline.TextSearch]] pattern, uniform
     * across every persisted serving layout here): postings carry an
     * LSM-style generation stamp (`gen`, 0 at build — a build is the
     * generation-0 append), a doc-keyed `docs/` side table maps ids to
     * their live versions so a DELETE never scans the shingle-bucketed
-    * postings, and `stats` rolls `max_gen` so appends stamp fresh
-    * versions. A re-crawled document
+    * postings, and the descriptor rolls `max_gen` so appends stamp
+    * fresh versions. A re-crawled document
     * goes through [[updateShingleIndex]] (tombstone old gen + append
     * new); [[compactShingleIndex]] folds deletes out ([[LayoutFiles]]).
     */
@@ -483,15 +483,14 @@ object Dedup {
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
     LayoutFiles.recover(df.sparkSession, dir)
     LayoutFiles.clearTombstones(df.sparkSession, dir)
-    writeShingleGeneration(df, idCol, textCol, dir, shingleK, buckets, 0L,
-      SaveMode.Overwrite)
+    writeShingleGeneration(df, idCol, textCol, dir, shingleK, buckets, None)
   }
 
   /** Advance a [[writeShingleIndex]] layout past a NEW batch of docs —
     * the recrawl form, like every index in this family (appendIndex,
     * appendState, appendIvfPq): batch-sized postings append into the
     * same partitioning under a fresh `gen`, prior postings never read
-    * or rewritten; only `max_gen` rolls in stats, so append ≡ rebuild
+    * or rewritten; only `max_gen` rolls in the descriptor, so append ≡ rebuild
     * exactly (spec-pinned). Batch doc ids must be NEW here — a
     * re-crawled (changed) document goes through [[updateShingleIndex]],
     * whose delete half retires the old version first.
@@ -502,32 +501,35 @@ object Dedup {
     val spark = batch.sparkSession
     LayoutFiles.recover(spark, dir)
     LayoutFiles.appending(spark, dir)(compactShingleIndex(spark, dir)) {
-      val st = LayoutFiles.stats(spark, dir).row
+      val base = LayoutFiles.descriptor(spark, dir, "Dedup.writeShingleIndex")
       writeShingleGeneration(batch, idCol, textCol, dir,
-        st.getAs[Int]("shingle_k"), st.getAs[Int]("buckets"),
-        st.getAs[Long]("max_gen") + 1, SaveMode.Append)
+        base.param("shingle_k").asInt, base.param("buckets").asInt, Some(base))
     }
   }
 
   /** The one write body of the shingle layout: `df`'s postings and doc
-    * versions stamped `gen` and written in `mode`, then `stats` rolled
-    * to `gen`. */
+    * versions stamped generation `max_gen + 1` of the `base` descriptor
+    * and appended, then the descriptor rolled to that generation (a
+    * build passes no base: gen 0, Overwrite). */
   private def writeShingleGeneration(
       df: DataFrame, idCol: String, textCol: String, dir: String,
-      shingleK: Int, buckets: Int, gen: Long, mode: SaveMode,
+      shingleK: Int, buckets: Int, base: Option[LayoutFiles.Descriptor],
   ): Unit = {
     val spark = df.sparkSession
     GraftFunctions.ensureRegistered(spark)
+    val gen = base.fold(0L)(_.maxGen + 1)
+    val mode = if (base.isEmpty) SaveMode.Overwrite else SaveMode.Append
     // postings store the 64-bit shingle HASH (shingleHashRows), not the
     // k-gram string: the probe only ever equi-joins and counts distinct
     // shingles, so the 8-byte proxy cuts postings bytes, shuffle bytes
     // and the distinct's allocation by the k-gram's width (~6–8× at
     // k=8), and collisions only ever ADD overlap — the safe direction
     // for a decontamination screen (see shingleHashRows)
-    shingleHashRows(df, idCol, textCol, shingleK)
+    val postings = shingleHashRows(df, idCol, textCol, shingleK)
       .distinct()
       .withColumn("sb", pmod(col("sh"), lit(buckets.toLong)))
       .withColumn("gen", lit(gen))
+    postings
       // cluster by the partition value first (guide §6) — without it
       // every input partition opens a writer per bucket it touches
       // (the 32-task × 64-bucket ~2k-file fan-out measured on p128's
@@ -539,10 +541,9 @@ object Dedup {
     // delete is a no-op instead of a silent miss)
     df.select(col(idCol).as("doc")).distinct().withColumn("gen", lit(gen))
       .write.mode(mode).parquet(s"$dir/docs")
-    import spark.implicits._
-    LayoutFiles.writeStats(dir,
-      Seq((shingleK, buckets, gen)).toDF("shingle_k", "buckets", "max_gen"),
-      append = mode == SaveMode.Append)
+    LayoutFiles.publish(spark, dir, LayoutFiles.Descriptor("shingle", gen, Some("sb"),
+      base.fold(LayoutFiles.Descriptor.schemaOf(postings, Some("sb")))(_.schema))(
+      "shingle_k" -> shingleK, "buckets" -> buckets))
   }
 
   /** Tombstone-delete docs from a [[writeShingleIndex]] layout: the
@@ -590,18 +591,17 @@ object Dedup {
     * lands another handful of batch files per touched bucket — after
     * enough batches the probe pays more for file opens than data, so
     * compaction rewrites even with no tombstones pending), then clear
-    * the set. Stats are version bookkeeping only (`max_gen` stays —
-    * reusing a dead generation number could resurrect a same-numbered
-    * tombstone), so nothing rolls. */
+    * the set. The descriptor stays (`max_gen` too — reusing a dead
+    * generation number could resurrect a same-numbered tombstone). */
   def compactShingleIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     LayoutFiles.recover(spark, dir)
-    val st = LayoutFiles.stats(spark, dir)
+    val d = LayoutFiles.descriptor(spark, dir, "Dedup.writeShingleIndex")
     // an uncommitted generation (gen > max_gen) folds out with the deletes
-    val committed = col("gen") <= st.row.getAs[Long]("max_gen")
+    val committed = col("gen") <= d.maxGen
     val t = LayoutFiles.pending(spark, dir).map(_.frame(spark))
     LayoutFiles.rewrite(dir, "postings", Some("sb"))(LayoutFiles.minus(
-      spark.read.schema(st.postings(spark)).parquet(s"$dir/postings").where(committed),
+      spark.read.schema(d.schema).parquet(s"$dir/postings").where(committed),
       t, Seq("doc", "gen")))
     LayoutFiles.rewrite(dir, "docs", None)(LayoutFiles.minus(
       spark.read.parquet(s"$dir/docs").where(committed), t, Seq("doc", "gen")))
@@ -617,8 +617,9 @@ object Dedup {
     * benchmark-sized shingle set, collected once, as a broadcast local
     * relation. The scan reads only those buckets' directories
     * ([[LayoutFiles.slice]]: the table root past Spark's listing
-    * threshold). Parameters, the postings schema and the pending
-    * tombstones come from the driver's [[LayoutFiles]] memo, and only
+    * threshold). Parameters and the postings schema come from the
+    * layout's descriptor, the pending tombstones from the driver's
+    * [[LayoutFiles]] memo, and only
     * committed generations (`gen <= max_gen`) are probed — see
     * `TextSearch.serving`.
     */
@@ -628,18 +629,18 @@ object Dedup {
       minOverlap: Int = 1,
   ): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
-    val st = LayoutFiles.stats(spark, dir)
-    val buckets = st.row.getAs[Int]("buckets")
+    val d = LayoutFiles.descriptor(spark, dir, "Dedup.writeShingleIndex")
+    val buckets = d.param("buckets").asInt
     val tomb = LayoutFiles.pending(spark, dir).map(_.frame(spark))
     // the blocklist's shingle set, collected once and deduplicated on
     // the driver; floorMod is Spark's pmod for a positive divisor
     val shingles = shingleHashRows(blocklist, blockIdCol, blockTextCol,
-        st.row.getAs[Int]("shingle_k"))
+        d.param("shingle_k").asInt)
       .select("sh").collect().map(_.getLong(0)).distinct
       .map(sh => (sh, math.floorMod(sh, buckets.toLong)))
     val sbs = shingles.map(_._2).distinct
     val slice0 = LayoutFiles.slice(spark, s"$dir/postings", "sb", sbs.toIndexedSeq,
-      st.postings(spark)).frame.where(col("gen") <= st.row.getAs[Long]("max_gen"))
+      d.schema).frame.where(col("gen") <= d.maxGen)
     // deletes are visible immediately: the pruned slice stays map-only
     LayoutFiles.minus(slice0, tomb, Seq("doc", "gen"))
       .join(broadcast(spark.createDataFrame(shingles.toSeq).toDF("sh", "sb")), Seq("sb", "sh"))

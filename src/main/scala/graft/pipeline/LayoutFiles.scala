@@ -1,17 +1,31 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The file lifecycle every persisted serving layout shares — the BM25
   * index ([[TextSearch]]), the shingle index ([[Dedup]]), the ANN
   * layouts and the semantic-dedup state ([[Similarity]]), and the
-  * curate state ([[TrainingPipeline]]): one tombstone format and one
-  * table swap.
+  * curate state ([[TrainingPipeline]]): one descriptor, one tombstone
+  * format and one table swap.
+  *
+  * Descriptor. What a reader needs of a layout besides its rows (the
+  * [[Descriptor]]) is one small JSON file at the layout root,
+  * `_layout.<n>.json`, a name parquet scans skip. Reading it is one
+  * listing and one open, no Spark job ([[descriptor]]), and a scan
+  * handed its schema runs no schema-inference job either. Each write
+  * publishes it once ([[publish]]): the next version is renamed in
+  * beside the old one, which is deleted after, so a reader beside the
+  * write finds one of them and a crash leaves one of them newest. A
+  * compaction [[stage]]s it, and its [[commit]] swaps it in.
   *
   * Tombstones. A DELETE appends the retired VERSIONS (e.g. (doc, gen))
   * to a set under the layout dir — `_tombstones`, a name parquet scans
@@ -34,40 +48,35 @@ import org.apache.spark.sql.types.StructType
   * which the next lifecycle write on the layout discards, or a marked
   * commit, which it finishes ([[recover]]); either way the layout then
   * equals an uninterrupted run's. Probes never repair — they may run
-  * beside a writer — and a BM25 or shingle probe that finds a marker
-  * fails with [[UnfinishedCommit]] instead of mixing old and new
-  * tables; one that passed that check and then lists postings in the
-  * gap between a swap's two renames fails with a missing file
-  * ([[slice]]), never serves the gap as an empty table. Each layout
-  * has a single writer: the marker makes a crash safe, it is not a
-  * lock.
+  * beside a writer — and a probe that finds a marker fails with
+  * [[UnfinishedCommit]] instead of mixing old and new tables (the
+  * descriptor read checks for it); one that passed that check and then
+  * lists postings in the gap between a swap's two renames fails with a
+  * missing file ([[slice]]), never serves the gap as an empty table.
+  * Each layout has a single writer: the marker makes a crash safe, it
+  * is not a lock.
   *
-  * Bookkeeping memo. A layout's `stats` row, its postings schema
-  * ([[stats]]) and its pending tombstone rows ([[pending]]) change only
-  * when a lifecycle write lands, so the driver holds them and every
-  * call revalidates with Hadoop listings alone — no Spark job: the
-  * names, lengths and modification times of the side table's files
+  * Bookkeeping memo. A layout's pending tombstone rows ([[pending]])
+  * change only when a lifecycle write lands, so the driver holds them
+  * and every call revalidates with Hadoop listings alone — no Spark
+  * job: the names, lengths and modification times of the set's files
   * (Spark names every file it writes with a per-write uuid, so any
   * rewrite changes the listing) and whether the layout's `_commit`
-  * marker exists. Each side table revalidates on its own, so a
-  * [[retire]], which changes only `_tombstones`, costs the next append
-  * no `stats` read. A load is kept only when the listings taken before
+  * marker exists. A load is kept only when the listings taken before
   * and after it agree (a write that lands during the load is never
-  * cached), each side table keeps only its latest load, and the memo
-  * holds at most [[MemoEntries]] side tables. A call that finds the
-  * marker fails with [[UnfinishedCommit]]; writers call [[recover]]
-  * first, so only a probe beside an open commit meets it. A writer
-  * hands the memo what it wrote — the `stats` row ([[writeStats]],
-  * [[remember]]), the tombstone rows ([[retire]]) — under the listing
-  * taken after its write, so neither the next probe nor the next
-  * append reads them cold.
+  * cached), each set keeps only its latest load, and the memo holds at
+  * most [[MemoEntries]] sets. A call that finds the marker fails with
+  * [[UnfinishedCommit]]; writers call [[recover]] first, so only a probe
+  * beside an open commit meets it. [[retire]] hands the memo the rows it
+  * wrote under the listing taken after its write, so the next probe
+  * does not read them cold.
   *
   * Committed generations. The BM25 and shingle layouts stamp each
-  * append's rows with generation `max_gen + 1` and roll `stats` last,
-  * so their probes read `gen <= max_gen` and an append cut before its
-  * `stats` write serves nothing; the append runs under a marker
-  * ([[appending]]) so that the next append compacts those rows away
-  * before it reuses their generation number.
+  * append's rows with generation `max_gen + 1` and publish the
+  * descriptor last, so their probes read `gen <= max_gen` and an append
+  * cut before its descriptor lands serves nothing; the append runs under
+  * a marker ([[appending]]) so that the next append compacts those rows
+  * away before it reuses their generation number.
   */
 object LayoutFiles {
 
@@ -88,22 +97,100 @@ object LayoutFiles {
       "may mix old and new versions. The next lifecycle write on the " +
       "layout (append, delete, compact) finishes it.")
 
-  /** How many side tables the bookkeeping memo holds, least recently
+  /** How many tombstone sets the bookkeeping memo holds, least recently
     * used dropped first. */
   val MemoEntries = 64
 
-  /** A layout's `stats` row, and the schema of its `postings` table,
-    * loaded by the first caller that asks — handing that schema to
-    * `spark.read.schema` skips the parquet schema-inference job of
-    * every postings scan. The memo holds no session: each caller
-    * passes its own. */
-  final class Stats private[LayoutFiles] (
-      val row: Row, dir: String, @volatile private[LayoutFiles] var schema: StructType) {
-    def postings(spark: SparkSession): StructType = {
-      if (schema == null) schema = spark.read.parquet(new Path(dir, "postings").toString).schema
-      schema
-    }
+  /** A layout's kind, last committed generation, write-time parameters
+    * and primary table's partition column and schema as Spark reads it. */
+  final case class Descriptor(
+      kind: String, maxGen: Long, params: JsonNode, partition: Option[String],
+      schema: StructType) {
+    def param(name: String): JsonNode = params.required(name)
   }
+
+  object Descriptor {
+    /** The schema Spark reads back from `table` written as parquet
+      * partitioned by `partition`: the data columns, then the partition
+      * column, every one nullable. */
+    def schemaOf(table: DataFrame, partition: Option[String]): StructType = {
+      val (part, data) = table.schema.partition(f => partition.contains(f.name))
+      StructType((data ++ part).map(_.copy(nullable = true)))
+    }
+
+    /** A descriptor with the parameters `params`: numbers, strings and
+      * sequences of them. */
+    def apply(kind: String, maxGen: Long, partition: Option[String], schema: StructType)(
+        params: (String, Any)*): Descriptor =
+      Descriptor(kind, maxGen, Json.valueToTree[JsonNode](ListMap(params: _*).map {
+        case (k, s: Seq[_]) => k -> s.asJava
+        case kv => kv
+      }.asJava), partition, schema)
+  }
+
+  private val Json = new ObjectMapper()
+  private val DescriptorFile = """_layout\.(\d+)\.json""".r
+
+  /** The descriptor versions among the root entry names `names`. */
+  private def versions(names: Seq[String]): Seq[Long] =
+    names.collect { case DescriptorFile(v) => v.toLong }
+
+  private def names(fs: FileSystem, dir: String): Seq[String] =
+    fs.listStatus(new Path(dir)).map(_.getPath.getName).toSeq.sorted
+
+  /** The descriptor of the layout at `dir`. A layout with none fails,
+    * naming `build`, the call that writes one; an open commit fails with
+    * [[UnfinishedCommit]]. A load that fails while a writer changes the
+    * root under it (a roll deleting the version it listed, a commit
+    * opening) runs again on the new listing. */
+  def descriptor(spark: SparkSession, dir: String, build: String): Descriptor = {
+    val fs = fsOf(spark, dir)
+    @annotation.tailrec
+    def load(listed: Seq[String]): Descriptor = {
+      if (listed.contains(Marker)) throw new UnfinishedCommit(dir)
+      val v = versions(listed).maxOption.getOrElse(throw new IllegalStateException(
+        s"$dir holds no layout descriptor (_layout.<n>.json): rebuild the layout with $build"))
+      val loaded = Try {
+        val o = Json.readTree(fs.open(new Path(dir, s"_layout.$v.json")))
+        Descriptor(o.required("kind").asText, o.required("max_gen").asLong, o.required("params"),
+          Option(o.get("partition")).filterNot(_.isNull).map(_.asText),
+          DataType.fromJson(o.required("schema").toString).asInstanceOf[StructType])
+      }
+      loaded match {
+        case Success(d) => d
+        case Failure(e) =>
+          val now = names(fs, dir)
+          if (now == listed) throw e else load(now)
+      }
+    }
+    load(names(fs, dir))
+  }
+
+  /** Publish `d` as the next descriptor version of the layout at `dir`:
+    * written under a temporary name, renamed in, then older versions
+    * (and a temporary one a crash left) deleted. */
+  def publish(spark: SparkSession, dir: String, d: Descriptor): Unit = {
+    val fs = fsOf(spark, dir)
+    val old = names(fs, dir).filter(_.startsWith("_layout."))
+    val live = new Path(dir, s"_layout.${versions(old).maxOption.fold(0L)(_ + 1)}.json")
+    val tmp = suffixed(live, ".tmp")
+    writeDescriptor(fs, tmp, d)
+    rename(fs, tmp, live)
+    old.filterNot(_ == tmp.getName).foreach(n => fs.delete(new Path(dir, n), false))
+  }
+
+  /** Stage `d` to replace the live descriptor of the layout at `dir` at
+    * its next [[commit]]. */
+  def stage(spark: SparkSession, dir: String, d: Descriptor): Unit = {
+    val fs = fsOf(spark, dir)
+    writeDescriptor(fs, new Path(dir, s"_layout.${versions(names(fs, dir)).max}.json$Staged"), d)
+  }
+
+  private def writeDescriptor(fs: FileSystem, p: Path, d: Descriptor): Unit =
+    Json.writerWithDefaultPrettyPrinter().writeValue(fs.create(p, true): java.io.OutputStream,
+      Json.createObjectNode()
+        .put("kind", d.kind).put("max_gen", d.maxGen).put("partition", d.partition.orNull)
+        .setAll[ObjectNode](Map("params" -> d.params, "schema" -> Json.readTree(d.schema.json)).asJava))
 
   /** A pending tombstone set's rows, held on the driver. */
   final case class Tombstones(schema: StructType, rows: Seq[Row]) {
@@ -111,98 +198,47 @@ object LayoutFiles {
     def frame(spark: SparkSession): DataFrame = spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** The `stats` row of the layout at `dir` and its postings schema,
-    * through the memo: the row of the largest `max_gen` ([[writeStats]]
-    * rolls an append's row in beside the old one). */
-  def stats(spark: SparkSession, dir: String): Stats =
-    memoized(spark, dir, "stats") {
-      new Stats(read(spark, new Path(dir, "stats").toString).collect()
-        .maxBy(_.getAs[Long]("max_gen")), dir, null)
+  /** The rows of the pending tombstone set `dir/name`, if any, or the
+    * memo's copy if the set's listing has not changed since that load.
+    * A load that fails while a writer changes the layout under it (a
+    * commit clearing the set it listed) runs again on the new listing —
+    * and fails with [[UnfinishedCommit]] if that shows the marker. */
+  def pending(spark: SparkSession, dir: String, name: String = "_tombstones"): Option[Tombstones] = {
+    val (key, before) = listing(spark, dir, name)
+    if (before._1) throw new UnfinishedCommit(dir)
+    // the marker flag and the files alike
+    def unchanged: Boolean = listing(spark, dir, name)._2 == before
+    memo.get(key) match {
+      case (`before`, held) => held
+      case _ =>
+        Try(tombstones(spark, dir, name).map(t => Tombstones(t.schema, t.collect().toSeq))) match {
+          case Success(v) =>
+            if (unchanged) memo.put(key, (before, v))
+            v
+          case Failure(_) if !unchanged => pending(spark, dir, name)
+          case Failure(e) => throw e
+        }
     }
-
-  /** Write `stats`, the one-row `stats` table of the layout at `dir`,
-    * and [[remember]] its row. A build overwrites the table. An append
-    * rolls it: its row lands beside the old one and the old files go
-    * after, so a probe beside the append never finds the table empty or
-    * gone, and an append cut between the two leaves its own row, the
-    * larger `max_gen`, to serve. */
-  def writeStats(dir: String, stats: DataFrame, append: Boolean): Unit = {
-    val spark = stats.sparkSession
-    val fs = fsOf(spark, dir)
-    val p = new Path(dir, "stats")
-    val old = if (append) fs.listStatus(p).toSeq.map(_.getPath).filter(isData) else Nil
-    stats.coalesce(1).write.mode(if (append) "append" else "overwrite").parquet(p.toString)
-    old.foreach(fs.delete(_, false))
-    remember(spark, dir, stats.head(), keepSchema = append)
   }
-
-  /** Hand the memo the `stats` row a writer just wrote to the layout at
-    * `dir`, under the listing taken now. `keepSchema`: the write kept
-    * the postings schema (an append, a compaction), so a schema the memo
-    * already holds stays; a rebuild may change the id type. */
-  def remember(spark: SparkSession, dir: String, row: Row, keepSchema: Boolean): Unit = {
-    val schema = memo.get(listing(spark, dir, "stats")._1) match {
-      case (_, held: Stats) if keepSchema => held.schema
-      case _ => null
-    }
-    seed(spark, dir, "stats", new Stats(row, dir, schema))
-  }
-
-  /** The rows of the pending tombstone set `dir/name`, if any, through
-    * the memo. */
-  def pending(spark: SparkSession, dir: String, name: String = "_tombstones"): Option[Tombstones] =
-    memoized(spark, dir, name) {
-      tombstones(spark, dir, name).map(t => Tombstones(t.schema, t.collect().toSeq))
-    }
 
   /** (commit marker present, (name, length, mtime) of every entry) */
   private type Listing = (Boolean, Seq[(String, Long, Long)])
 
   private val memo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Listing, Any)](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, (Listing, Any)]): Boolean =
+    new java.util.LinkedHashMap[String, (Listing, Option[Tombstones])](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (Listing, Option[Tombstones])]): Boolean =
         size() > MemoEntries
     })
 
-  /** The memo key of the side table `dir/table` and its listing now. */
-  private def listing(spark: SparkSession, dir: String, table: String): (String, Listing) = {
+  /** The memo key of the tombstone set `dir/name` and its listing now. */
+  private def listing(spark: SparkSession, dir: String, name: String): (String, Listing) = {
     val fs = fsOf(spark, dir)
-    val p = fs.makeQualified(new Path(dir, table))
+    val p = fs.makeQualified(new Path(dir, name))
     val files =
       try fs.listStatus(p).toSeq.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
       catch { case _: java.io.FileNotFoundException => Nil }
     (p.toString, (fs.exists(new Path(dir, Marker)), files.sorted))
-  }
-
-  /** Hold `value` as the load of the side table `dir/table` that a
-    * writer just wrote, under the listing taken now. */
-  private def seed(spark: SparkSession, dir: String, table: String, value: Any): Unit = {
-    val (key, now) = listing(spark, dir, table)
-    if (!now._1) memo.put(key, (now, value))
-  }
-
-  /** `load` of the side table `dir/table`, or the memo's copy if the
-    * table's listing has not changed since that load. A load that fails
-    * while a writer changes the layout under it (an append deleting the
-    * `stats` file it listed, a commit opening) runs again on the new
-    * listing — and fails with [[UnfinishedCommit]] if that shows the
-    * marker. */
-  private def memoized[A](spark: SparkSession, dir: String, table: String)(load: => A): A = {
-    val (key, before) = listing(spark, dir, table)
-    if (before._1) throw new UnfinishedCommit(dir)
-    // the marker flag and the files alike
-    def unchanged: Boolean = listing(spark, dir, table)._2 == before
-    memo.get(key) match {
-      case (`before`, v) => v.asInstanceOf[A]
-      case _ =>
-        scala.util.Try(load) match {
-          case scala.util.Success(v) =>
-            if (unchanged) memo.put(key, (before, v))
-            v
-          case scala.util.Failure(_) if !unchanged => memoized(spark, dir, table)(load)
-          case scala.util.Failure(e) => throw e
-        }
-    }
   }
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
@@ -212,7 +248,7 @@ object LayoutFiles {
 
   /** Read the parquet table at `path` through its listed data files —
     * the entries whose names start with neither `_` nor `.`. A side
-    * table of a layout (`_meta`, `_tombstones`, `_manifest`, `_index`)
+    * table of a layout (`_tombstones`, `_manifest`, `_index`)
     * is named so that scans of the layout root skip it; handing Spark
     * that underscore path directly reads the same rows but logs "All
     * paths were ignored". `path` itself is read when it is no directory,
@@ -324,7 +360,9 @@ object LayoutFiles {
       .write.mode("append").parquet(new Path(dir, name).toString)
     held match {
       case Some(t) if t.schema != schema => // an older era's set: the next call reloads
-      case _ => seed(spark, dir, name, Some(Tombstones(schema, held.fold(rows)(_.rows ++ rows))))
+      case _ =>
+        val (key, now) = listing(spark, dir, name)
+        if (!now._1) memo.put(key, (now, Some(Tombstones(schema, held.fold(rows)(_.rows ++ rows)))))
     }
   }
 
@@ -375,9 +413,9 @@ object LayoutFiles {
 
   /** Run `write`, the append of generation `max_gen + 1` to the layout
     * at `dir`, under an `_append` marker. An append cut before its
-    * `stats` write leaves rows of that generation which `stats` does not
-    * count, and the marker beside them; probes skip the rows (they read
-    * `gen <= max_gen`). The next append that finds the marker runs
+    * descriptor lands leaves rows of that generation which the
+    * descriptor does not count, and the marker beside them; probes skip
+    * the rows (they read `gen <= max_gen`). The next append that finds the marker runs
     * `fold` first — the layout's compaction, which drops every row
     * above `max_gen` and clears the tombstone sets — so it never stamps
     * its batch with the cut one's number, and no tombstone a delete

@@ -183,7 +183,7 @@ object Similarity {
       planes: Int = 12, seed: Long = 42L): Unit = {
     LayoutFiles.recover(corpus.sparkSession, path)
     writeAnnGeneration(indexed(corpus, vecCol, planes, seed), "bucket", path,
-      0L, SaveMode.Overwrite, Seq("planes" -> planes.toLong, "seed" -> seed))
+      None, "lsh", Seq("planes" -> planes.toLong, "seed" -> seed))
   }
 
   /** Append a new vector batch to a [[writeIndexed]] LSH layout: the
@@ -199,9 +199,8 @@ object Similarity {
       planes: Int = 12, seed: Long = 42L): Unit = {
     val params = Seq("planes" -> planes.toLong, "seed" -> seed)
     LayoutFiles.recover(batch.sparkSession, path)
-    val gen = readIndexMeta(batch.sparkSession, path, params) + 1
     writeAnnGeneration(indexed(batch, vecCol, planes, seed), "bucket", path,
-      gen, SaveMode.Append, params)
+      Some(annDescriptor(batch.sparkSession, path, params)), "lsh", params)
   }
 
   /** UPDATE re-embedded ids in a [[writeIndexed]] layout: tombstone
@@ -226,7 +225,7 @@ object Similarity {
       query: Seq[Float], k: Int, planes: Int = 12, seed: Long = 42L,
       multiProbe: Boolean = true,
   ): DataFrame = {
-    checkIndexMeta(spark, path, Seq("planes" -> planes.toLong, "seed" -> seed))
+    annDescriptor(spark, path, Seq("planes" -> planes.toLong, "seed" -> seed))
     val probes = probeBuckets(query, planes, seed, multiProbe)
     bruteForceTopK(minusTombstones(spark, path, spark.read.parquet(path)
       .where(col("bucket").isin(probes: _*)), // → PartitionFilters, pruned scan
@@ -304,7 +303,7 @@ object Similarity {
       maxPrunedBuckets: Int = 100000,
       maxBroadcastQueries: Int = 10000): DataFrame = {
     val spark = workload.sparkSession
-    checkIndexMeta(spark, path, Seq("planes" -> planes.toLong, "seed" -> seed))
+    val d = annDescriptor(spark, path, Seq("planes" -> planes.toLong, "seed" -> seed))
     // ONE bounded job answers "is the workload empty", "what is the
     // embedding dimension" (r18 ADVICE: the isEmpty + dimOf pair cost
     // two scan jobs per serve), AND "is the workload small enough to
@@ -316,10 +315,10 @@ object Similarity {
     if (head.isEmpty) {
       // the hyperplanes need the dimension, which only the data carries
       // here (no model artifact) — an empty workload has none, so
-      // return the well-typed empty result directly (the layout footer
+      // return the well-typed empty result directly (the descriptor
       // supplies the id type; no partition is scanned)
       import org.apache.spark.sql.types._
-      val idT = spark.read.parquet(path).schema(idCol).dataType
+      val idT = d.schema(idCol).dataType
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(
@@ -943,7 +942,7 @@ object Similarity {
       k: Int = 0, iters: Int = 2,
   ): Unit = {
     LayoutFiles.recover(spark, dir)
-    val (idCol, vecCol, threshold, _) = dedupStateParams(spark, dir)
+    val (_, idCol, vecCol, threshold) = dedupState(spark, dir)
     val live = LayoutFiles.minus(spark.read.parquet(s"$dir/assigned"),
       LayoutFiles.tombstones(spark, dir), Seq(idCol, "gen"))
       .select(col(idCol), col(vecCol))
@@ -994,22 +993,21 @@ object Similarity {
       coarse: IvfIndex, books: Seq[IvfIndex]): Unit =
     appendPq(batch, vecCol, path, coarse, books, residual = false)
 
-  /** The `_meta` parameters of a PQ layout: the model fingerprint, and
-    * for residual codes the `residual` marker that lets layout
+  /** The descriptor parameters of a PQ layout: the model fingerprint,
+    * and the `residual` flag (1 for residual codes) that lets layout
     * consumers ([[layoutKind]]) dispatch raw vs residual serving
     * without a side channel — the fingerprint alone cannot tell the
     * two encodings apart. */
   private def pqParams(
       coarse: IvfIndex, books: Seq[IvfIndex], residual: Boolean): Seq[(String, Long)] =
-    ("model" -> modelFingerprint(coarse, books)) +:
-      (if (residual) Seq("residual" -> 1L) else Nil)
+    Seq("model" -> modelFingerprint(coarse, books), "residual" -> (if (residual) 1L else 0L))
 
   /** [[writeIvfPq]] and [[writeIvfPqResidual]]: generation 0 of the layout. */
   private def writePq(corpus: DataFrame, vecCol: String, path: String,
       coarse: IvfIndex, books: Seq[IvfIndex], residual: Boolean): Unit = {
     LayoutFiles.recover(corpus.sparkSession, path)
     writeAnnGeneration(pqEncodeCells(corpus, vecCol, coarse, books, residual),
-      "centroid", path, 0L, SaveMode.Overwrite, pqParams(coarse, books, residual))
+      "centroid", path, None, "ivfpq", pqParams(coarse, books, residual))
   }
 
   /** [[appendIvfPq]] and [[appendIvfPqResidual]]: the next generation. */
@@ -1017,9 +1015,8 @@ object Similarity {
       coarse: IvfIndex, books: Seq[IvfIndex], residual: Boolean): Unit = {
     val params = pqParams(coarse, books, residual)
     LayoutFiles.recover(batch.sparkSession, path)
-    val gen = readIndexMeta(batch.sparkSession, path, params) + 1
     writeAnnGeneration(pqEncodeCells(batch, vecCol, coarse, books, residual),
-      "centroid", path, gen, SaveMode.Append, params)
+      "centroid", path, Some(annDescriptor(batch.sparkSession, path, params)), "ivfpq", params)
   }
 
   /** UPDATE re-embedded ids in a [[writeIvfPq]] layout — the recrawl
@@ -1056,7 +1053,7 @@ object Similarity {
       idCol: String, vecCol: String,
       coarse: IvfIndex, books: Seq[IvfIndex], query: Seq[Float], k: Int,
       nprobe: Int, rescoreFactor: Int, residual: Boolean): DataFrame = {
-    checkIndexMeta(spark, path, Seq("model" -> modelFingerprint(coarse, books)))
+    annDescriptor(spark, path, pqParams(coarse, books, residual))
     val ranked = rankCells(coarse, query, nprobe)
     val cells = minusTombstones(spark, path,
       spark.read.parquet(path).where(inCells(ranked)), idCol)
@@ -1133,7 +1130,7 @@ object Similarity {
       coarse: IvfIndex, books: Seq[IvfIndex], k: Int,
       nprobe: Int, rescoreFactor: Int, residual: Boolean): DataFrame = {
     val spark = workload.sparkSession
-    checkIndexMeta(spark, path, Seq("model" -> modelFingerprint(coarse, books)))
+    annDescriptor(spark, path, pqParams(coarse, books, residual))
     require(books.nonEmpty, "probeIvfPqBatch needs at least one codebook")
     // the model KNOWS its dimension — no data probe, and an empty
     // workload flows through to a well-typed empty result instead of
@@ -1210,30 +1207,20 @@ object Similarity {
 
   // --- serving-index lifecycle: delete + update + compact ------------
 
-  /** `_meta/` bookkeeping of the ANN serving layouts: the rolling
-    * generation counter appends stamp and cutoff-tombstones name, plus
-    * the layout's WRITE-TIME parameters — (planes, seed) for LSH, a
-    * model fingerprint for the PQ layouts — so an append with drifted
-    * parameters/artifacts fails fast instead of silently mixing
-    * incompatible rows into one index. Lives under an underscore path
-    * so root scans of the layout frame ignore it. */
-  private def writeIndexMeta(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      maxGen: Long, extras: Seq[(String, Long)] = Nil): Unit = {
-    import spark.implicits._
-    extras.foldLeft(Seq(Tuple1(maxGen)).toDF("max_gen")) {
-      case (d, (k, v)) => d.withColumn(k, lit(v))
-    }.coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
-  }
-
   /** The one write body of the three ANN layouts (LSH, IVF-PQ,
     * residual IVF-PQ): `rows` — bucketed or encoded, carrying the
-    * partition column `part` — stamped `gen` and written in `mode`,
-    * then `_meta` rolled to `gen` with the layout's `params`. A build
-    * is the generation-0 overwrite, an append writes max_gen + 1. */
+    * partition column `part` — stamped generation `max_gen + 1` of the
+    * `base` descriptor and appended, then the descriptor rolled to that
+    * generation. A build passes no base: gen 0, Overwrite, and a `kind`
+    * descriptor recording the WRITE-TIME `params` — (planes, seed) for
+    * LSH, the model fingerprint and residual flag for PQ — so an append
+    * or a probe with drifted parameters/artifacts fails fast
+    * ([[annDescriptor]]) instead of silently mixing incompatible rows. */
   private def writeAnnGeneration(rows: DataFrame, part: String, path: String,
-      gen: Long, mode: SaveMode, params: Seq[(String, Long)]): Unit = {
-    rows.withColumn("gen", lit(gen))
+      base: Option[LayoutFiles.Descriptor], kind: String, params: Seq[(String, Long)]): Unit = {
+    val gen = base.fold(0L)(_.maxGen + 1)
+    val stamped = rows.withColumn("gen", lit(gen))
+    stamped
       // cluster by the partition value before the partitioned write
       // (guide §6): an LSH layout has up to 2^planes bucket values, so
       // an unclustered write opens a parquet writer per (input
@@ -1241,47 +1228,33 @@ object Similarity {
       // fan-out, worst of the whole family here. One exchange buys one
       // file set per bucket or cell at any core count.
       .repartition(col(part))
-      .write.mode(mode).partitionBy(part).parquet(path)
-    writeIndexMeta(rows.sparkSession, path, gen, params)
+      .write.mode(if (base.isEmpty) SaveMode.Overwrite else SaveMode.Append)
+      .partitionBy(part).parquet(path)
+    LayoutFiles.publish(rows.sparkSession, path, base.fold(LayoutFiles.Descriptor(kind, gen,
+      Some(part), LayoutFiles.Descriptor.schemaOf(stamped, Some(part)))(params: _*))(
+      _.copy(maxGen = gen)))
   }
 
-  /** Read `_meta`, checking any expected parameter that the layout
-    * recorded at write time (layouts predating a given guard simply
-    * lack the column and skip that check). Returns max_gen. */
-  private def readIndexMeta(
+  /** The descriptor of the ANN layout at `path`, failing when a
+    * parameter in `expect` differs from the one the layout was written
+    * with. */
+  private def annDescriptor(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      expect: Seq[(String, Long)] = Nil): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"$path has no _meta — built by a pre-generation writer; rebuild " +
-        "the layout (writeIndexed/writeIvfPq/writeIvfPqResidual) before " +
-        "appending to it")
-    val row = LayoutFiles.read(spark, p.toString).head()
-    val fields = row.schema.fieldNames.toSet
+      expect: Seq[(String, Long)] = Nil): LayoutFiles.Descriptor = {
+    val d = LayoutFiles.descriptor(spark, path,
+      "Similarity.writeIndexed, writeIvfPq or writeIvfPqResidual")
     expect.foreach { case (k, v) =>
-      if (fields.contains(k))
-        require(row.getAs[Long](k) == v,
-          s"$path was written with $k=${row.getAs[Long](k)} but this call " +
-            s"passes $k=$v — appends and probes must use the layout's own " +
-            "parameters/artifacts (mixing them silently corrupts serving)")
+      val stored = d.param(k).asLong
+      require(stored == v,
+        s"$path was written with $k=$stored but this call passes $k=$v — appends and " +
+          "probes must use the layout's own parameters/artifacts (mixing them silently " +
+          "corrupts serving)")
     }
-    row.getAs[Long]("max_gen")
-  }
-
-  /** Probe-side parameter check: like [[readIndexMeta]] but a no-op on
-    * a layout without `_meta` (probes must serve pre-generation
-    * layouts; only APPENDS require the bookkeeping). */
-  private def checkIndexMeta(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      expect: Seq[(String, Long)]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) readIndexMeta(spark, path, expect)
+    d
   }
 
   /** The serving-layout families [[layoutKind]] can tell apart from a
-    * layout's own `_meta` bookkeeping. */
+    * layout's own descriptor. */
   sealed trait LayoutKind
   object LayoutKind {
     /** A [[writeIndexed]] LSH layout with its write-time parameters. */
@@ -1292,29 +1265,23 @@ object Similarity {
     case object IvfPqResidual extends LayoutKind
   }
 
-  /** Identify which serving family wrote a layout, from `_meta` alone:
-    * LSH metas carry (planes, seed), PQ metas a model fingerprint, and
-    * residual layouts additionally the `residual` marker (raw and
-    * residual encodings are indistinguishable by fingerprint — the
-    * marker closes that). This is what lets one serving entry point
-    * ([[probeBatchAuto]], [[graft.pipeline.TextSearch.searchRrfServed]])
-    * accept any layout path without a side channel naming its kind.
-    * Residual layouts written before the marker existed read as
-    * [[LayoutKind.IvfPq]] — rewrite or re-append once to stamp them. */
+  /** Identify which serving family wrote a layout from its descriptor
+    * alone: the kind (`lsh` with its (planes, seed), or `ivfpq`) and,
+    * for PQ layouts, the `residual` flag (raw and residual encodings
+    * are indistinguishable by fingerprint — the flag closes that). This
+    * is what lets one serving entry point ([[probeBatchAuto]],
+    * [[graft.pipeline.TextSearch.searchRrfServed]]) accept any layout
+    * path without a side channel naming its kind. */
   def layoutKind(
       spark: org.apache.spark.sql.SparkSession, path: String): LayoutKind = {
-    val df = LayoutFiles.read(spark, s"$path/_meta")
-    val fields = df.schema.fieldNames.toSet
-    val row = df.head()
-    if (fields.contains("planes"))
-      LayoutKind.Lsh(row.getAs[Long]("planes").toInt, row.getAs[Long]("seed"))
-    else if (fields.contains("model")) {
-      if (fields.contains("residual") && row.getAs[Long]("residual") == 1L)
-        LayoutKind.IvfPqResidual
-      else LayoutKind.IvfPq
-    } else throw new IllegalArgumentException(
-      s"$path/_meta names no known serving layout " +
-        s"(fields: ${fields.toSeq.sorted.mkString(", ")})")
+    val d = annDescriptor(spark, path)
+    d.kind match {
+      case "lsh" => LayoutKind.Lsh(d.param("planes").asInt, d.param("seed").asLong)
+      case "ivfpq" =>
+        if (d.param("residual").asLong == 1L) LayoutKind.IvfPqResidual else LayoutKind.IvfPq
+      case other => throw new IllegalArgumentException(
+        s"$path is a $other layout, not an ANN serving layout")
+    }
   }
 
   /** Workload-batched serve of ANY written ANN layout — dispatches on
@@ -1323,7 +1290,7 @@ object Similarity {
     * scoring) take a layout PATH and serve it without knowing which
     * family built it. The PQ families need their frozen model artifacts
     * (the model travels with the index); the LSH family reads its
-    * (planes, seed) from the meta and ignores them.
+    * (planes, seed) from the descriptor and ignores them.
     *
     * @return (qid, rank, idCol, cosine), rank 1..k per qid — the shared
     *         batch-probe shape
@@ -1372,8 +1339,8 @@ object Similarity {
     * appends under `_tombstones` inside the index root (see
     * [[LayoutFiles]]). The rule a probe applies is
     * "a row dies iff some tombstone names its id with
-    * `row.gen <= cutoff`", which costs O(deletes) to record (one _meta
-    * read, no index scan, no live-version lookup) and makes
+    * `row.gen <= cutoff`", which costs O(deletes) to record (one
+    * descriptor read, no index scan, no live-version lookup) and makes
     * delete-then-append a correct UPDATE: the re-appended rows land at
     * `max_gen + 1 > cutoff` and survive the very tombstone that
     * retired their predecessors. A replayed delete at the same cutoff
@@ -1382,15 +1349,15 @@ object Similarity {
     * Ids cast to the layout's stored key type first, failing fast on
     * any that does not cast ([[Keys.castIdsToStored]]): an uncast
     * string id against a long-keyed layout would break every later
-    * probe. The stored type is the layout's column under `idCol`, or,
+    * probe. The stored type is the descriptor's column under `idCol`, or,
     * for a caller spelling the layout lacks, the type earlier deletes
     * recorded.
     */
   def deleteFromIndex(ids: DataFrame, idCol: String, path: String): Unit = {
     val spark = ids.sparkSession
     LayoutFiles.recover(spark, path)
-    val cutoff = readIndexMeta(spark, path)
-    val stored = spark.read.parquet(path).schema.find(_.name == idCol)
+    val d = annDescriptor(spark, path)
+    val stored = d.schema.find(_.name == idCol)
       .orElse(LayoutFiles.tombstones(spark, path, mergeSchema = true)
         .flatMap(_.schema.find(_.name == "doc")))
       .getOrElse(throw new IllegalArgumentException(
@@ -1403,7 +1370,7 @@ object Similarity {
     // join side renames back to the layout's id column at probe time
     LayoutFiles.retire(
       Keys.castIdsToStored(ids, idCol, stored.dataType, "deleteFromIndex")
-        .withColumn("cutoff", lit(cutoff)),
+        .withColumn("cutoff", lit(d.maxGen)),
       path, Seq("doc", "cutoff"))
   }
 
@@ -1453,9 +1420,9 @@ object Similarity {
     }
 
   /** Fold tombstones into the files and merge append-accumulated small
-    * ones: rewrite the layout minus deleted ids — the partition scheme
-    * is re-derived from the layout's own `<col>=` directory names, so
-    * probes prune identically after the swap — and swap it in whole
+    * ones: rewrite the layout minus deleted ids — partitioned by the
+    * descriptor's partition column, so probes prune identically after
+    * the swap — and swap it in whole
     * ([[LayoutFiles.swap]]), which drops `_tombstones` with the old
     * root. Same operational slot as
     * [[graft.pipeline.TrainingPipeline.compactState]] and the IVF
@@ -1468,25 +1435,17 @@ object Similarity {
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
     LayoutFiles.recover(spark, path)
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partCol = fs.listStatus(root).map(_.getPath.getName)
-      .collectFirst {
-        case n if n.contains("=") && !n.startsWith("_") && !n.startsWith(".") =>
-          n.split("=")(0)
-      }
-    LayoutFiles.rewrite(root.getParent.toString, root.getName, partCol)(
+    val d = annDescriptor(spark, path)
+    val root = new org.apache.hadoop.fs.Path(path)
+    LayoutFiles.rewrite(root.getParent.toString, root.getName, d.partition)(
       minusTombstones(spark, path, spark.read.parquet(path), idCol))
-    // the meta row survives the swap VERBATIM (tombstones don't — they
+    // the descriptor survives the swap VERBATIM (tombstones don't — they
     // were just folded in): losing the generation counter would let a
     // pre-compaction cutoff's number be reused by a later append, and
     // losing the recorded write parameters / model fingerprint would
     // disarm the mixed-artifact append guard
-    if (fs.exists(new Path(s"$path/_meta")))
-      LayoutFiles.read(spark, s"$path/_meta").coalesce(1)
-        .write.mode("overwrite").parquet(s"${LayoutFiles.staging(path)}/_meta")
+    LayoutFiles.publish(spark, LayoutFiles.staging(path), d)
     LayoutFiles.swap(spark, path)
   }
 
@@ -1677,9 +1636,10 @@ object Similarity {
     * by centroid so a batch probe reads only its own cells; `ids/` — the
     * id-keyed (id, gen) version table a DELETE reads instead of scanning
     * the centroid-partitioned frame; `centroids/` — the frozen index;
-    * `params/` — (id_col, vec_col, threshold, max_gen), so probes can't
-    * run with a drifted drop rule. Appends stamp fresh generations,
-    * tombstones name (id, gen) ([[LayoutFiles]]), so
+    * and the [[LayoutFiles.Descriptor]] — (id_col, vec_col, threshold)
+    * and `max_gen`, so probes can't run with a drifted drop rule.
+    * Appends stamp fresh generations, tombstones name (id, gen)
+    * ([[LayoutFiles]]), so
     * [[updateDedupState]] = delete + append is a correct re-embed
     * UPDATE.
     */
@@ -1697,30 +1657,31 @@ object Similarity {
     index.centroids.toSeq.map { case (cid, c) => (cid, c.toSeq) }
       .toDF("cid", "c").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/centroids")
-    writeDedupGeneration(src, index, idCol, vecCol, dir, threshold, 0L,
-      SaveMode.Overwrite)
+    writeDedupGeneration(src, index, idCol, vecCol, dir, threshold, None)
   }
 
   /** The one write body of the semantic-dedup state: `rows` assigned to
-    * the frozen `index` and stamped `gen` into `assigned/` and `ids/`
-    * in `mode`, then `params` rolled to `gen`. A build writes
-    * `centroids/` first and passes gen 0 with Overwrite. */
+    * the frozen `index`, stamped generation `max_gen + 1` of the `base`
+    * descriptor and appended to `assigned/` and `ids/`, then the
+    * descriptor rolled to that generation. A build writes `centroids/`
+    * first and passes no base: gen 0, Overwrite. */
   private def writeDedupGeneration(
       rows: DataFrame, index: IvfIndex, idCol: String, vecCol: String,
-      dir: String, threshold: Double, gen: Long, mode: SaveMode): Unit = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    ivfIndex(rows, vecCol, index)
+      dir: String, threshold: Double, base: Option[LayoutFiles.Descriptor]): Unit = {
+    val gen = base.fold(0L)(_.maxGen + 1)
+    val mode = if (base.isEmpty) SaveMode.Overwrite else SaveMode.Append
+    val assigned = ivfIndex(rows, vecCol, index)
       .withColumn("gen", lit(gen))
       .select(col("centroid"), col(idCol), col(vecCol), col("gen"))
+    assigned
       .repartition(col("centroid")) // one file set per cell (guide §6; see writeAnnGeneration)
       .write.mode(mode).partitionBy("centroid")
       .parquet(s"$dir/assigned")
     rows.select(col(idCol)).distinct().withColumn("gen", lit(gen))
       .write.mode(mode).parquet(s"$dir/ids")
-    Seq((idCol, vecCol, threshold, gen))
-      .toDF("id_col", "vec_col", "threshold", "max_gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+    LayoutFiles.publish(rows.sparkSession, dir, base.fold(LayoutFiles.Descriptor("dedup_state",
+      gen, Some("centroid"), LayoutFiles.Descriptor.schemaOf(assigned, Some("centroid")))(
+      "id_col" -> idCol, "vec_col" -> vecCol, "threshold" -> threshold))(_.copy(maxGen = gen)))
   }
 
   /** The frozen coarse index of a [[writeDedupState]] layout. */
@@ -1730,12 +1691,11 @@ object Similarity {
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1))
 
-  private def dedupStateParams(
-      spark: org.apache.spark.sql.SparkSession, dir: String
-  ): (String, String, Double, Long) = {
-    val p = spark.read.parquet(s"$dir/params").head()
-    (p.getAs[String]("id_col"), p.getAs[String]("vec_col"),
-      p.getAs[Double]("threshold"), p.getAs[Long]("max_gen"))
+  /** The descriptor of a [[writeDedupState]] layout and its (id_col,
+    * vec_col, threshold). */
+  private def dedupState(spark: org.apache.spark.sql.SparkSession, dir: String) = {
+    val d = LayoutFiles.descriptor(spark, dir, "Similarity.writeDedupState")
+    (d, d.param("id_col").asText, d.param("vec_col").asText, d.param("threshold").asDouble)
   }
 
   /** Dedup a NEW batch against a [[writeDedupState]] layout — the
@@ -1756,7 +1716,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       batch: DataFrame,
   ): DataFrame = {
-    val (idCol, vecCol, threshold, _) = dedupStateParams(spark, dir)
+    val (_, idCol, vecCol, threshold) = dedupState(spark, dir)
     val index = readDedupIndex(spark, dir)
     val assigned = OperatorCache.materialize(ivfIndex(batch, vecCol, index))
     val cells = assigned.select("centroid").distinct()
@@ -1780,9 +1740,8 @@ object Similarity {
       batch: DataFrame,
   ): Unit = {
     LayoutFiles.recover(spark, dir)
-    val (idCol, vecCol, threshold, maxGen) = dedupStateParams(spark, dir)
-    writeDedupGeneration(batch, readDedupIndex(spark, dir), idCol, vecCol,
-      dir, threshold, maxGen + 1, SaveMode.Append)
+    val (d, idCol, vecCol, threshold) = dedupState(spark, dir)
+    writeDedupGeneration(batch, readDedupIndex(spark, dir), idCol, vecCol, dir, threshold, Some(d))
   }
 
   /** Tombstone-delete ids from a [[writeDedupState]] layout: live
@@ -1797,7 +1756,7 @@ object Similarity {
       ids: DataFrame, idColArg: String,
   ): Unit = {
     LayoutFiles.recover(spark, dir)
-    val (idCol, _, _, _) = dedupStateParams(spark, dir)
+    val (_, idCol, _, _) = dedupState(spark, dir)
     val want = ids.select(col(idColArg).as(idCol)).distinct()
     LayoutFiles.retire(spark.read.parquet(s"$dir/ids")
       .join(broadcast(want), Seq(idCol), "left_semi").select(idCol, "gen"),
@@ -1830,7 +1789,7 @@ object Similarity {
   def compactDedupState(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     LayoutFiles.recover(spark, dir)
-    val (idCol, _, _, _) = dedupStateParams(spark, dir)
+    val (_, idCol, _, _) = dedupState(spark, dir)
     val t = LayoutFiles.tombstones(spark, dir)
     LayoutFiles.rewrite(dir, "assigned", Some("centroid"))(LayoutFiles.minus(
       spark.read.parquet(s"$dir/assigned"), t, Seq(idCol, "gen")))

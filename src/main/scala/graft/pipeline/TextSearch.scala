@@ -23,10 +23,10 @@ import graft.functions.{Fnv1a64, GraftFunctions}
   *   - `postings/` partitioned by `tb` = fnv1a64(term) mod `buckets`:
   *     (term, doc, tf, dl) — doc length rides each posting row so
   *     serving needs no doc-side join at all;
-  *   - `stats/`: one row (n_docs, sum_dl, buckets, max_gen) — the BM25
-  *     corpus constants plus the layout parameter, so a serving session
-  *     needs no out-of-band configuration, and the last committed
-  *     generation.
+  *   - the [[LayoutFiles.Descriptor]]: (n_docs, sum_dl, buckets,
+  *     max_gen) — the BM25 corpus constants plus the layout parameter,
+  *     so a serving session needs no out-of-band configuration, and the
+  *     last committed generation — and the postings schema.
   *
   * Scoring is EXACTLY [[TextAnalysis.bm25]] (same expression tree, same
   * 6-decimal rounding); the spec pins served-vs-batch score equality
@@ -50,12 +50,12 @@ object TextSearch {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     LayoutFiles.recover(df.sparkSession, dir)
     LayoutFiles.clearTombstones(df.sparkSession, dir)
-    writeGeneration(df, idCol, textCol, dir, buckets, 0L, 0L, 0L, SaveMode.Overwrite)
+    writeGeneration(df, idCol, textCol, dir, buckets, None)
   }
 
   /** Incremental maintenance: append a NEW batch of docs into the
     * [[writeIndex]] layout — batch-sized postings appends into the
-    * partitioned table plus a CLOSED-FORM stats update (n' = n + Δn,
+    * partitioned table plus a CLOSED-FORM descriptor update (n' = n + Δn,
     * sum_dl' = sum_dl + Σ Δdl — exact long additions, no corpus
     * re-read, so append ≡ rebuild is bit-identical),
     * the same append-don't-rebuild shape as `TrainingPipeline
@@ -71,24 +71,23 @@ object TextSearch {
     val spark = df.sparkSession
     LayoutFiles.recover(spark, dir)
     LayoutFiles.appending(spark, dir)(compactIndex(spark, dir)) {
-      val st = LayoutFiles.stats(spark, dir).row
-      writeGeneration(df, idCol, textCol, dir, st.getAs[Int]("buckets"),
-        st.getAs[Long]("max_gen") + 1, st.getAs[Long]("n_docs"),
-        st.getAs[Long]("sum_dl"), SaveMode.Append)
+      val base = LayoutFiles.descriptor(spark, dir, "TextSearch.writeIndex")
+      writeGeneration(df, idCol, textCol, dir, base.param("buckets").asInt, Some(base))
     }
   }
 
   /** The one write body of the layout: `df`'s postings and doc lengths
-    * stamped `gen` and written in `mode`, then `stats` rolled to the
-    * base counts plus the batch's (a build passes gen 0, zero base and
-    * Overwrite). */
+    * stamped generation `max_gen + 1` of the `base` descriptor and
+    * appended, then the descriptor published with the base counts plus
+    * the batch's (a build passes no base: gen 0, zero counts, Overwrite). */
   private def writeGeneration(
       df: DataFrame, idCol: String, textCol: String, dir: String,
-      buckets: Int, gen: Long, baseDocs: Long, baseSumDl: Long,
-      mode: SaveMode,
+      buckets: Int, base: Option[LayoutFiles.Descriptor],
   ): Unit = {
     val spark = df.sparkSession
     GraftFunctions.ensureRegistered(spark)
+    val gen = base.fold(0L)(_.maxGen + 1)
+    val mode = if (base.isEmpty) SaveMode.Overwrite else SaveMode.Append
     val terms = df.select(col(idCol).as("doc"),
       explode(Dedup.tokensOf(col(textCol))).as("term"))
     // lazy persist, NOT materialize: every consumer below is a
@@ -106,11 +105,12 @@ object TextSearch {
     // under 2^53), and incremental appends stay exact long additions
     val d = docLen.agg(count(lit(1)).as("dn"),
       coalesce(sum("dl"), lit(0L)).as("dsum")).head()
-    tfAll.join(docLen, "doc")
+    val postings = tfAll.join(docLen, "doc")
       .withColumn("tb",
         pmod(GraftFunctions.fnv1a64(col("term")), lit(buckets.toLong)))
       .withColumn("gen", lit(gen))
       .select("tb", "term", "doc", "tf", "dl", "gen")
+    postings
       // cluster by the partition value before the partitioned write
       // (guide §6): without this EVERY input partition opens a parquet
       // writer per bucket it touches — measured on p128 as a 32-task ×
@@ -128,27 +128,28 @@ object TextSearch {
     // append new) never shadows its own fresh rows
     docLen.withColumn("gen", lit(gen))
       .write.mode(mode).parquet(s"$dir/doclens")
-    LayoutFiles.writeStats(dir, statsFrame(spark, baseDocs + d.getAs[Long]("dn"),
-      baseSumDl + d.getAs[Long]("dsum"), buckets, gen), append = mode == SaveMode.Append)
+    LayoutFiles.publish(spark, dir, described(gen,
+      base.fold(0L)(_.param("n_docs").asLong) + d.getAs[Long]("dn"),
+      base.fold(0L)(_.param("sum_dl").asLong) + d.getAs[Long]("dsum"), buckets,
+      base.fold(LayoutFiles.Descriptor.schemaOf(postings, Some("tb")))(_.schema)))
   }
 
-  private def statsFrame(
-      spark: SparkSession, nDocs: Long, sumDl: Long, buckets: Int, maxGen: Long): DataFrame =
-    spark.createDataFrame(Seq((nDocs, sumDl, buckets, maxGen)))
-      .toDF("n_docs", "sum_dl", "buckets", "max_gen")
+  private def described(
+      maxGen: Long, nDocs: Long, sumDl: Long, buckets: Int, postings: StructType) =
+    LayoutFiles.Descriptor("bm25", maxGen, Some("tb"), postings)(
+      "n_docs" -> nDocs, "sum_dl" -> sumDl, "buckets" -> buckets)
 
-  /** What a probe or a compaction needs of the layout, all from the
-    * driver's [[LayoutFiles]] memo: the corpus constants DELETE-adjusted
-    * — the stored stats minus the tombstoned versions' count and token
-    * total (exact long arithmetic, the closed form [[appendIndex]] adds
-    * with) — the stored `max_gen`, the postings schema (a scan with it
-    * runs no inference job) and the pending tombstone rows.
-    * Fails with [[LayoutFiles.UnfinishedCommit]] while a compaction's
-    * commit is open: `stats` and `_tombstones` may then disagree.
+  /** What a probe or a compaction needs of the layout, with no Spark
+    * job: the corpus constants DELETE-adjusted — the descriptor's minus
+    * the tombstoned versions' count and token total (exact long
+    * arithmetic, the closed form [[appendIndex]] adds with) — its
+    * `max_gen` and postings schema, and the [[LayoutFiles]] memo's
+    * pending tombstone rows. Fails with [[LayoutFiles.UnfinishedCommit]]
+    * while a compaction's commit is open.
     *
     * Only committed generations serve: a crash between a postings
-    * append and its `stats` write leaves generation `max_gen + 1` on
-    * disk, which `stats` does not count, so `postings` keeps
+    * append and its descriptor leaves generation `max_gen + 1` on
+    * disk, which the descriptor does not count, so `postings` keeps
     * `gen <= max_gen` and only tombstones of those versions adjust the
     * constants; the next append folds that generation out before it
     * writes ([[LayoutFiles.appending]]). sum_dl stays the exact long so
@@ -165,14 +166,13 @@ object TextSearch {
   }
 
   private def serving(spark: SparkSession, dir: String): Serving = {
-    val st = LayoutFiles.stats(spark, dir)
-    val maxGen = st.row.getAs[Long]("max_gen")
+    val d = LayoutFiles.descriptor(spark, dir, "TextSearch.writeIndex")
     val tomb = LayoutFiles.pending(spark, dir)
-    val gone = tomb.toSeq.flatMap(_.rows).filter(_.getAs[Long]("gen") <= maxGen)
+    val gone = tomb.toSeq.flatMap(_.rows).filter(_.getAs[Long]("gen") <= d.maxGen)
     Serving(
-      st.row.getAs[Long]("n_docs") - gone.size,
-      st.row.getAs[Long]("sum_dl") - gone.map(_.getAs[Long]("dl")).sum,
-      st.row.getAs[Int]("buckets"), maxGen, st.postings(spark), tomb)
+      d.param("n_docs").asLong - gone.size,
+      d.param("sum_dl").asLong - gone.map(_.getAs[Long]("dl")).sum,
+      d.param("buckets").asInt, d.maxGen, d.schema, tomb)
   }
 
   /** Tombstones name (doc, gen) VERSIONS, so rows a later append
@@ -221,8 +221,8 @@ object TextSearch {
     * small files: rewrite `postings/` (partition scheme preserved —
     * every [[updateIndex]] lands another handful of batch files per
     * touched bucket, so compaction rewrites even with no tombstones
-    * pending) and `doclens/` minus the deleted docs, and `stats/` with
-    * the already-adjusted constants. The three tables and the cleared
+    * pending) and `doclens/` minus the deleted docs, and the descriptor
+    * with the already-adjusted constants. All three and the cleared
     * tombstone set land in ONE [[LayoutFiles.commit]], so a crash can
     * never subtract the deleted docs twice. */
   def compactIndex(spark: SparkSession, dir: String): Unit = {
@@ -237,10 +237,8 @@ object TextSearch {
     LayoutFiles.rewrite(dir, "postings", Some("tb"))(
       s.live(spark.read.schema(s.schema).parquet(s"$dir/postings")))
     LayoutFiles.rewrite(dir, "doclens", None)(s.live(spark.read.parquet(s"$dir/doclens")))
-    val stats = statsFrame(spark, s.nDocs, s.sumDl, s.buckets, s.maxGen)
-    LayoutFiles.rewrite(dir, "stats", None)(stats)
+    LayoutFiles.stage(spark, dir, described(s.maxGen, s.nDocs, s.sumDl, s.buckets, s.schema))
     LayoutFiles.commit(spark, dir)
-    LayoutFiles.remember(spark, dir, stats.head(), keepSchema = true)
   }
 
   /** Top-k BM25 over the [[writeIndex]] layout. The postings scan reads
@@ -559,13 +557,13 @@ object TextSearch {
       nprobe, rescoreFactor)
 
   /** [[searchRrfServed]] over ANY written ANN layout — the embedding
-    * side dispatches on the layout's own `_meta`
+    * side dispatches on the layout's own descriptor
     * ([[graft.pipeline.Similarity.layoutKind]]): IVF-PQ, residual
     * IVF-PQ, and LSH layouts all serve through their workload-batched
     * probes (p136/p139/p140), so the fused RRF takes a layout PATH and
     * needs no caller knowledge of which family built it. PQ layouts
     * require their frozen artifacts in `coarse`/`books`; LSH layouts
-    * ignore them (parameters ride in the meta). */
+    * ignore them (parameters ride in the descriptor). */
   def searchRrfServedAuto(
       workload: DataFrame, qidCol: String, queryCol: String, qvecCol: String,
       dir: String, annPath: String, annIdCol: String, annVecCol: String,

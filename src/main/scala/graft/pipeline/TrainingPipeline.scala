@@ -494,12 +494,13 @@ object TrainingPipeline {
     else Curation.splitCorpus(projected, idCol, splits)
   }
 
-  /** Persist [[CurateState]] under `dir` as four parquet datasets
-    * (`cleaned/`, `band_index/`, `bloom/`, `params/`) — the executable
-    * form of the state layout documented in PLANS.md, so a recrawl job
-    * can pick up yesterday's state without recomputing anything. The
-    * curation parameters travel WITH the state (parameter drift between
-    * the state build and a later batch would silently break the
+  /** Persist [[CurateState]] under `dir` as parquet datasets
+    * (`cleaned/`, `band_index/`, `bloom/`, `seen_keys/`) and a
+    * [[LayoutFiles.Descriptor]] holding the curation parameters — the
+    * executable form of the state layout documented in PLANS.md, so a
+    * recrawl job can pick up yesterday's state without recomputing
+    * anything. The parameters travel WITH the state (parameter drift
+    * between the state build and a later batch would silently break the
     * full ≡ incremental equivalence). At cluster scale, write
     * `band_index` as a table bucketed by (band, band_hash) instead —
     * the probe join then needs no index-side shuffle; the plain
@@ -508,7 +509,6 @@ object TrainingPipeline {
   def writeState(state: CurateState, dir: String): Unit = {
     import state._
     val spark = state.cleaned.sparkSession
-    import spark.implicits._
     LayoutFiles.recover(spark, dir)
     // a freshly written state SUPERSEDES any layout previously at this
     // dir — including its batch-application HISTORY: stale
@@ -535,16 +535,15 @@ object TrainingPipeline {
     writeBloomTable(spark, dir, bloom)
     seenKeys.foreach(
       _.write.mode("overwrite").parquet(s"$dir/seen_keys"))
-    Seq((minQuality, languages.toSeq.sorted, minWords, minStopwordHits,
-      dedupThreshold, shingleK, numHashes, bands, minEntropy,
-      maxTopCharFrac, splits.map(_._1), splits.map(_._2),
-      bloom.map(_._2).getOrElse(0), bloom.map(_._3).getOrElse(0),
-      BloomGate.FormatVersion))
-      .toDF("minQuality", "languages", "minWords", "minStopwordHits",
-        "dedupThreshold", "shingleK", "numHashes", "bands", "minEntropy",
-        "maxTopCharFrac", "splitNames", "splitWeights", "bloomBits", "bloomK",
-        "bloomFormat")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+    LayoutFiles.publish(spark, dir, LayoutFiles.Descriptor("curate_state", 0L, None,
+      LayoutFiles.Descriptor.schemaOf(cleaned, None))(
+        "minQuality" -> minQuality, "languages" -> languages.toSeq.sorted,
+        "minWords" -> minWords, "minStopwordHits" -> minStopwordHits,
+        "dedupThreshold" -> dedupThreshold, "shingleK" -> shingleK,
+        "numHashes" -> numHashes, "bands" -> bands, "minEntropy" -> minEntropy,
+        "maxTopCharFrac" -> maxTopCharFrac, "splitNames" -> splits.map(_._1),
+        "splitWeights" -> splits.map(_._2), "bloomBits" -> bloom.map(_._2).getOrElse(0),
+        "bloomK" -> bloom.map(_._3).getOrElse(0), "bloomFormat" -> BloomGate.FormatVersion))
   }
 
   /** A state table scan minus its pending tombstones: retracted docs
@@ -611,18 +610,17 @@ object TrainingPipeline {
     * batch); the bitmap is driver-collected like [[BloomGate.build]]
     * produces it. */
   def readState(spark: org.apache.spark.sql.SparkSession, dir: String): CurateState = {
+    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val params = spark.read.parquet(s"$dir/params")
-    val p = params.head()
-    val bloomBits = p.getAs[Int]("bloomBits")
+    val d = LayoutFiles.descriptor(spark, dir, "TrainingPipeline.writeState")
+    def seq(name: String) = d.param(name).elements().asScala.toSeq
+    val bloomBits = d.param("bloomBits").asInt
     // bit-layout versioning: a bitmap built under an older positions()
     // scheme would be probed at the wrong bits — never unsound (the
     // seen-key confirm is exact) but a silent near-random-maybe cliff.
     // Refuse and tell the operator to rebuild rather than degrade.
     if (bloomBits > 0) {
-      val fmt =
-        if (params.columns.contains("bloomFormat")) p.getAs[Int]("bloomFormat")
-        else 1 // pre-versioning states predate the v2 layout
+      val fmt = d.param("bloomFormat").asInt
       require(fmt == BloomGate.FormatVersion,
         s"Bloom bitmap at $dir/bloom uses bit-layout format $fmt but this " +
           s"build probes format ${BloomGate.FormatVersion}; rebuild the " +
@@ -634,7 +632,7 @@ object TrainingPipeline {
       else Some((
         spark.read.parquet(s"$dir/bloom").orderBy("pos")
           .select("word").as[Long].collect(),
-        bloomBits, p.getAs[Int]("bloomK")))
+        bloomBits, d.param("bloomK").asInt))
     CurateState(
       cleaned = liveStateTable(spark, dir, "cleaned"),
       bandIndex = liveStateTable(spark, dir, "band_index"),
@@ -642,18 +640,17 @@ object TrainingPipeline {
       seenKeys =
         if (bloomBits <= 0) None
         else Some(liveStateTable(spark, dir, "seen_keys")),
-      minQuality = p.getAs[Double]("minQuality"),
-      languages = p.getAs[scala.collection.Seq[String]]("languages").toSet,
-      minWords = p.getAs[Long]("minWords"),
-      minStopwordHits = p.getAs[Long]("minStopwordHits"),
-      dedupThreshold = p.getAs[Double]("dedupThreshold"),
-      shingleK = p.getAs[Int]("shingleK"),
-      numHashes = p.getAs[Int]("numHashes"),
-      bands = p.getAs[Int]("bands"),
-      minEntropy = p.getAs[Double]("minEntropy"),
-      maxTopCharFrac = p.getAs[Double]("maxTopCharFrac"),
-      splits = p.getAs[scala.collection.Seq[String]]("splitNames")
-        .zip(p.getAs[scala.collection.Seq[Double]]("splitWeights")).toSeq)
+      minQuality = d.param("minQuality").asDouble,
+      languages = seq("languages").map(_.asText).toSet,
+      minWords = d.param("minWords").asLong,
+      minStopwordHits = d.param("minStopwordHits").asLong,
+      dedupThreshold = d.param("dedupThreshold").asDouble,
+      shingleK = d.param("shingleK").asInt,
+      numHashes = d.param("numHashes").asInt,
+      bands = d.param("bands").asInt,
+      minEntropy = d.param("minEntropy").asDouble,
+      maxTopCharFrac = d.param("maxTopCharFrac").asDouble,
+      splits = seq("splitNames").map(_.asText).zip(seq("splitWeights").map(_.asDouble)))
   }
 
   /** Roll [[CurateState]] forward past a batch: the batch's post-floor

@@ -5085,7 +5085,7 @@ object PipelineQueries {
              |FROM s ORDER BY stage_idx""".stripMargin)),
 
     // Partition-pruned text-search serving: the index is written once
-    // (postings partitioned by term bucket + one stats row) and the
+    // (postings partitioned by term bucket + one descriptor) and the
     // query reads ONLY the named terms' buckets; scores are exactly
     // p23's BM25 tree, so the oracle is p23's chain with the
     // deterministic (score desc, doc asc) top-k frontier on top.
@@ -6992,7 +6992,7 @@ object PipelineQueries {
 
     // p138's residual sibling through the META-DISPATCHED serving entry
     // (r18 VERDICT item 5): searchRrfServedAuto takes the layout PATH,
-    // reads its _meta (`residual` marker), and routes the embedding
+    // reads its descriptor (`residual` flag), and routes the embedding
     // side to probeIvfPqResidualBatch — same fusion, different layout
     // family, zero caller knowledge of which. The oracle replays the
     // coarse trajectory, the residual frame, both residual-subspace

@@ -345,11 +345,12 @@ class LayoutFilesSpec extends SparkSpec {
         assert(f.serve(d) == outcome(served), s"step $n")
         n += 1
       }
-      // the marker, the old stats file's removal, the marker's removal;
-      // the cut between the rows and the stats row that Spark's write
-      // commit leaves uncounted is TextSearchSpec's and
-      // ShingleIndexSpec's "a probe serves only committed generations"
-      assert(n > 4, s"the append ran only ${n - 2} counted steps")
+      // the marker, the descriptor's temporary file, its rename, the old
+      // version's removal, the marker's removal; the cut between the
+      // rows and the descriptor that Spark's write commit leaves
+      // uncounted is TextSearchSpec's and ShingleIndexSpec's "a probe
+      // serves only committed generations"
+      assert(n > 6, s"the append ran only ${n - 2} counted steps")
     }
   }
 
@@ -396,23 +397,163 @@ class LayoutFilesSpec extends SparkSpec {
   }
 
   test("a bookkeeping load that fails while a commit opens fails with UnfinishedCommit") {
-    val d = s"$base/memo-failure/layout"
+    // the bookkeeping is the layout descriptor
+    val d = s"$base/descriptor-failure/layout"
     TextSearch.writeIndex(textCorpus.toDF("doc_id", "text"), "doc_id", "text", d, buckets = 4)
-    // a stats file no reader decodes: the load fails on its own
-    val bad = fs.create(new Path(d, "stats/part-bad.parquet"), true)
-    bad.write("not parquet".getBytes("UTF-8"))
+    def load() = LayoutFiles.descriptor(spark, d, "TextSearch.writeIndex")
+    assert(load().maxGen == 0L)
+    // a descriptor no reader decodes: the load fails on its own
+    val bad = fs.create(new Path(d, "_layout.0.json"), true)
+    bad.write("not json".getBytes("UTF-8"))
     bad.close()
-    val own = intercept[Exception](LayoutFiles.stats(spark, d))
+    val own = intercept[Exception](load())
     assert(!own.isInstanceOf[LayoutFiles.UnfinishedCommit], own)
-    // the same failure, with a commit opening during the load
+    // the same failure, with a commit opening right after the load listed
     var listings = 0
-    CrashFs.afterList = p => if (p.getName == "stats") {
+    CrashFs.afterList = p => if (p.getName == "layout") {
       listings += 1
-      if (listings == 2) fs.create(new Path(d, "_commit"), true).close()
+      if (listings == 1) fs.create(new Path(d, "_commit"), true).close()
     }
-    try intercept[LayoutFiles.UnfinishedCommit](LayoutFiles.stats(spark, d))
+    try intercept[LayoutFiles.UnfinishedCommit](load())
     finally CrashFs.afterList = _ => ()
-    assert(listings >= 2, "the load listed stats")
+    assert(listings >= 2, "the load listed the layout again")
+  }
+
+  /** The entries at the root of the layout at `d`. */
+  private def rootNames(d: String): Seq[String] =
+    fs.listStatus(new Path(d)).map(_.getPath.getName).toSeq.sorted
+
+  test("every family keeps one descriptor, and no stats/, _meta or params/ table") {
+    val vecs = (0 until 12).map(i => (i.toLong, unit(i % 3, 0.001f * i))).toDF("vec_id", "embedding")
+    val more = (20 until 23).map(i => (i.toLong, unit(i % 3, 0.002f * i))).toDF("vec_id", "embedding")
+    val coarse = Similarity.ivfTrain(vecs, "vec_id", "embedding", k = 2)
+    val books = Similarity.trainPq(vecs, "vec_id", "embedding", m = 2, k = 2)
+    val texts = textCorpus.toDF("doc_id", "text")
+    val later = Seq((9L, "join vectors later")).toDF("doc_id", "text")
+    val curateDocs = Seq(1L -> sentence("alpha"), 2L -> sentence("bravo")).toDF("doc_id", "text")
+    // each family's lifecycle writes: build, append, delete, compact
+    val lifecycles: Seq[(String, Seq[(String, String => Unit)])] = Seq(
+      "text" -> Seq(
+        "build" -> (d => TextSearch.writeIndex(texts, "doc_id", "text", d, buckets = 4)),
+        "append" -> (d => TextSearch.appendIndex(later, "doc_id", "text", d)),
+        "delete" -> (d => TextSearch.deleteFromIndex(spark, d, Seq(1L).toDF("doc_id"), "doc_id")),
+        "compact" -> (d => TextSearch.compactIndex(spark, d))),
+      "shingle" -> Seq(
+        "build" -> (d => Dedup.writeShingleIndex(Seq((1L, phrase("one"))).toDF("doc_id", "text"),
+          "doc_id", "text", d, shingleK = 5, buckets = 4)),
+        "append" -> (d => Dedup.appendShingleIndex(Seq((2L, phrase("two"))).toDF("doc_id", "text"),
+          "doc_id", "text", d)),
+        "delete" -> (d => Dedup.deleteFromShingleIndex(spark, d, Seq(1L).toDF("doc_id"), "doc_id")),
+        "compact" -> (d => Dedup.compactShingleIndex(spark, d))),
+      "lsh" -> Seq(
+        "build" -> (d => Similarity.writeIndexed(vecs, "embedding", d, planes = 3)),
+        "append" -> (d => Similarity.appendIndexed(more, "embedding", d, planes = 3)),
+        "delete" -> (d => Similarity.deleteFromIndex(Seq(1L).toDF("vec_id"), "vec_id", d)),
+        "compact" -> (d => Similarity.compactIndex(spark, d, "vec_id"))),
+      "ivfpq" -> Seq(
+        "build" -> (d => Similarity.writeIvfPqResidual(vecs, "embedding", d, coarse, books)),
+        "append" -> (d => Similarity.appendIvfPqResidual(more, "embedding", d, coarse, books)),
+        "delete" -> (d => Similarity.deleteFromIndex(Seq(1L).toDF("vec_id"), "vec_id", d)),
+        "compact" -> (d => Similarity.compactIndex(spark, d, "vec_id")),
+        "rebuild" -> (d => Similarity.rebuildIvfPq(spark, d, "vec_id", "embedding", 2, 2, 2))),
+      "dedup-state" -> Seq(
+        "build" -> (d => Similarity.writeDedupState(vecs, "vec_id", "embedding", d,
+          threshold = 0.9, k = 2)),
+        "append" -> (d => Similarity.appendDedupState(spark, d, more)),
+        "delete" -> (d => Similarity.deleteFromDedupState(spark, d, Seq(1L).toDF("vec_id"),
+          "vec_id")),
+        "compact" -> (d => Similarity.compactDedupState(spark, d)),
+        "rebuild" -> (d => Similarity.rebuildDedupState(spark, d, k = 2))),
+      "curate-state" -> Seq(
+        "build" -> (d => TrainingPipeline.writeState(TrainingPipeline.curateState(curateDocs,
+          "doc_id", "text", minQuality = 0.3, minWords = 5, dedupThreshold = 0.7), d)),
+        "append" -> (d => TrainingPipeline.appendState(TrainingPipeline.readState(spark, d),
+          Seq(3L -> sentence("charlie")).toDF("doc_id", "text"), "doc_id", "text", d)),
+        "delete" -> (d => TrainingPipeline.deleteFromState(spark, d,
+          Seq(1L -> sentence("alpha")).toDF("doc_id", "text"), "doc_id", textCol = Some("text"))),
+        "compact" -> (d => TrainingPipeline.compactState(spark, d))))
+    for ((family, steps) <- lifecycles) {
+      val d = s"$base/format/$family"
+      for ((step, write) <- steps) withClue(s"$family after $step: ") {
+        write(d)
+        OperatorCache.releaseAll(spark)
+        val names = rootNames(d)
+        assert(names.count(_.startsWith("_layout")) == 1 &&
+          names.exists(_.matches("_layout\\.\\d+\\.json")), names)
+        assert(Seq("stats", "_meta", "params").forall(t => !names.contains(t)), names)
+      }
+    }
+    // a layout without one fails loudly, naming the call that writes one
+    val d = s"$base/format/text"
+    rootNames(d).filter(_.startsWith("_layout")).foreach(n => fs.delete(new Path(d, n), false))
+    val e = intercept[IllegalStateException](TextSearch.searchTopK(spark, d, Seq("join")))
+    assert(e.getMessage.contains("TextSearch.writeIndex"), e.getMessage)
+  }
+
+  test("ivfpq and dedup-state: an append cut at any step leaves the old or the new descriptor") {
+    val vecs = (0 until 24).map(i => (i.toLong, unit(i % 3, 0.001f * i))).toDF("vec_id", "embedding")
+    val batch = (30 until 34).map(i => (i.toLong, unit(i % 4, 0.002f * i))).toDF("vec_id", "embedding")
+    val coarse = Similarity.ivfTrain(vecs, "vec_id", "embedding", k = 3)
+    val books = Similarity.trainPq(vecs, "vec_id", "embedding", m = 2, k = 4)
+    val drifted = Similarity.ivfTrain(vecs, "vec_id", "embedding", k = 2)
+    val q = unit(1, 0.01f)
+    def drift(e: => Any): Unit = {
+      val m = intercept[IllegalArgumentException](e).getMessage
+      assert(m.contains("was written with"), m)
+    }
+    // (name, build, append, a check that the layout opens and that its
+    // parameter guard holds)
+    val cases = Seq[(String, String => Unit, String => Unit, String => Unit)](
+      ("ivfpq",
+        d => Similarity.writeIvfPq(vecs, "embedding", d, coarse, books),
+        d => Similarity.appendIvfPq(batch, "embedding", d, coarse, books),
+        d => {
+          assert(rows(Similarity.probeIvfPq(spark, d, "vec_id", "embedding", coarse, books,
+            q, k = 3)).nonEmpty)
+          drift(Similarity.probeIvfPq(spark, d, "vec_id", "embedding", drifted, books, q, k = 3))
+          drift(Similarity.appendIvfPq(batch, "embedding", d, drifted, books))
+          drift(Similarity.appendIvfPqResidual(batch, "embedding", d, coarse, books))
+        }),
+      ("dedup-state",
+        d => Similarity.writeDedupState(vecs, "vec_id", "embedding", d, threshold = 0.9, k = 2),
+        d => Similarity.appendDedupState(spark, d, batch),
+        d => assert(rows(Similarity.semanticDedupFromState(spark, d,
+          Seq((40L, unit(0, 0.5f)), (41L, unit(5, 0f))).toDF("vec_id", "embedding"))
+          .select("vec_id")).nonEmpty)))
+    for ((name, build, append, opens) <- cases) withClue(s"$name: ") {
+      val pristine = s"$base/append-$name/pristine/layout"
+      build(pristine)
+      def fresh(tag: String): String = {
+        val d = s"$base/append-$name/$tag/layout"
+        FileUtil.copy(fs, new Path(pristine), fs, new Path(d), false,
+          spark.sparkContext.hadoopConfiguration)
+        d
+      }
+      def descriptor(d: String) = LayoutFiles.descriptor(spark, d, name)
+      val ref = fresh("ref")
+      append(ref)
+      val (old, next) = (descriptor(pristine), descriptor(ref))
+      assert(old.maxGen == 0L && next == old.copy(maxGen = 1L))
+      var n = 1
+      var crashed = true
+      while (crashed) {
+        val d = fresh(s"crash-$n")
+        CrashFs.arm(n)
+        crashed =
+          try { append(d); false }
+          catch { case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+              .takeWhile(_ != null)
+              .exists(c => Option(c.getMessage).exists(_.contains("injected crash"))) => true }
+          finally CrashFs.disarm()
+        val got = descriptor(d)
+        assert(got == old || got == next, s"step $n: $got")
+        opens(d)
+        OperatorCache.releaseAll(spark)
+        n += 1
+      }
+      // the descriptor's temporary file, its rename, the old version's removal
+      assert(n > 4, s"the append ran only ${n - 2} counted steps")
+    }
   }
 
   test("read: a side table's data files, or its directory past Spark's listing threshold") {

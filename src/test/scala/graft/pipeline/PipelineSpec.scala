@@ -1274,7 +1274,8 @@ class PipelineSpec extends SparkSpec {
     val layout = spark.read.parquet(path)
     assert(layout.where(col("vec_id") === 7L).count() == 0)
     assert(layout.select("gen").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
-    assert(spark.read.parquet(s"$path/_meta").head().getAs[Long]("max_gen") == 0L)
+    def maxGen = LayoutFiles.descriptor(spark, path, "Similarity.writeIvfPq").maxGen
+    assert(maxGen == 0L)
     // the layout probes exactly like the in-memory path over the SAME
     // live rows with the SAME fresh artifacts (model travels with index)
     val live = layout.select("vec_id", "embedding")
@@ -1288,7 +1289,7 @@ class PipelineSpec extends SparkSpec {
       emb.where(col("vec_id") === 11).select(
         (col("vec_id") + 200000L).as("vec_id"), col("embedding")),
       "embedding", path, coarse1, books1)
-    assert(spark.read.parquet(s"$path/_meta").head().getAs[Long]("max_gen") == 1L)
+    assert(maxGen == 1L)
     OperatorCache.releaseAll(spark)
 
     // the dedup-state sibling: retrain folds the retraction permanently
@@ -1305,9 +1306,8 @@ class PipelineSpec extends SparkSpec {
     Similarity.rebuildDedupState(spark, sdir, k = 2)
     assert(spark.read.parquet(s"$sdir/assigned").count() == 2L,
       "rebuild must fold the retraction")
-    val p = spark.read.parquet(s"$sdir/params").head()
-    assert(p.getAs[Double]("threshold") == 0.9 &&
-      p.getAs[String]("id_col") == "vec_id")
+    val p = LayoutFiles.descriptor(spark, sdir, "Similarity.writeDedupState")
+    assert(p.param("threshold").asDouble == 0.9 && p.param("id_col").asText == "vec_id")
     // a batch near the retracted vector survives; near a live one drops
     val s = Similarity.semanticDedupFromState(spark, sdir,
         Seq((10L, vec8(1)), (11L, vec8(0))).toDF("vec_id", "embedding"))

@@ -170,7 +170,7 @@ class ShingleIndexSpec extends SparkSpec {
 
   test("a probe serves only committed generations") {
     // an append that landed its postings for max_gen + 1, then died
-    // before writing stats
+    // before its descriptor
     val dir = s"target/graft-test/shidx_orphan_${System.nanoTime()}"
     Dedup.writeShingleIndex(corpus, "doc_id", "text", dir, shingleK = 5, buckets = 8)
     val before = probeRows(dir)
@@ -179,12 +179,11 @@ class ShingleIndexSpec extends SparkSpec {
     // the uninterrupted run: the layout without the cut batch
     val skipped = s"$dir-skipped"
     FileUtil.copy(fs, new Path(dir), fs, new Path(skipped), false, conf)
-    FileUtil.copy(fs, new Path(dir, "stats"), fs, new Path(s"$dir-stats"), false, conf)
-    Dedup.appendShingleIndex(Seq((10L, phrase("one"))).toDF("doc_id", "text"),
-      "doc_id", "text", dir)
-    assert(probeRows(dir) != before, "the appended doc shares the blocklist's shingles")
-    fs.delete(new Path(dir, "stats"), true)
-    FileUtil.copy(fs, new Path(s"$dir-stats"), fs, new Path(dir, "stats"), false, conf)
+    CutAppend(spark, dir) {
+      Dedup.appendShingleIndex(Seq((10L, phrase("one"))).toDF("doc_id", "text"),
+        "doc_id", "text", dir)
+      assert(probeRows(dir) != before, "the appended doc shares the blocklist's shingles")
+    }
     assert(probeRows(dir) == before)
     // with the cut append's `_append` marker beside its rows, the next
     // update folds them out before it writes generation 1 again: it
@@ -203,6 +202,16 @@ class ShingleIndexSpec extends SparkSpec {
     assert(probeRows(dir) == before)
     for (t <- Seq("postings", "docs"))
       assert(spark.read.parquet(s"$dir/$t").where(col("gen") > 0).count() == 0, t)
+  }
+
+  test("the first probe after a build runs no more jobs than a warm one") {
+    val dir = s"target/graft-test/shidx_first_${System.nanoTime()}"
+    Dedup.writeShingleIndex(corpus, "doc_id", "text", dir, shingleK = 5, buckets = 8)
+    OperatorCache.releaseAll(spark)
+    val (first, firstJobs) = jobsOf(probeRows(dir))
+    val (warm, warmJobs) = jobsOf(probeRows(dir))
+    assert(first == warm && first.map(_.head) == Seq(1L, 2L))
+    assert(firstJobs <= warmJobs, s"first probe ran $firstJobs jobs, a warm one $warmJobs")
   }
 
   test("a warm bookkeeping memo: a probe runs no bookkeeping job") {

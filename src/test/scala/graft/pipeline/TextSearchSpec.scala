@@ -110,13 +110,11 @@ class TextSearchSpec extends SparkSpec {
     val strings = tied.select(
       when(col("doc_id") === 3, lit("\uFB01x")).when(col("doc_id") === 6, lit("\uD83D\uDE00"))
         .otherwise(concat(lit("u"), col("doc_id"))).as("url"), col("text"))
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val conf = spark.sparkContext.hadoopConfiguration
     def layout(name: String)(build: String => Unit): (String, String) = {
       val d = s"$base/$name"
       build(d)
       OperatorCache.releaseAll(spark)
-      top5(d) // the first probe after a build loads the postings schema
+      top5(d)
       name -> d
     }
     val layouts = Seq(
@@ -133,13 +131,11 @@ class TextSearchSpec extends SparkSpec {
         TextSearch.compactIndex(spark, d)
       },
       layout("cut-append") { d =>
-        // an append whose stats write never landed: generation 1 is on
+        // an append whose descriptor never landed: generation 1 is on
         // disk and uncommitted
         TextSearch.writeIndex(tied.where(col("doc_id") <= 3), "doc_id", "text", d, buckets = 8)
-        FileUtil.copy(fs, new Path(d, "stats"), fs, new Path(s"$d-stats"), false, conf)
-        TextSearch.appendIndex(tied.where(col("doc_id") > 3), "doc_id", "text", d)
-        fs.delete(new Path(d, "stats"), true)
-        FileUtil.copy(fs, new Path(s"$d-stats"), fs, new Path(d, "stats"), false, conf)
+        CutAppend(spark, d)(
+          TextSearch.appendIndex(tied.where(col("doc_id") > 3), "doc_id", "text", d))
       },
       layout("string-keyed") { d =>
         TextSearch.writeIndex(strings, "url", "text", d, buckets = 8)
@@ -225,11 +221,11 @@ class TextSearchSpec extends SparkSpec {
       .as[(Long, Double, Long)].collect().toSeq
     assert(serve(appendDir) == serve(rebuiltDir),
       "appended index must serve exactly like a one-shot rebuild")
-    // the stats row advanced by exact integer arithmetic
-    val st = spark.read.parquet(s"$appendDir/stats").head()
-    assert(st.getAs[Long]("n_docs") == 5L)
-    assert(st.getAs[Long]("sum_dl") ==
-      spark.read.parquet(s"$rebuiltDir/stats").head().getAs[Long]("sum_dl"))
+    // the descriptor's constants advanced by exact integer arithmetic
+    def param(d: String, name: String) =
+      LayoutFiles.descriptor(spark, d, "TextSearch.writeIndex").param(name).asLong
+    assert(param(appendDir, "n_docs") == 5L)
+    assert(param(appendDir, "sum_dl") == param(rebuiltDir, "sum_dl"))
   }
 
   test("degenerate inputs: unknown terms serve empty; empty query raises") {
@@ -603,7 +599,7 @@ class TextSearchSpec extends SparkSpec {
 
   test("a probe serves only committed generations") {
     // the crash this models: an append landed its postings (and doclens)
-    // for generation max_gen + 1, then died before writing stats
+    // for generation max_gen + 1, then died before its descriptor
     val d = s"target/graft-tmp/textsearch-orphan-${System.nanoTime()}"
     TextSearch.writeIndex(corpus.where(col("doc_id") <= 3), "doc_id", "text", d, buckets = 8)
     val before = top5(d)
@@ -612,12 +608,11 @@ class TextSearchSpec extends SparkSpec {
     // the uninterrupted run: the layout without the cut batch
     val skipped = s"$d-skipped"
     FileUtil.copy(fs, new Path(d), fs, new Path(skipped), false, conf)
-    FileUtil.copy(fs, new Path(d, "stats"), fs, new Path(s"$d-stats"), false, conf)
-    TextSearch.appendIndex(corpus.where(col("doc_id") > 3), "doc_id", "text", d)
-    OperatorCache.releaseAll(spark)
-    assert(top5(d) != before, "the appended docs match the query")
-    fs.delete(new Path(d, "stats"), true)
-    FileUtil.copy(fs, new Path(s"$d-stats"), fs, new Path(d, "stats"), false, conf)
+    CutAppend(spark, d) {
+      TextSearch.appendIndex(corpus.where(col("doc_id") > 3), "doc_id", "text", d)
+      OperatorCache.releaseAll(spark)
+      assert(top5(d) != before, "the appended docs match the query")
+    }
     assert(top5(d) == before)
     val batch = TextSearch.searchTopKBatch(Seq((1L, "join vector filter")).toDF("qid", "query"),
       "qid", "query", d, k = 5).select("doc", "score", "n_matched").collect().toSeq
@@ -641,6 +636,16 @@ class TextSearchSpec extends SparkSpec {
     assert(top5(d) == before)
     for (t <- Seq("postings", "doclens"))
       assert(spark.read.parquet(s"$d/$t").where(col("gen") > 0).count() == 0, t)
+  }
+
+  test("the first probe after a build runs no more jobs than a warm one") {
+    val d = s"target/graft-tmp/textsearch-first-${System.nanoTime()}"
+    TextSearch.writeIndex(corpus, "doc_id", "text", d, buckets = 8)
+    OperatorCache.releaseAll(spark)
+    val (first, firstJobs) = jobsOf(top5(d))
+    val (warm, warmJobs) = jobsOf(top5(d))
+    assert(first == warm && first.head.getLong(0) == 5L)
+    assert(firstJobs <= warmJobs, s"first probe ran $firstJobs jobs, a warm one $warmJobs")
   }
 
   test("a warm bookkeeping memo: a probe runs no bookkeeping job") {

@@ -808,14 +808,11 @@ class TrainingPipelineSpec extends SparkSpec {
     val state = TrainingPipeline.curateState(prev, "doc_id", "text")
     val dir = "target/graft-tmp/curate-state-stalefmt"
     TrainingPipeline.writeState(state, dir)
-    // doctor the persisted params to claim the pre-r14 v1 bit layout —
-    // the probe positions would no longer match the bitmap's bits
-    val p = spark.read.parquet(s"$dir/params").collect().head
-    val doctored = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(p), 1),
-      spark.read.parquet(s"$dir/params").schema)
-      .withColumn("bloomFormat", lit(1))
-    doctored.coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+    // doctor the persisted parameters to claim the pre-r14 v1 bit
+    // layout — the probe positions would no longer match the bitmap's bits
+    val d = LayoutFiles.descriptor(spark, dir, "TrainingPipeline.writeState")
+    LayoutFiles.publish(spark, dir, d.copy(params =
+      d.params.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]().put("bloomFormat", 1)))
     val e = intercept[IllegalArgumentException](
       TrainingPipeline.readState(spark, dir))
     assert(e.getMessage.contains("format 1") &&

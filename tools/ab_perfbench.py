@@ -12,8 +12,9 @@ alternating which side runs first so drift on the host falls on both.
 Each tree builds its own classes on its first run.
 
 Prints, for every end-to-end metric BENCHMARK.json names, each side's
-median and interquartile range over the seeds and how many pairs the
-change won (better in the metric's declared direction). `--out DIR`
+median and interquartile range over the seeds, how many pairs the
+change won (better in the metric's declared direction), and a verdict
+read against the metric's `bound` (see `verdict`). `--out DIR`
 keeps every run's stdout as DIR/{parent,change}_<seed>.out, the input
 `tools/triage_bench.py` reads. Exits 1 if any run failed or reported an
 incorrect output, 2 on bad arguments or a failed `git archive`.
@@ -81,6 +82,33 @@ def quartiles(values):
     return q[0], q[2]
 
 
+def verdict(parent, change, better, bound):
+    """The no-regression reading of one end-to-end metric over paired runs.
+
+    `parent` and `change` hold one value per pair, in pair order; `better`
+    is "lower" or "higher"; `bound` is the relative worsening allowed.
+
+    - "better": the change wins at least nine tenths of the pairs and its
+      median beats the parent's by more than the parent's interquartile
+      range, or every change run beats every parent run;
+    - "unresolved": otherwise, when the parent's interquartile range is
+      wider than `bound` times its median;
+    - "worse": otherwise, when the change's median is worse than the
+      parent's by more than `bound` times the parent's median;
+    - "within bound": otherwise.
+    """
+    sign = 1 if better == "lower" else -1
+    pm, cm = statistics.median(parent), statistics.median(change)
+    lo, hi = quartiles(parent)
+    beats = [sign * (p - c) > 0 for p, c in zip(parent, change)]
+    if ((sum(beats) >= 0.9 * len(beats) and sign * (pm - cm) > hi - lo)
+            or all(sign * (p - c) > 0 for p in parent for c in change)):
+        return "better"
+    if hi - lo > bound * abs(pm):
+        return "unresolved"
+    return "worse" if sign * (cm - pm) > bound * abs(pm) else "within bound"
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent", help="the revision to compare against, e.g. HEAD~1")
@@ -124,7 +152,7 @@ def main(argv=None):
 
     print(f"\n{args.workload}, {len(seeds)} pairs, seeds {args.seeds}, {seconds:g} s runs")
     print(f"{'metric':<12} {'parent median (IQR)':>22} {'change median (IQR)':>22} "
-          f"{'delta':>8} {'wins':>6}")
+          f"{'delta':>8} {'wins':>6}  verdict (bound)")
     for m in bench["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         pairs = [(p[name], c[name]) for p, c in zip(samples["parent"], samples["change"])
@@ -139,8 +167,9 @@ def main(argv=None):
         (pm, piqr), (cm, ciqr) = cols
         wins = sum((c < p) if lower else (c > p) for p, c in pairs)
         delta = (cm - pm) / pm if pm else float("nan")
+        v = verdict([p for p, _ in pairs], [c for _, c in pairs], m["better"], m["bound"])
         print(f"{name:<12} {pm:>12.4g} ({piqr:>7.3g}) {cm:>12.4g} ({ciqr:>7.3g}) "
-              f"{delta:>+8.1%} {wins:>3}/{len(pairs)}")
+              f"{delta:>+8.1%} {wins:>3}/{len(pairs)}  {v} ({m['bound']:g})")
     return 0 if all_ok else 1
 
 
