@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.GraftFunctions
 
@@ -533,8 +536,9 @@ object Dedup {
       // cluster by the partition value first (guide §6) — without it
       // every input partition opens a writer per bucket it touches
       // (the 32-task × 64-bucket ~2k-file fan-out measured on p128's
-      // BM25 sibling); one exchange buys one file set per bucket
-      .repartition(col("sb"))
+      // BM25 sibling); one exchange buys one file per bucket, a task
+      // count per core keeps AQE from folding the write into one task
+      .repartition(spark.sparkContext.defaultParallelism, col("sb"))
       .write.mode(mode).partitionBy("sb").parquet(s"$dir/postings")
     // (doc, gen) keyed by doc — what a DELETE reads to find a doc's
     // live versions (docs with no shingles still get a row, so their
@@ -600,9 +604,10 @@ object Dedup {
     // an uncommitted generation (gen > max_gen) folds out with the deletes
     val committed = col("gen") <= d.maxGen
     val t = LayoutFiles.pending(spark, dir).map(_.frame(spark))
+    val all = LayoutFiles.slice(spark, s"$dir/postings", "sb",
+      0L until d.param("buckets").asInt, d.schema)
     LayoutFiles.rewrite(dir, "postings", Some("sb"))(LayoutFiles.minus(
-      spark.read.schema(d.schema).parquet(s"$dir/postings").where(committed),
-      t, Seq("doc", "gen")))
+      all.frame.where(committed), t, Seq("doc", "gen")))
     LayoutFiles.rewrite(dir, "docs", None)(LayoutFiles.minus(
       spark.read.parquet(s"$dir/docs").where(committed), t, Seq("doc", "gen")))
     LayoutFiles.commit(spark, dir)
@@ -611,17 +616,24 @@ object Dedup {
   /** Probe a [[writeShingleIndex]] layout with a blocklist: corpus docs
     * sharing ≥ `minOverlap` distinct shingles with it, as
     * (doc, n_overlap) — [[decontaminate]]'s verdict computed WITHOUT
-    * touching the corpus (same semantics, index-probe cost). The probe
-    * prunes partitions with a ≤`buckets` literal list (the TextSearch
-    * pattern: static PartitionFilters, not DPP luck) and joins the
-    * benchmark-sized shingle set, collected once, as a broadcast local
-    * relation. The scan reads only those buckets' directories
-    * ([[LayoutFiles.slice]]: the table root past Spark's listing
-    * threshold). Parameters and the postings schema come from the
-    * layout's descriptor, the pending tombstones from the driver's
-    * [[LayoutFiles]] memo, and only
-    * committed generations (`gen <= max_gen`) are probed — see
-    * `TextSearch.serving`.
+    * touching the corpus (same semantics, index-probe cost). The
+    * blocklist's shingle hashes are computed in Spark and collected once;
+    * the probe then reads only their buckets' directories
+    * ([[LayoutFiles.slice]]). Parameters and the postings schema come
+    * from the layout's descriptor, the pending tombstones from the
+    * driver's [[LayoutFiles]] memo, and only committed generations
+    * (`gen <= max_gen`) are probed — see `TextSearch.serving`.
+    *
+    * When those bucket files total at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes and the stored ids are
+    * integral or strings, the slice is read on the driver
+    * ([[LayoutFiles.Slice.rows]]) and counted there — no scan job: the
+    * committed rows no pending tombstone names whose (sb, sh) is the
+    * blocklist's, distinct hashes per doc, kept at `>= minOverlap`. The
+    * result is a local relation with the Spark plan's schema, ordered
+    * by doc. Any other slice runs the Spark plan: a static
+    * `PartitionFilters` scan of the buckets, the broadcast tombstone
+    * anti-join and blocklist join, and a `countDistinct` per doc.
     */
   def probeContamination(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -631,22 +643,39 @@ object Dedup {
     GraftFunctions.ensureRegistered(spark)
     val d = LayoutFiles.descriptor(spark, dir, "Dedup.writeShingleIndex")
     val buckets = d.param("buckets").asInt
-    val tomb = LayoutFiles.pending(spark, dir).map(_.frame(spark))
+    val tomb = LayoutFiles.pending(spark, dir)
     // the blocklist's shingle set, collected once and deduplicated on
     // the driver; floorMod is Spark's pmod for a positive divisor
     val shingles = shingleHashRows(blocklist, blockIdCol, blockTextCol,
         d.param("shingle_k").asInt)
       .select("sh").collect().map(_.getLong(0)).distinct
       .map(sh => (sh, math.floorMod(sh, buckets.toLong)))
-    val sbs = shingles.map(_._2).distinct
-    val slice0 = LayoutFiles.slice(spark, s"$dir/postings", "sb", sbs.toIndexedSeq,
-      d.schema).frame.where(col("gen") <= d.maxGen)
-    // deletes are visible immediately: the pruned slice stays map-only
-    LayoutFiles.minus(slice0, tomb, Seq("doc", "gen"))
-      .join(broadcast(spark.createDataFrame(shingles.toSeq).toDF("sh", "sb")), Seq("sb", "sh"))
-      .groupBy("doc")
-      .agg(countDistinct("sh").as("n_overlap"))
-      .where(col("n_overlap") >= minOverlap)
+    val slice = LayoutFiles.slice(spark, s"$dir/postings", "sb",
+      shingles.map(_._2).distinct.toIndexedSeq, d.schema)
+    val docField = d.schema("doc")
+    Keys.ascending(docField.dataType) match {
+      case Some(order) if slice.bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold =>
+        val Seq(doc, sh, gen, sb) = Seq("doc", "sh", "gen", "sb").map(d.schema.fieldIndex)
+        val wanted = shingles.toSet
+        val gone = tomb.fold(Set.empty[(Any, Any)])(_.versions)
+        val overlaps = slice.rows().iterator
+          .filter(r => !r.isNullAt(sh) && !r.isNullAt(gen) && r.getLong(gen) <= d.maxGen &&
+            wanted((r.getLong(sh), r.getLong(sb))) && !gone((r.get(doc), r.get(gen))))
+          .map(r => (r.get(doc), r.getLong(sh))).toSet[(Any, Long)]
+          .groupMapReduce(_._1)(_ => 1L)(_ + _)
+        val rows = overlaps.toSeq.filter(_._2 >= minOverlap).sortBy(_._1)(order)
+          .map { case (id, n) => Row(id, n) }
+        spark.createDataFrame(rows.asJava, StructType(Seq(
+          docField, StructField("n_overlap", LongType, nullable = false))))
+      case _ =>
+        // deletes are visible immediately: the pruned slice stays map-only
+        LayoutFiles.minus(slice.frame.where(col("gen") <= d.maxGen),
+            tomb.map(_.frame(spark)), Seq("doc", "gen"))
+          .join(broadcast(spark.createDataFrame(shingles.toSeq).toDF("sh", "sb")), Seq("sb", "sh"))
+          .groupBy("doc")
+          .agg(countDistinct("sh").as("n_overlap"))
+          .where(col("n_overlap") >= minOverlap)
+    }
   }
 
   /** Decontamination: drop corpus docs that share at least `minOverlap`

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types._
 
 /** Shared key-typing guard for the serving-layout delete paths
   * ([[TextSearch.deleteFromIndex]], [[Dedup.deleteFromShingleIndex]]).
@@ -40,5 +40,23 @@ private[pipeline] object Keys {
         s"layout's stored key type $stored — a null key would silently " +
         "delete nothing, so the call fails instead")
     cast.select("doc").distinct()
+  }
+
+  /** Spark's ascending order of a stored id column of type `t`, nulls
+    * first — for the integral and string id types, the ones whose
+    * driver-side values group and compare as Spark's do. */
+  def ascending(t: DataType): Option[Ordering[Any]] = {
+    val cmp: Option[(Any, Any) => Int] = t match {
+      case StringType =>
+        Some((x, y) => Similarity.Utf8Order.compare(x.asInstanceOf[String], y.asInstanceOf[String]))
+      case LongType | IntegerType | ShortType | ByteType =>
+        Some((x, y) => java.lang.Long.compare(
+          x.asInstanceOf[Number].longValue, y.asInstanceOf[Number].longValue))
+      case _ => None
+    }
+    cmp.map(c => (x: Any, y: Any) =>
+      if (x == null) { if (y == null) 0 else -1 }
+      else if (y == null) 1
+      else c(x, y))
   }
 }

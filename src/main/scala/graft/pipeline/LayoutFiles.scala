@@ -6,8 +6,13 @@ import scala.util.{Failure, Success, Try}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -51,8 +56,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * beside a writer — and a probe that finds a marker fails with
   * [[UnfinishedCommit]] instead of mixing old and new tables (the
   * descriptor read checks for it); one that passed that check and then
-  * lists postings in the gap between a swap's two renames fails with a
-  * missing file ([[slice]]), never serves the gap as an empty table.
+  * lists postings in the gap between a swap's two renames, or reads a
+  * file the swap moved away, fails with a missing file ([[slice]]),
+  * never serves the gap as an empty table.
   * Each layout has a single writer: the marker makes a crash safe, it
   * is not a lock.
   *
@@ -196,6 +202,13 @@ object LayoutFiles {
   final case class Tombstones(schema: StructType, rows: Seq[Row]) {
     /** The set as a local relation: a join against it reads no file. */
     def frame(spark: SparkSession): DataFrame = spark.createDataFrame(rows.asJava, schema)
+
+    /** The (doc, gen) versions the set names, for a driver-side [[minus]]:
+      * a row with a null key matches nothing, as in the anti-join. */
+    def versions: Set[(Any, Any)] = rows.collect {
+      case t if !t.isNullAt(t.fieldIndex("doc")) && !t.isNullAt(t.fieldIndex("gen")) =>
+        (t.getAs[Any]("doc"), t.getAs[Any]("gen"))
+    }.toSet
   }
 
   /** The rows of the pending tombstone set `dir/name`, if any, or the
@@ -274,18 +287,74 @@ object LayoutFiles {
   private def maxListedPaths(spark: SparkSession): Int =
     spark.sessionState.conf.parallelPartitionDiscoveryThreshold
 
-  /** Rows of a partitioned table, and the bytes of the data files that
-    * hold them when those were listed. */
-  final case class Slice(frame: DataFrame, bytes: Option[Long])
+  /** The rows of a partitioned table whose partition column is one of
+    * a set of values, as one [[slice]] listing found them: the data
+    * files of those values' `part=<v>` directories. */
+  final class Slice private[LayoutFiles] (
+      spark: SparkSession, path: String, part: String, values: Seq[Any],
+      schema: StructType, files: Seq[(FileStatus, Any)]) {
 
-  /** The rows of the parquet table at `path`, read with `schema`, whose
-    * partition column `part` is one of `values`. Up to [[read]]'s
-    * listing threshold it scans those `part=<v>` directories alone (with
-    * `basePath`, so `part` stays a column) — one listing of the root
-    * names the ones that exist, and a value without one holds no row —
-    * and the bytes are the scan's, as Spark sizes it for a broadcast.
-    * Past the threshold it scans the table root, pruned by the same
-    * filter on `part`, and the bytes are unknown.
+    /** The listed files' bytes: what Spark sizes their scan at for a
+      * broadcast. */
+    val bytes: Long = files.map(_._1.getLen).sum
+
+    /** The slice as a Spark scan of its files' directories (with
+      * `basePath`, so `part` stays a column), filtered on `part` so that
+      * each scan carries the values as `PartitionFilters`. The
+      * directories are read in groups of at most Spark's
+      * `parallelPartitionDiscovery.threshold` — past that many paths
+      * Spark lists them with a job — and a swap that changes the root
+      * while Spark lists them is listed again, as in [[slice]]. */
+    lazy val frame: DataFrame = {
+      val dirs = files.map(_._1.getPath.getParent).distinct
+      val reader = spark.read.schema(schema).option("basePath", path)
+      val scan = stable(fsOf(spark, path), new Path(path)) {
+        if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+        else dirs.grouped(math.max(1, maxListedPaths(spark)))
+          .map(g => reader.parquet(g.map(_.toString): _*)).reduce(_ union _)
+      }
+      scan.where(col(part).isin(values: _*))
+    }
+
+    /** The listed files' rows, read on the driver with no Spark job, in
+      * the order of `schema` (which names `part` last, as
+      * [[Descriptor.schemaOf]] does). Each file goes through Spark's own
+      * parquet reader (`ParquetFileFormat.buildReaderWithPartitionValues`,
+      * an internal `FileFormat` API whose signature this call pins to
+      * Spark 4.1.x), its rows converted as they come and its iterator
+      * drained or closed: no task exists to close it. A file gone since
+      * the listing — a compaction's swap — fails with a
+      * `FileNotFoundException`, never reads as empty. */
+    def rows(): Seq[Row] = {
+      require(schema.last.name == part, s"$part is not the last column of $schema")
+      val data = StructType(schema.init)
+      val partType = schema.last.dataType
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, data,
+        StructType(Seq(schema.last)), data, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      val zone = Some(spark.sessionState.conf.sessionLocalTimeZone)
+      files.flatMap { case (f, v) =>
+        val value = InternalRow(Cast(Literal(v.toString), partType, zone).eval())
+        val it = read(PartitionedFile(value, SparkPath.fromPath(f.getPath), 0L, f.getLen,
+          Array.empty[String], f.getModificationTime, f.getLen))
+        try it.map(r => toRow(r).asInstanceOf[Row]).toVector
+        finally it match {
+          case c: java.io.Closeable => c.close()
+          case _ =>
+        }
+      }
+    }
+  }
+
+  /** The `part=<v>` directories of the parquet table at `path`, read
+    * with `schema`, for the partition values `values`: one listing of
+    * the root names the directories that exist (a value without one
+    * holds no row), and a listing of each names its data files — with
+    * Hadoop, however many there are. Either read of the [[Slice]] — its
+    * Spark [[Slice.frame]] or its driver [[Slice.rows]], which goes
+    * through Spark's internal `FileFormat` reader and is pinned to Spark
+    * 4.1.x — reads those.
     *
     * A compaction's commit renames the live table away, then its staged
     * copy in. A listing that meets the gap between the two fails with a
@@ -293,28 +362,32 @@ object LayoutFiles {
     * vanished root path as empty, so the root's modification time is
     * taken before and after the listing, and a slice whose root changed
     * meanwhile (a swap, an append landing) is listed again. */
-  @annotation.tailrec
   def slice(
       spark: SparkSession, path: String, part: String, values: Seq[Any],
       schema: StructType): Slice = {
     val fs = fsOf(spark, path)
     val root = new Path(path)
-    // a FileNotFoundException in the gap
+    val wanted = values.distinct
+    val files = stable(fs, root) {
+      val present = fs.listStatus(root).map(_.getPath.getName).toSet
+      wanted.filter(v => present(s"$part=$v")).flatMap { v =>
+        fs.listStatus(new Path(root, s"$part=$v")).toSeq
+          .filter(f => f.isFile && isData(f.getPath)).map(_ -> v)
+      }
+    }
+    new Slice(spark, path, part, wanted, schema, files)
+  }
+
+  /** `body`, run again until the modification time of the directory
+    * `root` reads the same after it as before; a vanished root fails
+    * with a missing file. */
+  @annotation.tailrec
+  private def stable[A](fs: FileSystem, root: Path)(body: => A): A = {
+    // a FileNotFoundException in a swap's gap
     def stamp(): Long = fs.getFileStatus(root).getModificationTime
     val before = stamp()
-    val wanted = col(part).isin(values: _*)
-    val reader = spark.read.schema(schema)
-    val listed =
-      if (values.size > maxListedPaths(spark)) Slice(reader.parquet(path).where(wanted), None)
-      else {
-        val present = fs.listStatus(root).map(_.getPath.getName).toSet
-        val dirs = values.map(v => s"$part=$v").filter(present).map(new Path(root, _).toString)
-        val frame =
-          if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
-          else reader.option("basePath", path).parquet(dirs: _*)
-        Slice(frame.where(wanted), Some(frame.queryExecution.analyzed.stats.sizeInBytes.toLong))
-      }
-    if (stamp() == before) listed else slice(spark, path, part, values, schema)
+    val a = body
+    if (stamp() == before) a else stable(fs, root)(body)
   }
 
   private def isData(p: Path): Boolean =
@@ -374,7 +447,10 @@ object LayoutFiles {
     val live = new Path(dir, table)
     val bytes = fsOf(df.sparkSession, dir).getContentSummary(live).getLength
     val files = math.max(1L, (bytes + TargetBytesPerFile - 1) / TargetBytesPerFile).toInt
-    val w = partBy.fold(df.coalesce(files))(c => df.repartition(files, col(c)))
+    // at least a task per core: each bucket still hashes to one task,
+    // so one file per bucket, written in parallel
+    val w = partBy.fold(df.coalesce(files))(c =>
+      df.repartition(math.max(files, df.sparkSession.sparkContext.defaultParallelism), col(c)))
       .write.mode("overwrite")
     partBy.fold(w)(c => w.partitionBy(c)).parquet(suffixed(live, Staged).toString)
   }

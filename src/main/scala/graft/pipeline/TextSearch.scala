@@ -116,10 +116,12 @@ object TextSearch {
       // writer per bucket it touches — measured on p128 as a 32-task ×
       // 64-bucket fan-out (~2k files, stage cpu 13.3s / run 130s for a
       // 4.4s wall), and the per-file open cost then taxes every probe's
-      // listing. One batch-sized exchange buys one file set per bucket
-      // at ANY core count — the same clustering a hash
-      // write.distribution-mode buys at cluster scale.
-      .repartition(col("tb"))
+      // listing. One batch-sized exchange buys one file per bucket at
+      // ANY core count — the same clustering a hash
+      // write.distribution-mode buys at cluster scale — and a fixed task
+      // count per core keeps AQE from coalescing the write into one task
+      // that writes every bucket in turn.
+      .repartition(spark.sparkContext.defaultParallelism, col("tb"))
       .write.partitionBy("tb").mode(mode).parquet(s"$dir/postings")
     // (doc, dl, gen) keyed by doc: what a DELETE needs to adjust the
     // corpus stats closed-form without scanning term-bucketed postings.
@@ -234,8 +236,8 @@ object TextSearch {
     // deleteFromIndex tombstones live versions once). An uncommitted
     // generation's rows are folded out with the deleted ones.
     val s = serving(spark, dir)
-    LayoutFiles.rewrite(dir, "postings", Some("tb"))(
-      s.live(spark.read.schema(s.schema).parquet(s"$dir/postings")))
+    LayoutFiles.rewrite(dir, "postings", Some("tb"))(s.live(LayoutFiles.slice(
+      spark, s"$dir/postings", "tb", 0L until s.buckets, s.schema).frame))
     LayoutFiles.rewrite(dir, "doclens", None)(s.live(spark.read.parquet(s"$dir/doclens")))
     LayoutFiles.stage(spark, dir, described(s.maxGen, s.nDocs, s.sumDl, s.buckets, s.schema))
     LayoutFiles.commit(spark, dir)
@@ -247,11 +249,12 @@ object TextSearch {
     *
     * When those bucket files total at most
     * `spark.sql.autoBroadcastJoinThreshold` bytes — the size Spark
-    * itself ships whole to every executor — the probe runs ONE scan job:
-    * it collects (term, doc, tf, dl, gen), drops the tombstoned
-    * (doc, gen) versions against the memo's pending rows, and ranks on
-    * the driver. The arithmetic is Spark's, so the result equals the
-    * Spark plan's row for row: `StrictMath.log` (what Spark's `log`
+    * itself ships whole to every executor — the probe runs NO Spark job:
+    * it reads those files on the driver ([[LayoutFiles.Slice.rows]]),
+    * keeps the terms' committed rows, drops the tombstoned (doc, gen)
+    * versions against the memo's pending rows, and ranks on the driver.
+    * The arithmetic is Spark's, so the result equals the Spark plan's
+    * row for row: `StrictMath.log` (what Spark's `log`
     * calls), [[TextAnalysis.bm25]]'s expression tree evaluated in the
     * same order, the per-doc sum rounded HALF_UP to 6 places through
     * `BigDecimal.valueOf` (Spark's `round` on a double), and ties broken
@@ -259,8 +262,8 @@ object TextSearch {
     * first, strings by UTF-8 bytes). The result is a local relation
     * with the Spark plan's schema.
     *
-    * A larger slice, one listed past Spark's listing threshold, or an id
-    * type other than an integral or string one, runs the Spark plan:
+    * A larger slice, or an id type other than an integral or string
+    * one, runs the Spark plan:
     * the per-term document frequency aggregates over the pruned rows and
     * broadcasts into the term join, the ranking is a
     * TakeOrderedAndProject on (score desc, doc asc) — no global sort, no
@@ -290,18 +293,18 @@ object TextSearch {
       .map(t => math.floorMod(Fnv1a64.hash(t.getBytes("UTF-8")), s.buckets.toLong))
       .distinct
     val slice = LayoutFiles.slice(spark, s"$dir/postings", "tb", tbs, s.schema)
-    val matched = slice.frame.where(col("term").isin(normTerms: _*))
     val docField = s.schema("doc")
-    val small = slice.bytes.exists(_ <= spark.sessionState.conf.autoBroadcastJoinThreshold)
-    docOrder(docField.dataType) match {
-      case Some(order) if small =>
-        val rows = matched.where(col("gen") <= s.maxGen)
-          .select("term", "doc", "tf", "dl", "gen").collect()
+    Keys.ascending(docField.dataType) match {
+      case Some(order) if slice.bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold =>
+        val terms = normTerms.toSet
+        val Seq(term, gen) = Seq("term", "gen").map(s.schema.fieldIndex)
+        val rows = slice.rows().filter(r => !r.isNullAt(term) && terms(r.getString(term)) &&
+          !r.isNullAt(gen) && r.getLong(gen) <= s.maxGen)
         spark.createDataFrame(topKLocal(rows, s, order, k, k1, b).asJava, StructType(Seq(
           docField, StructField("score", DoubleType),
           StructField("n_matched", LongType, nullable = false))))
       case _ =>
-        val tf = s.live(matched)
+        val tf = s.live(slice.frame.where(col("term").isin(normTerms: _*)))
         val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
         tf.join(broadcast(dfreq), "term")
           .transform(withContrib(s.nDocs, s.sumDl, k1, b))
@@ -313,45 +316,28 @@ object TextSearch {
     }
   }
 
-  /** Spark's ascending order of a doc id column of type `t`, nulls
-    * first — for the integral and string id types. */
-  private def docOrder(t: DataType): Option[Ordering[Any]] = {
-    val cmp: Option[(Any, Any) => Int] = t match {
-      case StringType =>
-        Some((x, y) => Similarity.Utf8Order.compare(x.asInstanceOf[String], y.asInstanceOf[String]))
-      case LongType | IntegerType | ShortType | ByteType =>
-        Some((x, y) => java.lang.Long.compare(
-          x.asInstanceOf[Number].longValue, y.asInstanceOf[Number].longValue))
-      case _ => None
-    }
-    cmp.map(c => (x: Any, y: Any) =>
-      if (x == null) { if (y == null) 0 else -1 }
-      else if (y == null) 1
-      else c(x, y))
-  }
-
-  /** [[searchTopK]]'s ranking of the collected committed postings
-    * `rows` (term, doc, tf, dl, gen) of the query terms, on the driver:
-    * the rows [[Serving.live]] keeps, then [[withContrib]]'s arithmetic,
-    * the per-doc sum and count, the 6-place rounding and the
+  /** [[searchTopK]]'s ranking of the committed postings `rows` of the
+    * query terms (in the postings schema), on the driver: the rows
+    * [[Serving.live]] keeps, then [[withContrib]]'s arithmetic, the
+    * per-doc sum and count, the 6-place rounding and the
     * (score desc, doc asc) cut. */
   private def topKLocal(
-      rows: Array[Row], s: Serving, docOrder: Ordering[Any],
+      rows: Seq[Row], s: Serving, docOrder: Ordering[Any],
       k: Int, k1: Double, b: Double): Seq[Row] = {
-    val gone = s.tomb.toSeq.flatMap(_.rows).collect {
-      case t if !t.isNullAt(t.fieldIndex("doc")) => (t.getAs[Any]("doc"), t.getAs[Long]("gen"))
-    }.toSet
-    val live = rows.filterNot(r => gone((r.get(1), r.getLong(4))))
-    val df = live.groupBy(_.getString(0)).map { case (t, rs) => t -> rs.length.toLong }
+    val Seq(term, doc, tfi, dl, gen) =
+      Seq("term", "doc", "tf", "dl", "gen").map(s.schema.fieldIndex)
+    val gone = s.tomb.fold(Set.empty[(Any, Any)])(_.versions)
+    val live = rows.filterNot(r => gone((r.get(doc), r.get(gen))))
+    val df = live.groupBy(_.getString(term)).map { case (t, rs) => t -> rs.length.toLong }
     val avgdl = s.sumDl.toDouble / math.max(s.nDocs, 1L)
     val perDoc = scala.collection.mutable.LinkedHashMap.empty[Any, (Double, Long)]
     live.foreach { r =>
-      val n = df(r.getString(0))
+      val n = df(r.getString(term))
       val idf = StrictMath.log(1.0 + ((s.nDocs - n).toDouble + 0.5) / (n.toDouble + 0.5))
-      val tf = r.getLong(2).toDouble
-      val contrib = idf * tf / (tf + k1 * ((1.0 - b) + b * r.getLong(3).toDouble / avgdl))
-      val (acc, m) = perDoc.getOrElse(r.get(1), (0.0, 0L))
-      perDoc(r.get(1)) = (acc + contrib, m + 1)
+      val tf = r.getLong(tfi).toDouble
+      val contrib = idf * tf / (tf + k1 * ((1.0 - b) + b * r.getLong(dl).toDouble / avgdl))
+      val (acc, m) = perDoc.getOrElse(r.get(doc), (0.0, 0L))
+      perDoc(r.get(doc)) = (acc + contrib, m + 1)
     }
     val order: Ordering[(Any, Double, Long)] = (x, y) => {
       val c = SQLOrderingUtil.compareDoubles(y._2, x._2)
@@ -411,8 +397,8 @@ object TextSearch {
     // an all-stopword workload leaves tbs empty — isin(empty) is
     // statically false, so everything downstream is a well-typed
     // empty frame, no special case needed
-    val postings = spark.read.schema(s.schema).parquet(s"$dir/postings")
-      .where(col("tb").isin(tbs.toIndexedSeq: _*))
+    val postings = LayoutFiles.slice(spark, s"$dir/postings", "tb", tbs.toIndexedSeq, s.schema)
+      .frame
     // per-term df is a property of the INDEX, independent of the
     // workload — aggregate it once over the distinct matched terms
     val matched = s.live(postings).join(

@@ -2,8 +2,10 @@ package graft.pipeline
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FileUtil, LocalFileSystem, Path,
-  RawLocalFileSystem}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileUtil,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -12,8 +14,8 @@ import graft.SparkSpec
 /** A local file system under the `crashfs` scheme that can fail its
   * N-th mutating call (create, rename, a delete of something) and every
   * one after it, the way a dead writer makes no further changes, and
-  * can run a hook after a directory listing (a writer acting while a
-  * reader lists).
+  * can run a hook after a directory listing or before a file open (a
+  * writer acting while a reader lists or reads, or a reader watched).
   * Spark's own task-commit bookkeeping (`_temporary`, `_SUCCESS`) is
   * not counted, so N walks the layout lifecycle's own steps; a crash
   * inside a Spark write shows up as the staging it leaves, which the
@@ -30,6 +32,19 @@ object CrashFs {
 
   /** Runs after every `listStatus`, with the listed path. */
   @volatile var afterList: Path => Unit = _ => ()
+
+  /** Runs before every `open`, with the opened path. */
+  @volatile var beforeOpen: Path => Unit = _ => ()
+
+  /** `body`'s value and the data files (`part-*`) it opened. */
+  def opened[A](body: => A): (A, Seq[Path]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+    beforeOpen = p => seen.add(p)
+    try {
+      val out = body
+      (out, seen.asScala.toSeq.filter(_.getName.startsWith("part-")))
+    } finally beforeOpen = _ => ()
+  }
 
   private[pipeline] def step(p: Path): Unit = synchronized {
     val s = p.toString
@@ -54,6 +69,10 @@ class CrashLocalFs extends LocalFileSystem(new CrashRawFs) {
     val listed = super.listStatus(p)
     CrashFs.afterList(p)
     listed
+  }
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+    CrashFs.beforeOpen(p)
+    super.open(p, bufferSize)
   }
   override def delete(p: Path, recursive: Boolean): Boolean = {
     if (exists(p)) CrashFs.step(p)
@@ -391,6 +410,17 @@ class LayoutFilesSpec extends SparkSpec {
           }
           try assert(missingFile(intercept[Exception](probe())))
           finally { CrashFs.afterList = _ => (); fs.rename(gap, live) }
+          // the gap opens after the listing, as the driver read opens a
+          // listed file
+          var reads = 0
+          CrashFs.beforeOpen = p => if (p.toString.contains("/postings/")) {
+            CrashFs.beforeOpen = _ => ()
+            reads += 1
+            fs.rename(live, gap)
+          }
+          try assert(missingFile(intercept[Exception](probe())))
+          finally { CrashFs.beforeOpen = _ => (); fs.rename(gap, live) }
+          assert(reads == 1, "the probe read no listed file")
           assert(probe() == served)
         }
       }

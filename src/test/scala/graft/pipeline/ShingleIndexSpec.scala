@@ -5,6 +5,8 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
 import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -29,12 +31,16 @@ class ShingleIndexSpec extends SparkSpec {
   private lazy val block = Seq((100L, phrase("one"))).toDF("doc_id", "text")
 
   test("probeContamination ≡ decontaminate's verdict; scan partition-pruned") {
-    val dir = s"target/graft-test/shidx_${System.nanoTime()}"
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${CrashFs.Scheme}.impl", classOf[CrashLocalFs].getName)
+    val dir = s"${CrashFs.Scheme}://" +
+      new java.io.File(s"target/graft-test/shidx_${System.nanoTime()}").getAbsolutePath
     Dedup.writeShingleIndex(corpus, "doc_id", "text", dir,
       shingleK = 5, buckets = 16)
-    val probed = Dedup.probeContamination(spark, dir, block, "doc_id", "text",
+    def probe() = Dedup.probeContamination(spark, dir, block, "doc_id", "text",
       minOverlap = 3)
-    val flagged = probed.select("doc").as[Long].collect().toSet
+    val (probed, read) = CrashFs.opened(probe().collect().toSeq)
+    val flagged = probed.map(_.getLong(0)).toSet
     // ground truth: the corpus-scan screen drops exactly the flagged docs
     val survivors = Dedup.decontaminate(corpus, "doc_id", "text",
         block, "doc_id", "text", shingleK = 5, minOverlap = 3)
@@ -42,16 +48,31 @@ class ShingleIndexSpec extends SparkSpec {
     assert(flagged == Set(1L, 2L) && survivors == Set(3L),
       s"probe $flagged vs scan survivors $survivors")
     // overlap counts are exact: doc 1 shares every blocklist shingle
-    val n1 = probed.where(col("doc") === 1L).select("n_overlap").as[Long].head()
+    val n1 = probed.find(_.getLong(0) == 1L).get.getLong(1)
     val blockShingles = Dedup.shingleRows(block, "doc_id", "text", 5)
       .select("shingle").distinct().count()
     assert(n1 == blockShingles, s"doc 1 overlap $n1 != all $blockShingles")
-    // the postings scan carries static partition pruning on sb
-    val plan = probed.queryExecution.executedPlan.toString
+    // the driver read opened the data files of the blocklist's buckets,
+    // each once, and no other
+    val sbs = Dedup.shingleHashRows(block, "doc_id", "text", 5)
+      .select(pmod(col("sh"), lit(16L))).distinct().as[Long].collect().toSeq
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = sbs.map(sb => new Path(dir, s"postings/sb=$sb")).filter(fs.exists)
+      .flatMap(fs.listStatus(_).map(_.getPath).filter(_.getName.startsWith("part-")))
+    assert(files.nonEmpty && read.sortBy(_.toString) == files.sortBy(_.toString),
+      s"$read vs $files")
+    // the Spark plan: the postings scan carries static partition pruning
+    // on sb and lists only the blocklist's bucket directories (whole
+    // paths: the layout's absolute one would cut the plan string short)
+    val (fallback, plan) = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.maxMetadataStringLength" -> "1000") {
+      val df = probe()
+      (df.collect().toSeq.sortBy(_.getLong(0)), df.queryExecution.executedPlan.toString)
+    }
+    assert(fallback == probed.sortBy(_.getLong(0)))
     val pf = plan.linesIterator.find(_.contains("PartitionFilters"))
     assert(pf.exists(l => l.contains("sb#") && l.contains("IN") || pf.exists(_.contains("sb#"))),
       s"expected sb partition pruning, got:\n${plan.take(600)}")
-    // and it lists only the blocklist's bucket directories, not the root
     val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
     assert(scans.nonEmpty && scans.forall(l => l.contains("postings/sb=") && !l.contains("postings]")),
       s"expected a scan of the bucket directories, got:\n${plan.take(1200)}")
@@ -217,15 +238,89 @@ class ShingleIndexSpec extends SparkSpec {
   test("a warm bookkeeping memo: a probe runs no bookkeeping job") {
     val dir = s"target/graft-test/shidx_warm_${System.nanoTime()}"
     Dedup.writeShingleIndex(corpus, "doc_id", "text", dir, shingleK = 5, buckets = 8)
+    // the jobs of the blocklist's shingling: a probe runs no other
+    val shingling = jobsOf(Dedup.shingleHashRows(block, "doc_id", "text", 5)
+      .select("sh").collect())._2
     probeRows(dir) // fills the memo
     val (clean, cleanJobs) = jobsOf(probeRows(dir))
-    assert(cleanJobs <= 6, s"clean probe ran $cleanJobs jobs")
+    assert(cleanJobs <= shingling, s"clean probe ran $cleanJobs jobs, shingling $shingling")
     assert(clean.map(_.head) == Seq(1L, 2L))
     Dedup.deleteFromShingleIndex(spark, dir, Seq(2L).toDF("doc_id"), "doc_id")
     probeRows(dir)
     val (tombstoned, tombJobs) = jobsOf(probeRows(dir))
-    assert(tombJobs <= 7, s"tombstoned probe ran $tombJobs jobs")
+    assert(tombJobs <= shingling, s"tombstoned probe ran $tombJobs jobs, shingling $shingling")
     assert(tombstoned.map(_.head) == Seq(1L))
+  }
+
+  test("driver counting equals the Spark plan: rows and schema, on every layout state") {
+    val base = s"target/graft-test/shidx_paths_${System.nanoTime()}"
+    val vocab = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta", "iota",
+      "kappa", "lambda", "mu")
+    val rnd = new scala.util.Random(23)
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val docs = (1L to 40L).map(i => i -> words(12 + rnd.nextInt(20))).toDF("doc_id", "text")
+    // ids that sort differently as UTF-16 and as UTF-8, and a null one
+    val strings = docs.select(
+      when(col("doc_id") === 3, lit("\uFB01x")).when(col("doc_id") === 6, lit("\uD83D\uDE00"))
+        .when(col("doc_id") === 9, lit(null)).otherwise(concat(lit("u"), col("doc_id")))
+        .as("url"), col("text"))
+    def layout(name: String)(build: String => Unit): (String, String) = {
+      val d = s"$base/$name"
+      build(d)
+      name -> d
+    }
+    def built(d: String, df: DataFrame = docs, id: String = "doc_id") =
+      Dedup.writeShingleIndex(df, id, "text", d, shingleK = 3, buckets = 64)
+    val layouts = Seq(
+      layout("built")(built(_)),
+      layout("tombstoned") { d =>
+        built(d)
+        Dedup.deleteFromShingleIndex(spark, d, Seq(1L, 5L, 7L).toDF("doc_id"), "doc_id")
+      },
+      layout("compacted") { d =>
+        built(d)
+        Dedup.updateShingleIndex(Seq((2L, words(20)), (50L, words(20))).toDF("doc_id", "text"),
+          "doc_id", "text", d)
+        Dedup.deleteFromShingleIndex(spark, d, Seq(5L).toDF("doc_id"), "doc_id")
+        Dedup.compactShingleIndex(spark, d)
+      },
+      layout("cut-append") { d =>
+        // an append whose descriptor never landed: generation 1 is on
+        // disk and uncommitted
+        built(d, docs.where(col("doc_id") <= 20))
+        CutAppend(spark, d)(
+          Dedup.appendShingleIndex(docs.where(col("doc_id") > 20), "doc_id", "text", d))
+      },
+      layout("string-keyed") { d =>
+        built(d, strings, "url")
+        Dedup.deleteFromShingleIndex(spark, d, Seq("u1").toDF("url"), "url")
+      })
+    // seeded blocklists over the corpus vocabulary: one short doc, and
+    // two of five docs each, which hash into most of the 64 buckets
+    val blocklists = (1 to 3).map { i =>
+      val n = if (i == 1) 1 else 5
+      (0 until n).map(j => (100L + j, words(if (i == 1) 8 else 30))).toDF("doc_id", "text")
+    }
+    val wide = blocklists.map(b => Dedup.shingleHashRows(b, "doc_id", "text", 3)
+      .select(pmod(col("sh"), lit(64L))).distinct().count())
+    assert(wide.count(_ > 32) >= 2, s"buckets hit per blocklist: $wide")
+    var compared = 0
+    for ((name, d) <- layouts; (b, i) <- blocklists.zipWithIndex; minOverlap <- Seq(1, 3))
+      withClue(s"$name, blocklist $i, minOverlap $minOverlap: ") {
+        def probe() = {
+          val df = Dedup.probeContamination(spark, d, b, "doc_id", "text", minOverlap)
+          (df.collect().toSeq.sortBy(r => String.valueOf(r.get(0))), df.schema,
+            df.queryExecution.logical.isInstanceOf[LocalRelation])
+        }
+        val (onDriver, driverSchema, local) = probe()
+        val (inSpark, sparkSchema, _) =
+          withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(probe())
+        assert(local, "the probe did not count on the driver")
+        assert(onDriver == inSpark)
+        assert(driverSchema == sparkSchema)
+        if (onDriver.nonEmpty) compared += 1
+      }
+    assert(compared >= 20, s"only $compared probes matched a row")
   }
 
   test("after every writer the next probe equals a from-scratch build") {
