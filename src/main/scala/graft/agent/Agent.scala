@@ -371,7 +371,12 @@ $fixLine"""
       try {
         val out = engine.executeSqlQuery(sql)
         state.lastSqlExecuted = Some(sql)
-        val resp0 = Response.fromResult(out)
+        // a frame of several columns answers a number or string request
+        // wrongly whatever its rows: the type retry needs no execution
+        val resp0 =
+          if (out.schema.length > 1 && outputType.exists(Set("number", "string")))
+            DataFrameR(out)
+          else Response.fromResult(out)
         // a plot request renders the tabular result to a real PNG, so the
         // response value carries an image path like the reference's chart
         // response (core/response/chart.py); a result with no numeric

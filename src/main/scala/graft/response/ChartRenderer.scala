@@ -4,7 +4,7 @@ import java.awt.image.BufferedImage
 import java.awt.{BasicStroke, Color, Font, Graphics2D, RenderingHints}
 import java.io.File
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
 
 /** Pure-JDK (Java2D) rasterizer for the three chart shapes [[Charts]]
   * emits — bar, line, scatter — so a `plot` response can carry a real PNG
@@ -31,18 +31,17 @@ object ChartRenderer {
   private val TitleFont = new Font(Font.SANS_SERIF, Font.BOLD, 16)
   private val LabelFont = new Font(Font.SANS_SERIF, Font.PLAIN, 11)
 
-  /** Render `df`'s (xField, yField) columns as `mark` into `out` (PNG).
-    * `mark` ∈ bar | line | point (the marks [[Charts.spec]] accepts,
-    * minus area, which renders as line). Rows with null x or y are
-    * skipped; row order is preserved for bar (the caller's ORDER BY is
-    * the category order), line/point sort by x. Returns `out`.
+  /** Render `rows` — (x, y) pairs, as [[Charts.toChart]] collects and
+    * caps them; `xField`/`yField` name the axes — as `mark` into `out`
+    * (PNG). `mark` ∈ bar | line | point (the marks [[Charts.spec]]
+    * accepts, minus area, which renders as line). Rows with null x or y
+    * are skipped; row order is preserved for bar (the caller's ORDER BY
+    * is the category order), line/point sort by x. Returns `out`.
     */
-  def renderPng(df: DataFrame, mark: String, xField: String, yField: String,
+  def renderPng(rows: Array[Row], mark: String, xField: String, yField: String,
       title: Option[String], out: File): File = {
     require(Set("bar", "line", "point", "area").contains(mark),
       s"unsupported mark: $mark")
-    val rows = df.select(xField, yField).limit(10001).collect()
-    require(rows.length <= 10000, "chart data exceeds 10000 rows — aggregate first")
 
     val xNominal = mark == "bar" || rows.headOption.exists(r => !numericOrTemporal(r.get(0)))
     // (label, xNumeric, y) per kept row

@@ -38,16 +38,19 @@ object Charts {
   }
 
   /** Wrap an aggregated frame as a ChartR, validating the encoded fields
-    * exist and the result is chart-sized. With `renderTo` set, the chart
-    * is also rasterized there as a PNG and the response carries the
-    * path (the reference's plot-response contract). */
+    * exist and the result is chart-sized: the (x, y) rows are collected
+    * once, at most `maxRows` + 1 of them, and more than `maxRows` raises.
+    * With `renderTo` set, those rows are also rasterized there as a PNG
+    * and the response carries the path (the reference's plot-response
+    * contract). */
   def toChart(df: DataFrame, mark: String, xField: String, yField: String,
       title: Option[String] = None, maxRows: Int = 10000,
       renderTo: Option[java.io.File] = None): ChartR = {
     val cols = df.columns.toSet
     for (f <- Seq(xField, yField) if !cols.contains(f))
       throw ChartSpecError(s"chart field '$f' not in result columns ${cols.mkString(", ")}")
-    if (df.limit(maxRows + 1).count() > maxRows)
+    val rows = df.select(xField, yField).limit(maxRows + 1).collect()
+    if (rows.length > maxRows)
       throw ChartSpecError(
         s"chart data exceeds $maxRows rows — aggregate before charting")
     val yType = df.schema(yField).dataType.typeName match {
@@ -60,7 +63,7 @@ object Charts {
       case _                                      => "quantitative"
     }
     val path = renderTo.map(f =>
-      ChartRenderer.renderPng(df, mark, xField, yField, title, f).getAbsolutePath)
+      ChartRenderer.renderPng(rows, mark, xField, yField, title, f).getAbsolutePath)
     ChartR(df, spec(mark, xField, yField, xType, yType, title), path)
   }
 

@@ -51,19 +51,29 @@ object Response {
   }
 
   /** Infer a response from a query result the way the agent does for SQL
-    * results: 1×1 numeric → number, 1×1 other → string, else dataframe. */
+    * results: 1×1 numeric → number, 1×1 other → string, else dataframe.
+    *
+    * A result whose optimized plan Spark sizes at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes runs once: its rows are
+    * collected here and a frame is returned over them as a local
+    * relation, so the type probe, a chart's rows and the caller's
+    * `collect()` run no further job. A larger result stays lazy, with a
+    * `limit(2)` probe when it has one column. */
   def fromResult(df: DataFrame): Response = {
-    val cols = df.schema.fields
-    if (cols.length == 1) {
-      val rows = df.limit(2).collect()
-      if (rows.length == 1) {
-        val v = rows(0).get(0)
-        return v match {
-          case n: Number => NumberR(n.doubleValue())
-          case other     => StringR(String.valueOf(other))
-        }
-      }
+    val spark = df.sparkSession
+    val oneColumn = df.schema.length == 1
+    def scalar(v: Any): Response = v match {
+      case n: Number => NumberR(n.doubleValue())
+      case other     => StringR(String.valueOf(other))
     }
-    DataFrameR(df)
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        spark.sessionState.conf.autoBroadcastJoinThreshold) {
+      val rows = df.collect()
+      if (oneColumn && rows.length == 1) scalar(rows(0).get(0))
+      else DataFrameR(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
+    } else if (oneColumn) {
+      val rows = df.limit(2).collect()
+      if (rows.length == 1) scalar(rows(0).get(0)) else DataFrameR(df)
+    } else DataFrameR(df)
   }
 }

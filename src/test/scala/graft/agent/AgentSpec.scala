@@ -369,4 +369,82 @@ class AgentSpec extends SparkSpec {
     spark.range(3).selectExpr("id + 1 AS a", "id * 2 AS b").groupBy("a").count().collect()
     assert(correction() == first)
   }
+
+  private val plotSql = "SELECT r_name, count(*) AS n FROM region GROUP BY r_name ORDER BY r_name"
+  private val columnSql = "SELECT n_name FROM nation WHERE n_regionkey = 1 ORDER BY n_name"
+
+  /** A fresh agent answering `sql`, its table blocks already memoized so
+    * its turns run only the attempt's own jobs. */
+  private def agentFor(e: Engine, sql: String): Agent = {
+    val a = new Agent(e, new FakeLlm(Seq(sql)), chartDir = new java.io.File("target/graft-tmp/charts"))
+    a.buildPrompt("?")
+    a
+  }
+
+  /** The rows and jobs of one warm `collect()` of `sql`. */
+  private def collected(e: Engine, sql: String): (Seq[org.apache.spark.sql.Row], Int) = {
+    e.executeSqlQuery(sql).collect()
+    val (rows, jobs) = jobsOf(e.executeSqlQuery(sql).collect())
+    (rows.toSeq, jobs)
+  }
+
+  test("a plot turn within the bound runs its SQL once; its chart data collects with no job") {
+    val e = engineWithTables()
+    val (want, collectJobs) = collected(e, plotSql)
+    val agent = agentFor(e, plotSql)
+    agent.chat("plot regions", outputType = Some("plot"))
+    val (resp, turnJobs) = jobsOf(agent.chat("plot regions", outputType = Some("plot")))
+    assert(collectJobs > 0 && turnJobs == collectJobs)
+    resp match {
+      case ChartR(data, _, Some(path)) =>
+        assert(new java.io.File(path).length() > 0)
+        val (rows, jobs) = jobsOf(data.collect())
+        assert(jobs == 0)
+        assert(rows.toSeq == want)
+      case other => fail(s"expected a rendered ChartR, got $other")
+    }
+  }
+
+  test("a one-column frame turn within the bound runs its SQL once; the frame collects with no job") {
+    val e = engineWithTables()
+    val (want, collectJobs) = collected(e, columnSql)
+    assert(want.size > 1)
+    val agent = agentFor(e, columnSql)
+    agent.chat("nations in region 1")
+    val (resp, turnJobs) = jobsOf(agent.chat("nations in region 1"))
+    assert(collectJobs > 0 && turnJobs == collectJobs)
+    resp match {
+      case DataFrameR(df) =>
+        val (rows, jobs) = jobsOf(df.collect())
+        assert(jobs == 0)
+        assert(rows.toSeq == want)
+        assert(df.schema == e.executeSqlQuery(columnSql).schema)
+      case other => fail(s"expected DataFrameR, got $other")
+    }
+  }
+
+  test("a result over the bound comes back lazy, with the limit(2) probe and the caller's collect") {
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "1") {
+      val e = engineWithTables()
+      val (want, collectJobs) = collected(e, columnSql)
+      val (_, probeJobs) = jobsOf(e.executeSqlQuery(columnSql).limit(2).collect())
+      val agent = agentFor(e, columnSql)
+      agent.chat("nations in region 1")
+      val (resp, turnJobs) = jobsOf(agent.chat("nations in region 1"))
+      assert(probeJobs > 0 && turnJobs == probeJobs)
+      resp match {
+        case DataFrameR(df) =>
+          assert(!df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+          val (rows, jobs) = jobsOf(df.collect())
+          assert(jobs == collectJobs)
+          assert(rows.toSeq == want)
+        case other => fail(s"expected DataFrameR, got $other")
+      }
+      // a multi-column frame over the bound runs nothing until collected
+      val wide = agentFor(e, "SELECT n_name, n_regionkey FROM nation")
+      wide.chat("nations")
+      val (wideResp, wideJobs) = jobsOf(wide.chat("nations"))
+      assert(wideJobs == 0 && wideResp.isInstanceOf[DataFrameR])
+    }
+  }
 }

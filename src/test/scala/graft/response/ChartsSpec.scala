@@ -59,12 +59,12 @@ class ChartsSpec extends SparkSpec {
     val dir = new java.io.File("target/graft-tmp/charts")
     val bigY = Seq(("a", 1.0e16), ("b", 1.0e16 + 1), ("c", 1.0e16 + 2))
       .toDF("k", "v")
-    val f1 = ChartRenderer.renderPng(bigY, "line", "k", "v", None,
+    val f1 = ChartRenderer.renderPng(bigY.collect(), "line", "k", "v", None,
       new java.io.File(dir, "bigy.png"))
     assert(javax.imageio.ImageIO.read(f1) != null)
     val bigX = Seq((1.0e16, 1.0), (1.0e16 + 1, 2.0), (1.0e16 + 2, 3.0))
       .toDF("x", "y")
-    val f2 = ChartRenderer.renderPng(bigX, "point", "x", "y", None,
+    val f2 = ChartRenderer.renderPng(bigX.collect(), "point", "x", "y", None,
       new java.io.File(dir, "bigx.png"))
     assert(javax.imageio.ImageIO.read(f2) != null)
   }
@@ -84,10 +84,12 @@ class ChartsSpec extends SparkSpec {
     intercept[Charts.ChartSpecError] {
       Charts.toChart(agg, "bar", "nope", "n")
     }
-    intercept[Charts.ChartSpecError] {
-      Charts.toChart(Tables.load(spark, sf, "lineitem"), "point",
-        "l_orderkey", "l_quantity", maxRows = 100)
-    }
+    // the cap is checked on the rows the chart collects: one job
+    val lineitem = Tables.load(spark, sf, "lineitem")
+    val (over, jobs) = jobsOf(intercept[Charts.ChartSpecError] {
+      Charts.toChart(lineitem, "point", "l_orderkey", "l_quantity", maxRows = 100)
+    })
+    assert(over.msg.contains("aggregate before charting") && jobs == 1)
     intercept[IllegalArgumentException] {
       Charts.spec("pie3d", "a", "b")
     }
